@@ -434,9 +434,7 @@ object EncodeJob {
 
   /** Driver-side manifest commit (the Delta-style move): one JSON commit
     * file per batch, written tmp + atomic rename — a metadata append is
-    * driver IO, not a Spark job. Readers merge these with any legacy
-    * parquet manifest rows (older dirs, forged resume fixtures), so both
-    * generations stay readable. At 100 TB a commit is one file of
+    * driver IO, not a Spark job. At 100 TB a commit is one file of
     * numPartitions entries (what Delta/Iceberg write per commit), vs. a
     * full executor round-trip for a KB of metadata before.
     */
@@ -464,17 +462,21 @@ object EncodeJob {
     require(fs.rename(tmp, dst), s"could not commit manifest $dst")
   }
 
-  /** Manifest entries from the JSON commit files (driver-side parse) plus
-    * a flag for legacy parquet rows being present too.
+  /** Every manifest entry, parsed on the driver from the JSON commit
+    * files. A manifest dir holding parquet files was written by an engine
+    * that predates JSON commits; it fails here, before any read or write
+    * touches the table.
     */
-  private[graft] def readManifestJson(spark: SparkSession, outDir: String)
-      : (Seq[ManifestEntry], Boolean) = {
+  def manifestEntries(spark: SparkSession, outDir: String): Seq[ManifestEntry] = {
     val dir = new org.apache.hadoop.fs.Path(manifestDir(outDir))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return (Seq.empty, false)
+    if (!fs.exists(dir)) return Seq.empty
     val statuses = fs.listStatus(dir)
+    require(!statuses.exists(_.getPath.getName.endsWith(".parquet")),
+      s"$dir holds a pre-JSON manifest (parquet files), which this engine no longer " +
+        "reads — rewrite the table with an engine of this version")
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-    val entries = statuses.iterator.filter { s =>
+    statuses.iterator.filter { s =>
       val n = s.getPath.getName
       n.endsWith(".json") && !n.startsWith(".")
     }.flatMap { s =>
@@ -490,21 +492,6 @@ object EncodeJob {
           o.get("wall_ms").asLong(), o.get("codecs").asText())
       }
     }.toSeq
-    val parquetPresent = statuses.exists(_.getPath.getName.endsWith(".parquet"))
-    (entries, parquetPresent)
-  }
-
-  /** Every manifest entry — JSON commits plus legacy parquet rows. Tests
-    * and tools; snapshot loading uses the same sources aggregated.
-    */
-  def manifestEntries(spark: SparkSession, outDir: String): Seq[ManifestEntry] = {
-    val (json, parquetPresent) = readManifestJson(spark, outDir)
-    val legacy =
-      if (!parquetPresent) Seq.empty
-      else spark.read.schema(TableMeta.manifestSchema).parquet(manifestDir(outDir))
-        .as[ManifestEntry](org.apache.spark.sql.Encoders.product[ManifestEntry])
-        .collect().toSeq
-    json ++ legacy
   }
 
   /** The commit point of compact(): create-temp + rename, atomic on the
@@ -683,8 +670,9 @@ object EncodeJob {
   /** Batches that can possibly hold rows matching `condition` — the DML
     * pruning pass. The condition is resolved by NAME against the table
     * schema, split into conjuncts, translated to V1 filters, and run
-    * through the same ChunkPrune stat logic the scan's file pruning
-    * uses, evaluated distributedly over the filestats sidecar. Every
+    * through the same ChunkPrune keep logic the scan's file pruning
+    * uses, evaluated on the driver against TableMeta's sidecar index (no
+    * Spark job once the batches' sidecars are cached). Every
     * step is conservative: untranslatable conjuncts contribute no
     * pruning, batches without sidecar coverage (or missing a predicate
     * column — schema evolution) count as affected, and an unresolvable
@@ -712,40 +700,7 @@ object EncodeJob {
     val preds = resolved.toSeq.flatMap(conjuncts)
       .flatMap(e => org.apache.spark.sql.graftbridge.Bridge.translateV1Filter(e))
       .flatMap(f => graft.spark.source.ChunkPrune.from(f, specs))
-    batchesPossiblyMatching(spark, outDir, preds, visible)
-  }
-
-  private def batchesPossiblyMatching(spark: SparkSession, outDir: String,
-                                      preds: Seq[graft.spark.source.ChunkPrune],
-                                      visible: Set[Int]): Set[Int] = {
-    import org.apache.spark.sql.functions.{countDistinct, min}
-    if (preds.isEmpty) return visible
-    val dir = new org.apache.hadoop.fs.Path(filestatsDir(outDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return visible
-    val present = fs.listStatus(dir).iterator.map(_.getPath.getName).collect {
-      case n if n.startsWith("batch=") => n.stripPrefix("batch=").toInt
-    }.toSet
-    val covered = visible intersect present
-    if (covered.isEmpty) return visible
-    // explicit sidecar schema: pre-nan_count batches read it as null
-    // (conservative keep), and no inference pass runs
-    val rows = TableMeta.readFilestats(spark, outDir)
-      .filter(col("batch").isin(covered.toSeq: _*) &&
-        col("column").isin(preds.map(_.column).distinct: _*))
-    // chunk-level keep decided ACROSS predicate columns (same shape as
-    // the scan's fileKeep); a chunk missing rows for some predicate
-    // column — older schema — keeps conservatively (nc < #pred columns)
-    val predColCount = preds.map(_.column).distinct.size
-    val agg = rows.withColumn("k", preds.map(_.keepColumn).reduce(_ && _))
-      .groupBy(col("batch"), col("part_id"), col("chunk_id"))
-      .agg(min(col("k")).as("ck"), countDistinct(col("column")).as("nc"))
-    val matching = agg.filter(col("ck") || col("nc") < lit(predColCount))
-      .select("batch").distinct().collect().map(_.getInt(0)).toSet
-    // batches whose sidecar holds NO rows for any predicate column (the
-    // columns predate them entirely) never reach `agg` — conservative
-    val anyRow = rows.select("batch").distinct().collect().map(_.getInt(0)).toSet
-    matching ++ (covered -- anyRow) ++ (visible -- covered)
+    TableMeta.batchesPossiblyMatching(spark, outDir, visible, preds)
   }
 
   private def rewriteBatches(spark: SparkSession, outDir: String, targetPartitions: Int,
@@ -794,10 +749,8 @@ object EncodeJob {
 
     val (newBatch, partOffset) = nextBatchAndPart(spark, outDir)
     val df = transform(decodeBatches(spark, outDir, toCompact, schema))
-    // presence flag + snapshot-sourced codecs; explicit schema keeps the
-    // (never-executed) frame from paying a footer-inference pass
-    val manifest = Some(spark.read.schema(TableMeta.manifestSchema).parquet(manifestDir(outDir)))
-    val (entries, _) = encodeOneBatch(df, cfg, newBatch, partOffset, manifest,
+    // codecs come from the snapshot's lineage (the table has batches)
+    val (entries, _) = encodeOneBatch(df, cfg, newBatch, partOffset, hadBatches = true,
       schemaOverride = Some(schema))
 
     // THE commit: swap old for new atomically
@@ -1016,17 +969,17 @@ object EncodeJob {
 
   /** Encode one complete DataFrame as manifest batch `batchId` — the unit
     * a Structured Streaming micro-batch maps onto (StreamingEncode). Codec
-    * decisions come from the existing manifest's lineage when present
-    * (the stream pins them on batch 0), else from a fresh sample. part_ids
-    * are offset by batchId × numPartitions so chunks from different
-    * batches never collide in decode's (part_id, chunk_id) grouping.
+    * decisions come from the manifest's lineage when the table already
+    * has batches (the stream pins them on batch 0), else from a fresh
+    * sample. part_ids are offset by batchId × numPartitions so chunks
+    * from different batches never collide in decode's (part_id, chunk_id)
+    * grouping.
     */
-  def runBatch(df: DataFrame, cfg: Config, batchId: Int,
-               existingManifest: Option[DataFrame]): Result = {
+  def runBatch(df: DataFrame, cfg: Config, batchId: Int, hadBatches: Boolean): Result = {
     val spark = df.sparkSession
     import spark.implicits._
     val (entries, specs) = encodeOneBatch(df, cfg, batchId,
-      partIdOffset = batchId * cfg.numPartitions, existingManifest)
+      partIdOffset = batchId * cfg.numPartitions, hadBatches)
     // commit point: the batch is durable only once these rows land —
     // a driver-side JSON commit file (atomic rename), no Spark job
     writeManifestEntries(spark, cfg.outDir, entries.toIndexedSeq)
@@ -1040,7 +993,7 @@ object EncodeJob {
     * replay simply overwrites.
     */
   private def encodeOneBatch(df: DataFrame, cfg: Config, batchId: Int, partIdOffset: Int,
-                             existingManifest: Option[DataFrame],
+                             hadBatches: Boolean,
                              // compact passes the dir's persisted schema: the
                              // decoded frame is all-nullable, and rewriting
                              // schema.json from it would flip nullability
@@ -1050,8 +1003,8 @@ object EncodeJob {
     val spark = df.sparkSession
     import spark.implicits._
 
-    val stringCodecs: Map[String, String] = existingManifest
-      .flatMap(_ => TableMeta.snapshot(spark, cfg.outDir).codecs)
+    val stringCodecs: Map[String, String] =
+      (if (hadBatches) TableMeta.snapshot(spark, cfg.outDir).codecs else None)
       .map(parseLineage)
       .getOrElse(pinStringCodecs(df, cfg.sampleRows))
     val schema = schemaOverride.getOrElse(df.schema)
@@ -1059,7 +1012,7 @@ object EncodeJob {
     val codecLineage = lineage(specs)
 
     writeSchemaJson(spark, cfg.outDir, schema)
-    maintainSortClaim(spark, cfg.outDir, cfg, hadBatches = existingManifest.isDefined)
+    maintainSortClaim(spark, cfg.outDir, cfg, hadBatches = hadBatches)
     val shredded = TableEncoder.shred(partitionWithSalt(df, cfg), specs)
     val t0 = System.nanoTime()
     val chunks = TableEncoder.encode(shredded, specs, cfg.strideRows,

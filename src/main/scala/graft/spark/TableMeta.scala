@@ -1,30 +1,29 @@
 package graft.spark
 
+import graft.spark.source.{ChunkPrune, ChunkStats}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 
-/** Driver-side table-metadata snapshot, cached per JVM and validated
-  * against the filesystem on EVERY access (guide §6: table formats win at
-  * scale by reading manifests instead of re-listing/re-scanning, and
-  * Spark itself caches file listings per session).
+/** Driver-side table metadata, cached per JVM and validated against the
+  * filesystem on EVERY access (guide §6: table formats win at scale by
+  * reading manifests instead of re-listing/re-scanning, and Spark itself
+  * caches file listings per session). Two caches, both metadata only —
+  * never row data, never query results — and both bounded LRU maps of
+  * 1024 tables:
   *
-  * Before this cache, every DSv2 action re-ran the same four or five
-  * small Spark jobs at plan time (manifest visibility read, per-batch
-  * column sets, codec lineage, size statistics — each with a parquet
-  * schema-inference pass), so a query that touches a graft table three
-  * times paid the metadata cost three times. Now:
-  *
-  *  - validity is a SIGNATURE of the manifest + compactions dirs (one
-  *    `listStatus` each, no Spark jobs, no parquet footers): every commit
-  *    appends a manifest file and every compaction adds a record file, so
-  *    any writer — same JVM or not — changes the signature and invalidates
-  *    the entry. The cache can never serve metadata the disk doesn't show.
-  *  - a miss costs ONE distributed aggregate over the manifest (explicit
-  *    schema, so no inference job) returning ~one row per batch, from
-  *    which visibility, per-batch stats, codec lineage and per-batch
-  *    column sets are all derived.
-  *
-  * This is metadata caching only — never row data, never query results.
+  *  - the SNAPSHOT (visibility, per-batch stats, codec lineage, column
+  *    sets). Its validity is a signature of the manifest + compactions
+  *    dirs (one `listStatus` each): every commit appends a manifest file
+  *    and every compaction adds a record file, so any writer — same JVM
+  *    or not — invalidates the entry. A miss parses the JSON commit files
+  *    on the driver; no Spark job.
+  *  - the SIDECAR INDEX: the filestats sidecar rows of each committed
+  *    batch (per chunk and column: min/max, null/row/NaN counts, Bloom
+  *    filter, chunk file), read on the driver once per committed batch and
+  *    revalidated per batch dir listing. Plan-time pruning — scan file
+  *    keep, DML batch keep, the scan's chunk-file list — is evaluated
+  *    against it on the driver, so planning a query over a warm table
+  *    launches no Spark job.
   */
 object TableMeta {
 
@@ -44,33 +43,12 @@ object TableMeta {
       /** Committed compaction records, oldest first. */
       compactions: Seq[EncodeJob.Compaction])
 
-  val manifestSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.Encoders.product[ManifestEntry].schema
-
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, Snapshot)]()
-
-  /** Chunk-file lists per (outDir, committed batch set), VALIDATED on
-    * every access against the sidecar dirs' own listing (names + sizes +
-    * mtimes): an overwrite that reuses batch ids, a vacuum, or any other
-    * external change re-lists differently and reloads — only the Spark
-    * job that parses the sidecar rows is ever skipped, never a freshness
-    * check.
-    */
-  private val sidecarCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Seq[Int]), (String, Option[Seq[(Int, Option[String], String)]])]()
-
-  private def boundedPut[K, V](m: java.util.concurrent.ConcurrentHashMap[K, V],
-                               k: K, v: V): V = {
-    if (m.size > 1024) m.clear() // crude bound; entries rebuild on demand
-    m.put(k, v)
-    v
-  }
+  private val cache = new Lru[String, (String, Snapshot)](1024)
 
   private def signature(spark: SparkSession, outDir: String): String = {
     val conf = spark.sparkContext.hadoopConfiguration
     def sig(dir: String): String = {
-      val p = new org.apache.hadoop.fs.Path(dir)
+      val p = new Path(dir)
       val fs = p.getFileSystem(conf)
       if (!fs.exists(p)) "-"
       else fs.listStatus(p).iterator
@@ -85,44 +63,26 @@ object TableMeta {
 
   def snapshot(spark: SparkSession, outDir: String): Snapshot = {
     val sig = signature(spark, outDir)
-    val hit = cache.get(outDir)
-    if (hit != null && hit._1 == sig) return hit._2
-    snapshotLoads.incrementAndGet()
-    val snap = load(spark, outDir)
-    boundedPut(cache, outDir, (sig, snap))
-    snap
+    cache.get(outDir) match {
+      case Some((hitSig, snap)) if hitSig == sig => snap
+      case _ =>
+        snapshotLoads.incrementAndGet()
+        val snap = load(spark, outDir)
+        cache.put(outDir, (sig, snap))
+        snap
+    }
   }
 
   private def load(spark: SparkSession, outDir: String): Snapshot = {
     val comps = EncodeJob.readCompactionRecords(spark, outDir)
-    val manifestPath = new org.apache.hadoop.fs.Path(EncodeJob.manifestDir(outDir))
-    val fs = manifestPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(manifestPath))
-      return Snapshot(Set.empty, -1, None, Map.empty, Map.empty, comps)
-    // JSON commit files parse on the driver (no Spark job at all);
-    // legacy parquet rows — pre-JSON dirs, forged resume fixtures — are
-    // aggregated distributedly with the explicit schema when present.
-    val (jsonEntries, parquetPresent) = EncodeJob.readManifestJson(spark, outDir)
+    // JSON commit files parse on the driver (no Spark job at all)
     // per batch: (maxPart, rows, rawBytes, lineages)
     val agg = scala.collection.mutable.Map[Int, (Int, Long, Long, List[String])]()
-    def add(b: Int, part: Int, rows: Long, raw: Long, lineage: Seq[String]): Unit = {
-      val (p0, r0, w0, l0) = agg.getOrElse(b, (-1, 0L, 0L, Nil))
-      agg(b) = (math.max(p0, part), r0 + rows, w0 + raw,
-        (lineage.filterNot(l0.contains) ++ l0).toList)
+    EncodeJob.manifestEntries(spark, outDir).foreach { e =>
+      val (p0, r0, w0, l0) = agg.getOrElse(e.batch_id, (-1, 0L, 0L, Nil))
+      agg(e.batch_id) = (math.max(p0, e.part_id), r0 + e.row_count, w0 + e.raw_bytes,
+        (Option(e.codecs).toList.filterNot(l0.contains) ++ l0))
     }
-    jsonEntries.foreach(e =>
-      add(e.batch_id, e.part_id, e.row_count, e.raw_bytes, Option(e.codecs).toSeq))
-    if (parquetPresent)
-      spark.read.schema(manifestSchema).parquet(manifestPath.toString)
-        .groupBy(col("batch_id"))
-        .agg(max("part_id").as("mp"), sum("row_count").as("r"),
-          sum("raw_bytes").as("b"), collect_set("codecs").as("cs"))
-        .collect().foreach { r =>
-          add(r.getInt(0), if (r.isNullAt(1)) -1 else r.getInt(1),
-            if (r.isNullAt(2)) 0L else r.getLong(2),
-            if (r.isNullAt(3)) 0L else r.getLong(3),
-            r.getSeq[String](4).filter(_ != null))
-        }
     val batchIds = agg.keySet.toSet
     val maxPart = agg.valuesIterator.map(_._1).foldLeft(-1)(math.max)
     val perBatch = agg.iterator.map { case (b, (_, r, w, _)) => b -> (r, w) }.toMap
@@ -136,121 +96,181 @@ object TableMeta {
     Snapshot(batchIds, maxPart, codecs, batchColumns, perBatch, comps)
   }
 
-  /** Chunk-file list for `committed` from the filestats sidecar — None
-    * when any committed batch predates the sidecar (callers fall back to
-    * the legacy chunk-tree walk). Cached per (outDir, batch set): the
-    * sidecar of a committed batch is immutable.
+  /** One filestats sidecar row: a chunk's stats for one column and the
+    * chunk file that holds it (`fileKey` is its scheme-less form, the
+    * match key of the file-keep map).
     */
-  def sidecarChunkFiles(spark: SparkSession, outDir: String, committed: Set[Int])
-      : Option[Seq[(Int, Option[String], String)]] = {
-    if (committed.isEmpty) return Some(Seq.empty)
-    val key = (outDir, committed.toSeq.sorted)
-    listSidecarFiles(spark, outDir, committed) match {
-      case None =>
-        sidecarCache.remove(key)
-        None // a batch predates the sidecar: caller walks the chunk tree
-      case Some(listing) =>
-        val sig = listing.map(s =>
-          s"${s.getPath}:${s.getLen}:${s.getModificationTime}").mkString(",")
-        val hit = sidecarCache.get(key)
-        if (hit != null && hit._1 == sig) return hit._2
-        val v = parseSidecarFiles(spark, listing.map(_.getPath.toString), committed)
-        boundedPut(sidecarCache, key, (sig, v))._2
-    }
+  private[graft] final case class SidecarEntry(part_id: Int, chunk_id: Int, column: String,
+                                               stats: ChunkStats, file: String, fileKey: String)
+
+  /** One committed batch's sidecar, parsed once: its parquet files, its
+    * rows per chunk (part_id, chunk_id) and its distinct chunk files.
+    */
+  private[graft] final class BatchIndex(val sidecarFiles: Seq[String],
+                                        entries: Seq[SidecarEntry]) {
+    val chunks: Map[(Int, Int), Seq[SidecarEntry]] =
+      entries.groupBy(e => (e.part_id, e.chunk_id))
+    val files: Seq[String] = entries.map(_.file).distinct.sorted
   }
 
-  /** Sidecar parquet schema (fixed projection of the chunk metadata, plus
-    * the `batch` partition column) — explicit everywhere so no read pays
-    * a schema-inference pass; batches written before `nan_count` simply
-    * read it as null, which is the conservative keep.
+  /** Per-table sidecar index: batch id -> (listing signature, index).
+    * The signature is the batch dir's sidecar listing (name:len:mtime),
+    * re-listed and compared on EVERY access, so an overwrite that reuses
+    * a batch id, a vacuum, or any other external change reloads that
+    * batch; a committed batch's sidecar is otherwise immutable, so it is
+    * read once.
     */
-  val filestatsSchema: org.apache.spark.sql.types.StructType = {
-    import org.apache.spark.sql.types._
-    StructType(Seq(
-      StructField("part_id", IntegerType), StructField("chunk_id", IntegerType),
-      StructField("column", StringType), StructField("min_val", StringType),
-      StructField("max_val", StringType), StructField("null_count", IntegerType),
-      StructField("row_count", IntegerType), StructField("nan_count", IntegerType),
-      StructField("bloom", BinaryType), StructField("file", StringType),
-      StructField("batch", IntegerType)))
-  }
+  private val indexCache = new Lru[String, Map[Int, (String, BatchIndex)]](1024)
 
-  /** Read the filestats sidecar root with the fixed schema. */
-  def readFilestats(spark: SparkSession, outDir: String): org.apache.spark.sql.DataFrame =
-    spark.read.schema(filestatsSchema).parquet(EncodeJob.filestatsDir(outDir))
+  /** Test instrumentation: sidecar batch LOADS (index misses). */
+  private[graft] val indexLoads = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** Driver-side listing of the committed batches' sidecar parquet files
-    * — the freshness probe AND the read's file list. None when any
-    * committed batch lacks a sidecar dir (pre-sidecar batch: walk).
+  /** The sidecar index of those `committed` batches that carry a sidecar
+    * (batches written before it are absent from the result). Driver-side:
+    * one listing of the sidecar root plus one per committed batch dir,
+    * and a parquet-mr read of a batch's sidecar files only when that
+    * batch's listing changed — never a Spark job.
     */
-  private def listSidecarFiles(spark: SparkSession, outDir: String, committed: Set[Int])
-      : Option[Seq[org.apache.hadoop.fs.FileStatus]] = {
-    val dir = new org.apache.hadoop.fs.Path(EncodeJob.filestatsDir(outDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return None
+  private def index(spark: SparkSession, outDir: String, committed: Set[Int])
+      : Map[Int, BatchIndex] = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val dir = new Path(EncodeJob.filestatsDir(outDir))
+    val fs = dir.getFileSystem(conf)
+    if (committed.isEmpty || !fs.exists(dir)) return Map.empty
     // O(batches) presence probe, not a tree walk
     val present = fs.listStatus(dir).iterator.map(_.getPath.getName).collect {
       case n if n.startsWith("batch=") => n.stripPrefix("batch=").toInt
     }.toSet
-    if (!committed.subsetOf(present)) return None
-    // one bounded listing per COMMITTED batch dir (never a recursive walk
-    // of the whole sidecar tree — replaced/orphan batches stay unvisited)
-    val sidecar = scala.collection.mutable.ArrayBuffer[org.apache.hadoop.fs.FileStatus]()
-    committed.toSeq.sorted.foreach { b =>
-      val bd = new org.apache.hadoop.fs.Path(EncodeJob.filestatsBatchDir(outDir, b))
-      if (!fs.exists(bd)) return None // pre-sidecar batch: caller walks
-      fs.listStatus(bd).foreach { st =>
-        if (st.isFile && st.getPath.getName.endsWith(".parquet")) sidecar += st
+    val prev = indexCache.get(outDir).getOrElse(Map.empty)
+    // one bounded listing per COMMITTED batch dir (replaced/orphan
+    // batches stay unvisited)
+    val cur = (committed intersect present).iterator.map { b =>
+      val files = fs.listStatus(new Path(EncodeJob.filestatsBatchDir(outDir, b)))
+        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+        .sortBy(_.getPath.getName)
+      val sig = files.map(st =>
+        s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}").mkString(",")
+      b -> (prev.get(b) match {
+        case Some(hit) if hit._1 == sig => hit
+        case _ =>
+          indexLoads.incrementAndGet()
+          (sig, new BatchIndex(files.map(_.getPath.toString).toSeq,
+            files.toSeq.flatMap(f => readSidecarFile(conf, f.getPath))))
+      })
+    }.toMap
+    indexCache.put(outDir, prev.filter { case (b, _) => present(b) } ++ cur)
+    cur.map { case (b, (_, bi)) => b -> bi }
+  }
+
+  /** A sidecar parquet file's rows, read on the driver with parquet-mr.
+    * `nan_count` may be absent (batches written before it): that reads
+    * as None, the conservative keep.
+    */
+  private def readSidecarFile(conf: org.apache.hadoop.conf.Configuration, path: Path)
+      : Seq[SidecarEntry] = {
+    val reader = org.apache.parquet.hadoop.ParquetReader
+      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), path)
+      .withConf(conf).build()
+    val out = scala.collection.mutable.ArrayBuffer[SidecarEntry]()
+    try {
+      var g = reader.read()
+      while (g != null) {
+        def has(n: String) = g.getType.containsField(n) && g.getFieldRepetitionCount(n) > 0
+        def str(n: String) = if (has(n)) Some(g.getString(n, 0)) else None
+        val file = g.getString("file", 0)
+        out += SidecarEntry(g.getInteger("part_id", 0), g.getInteger("chunk_id", 0),
+          g.getString("column", 0),
+          new ChunkStats(str("min_val"), str("max_val"),
+            g.getInteger("null_count", 0), g.getInteger("row_count", 0),
+            if (has("nan_count")) Some(g.getInteger("nan_count", 0)) else None,
+            if (has("bloom")) Some(g.getBinary("bloom", 0).getBytes) else None),
+          file, normPath(file))
+        g = reader.read()
+      }
+    } finally reader.close()
+    out.toSeq
+  }
+
+  /** Scheme-less path: sidecars written before the full-URI fix stored
+    * stripped paths, newer ones keep the scheme — normalizing both the
+    * map keys and the probe makes them compare equal.
+    */
+  private[graft] def normPath(p: String): String = new Path(p).toUri.getPath
+
+  /** Chunk-file list for `committed` from the sidecar index — None when
+    * any committed batch predates the sidecar (callers fall back to the
+    * legacy chunk-tree walk).
+    */
+  def sidecarChunkFiles(spark: SparkSession, outDir: String, committed: Set[Int])
+      : Option[Seq[(Int, Option[String], String)]] = {
+    val idx = index(spark, outDir, committed)
+    if (idx.size < committed.size) None
+    else Some(idx.toSeq.sortBy(_._1).flatMap { case (b, bi) =>
+      bi.files.map(f => (b, """column=([^/]+)/""".r.findFirstMatchIn(f).map(_.group(1)), f))
+    })
+  }
+
+  /** The committed batches' sidecar parquet files — empty when any
+    * committed batch predates the sidecar (a mix would under-count).
+    */
+  def sidecarFiles(spark: SparkSession, outDir: String, committed: Set[Int]): Seq[String] = {
+    val idx = index(spark, outDir, committed)
+    if (idx.size < committed.size) Seq.empty
+    else idx.valuesIterator.flatMap(_.sidecarFiles).toSeq.sorted
+  }
+
+  /** A chunk is kept iff every predicate keeps its sidecar row for the
+    * predicate's column; a chunk with no row for that column (written
+    * before the column existed) keeps.
+    */
+  private def chunkKept(rows: Seq[SidecarEntry], preds: Seq[ChunkPrune]): Boolean =
+    preds.forall(p => rows.forall(r => r.column != p.column || p.keepsChunk(r.stats)))
+
+  /** PLAN-time file keep, evaluated on the driver against the sidecar
+    * index with the row-side `ChunkPrune.keepsChunk`: scheme-less chunk
+    * file -> kept iff any of its chunks is kept. Chunk keep is decided per
+    * (batch, part_id, chunk_id) across columns, so on the
+    * column-partitioned layout the sibling column files of a pruned chunk
+    * are pruned too. Files of batches without a sidecar are absent (the
+    * caller keeps them).
+    */
+  def fileKeep(spark: SparkSession, outDir: String, committed: Set[Int],
+               preds: Seq[ChunkPrune]): Map[String, Boolean] = {
+    val keep = scala.collection.mutable.Map[String, Boolean]()
+    index(spark, outDir, committed).valuesIterator.foreach { bi =>
+      bi.chunks.valuesIterator.foreach { rows =>
+        val k = chunkKept(rows, preds)
+        rows.foreach(r => keep(r.fileKey) = k || keep.getOrElse(r.fileKey, false))
       }
     }
-    Some(sidecar.toSeq)
+    keep.toMap
   }
 
-  private def parseSidecarFiles(spark: SparkSession, sidecar: Seq[String],
-                                committed: Set[Int])
-      : Option[Seq[(Int, Option[String], String)]] = {
-    if (sidecar.isEmpty) return Some(Seq.empty)
-    // leaf-file reads skip Hive partition discovery, so `batch` rides in
-    // the chunk-file path itself (chunks/batch=N/...), same as the walk.
-    // Explicit schema minus the partition column: leaf reads have none.
-    val leafSchema = org.apache.spark.sql.types.StructType(
-      filestatsSchema.fields.filterNot(_.name == "batch"))
-    val rows = spark.read.schema(leafSchema).parquet(sidecar: _*)
-      .select(col("file")).distinct().collect()
-    Some(rows.iterator.flatMap { r =>
-      val p = r.getString(0)
-      val batch = """batch=(\d+)""".r.findFirstMatchIn(p).map(_.group(1).toInt)
-      val column = """column=([^/]+)/""".r.findFirstMatchIn(p).map(_.group(1))
-      batch.filter(committed.contains).map(b => (b, column, p))
-    }.toSeq)
-  }
-
-  /** Plan-time file-keep maps per (outDir, committed set, predicate
-    * signature), validated against the sidecar listing exactly like the
-    * chunk-file cache: the same filter re-planned (Spark re-plans a scan
-    * per action) stops paying the distributed keep evaluation twice.
+  /** Batches of `committed` that can hold a row matching every predicate
+    * — the DML pruning decision, from the same index and keep logic as
+    * `fileKeep`. Batches without a sidecar, or whose sidecar has no rows,
+    * count as matching.
     */
-  private val fileKeepCache =
-    new java.util.concurrent.ConcurrentHashMap[(String, Seq[Int], String), (String, Map[String, Boolean])]()
-
-  def fileKeep(spark: SparkSession, outDir: String, committed: Set[Int],
-               preds: Seq[graft.spark.source.ChunkPrune])
-      (compute: => Map[String, Boolean]): Map[String, Boolean] = {
-    val predsSig = preds.map(_.toString).sorted.mkString(";")
-    val key = (outDir, committed.toSeq.sorted, predsSig)
-    listSidecarFiles(spark, outDir, committed) match {
-      case None => compute // no sidecar: cheap anyway (empty keep map)
-      case Some(listing) =>
-        val sig = listing.map(s =>
-          s"${s.getPath}:${s.getLen}:${s.getModificationTime}").mkString(",")
-        val hit = fileKeepCache.get(key)
-        if (hit != null && hit._1 == sig) return hit._2
-        boundedPut(fileKeepCache, key, (sig, compute))._2
-    }
+  def batchesPossiblyMatching(spark: SparkSession, outDir: String, committed: Set[Int],
+                              preds: Seq[ChunkPrune]): Set[Int] = {
+    if (preds.isEmpty) return committed
+    val idx = index(spark, outDir, committed)
+    committed.filter(b => idx.get(b).forall(bi =>
+      bi.chunks.isEmpty || bi.chunks.valuesIterator.exists(chunkKept(_, preds))))
   }
 
   /** Drop every cached entry (tests; external tampering recovery). */
-  def invalidateAll(): Unit = {
-    cache.clear(); sidecarCache.clear(); fileKeepCache.clear()
+  def invalidateAll(): Unit = { cache.clear(); indexCache.clear() }
+
+  /** A map bounded at `capacity` entries that evicts the least recently
+    * used one.
+    */
+  private[graft] final class Lru[K, V](capacity: Int) {
+    private val m = new java.util.LinkedHashMap[K, V](16, 0.75f, /* accessOrder */ true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size > capacity
+    }
+    def get(k: K): Option[V] = synchronized(Option(m.get(k)))
+    def put(k: K, v: V): Unit = synchronized { m.put(k, v); () }
+    def clear(): Unit = synchronized(m.clear())
   }
 }

@@ -107,8 +107,10 @@ object GraftDmlRunner {
     // can live in (and appends the insert branch when none match).
     // Conservative everywhere: non-equi conditions, NOT MATCHED BY
     // SOURCE clauses (they touch unmatched rows table-wide), single-batch
-    // tables and already-pushed-down scan shapes fall back to the full
-    // copy-on-write rewrite.
+    // tables, already-pushed-down scan shapes and non-deterministic
+    // sources or keys (the bounds pass and the merge itself would each
+    // draw different keys, so pruned batches could hold real matches)
+    // fall back to the full copy-on-write rewrite.
     val visible = EncodeJob.committedBatches(spark, dir)
     def conj(e: Expression): Seq[Expression] = e match {
       case org.apache.spark.sql.catalyst.expressions.And(l, r) => conj(l) ++ conj(r)
@@ -136,7 +138,8 @@ object GraftDmlRunner {
     var sourceEmpty = false
     val affected: Set[Int] =
       if (visible.size <= 1 || equi.isEmpty || !plainRelation ||
-          m.notMatchedBySourceActions.nonEmpty) visible
+          m.notMatchedBySourceActions.nonEmpty || !m.sourceTable.deterministic ||
+          !equi.forall(_._2.deterministic)) visible
       else {
         // one narrow aggregate over the (small) source: row count, per
         // equi-key min/max bounds, and an approximate distinct count that

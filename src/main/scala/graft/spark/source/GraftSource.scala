@@ -270,10 +270,6 @@ object GraftWriteSupport {
 
     val committed = graft.spark.TableMeta.snapshot(spark, outDir).batchIds
     if (committed.isEmpty) { EncodeJob.run(data, cfg); return }
-    // presence flag + snapshot-sourced codecs inside runBatch; explicit
-    // schema keeps the (never-executed) frame from paying inference
-    val manifest = Some(spark.read.schema(graft.spark.TableMeta.manifestSchema)
-      .parquet(EncodeJob.manifestDir(outDir)))
 
     // append onto live data: schema and layout must match what readers
     // already see — fail loud rather than silently corrupt the dir.
@@ -302,7 +298,8 @@ object GraftWriteSupport {
     val (nextBatch, nextPart) = EncodeJob.nextBatchAndPart(spark, outDir)
     val partTerm = if (nextPart <= 0) 0 else (nextPart - 1) / cfg.numPartitions + 1
     val batchId = math.max(nextBatch, partTerm)
-    EncodeJob.runBatch(data, cfg, batchId, manifest)
+    // codecs come from the snapshot's lineage (the table has batches)
+    EncodeJob.runBatch(data, cfg, batchId, hadBatches = true)
   }
 }
 
@@ -583,80 +580,28 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     (pushed ++ runtimeFilters).flatMap(ChunkPrune.from(_, specs))
   }
 
-  /** PLAN-time file pruning from the filestats sidecar: a file whose
-    * every chunk fails the predicates (same conservative keep logic as
-    * the read-side ChunkPrune, evaluated distributedly over the sidecar's
-    * metadata rows) is never opened — no footer read, no page IO. Chunk
-    * keep is decided per (part_id, chunk_id) ACROSS columns first, so on
-    * the column-partitioned layout a predicate on one column prunes the
-    * sibling column files of the same chunks too. Files without sidecar
-    * coverage (older dirs) default to kept.
+  /** PLAN-time file pruning from the filestats sidecar: a file none of
+    * whose chunks passes the predicates is never opened — no footer read,
+    * no page IO. Evaluated on the driver by TableMeta against its cached
+    * sidecar index, with the same `keepsChunk` the partition reader
+    * applies to opened chunks; chunk keep is decided per chunk ACROSS
+    * columns, so on the column-partitioned layout a predicate on one
+    * column prunes the sibling column files of the same chunks too. Files
+    * without sidecar coverage (older dirs) default to kept.
     */
-  private def fileKeep(preds: Array[ChunkPrune], committed: Set[Int]): Map[String, Boolean] = {
-    if (preds.isEmpty) return Map.empty
-    graft.spark.TableMeta.fileKeep(spark, outDir, committed, preds.toSeq)(
-      computeFileKeep(preds, committed))
-  }
-
-  private def computeFileKeep(preds: Array[ChunkPrune], committed: Set[Int]): Map[String, Boolean] = {
-    import org.apache.spark.sql.functions.{col, max, min}
-    val dir = new Path(EncodeJob.filestatsDir(outDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return Map.empty
-    val predCols = preds.map(_.column).toSet
-    // explicit sidecar schema: pre-nan_count batches read it as null
-    // (keepSelfColumn's NaN clause keeps conservatively) and no
-    // inference pass runs
-    val rows = graft.spark.TableMeta.readFilestats(spark, outDir)
-      .filter(col("batch").isin(committed.toSeq: _*) &&
-        col("column").isin(predCols.toSeq: _*))
-    val chunkKeep = rows
-      .withColumn("k", preds.map(_.keepColumn).reduce(_ && _))
-      .groupBy(col("part_id"), col("chunk_id")).agg(min(col("k")).as("ck"))
-    rows.select("file", "part_id", "chunk_id").distinct()
-      .join(chunkKeep, Seq("part_id", "chunk_id"))
-      .groupBy(col("file")).agg(max(col("ck")).as("keep"))
-      // scheme-less match keys: sidecars written before the full-URI fix
-      // stored stripped paths, newer ones keep the scheme — normalizing
-      // BOTH the map keys and the probe (kept()) makes them compare equal
-      .collect().map(r => normPath(r.getString(0)) -> r.getBoolean(1)).toMap
-  }
-
-  private def normPath(p: String): String = new Path(p).toUri.getPath
-
-  /** Committed batches' sidecar parquet files — ONLY when every committed
-    * batch has a sidecar (a dir mixing pre-sidecar batches would silently
-    * under-count); empty means "use the chunk files".
-    */
-  private def filestatsFiles(committed: Set[Int]): Seq[String] = {
-    if (committed.isEmpty) return Seq.empty
-    val dir = new Path(EncodeJob.filestatsDir(outDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return Seq.empty
-    // one bounded listing per COMMITTED batch dir (never a recursive walk
-    // of the whole sidecar tree — replaced/orphan batches stay unvisited)
-    val out = scala.collection.mutable.ArrayBuffer[String]()
-    committed.toSeq.sorted.foreach { b =>
-      val bd = new Path(EncodeJob.filestatsBatchDir(outDir, b))
-      if (!fs.exists(bd)) return Seq.empty // pre-sidecar batch: caller uses chunk files
-      fs.listStatus(bd).foreach { st =>
-        if (st.isFile && st.getPath.getName.endsWith(".parquet"))
-          out += st.getPath.toString
-      }
-    }
-    out.toSeq
-  }
+  private def fileKeep(preds: Array[ChunkPrune], committed: Set[Int]): Map[String, Boolean] =
+    if (preds.isEmpty) Map.empty
+    else graft.spark.TableMeta.fileKeep(spark, outDir, committed, preds.toSeq)
 
   /** Chunk-file list for `committed` from the filestats SIDECAR — the
-    * table's own metadata, read distributedly (the driver receives only
-    * the distinct (batch, file) pairs) — so scan planning never lists the
-    * chunk tree: at 100 TB / millions of files on an object store, an
-    * O(files) recursive driver listing per query plan is the Hive-era
-    * bottleneck table formats exist to remove. None when any committed
-    * batch predates the sidecar (caller falls back to the legacy walk).
-    * Cf. the reference's FileTail idea — never list, read the metadata
-    * (/root/reference/src/ApacheOrcDotNet/FileTail.cs:22-54) — lifted
-    * from file level to table level.
+    * table's own metadata, indexed on the driver by TableMeta — so scan
+    * planning never lists the chunk tree: at 100 TB / millions of files on
+    * an object store, an O(files) recursive driver listing per query plan
+    * is the Hive-era bottleneck table formats exist to remove. None when
+    * any committed batch predates the sidecar (caller falls back to the
+    * legacy walk). Cf. the reference's FileTail idea — never list, read
+    * the metadata (FileTail.cs:22-54) — lifted from file level to table
+    * level.
     */
   private def sidecarChunkFiles(committed: Set[Int])
       : Option[Seq[(Int, Option[String], String)]] =
@@ -710,7 +655,7 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
       }
     val keep = if (aggSlots.isDefined) Map.empty[String, Boolean]
                else fileKeep(activePreds, committed)
-    def kept(path: String): Boolean = keep.getOrElse(normPath(path), true)
+    def kept(path: String): Boolean = keep.getOrElse(graft.spark.TableMeta.normPath(path), true)
     if (aggSlots.isDefined) {
       // aggregate mode: chunk groups need no column alignment (each
       // column's metadata row contributes its own partial independently),
@@ -719,9 +664,9 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
       // Prefer the filestats SIDECAR files when every committed batch has
       // one: same stat fields, orders of magnitude smaller, and the chunk
       // files themselves are never opened at all.
-      val sidecar = filestatsFiles(committed)
+      val sidecar = graft.spark.TableMeta.sidecarFiles(spark, outDir, committed)
       if (sidecar.nonEmpty)
-        return sidecar.sorted.map(f =>
+        return sidecar.map(f =>
           GraftInputPartition(Array(f), Seq.empty): InputPartition).toArray
       // the designated COUNT(*) column's rows must be readable even when
       // it isn't an emit column (post-ALTER dirs)
@@ -908,54 +853,55 @@ final case class GraftInputPartition(files: Array[String], columns: Seq[String],
                                      driver: Option[String] = None)
     extends InputPartition
 
+/** The chunk metadata a pruning decision reads: a view of an
+  * EncodedChunk (row side, after the file is open) or of a filestats
+  * sidecar row (plan side, before anything is opened). The Bloom filter
+  * is deserialised on first use and at most once per view, so the
+  * driver's sidecar index pays it once per committed batch.
+  */
+final class ChunkStats(val min_val: Option[String], val max_val: Option[String],
+                       val null_count: Int, val row_count: Int, val nan_count: Option[Int],
+                       bloomBytes: Option[Array[Byte]]) {
+  lazy val bloom: Option[graft.core.Bloom] =
+    bloomBytes.map(b => graft.core.Bloom.deserializeTagged(b)._2)
+}
+
+object ChunkStats {
+  def of(c: EncodedChunk): ChunkStats =
+    new ChunkStats(c.min_val, c.max_val, c.null_count, c.row_count, c.nan_count, c.bloom)
+}
+
 /** A chunk-level pruning decision derived from one pushed Filter. All
   * implementations are conservative (keep on any doubt) — correctness
   * comes from Spark re-applying the exact residual filter above the scan.
+  * `keepsChunk` is the ONE keep implementation: the partition reader
+  * applies it to each opened chunk, and the driver applies it at plan
+  * time to the sidecar index (TableMeta) for file and batch pruning.
   */
 sealed trait ChunkPrune extends Serializable {
   def column: String
-  def keepsChunk(c: EncodedChunk): Boolean
+  def keepsChunk(c: ChunkStats): Boolean
   /** Sub-chunk stride-skip bounds in the stride index's long space, when
     * this predicate can drive one.
     */
   def strideBounds: Option[(Long, Long)] = None
-  /** The same decision as a Column expression over filestats sidecar rows
-    * (column, min_val, max_val, null_count, row_count, bloom), evaluated
-    * distributedly at PLAN time for file-level pruning. Rows of other
-    * columns must stay true (the AND across predicates spans columns).
-    */
-  final def keepColumn: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{col, lit}
-    (col("column") =!= lit(column)) || keepSelf
-  }
-  protected def keepSelf: org.apache.spark.sql.Column
 }
 
 /** IsNotNull: an all-null chunk can contribute no matching rows. */
 final case class NotNullPrune(column: String) extends ChunkPrune {
-  override def keepsChunk(c: EncodedChunk): Boolean = c.null_count < c.row_count
-  override protected def keepSelf: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.col
-    col("null_count") < col("row_count")
-  }
+  override def keepsChunk(c: ChunkStats): Boolean = c.null_count < c.row_count
 }
 
 /** IsNull: a null-free chunk can contribute no matching rows. */
 final case class NullOnlyPrune(column: String) extends ChunkPrune {
-  override def keepsChunk(c: EncodedChunk): Boolean = c.null_count > 0
-  override protected def keepSelf: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.col
-    col("null_count") > 0
-  }
+  override def keepsChunk(c: ChunkStats): Boolean = c.null_count > 0
 }
 
 /** In(col, values): keep the chunk if ANY value might be present —
   * per-value min/max range + bloom probes, OR-combined.
   */
 final case class AnyOfPrune(column: String, alts: Array[PrunePred]) extends ChunkPrune {
-  override def keepsChunk(c: EncodedChunk): Boolean = alts.exists(_.keepsChunk(c))
-  override protected def keepSelf: org.apache.spark.sql.Column =
-    alts.map(_.keepSelfColumn).reduce(_ || _)
+  override def keepsChunk(c: ChunkStats): Boolean = alts.exists(_.keepsChunk(c))
 }
 
 /** One pushed comparison, pre-resolved on the driver into the spaces the
@@ -983,10 +929,10 @@ final case class PrunePred(column: String, logical: String,
     * what the NaN-free range says. Absent nan_count (pre-sidecar chunks)
     * keeps — conservative.
     */
-  private def nanMayMatch(c: EncodedChunk): Boolean =
+  private def nanMayMatch(c: ChunkStats): Boolean =
     nanKeeps && c.nan_count.forall(_ > 0)
 
-  def keepsChunk(c: EncodedChunk): Boolean = {
+  def keepsChunk(c: ChunkStats): Boolean = {
     if (nanMayMatch(c)) return true
     val byRange =
       if (longUsable) overlap(c, _.toLong, loLong, hiLong)(Ordering.Long)
@@ -1002,63 +948,20 @@ final case class PrunePred(column: String, logical: String,
           Ordering.comparatorToOrdering(
             java.util.Comparator.naturalOrder[org.apache.spark.unsafe.types.UTF8String]()))
       } else true
-    val byBloom = !bloomUsable || c.bloom.forall { b =>
-      graft.core.Bloom.deserializeTagged(b)._2.mightContain(bloomH1, bloomH2)
-    }
+    val byBloom = !bloomUsable || c.bloom.forall(_.mightContain(bloomH1, bloomH2))
     byRange && byBloom
   }
 
   /** Chunk [min,max] vs [lo,hi] in a parsed space; any parse failure or
     * absent stat keeps the chunk. hi == null means +∞ (open above).
     */
-  private def overlap[T](c: EncodedChunk, parse: String => T, lo: T, hi: T)
+  private def overlap[T](c: ChunkStats, parse: String => T, lo: T, hi: T)
                         (implicit ord: Ordering[T]): Boolean =
     try {
       val below = hi != null && c.min_val.exists(m => ord.gt(parse(m), hi))
       val above = c.max_val.exists(m => ord.lt(parse(m), lo))
       !(below || above)
     } catch { case _: Exception => true }
-
-  override protected def keepSelf: org.apache.spark.sql.Column = keepSelfColumn
-
-  /** keepsChunk as a Column over sidecar rows — same spaces, same
-    * conservatism: try_cast yields null on unparseable stats and
-    * coalesce(..., true) keeps; string compares ride Spark's binary
-    * collation (= the UTF8String comparator used row-side); bloom
-    * rejection requires a present blob AND a definite miss.
-    */
-  def keepSelfColumn: org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.functions.{coalesce, col, lit, udf}
-    val byRange =
-      if (longUsable)
-        coalesce(!(col("max_val").try_cast("bigint") < lit(loLong) ||
-                   col("min_val").try_cast("bigint") > lit(hiLong)), lit(true))
-      else if (doubleUsable) {
-        // SQL comparisons already treat -0.0 == 0.0 and order NaN largest
-        // (nanSafeCompareDoubles), so no canonicalization needed here; the
-        // NaN hole is the same as keepsChunk's: stats exclude NaN, so a
-        // NaN-matchable predicate must keep rows whose nan_count may be >0
-        // (null nan_count — older sidecar — keeps, conservative).
-        val range =
-          coalesce(!(col("max_val").try_cast("double") < lit(loDouble) ||
-                     col("min_val").try_cast("double") > lit(hiDouble)), lit(true))
-        if (nanKeeps) range || coalesce(col("nan_count") > lit(0), lit(true)) else range
-      }
-      else if (loStr.isDefined || hiStr.isDefined)
-        coalesce(!(hiStr.map(h => col("min_val") > lit(h)).getOrElse(lit(false)) ||
-                   col("max_val") < lit(loStr.getOrElse(""))), lit(true))
-      else lit(true)
-    val byBloom =
-      if (!bloomUsable) lit(true)
-      else {
-        val h1c = bloomH1; val h2c = bloomH2
-        val rejects = udf { (b: Array[Byte]) =>
-          b != null && !graft.core.Bloom.deserializeTagged(b)._2.mightContain(h1c, h2c)
-        }
-        !rejects(col("bloom"))
-      }
-    byRange && byBloom
-  }
 }
 
 object ChunkPrune {
@@ -1466,7 +1369,7 @@ final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnS
     while (!rows.hasNext) {
       val group = nextGroup()
       if (group == null) return false
-      if (preds.forall(p => group.get(p.column).forall(p.keepsChunk)))
+      if (preds.forall(p => group.get(p.column).forall(c => p.keepsChunk(ChunkStats.of(c)))))
         rows = TableEncoder.decodeChunkInternalRows(
           group.map { case (k, v) => k -> v }, specs, writer, stridePrunes)
     }

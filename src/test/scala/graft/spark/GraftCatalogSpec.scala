@@ -367,4 +367,47 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(spark.sql("SELECT v FROM graft.selm.t WHERE id = 90000").collect()
       .map(_.getLong(0)).toSeq == Seq(7L))
   }
+
+  test("MERGE with a non-deterministic source takes the full rewrite") {
+    graft.plans.GraftExtensions.register(spark)
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.ndm")
+    spark.sql(
+      """CREATE TABLE graft.ndm.t (id BIGINT, v BIGINT)
+        |USING graft TBLPROPERTIES ('numPartitions' = '2')""".stripMargin)
+    Seq((0L, 100L), (1000L, 1100L), (2000L, 2100L)).foreach { case (lo, hi) =>
+      spark.range(lo, hi).selectExpr("id", "id AS v").createOrReplaceTempView("ndm_src")
+      spark.sql("INSERT INTO graft.ndm.t SELECT * FROM ndm_src")
+    }
+    val dir = s"$wh/ndm/t"
+    val before = EncodeJob.committedBatches(spark, dir)
+    assert(before == Set(0, 1, 2))
+
+    // the keys equal `id`, but rand() makes the source plan
+    // non-deterministic: its key bounds cannot be trusted to prune
+    spark.sql(
+      """MERGE INTO graft.ndm.t t
+        |USING (SELECT id + CAST(floor(rand(7) * 0) AS BIGINT) AS id, -1L AS v
+        |       FROM range(1000, 1050)
+        |       UNION ALL SELECT id, -2L AS v FROM range(5000, 5005)) s
+        |ON t.id = s.id
+        |WHEN MATCHED THEN UPDATE SET t.v = s.v
+        |WHEN NOT MATCHED THEN INSERT (id, v) VALUES (s.id, s.v)
+        |""".stripMargin)
+
+    val committed = EncodeJob.committedBatches(spark, dir)
+    assert(committed.intersect(before).isEmpty,
+      s"a non-deterministic MERGE source must rewrite every batch: $committed")
+
+    // plain-Spark model of the same MERGE over the pre-merge rows
+    val target = spark.range(0, 100).union(spark.range(1000, 1100)).union(spark.range(2000, 2100))
+      .selectExpr("id", "id AS v")
+    val source = spark.range(1000, 1050).selectExpr("id", "-1L AS v")
+      .union(spark.range(5000, 5005).selectExpr("id", "-2L AS v"))
+    val model = target.as("t").join(source.as("s"), col("t.id") === col("s.id"), "full_outer")
+      .select(coalesce(col("t.id"), col("s.id")).as("id"),
+        when(col("s.id").isNotNull, col("s.v")).otherwise(col("t.v")).as("v"))
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
+    assert(rows(spark.sql("SELECT id, v FROM graft.ndm.t")) == rows(model))
+  }
 }

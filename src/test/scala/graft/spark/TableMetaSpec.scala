@@ -81,4 +81,33 @@ class TableMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
     fs.delete(new org.apache.hadoop.fs.Path(EncodeJob.filestatsDir(o)), true)
     assert(TableMeta.sidecarChunkFiles(spark, o, Set(0)).isEmpty)
   }
+
+  test("snapshot cache evicts the least recently used table, not every table") {
+    // tables without a manifest dir load as empty snapshots: no Spark job
+    val dirs = (0 to 1024).map(i => s"$tmp/lru/t$i")
+    dirs.foreach(d => TableMeta.snapshot(spark, d))
+    val loads0 = TableMeta.snapshotLoads.get()
+    TableMeta.snapshot(spark, dirs(1))
+    TableMeta.snapshot(spark, dirs(1024))
+    assert(TableMeta.snapshotLoads.get() == loads0,
+      "only the oldest table should have been evicted")
+    TableMeta.snapshot(spark, dirs(0))
+    assert(TableMeta.snapshotLoads.get() == loads0 + 1, "the oldest table was not evicted")
+  }
+
+  test("a manifest dir holding parquet files fails up front as a pre-JSON manifest") {
+    val o = s"$tmp/t3"
+    spark.range(0, 100).select(col("id")).write.format("graft").mode("overwrite")
+      .option("numPartitions", "1").save(o)
+    val legacy = new java.io.File(EncodeJob.manifestDir(o), "part-00000.parquet")
+    java.nio.file.Files.write(legacy.toPath, Array[Byte](1, 2, 3))
+    val read = intercept[IllegalArgumentException] {
+      spark.read.format("graft").load(o).count()
+    }
+    assert(read.getMessage.contains("pre-JSON manifest"), read.getMessage)
+    val append = intercept[IllegalArgumentException] {
+      spark.range(0, 10).select(col("id")).write.format("graft").mode("append").save(o)
+    }
+    assert(append.getMessage.contains("pre-JSON manifest"), append.getMessage)
+  }
 }
