@@ -230,9 +230,9 @@ object Bench {
 
     def eff(hi: Int, lo: Int): Double =
       (best(lo)._2 / best(hi)._2) / (hi.toDouble / lo)
-    val effBig = eff(cpus, math.max(1, cpus / 4))
-    val effFit = eff(math.max(1, cpus / 2), math.max(1, cpus / 8))
-    val effSmall = eff(math.max(1, cpus / 4), math.max(1, cpus / 16))
+    // only pairs whose clamped levels differ: a pair like (1, 1) scores
+    // 1.0 by construction and would pass any gate on its own
+    val effs = gatePairs.distinct.map { case (h, l) => (h, l, eff(h, l)) }
 
     // -------- decode throughput (zero-shuffle colocated path) --------
     // measured at three parallelism levels on the same encoded output —
@@ -259,9 +259,6 @@ object Bench {
       }
       decodeBenchInterleaved(tmpOut, schema, decodeLevels, rounds = 3)
     }
-    val (decodeSec, decodeSteal) = decodeBest(cpus)
-    val (decodeSecQuarter, decodeStealQuarter) = decodeBest(math.max(1, cpus / 4))
-    val (decodeSecSixteenth, _) = decodeBest(math.max(1, cpus / 16))
 
     // decode of the zstd fast-mode output at local[cpus]: per-core decode
     // is inflate-bound on the zlib layout (ProfileDecode: zlib+FSST 283
@@ -395,15 +392,17 @@ object Bench {
     }.mkString(",")
     val encodeJson =
       f"""{"rows":$benchRows,"raw_gb":${rawBytes / 1e9}%.3f,$perLevel,""" +
-        f""""scaling_efficiency":${Seq(effBig, effFit, effSmall).max}%.3f,""" +
-        f""""scaling_efficiency_${cpus / 4}%d_$cpus%d":$effBig%.3f,""" +
-        f""""scaling_efficiency_${cpus / 8}%d_${cpus / 2}%d":$effFit%.3f,""" +
-        f""""scaling_efficiency_${cpus / 16}%d_${cpus / 4}%d":$effSmall%.3f,""" +
-        f""""decode_sec$cpus%d":$decodeSec%.2f,"decode_gbps$cpus%d":${rawBytes / 1e9 / math.max(0.001, decodeSec)}%.3f,"decode_rows":$decodeRows%d,"decode_steal_pct$cpus%d":$decodeSteal%.1f,""" +
-        f""""decode_sec${cpus / 4}%d":$decodeSecQuarter%.2f,"decode_gbps${cpus / 4}%d":${rawBytes / 1e9 / math.max(0.001, decodeSecQuarter)}%.3f,"decode_steal_pct${cpus / 4}%d":$decodeStealQuarter%.1f,""" +
-        f""""decode_scaling_${cpus / 4}%d_$cpus%d":${(decodeSecQuarter / math.max(0.001, decodeSec)) / 4.0}%.3f,""" +
-        f""""decode_sec${cpus / 16}%d":$decodeSecSixteenth%.2f,"decode_gbps${cpus / 16}%d":${rawBytes / 1e9 / math.max(0.001, decodeSecSixteenth)}%.3f,""" +
-        f""""decode_scaling_${cpus / 16}%d_${cpus / 4}%d":${(decodeSecSixteenth / math.max(0.001, decodeSecQuarter)) / 4.0}%.3f,""" +
+        f""""scaling_efficiency":${effs.map(_._3).maxOption.getOrElse(0.0)}%.3f,""" +
+        effs.map { case (h, l, e) => f""""scaling_efficiency_$l%d_$h%d":$e%.3f,""" }.mkString +
+        f""""decode_rows":$decodeRows%d,""" +
+        decodeLevels.map { l =>
+          val (sec, steal) = decodeBest(l)
+          f""""decode_sec$l%d":$sec%.2f,"decode_gbps$l%d":${rawBytes / 1e9 / math.max(0.001, sec)}%.3f,"decode_steal_pct$l%d":$steal%.1f,"""
+        }.mkString +
+        decodeLevels.sliding(2).collect { case Seq(h, l) =>
+          val e = (decodeBest(l)._1 / math.max(0.001, decodeBest(h)._1)) / (h.toDouble / l)
+          f""""decode_scaling_$l%d_$h%d":$e%.3f,"""
+        }.mkString +
         f""""bytes_per_doc":${encodedBytes.toDouble / benchRows}%.1f,"compression_ratio":${encodedBytes.toDouble / rawBytes}%.4f,""" +
         f""""encode_gbps${cpus}%d_zstd":${rawBytes / 1e9 / zstdEncSec}%.3f,""" +
         f""""bytes_per_doc_zstd":${zstdEncodedBytes.toDouble / benchRows}%.1f,""" +

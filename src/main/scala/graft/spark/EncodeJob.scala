@@ -39,7 +39,7 @@ object EncodeJob {
       outDir: String,
       // encode fan-out AND the output file count (one file per encode
       // task). Size it ~3× the widest expected READ parallelism too: the
-      // colocated decode runs one task per file, and reader-threads ==
+      // scan runs one read task per file, and reader-threads ==
       // files means a single straggler-bound wave (measured as a 32-thread
       // decode running SLOWER than 8 threads; DecodeScale probe).
       numPartitions: Int,
@@ -94,9 +94,8 @@ object EncodeJob {
       bloomColumns: Set[String] = Set.empty,
       // Hive-partition the chunk table by `column` so a column-subset read
       // prunes unrequested columns' files at the SCAN (IO ∝ requested
-      // columns). Trade-off: the one-file-per-task layout invariant the
-      // zero-shuffle full read needs no longer holds, so full-table reads
-      // take the shuffled decode path — pick per table by read pattern
+      // columns). Trade-off: one file per task PER COLUMN, which full
+      // reads zip back into chunk groups — pick per table by read pattern
       // (wide tables read by narrow projections want this on).
       partitionByColumn: Boolean = false)
 
@@ -1113,9 +1112,10 @@ object EncodeJob {
     // the writer KNOWS the layout — record it so a SAME-JVM rewrite of an
     // outDir with a different layout serves readers the fresh answer. The
     // guarantee is JVM-scoped only: another process rewriting this outDir
-    // with a different layout leaves this cache stale, which costs the
-    // colocated-probe fallback to the (always-correct) shuffled path, never
-    // wrong data — cross-process rewrites want a new session.
+    // with a different layout leaves this cache stale, which costs
+    // readBack a probe-driven fallback to the (always-correct) shuffled
+    // path or a loud scan failure, never wrong data — cross-process
+    // rewrites want a new session.
     layoutCache.put(cfg.outDir, java.lang.Boolean.valueOf(cfg.partitionByColumn))
   }
 
@@ -1152,81 +1152,45 @@ object EncodeJob {
   private[spark] def readChunkTree(spark: SparkSession, outDir: String): DataFrame =
     spark.read.schema(chunkTreeSchema).parquet(chunkDir(outDir))
 
-  /** Chunk rows of committed batches only. The `batch` partition-column
-    * filter prunes whole orphan directories at the scan — uncommitted or
-    * half-written batches are invisible to every reader.
+  /** Chunk rows of `batches` only (committed batches by default). The
+    * `batch` partition-column filter prunes whole orphan directories at
+    * the scan — uncommitted or half-written batches are invisible to
+    * every reader.
     */
-  private def committedChunks(spark: SparkSession, outDir: String): Dataset[EncodedChunk] = {
-    import spark.implicits._
-    val committed = committedBatches(spark, outDir)
-    withChunkSchema(
-      readChunkTree(spark, outDir)
-        .filter(col("batch").isInCollection(committed.toSeq.map(Integer.valueOf))))
-      .as[EncodedChunk]
+  private def committedChunks(spark: SparkSession, outDir: String,
+                              batches: Option[Set[Int]] = None): Dataset[EncodedChunk] = {
+    val visible = batches.getOrElse(committedBatches(spark, outDir))
+    withChunkSchema(readChunkTree(spark, outDir)
+      .filter(col("batch").isInCollection(visible.toSeq.map(Integer.valueOf))))
+      .as[EncodedChunk](org.apache.spark.sql.Encoders.product[EncodedChunk])
   }
 
-  /** Read encoded chunks back into the original table shape. Defaults to
-    * the zero-shuffle colocated path when a cheap metadata-only probe
-    * confirms the on-disk layout supports it (one whole chunk group per
-    * file region), falling back to the shuffled decode otherwise — e.g.
-    * after an external compaction rewrote the chunk files. At 100 TB the
-    * difference is the stream blobs crossing the network zero times vs
-    * once. Pass `columns` to decode a subset (columnar projection
-    * pushdown: the other columns' blobs are never decompressed or
-    * shuffled).
+  /** Read encoded chunks back into the original table shape through the
+    * DataSource V2 scan (`format("graft")`: one partition per chunk file,
+    * no Exchange, column pruning down to the stream blobs) whenever the
+    * on-disk layout is the writer's own — column-partitioned, or passing
+    * the metadata-only `colocatedLayoutOk` probe. Chunk files rewritten
+    * outside the engine (e.g. an external compaction) fall back to the
+    * shuffled decode. Pass `columns` to decode a subset: names rebind
+    * case-insensitively, unknown names throw, and the other columns'
+    * blobs are never decompressed (on the column-partitioned layout their
+    * files are never opened).
     */
   def readBack(spark: SparkSession, outDir: String, specs: Array[ColumnSpec],
-               columns: Option[Seq[String]] = None): DataFrame = columns match {
-    // single-column subset: every chunk row is a COMPLETE group, so the
-    // adjacency grouper is trivially satisfied under any file layout —
-    // no shuffle, no layout probe, and on a column-partitioned layout
-    // the filter prunes every other column's files at the scan
-    case Some(cols) if cols.size == 1 =>
-      import spark.implicits._
-      val subset = TableEncoder.subsetSpecs(specs, cols)
-      val one = committedChunks(spark, outDir)
-        .filter(col("column") === subset.head.name).as[EncodedChunk]
-      TableEncoder.unshred(TableEncoder.decodeSequential(one, subset), subset)
-    case _ =>
-      // a column-partitioned layout can never satisfy the colocated
-      // invariant (each file holds ONE column's chunks) — but it has its
-      // OWN no-Exchange plan: per-column aligned scans zipped back into
-      // chunk groups (ColumnZipRead). Shuffled decode is the fallback when
-      // the zip probe finds externally rewritten files.
-      if (isColumnPartitioned(spark, outDir))
-        readBackColumnZipped(spark, outDir, specs, columns)
-          .getOrElse(readBackShuffled(spark, outDir, specs, columns))
-      else if (colocatedLayoutOk(spark, outDir, specs))
-        readBackColocated(spark, outDir, specs, columns)
-      else readBackShuffled(spark, outDir, specs, columns)
-  }
+               columns: Option[Seq[String]] = None): DataFrame =
+    if (isColumnPartitioned(spark, outDir) || colocatedLayoutOk(spark, outDir, specs))
+      scan(spark, outDir, specs, columns)
+    else readBackShuffled(spark, outDir, specs, columns)
 
-  /** Zero-shuffle read on the column-partitioned layout (see
-    * [[ColumnZipRead]]): one pinned one-file-per-partition scan per
-    * column, partitions reordered onto a common part_id order with narrow
-    * dependencies, zip-merged into whole chunk groups. The alignment
-    * probe reads only `part_id` per file (blobs untouched); None when the
-    * on-disk files violate the writer's one-file-per-(task, column)
-    * invariant — callers fall back to the shuffled decode.
+  /** The scan over the specs' logical schema, projected to `columns`
+    * (rebound to canonical names) or to every spec column.
     */
-  def readBackColumnZipped(spark: SparkSession, outDir: String, specs: Array[ColumnSpec],
-                           columns: Option[Seq[String]] = None): Option[DataFrame] =
-    withPinnedSplits(spark, outDir) {
-      val effSpecs = columns.map(TableEncoder.subsetSpecs(specs, _)).getOrElse(specs)
-      def chunksOf(name: String) =
-        committedChunks(spark, outDir).filter(col("column") === name)
-          .as[EncodedChunk](org.apache.spark.sql.Encoders.product[EncodedChunk]).rdd
-      // probe plan projects (part_id) only; it shares the data scan's file
-      // listing and pinned split confs, so partition i reads the same file
-      // in both plans — and the zip re-validates ids at runtime regardless
-      def keysOf(name: String): Array[Long] =
-        committedChunks(spark, outDir).filter(col("column") === name)
-          .select("part_id").rdd
-          .mapPartitionsWithIndex((i, it) =>
-            Iterator.single((i, if (it.hasNext) it.next().getInt(0).toLong else -1L)))
-          .collect().sortBy(_._1).map(_._2)
-      ColumnZipRead.readBackColumnZipped(spark, outDir, effSpecs, chunksOf, keysOf)
-    }
+  private def scan(spark: SparkSession, outDir: String, specs: Array[ColumnSpec],
+                   columns: Option[Seq[String]]): DataFrame = {
+    val selected = columns.fold(specs)(TableEncoder.subsetSpecs(specs, _))
+    spark.read.schema(TableEncoder.logicalSchema(specs)).format("graft").load(outDir)
+      .select(selected.map(s => col(s.name)).toIndexedSeq: _*)
+  }
 
   /** True when the chunk table was written with partitionByColumn
     * (column=<name> dirs under the batch dirs) — a filesystem listing,
@@ -1234,8 +1198,8 @@ object EncodeJob {
     * (on an object store the two-level LIST per readBack would otherwise
     * cost hundreds of calls across batches) and updated by SAME-JVM
     * writes; if another process overwrites the dir with the opposite
-    * layout, a stale entry only costs this JVM the colocated-probe fast
-    * path — readers fall back to the always-correct shuffled decode. A
+    * layout, a stale entry costs this JVM at worst the shuffled fallback
+    * or a loud scan failure, never wrong data. A
     * JVM that needs to observe a cross-process layout rewrite should use
     * a new outDir (the recommended pattern) or a new session/JVM.
     */
@@ -1256,51 +1220,27 @@ object EncodeJob {
     result
   }
 
-  /** Point-lookup read: bloom + range + stride pruning on `column`
-    * before any stream blob is touched (see
-    * TableEncoder.decodePrunedEqualsString). Callers still apply the
-    * exact equality filter on the result — pruning returns a superset.
-    */
-  def readBackEquals(spark: SparkSession, outDir: String, specs: Array[ColumnSpec],
-                     column: String, value: String): DataFrame =
-    TableEncoder.unshred(
-      TableEncoder.decodePrunedEqualsString(committedChunks(spark, outDir), specs, column, value),
-      specs)
-
-  def readBackEqualsLong(spark: SparkSession, outDir: String, specs: Array[ColumnSpec],
-                         column: String, value: Long): DataFrame =
-    TableEncoder.unshred(
-      TableEncoder.decodePrunedEqualsLong(committedChunks(spark, outDir), specs, column, value),
-      specs)
-
-  def readBackEqualsBinary(spark: SparkSession, outDir: String, specs: Array[ColumnSpec],
-                           column: String, value: Array[Byte]): DataFrame =
-    TableEncoder.unshred(
-      TableEncoder.decodePrunedEqualsBinary(committedChunks(spark, outDir), specs, column, value),
-      specs)
-
-  /** Shuffle-based decode: one exchange moves each chunk group to a
-    * single task. Always correct regardless of file layout; the fallback
-    * when `colocatedLayoutOk` is false.
-    */
-  /** Decode a specific batch subset (compaction's read side). The
-    * full-visible-set case routes through readBack so the zero-shuffle
-    * fast paths apply; a strict subset uses the always-correct shuffled
-    * decode over just those batches' chunk rows.
+  /** Decode a visible batch subset (the read side of compaction, DML and
+    * the selective MERGE) with readBack's routing: through the scan,
+    * narrowed by its internal `visibleBatches` option, when those
+    * batches are in the writer's own layout; else with the shuffled
+    * decode of just those batches — compaction is how a table whose
+    * chunk files were rewritten outside the engine gets repaired.
     */
   private def decodeBatches(spark: SparkSession, outDir: String, batches: Set[Int],
                             schema: org.apache.spark.sql.types.StructType): DataFrame = {
     val specs = specsFromManifest(spark, outDir, schema)
-    if (batches == committedBatches(spark, outDir)) readBack(spark, outDir, specs)
-    else {
-      val chunks = withChunkSchema(
-        readChunkTree(spark, outDir)
-          .filter(col("batch").isInCollection(batches.toSeq.map(Integer.valueOf))))
-        .as[EncodedChunk](org.apache.spark.sql.Encoders.product[EncodedChunk])
-      TableEncoder.unshred(TableEncoder.decode(chunks, specs), specs)
-    }
+    if (isColumnPartitioned(spark, outDir) || layoutOk(spark, outDir, specs, Some(batches)))
+      spark.read.schema(schema).format("graft")
+        .option("visibleBatches", batches.toSeq.sorted.mkString(",")).load(outDir)
+    else TableEncoder.unshred(
+      TableEncoder.decode(committedChunks(spark, outDir, Some(batches)), specs), specs)
   }
 
+  /** Shuffle-based decode: one exchange moves each chunk group to a
+    * single task. Always correct regardless of file layout; readBack's
+    * fallback when `colocatedLayoutOk` is false.
+    */
   def readBackShuffled(spark: SparkSession, outDir: String, specs: Array[ColumnSpec],
                        columns: Option[Seq[String]] = None): DataFrame = columns match {
     case None =>
@@ -1311,22 +1251,26 @@ object EncodeJob {
         TableEncoder.decodeColumns(committedChunks(spark, outDir), specs, cols), subset)
   }
 
-  /** Metadata-only probe for the zero-shuffle layout invariant: under the
-    * same pinned file splits the colocated read would use, every chunk
-    * group must appear as exactly `specs.length` adjacent rows within one
-    * partition, never interleaved or split. Reads just (part_id,
+  /** Metadata-only probe for the row-grouped layout the scan relies on:
+    * with file splits pinned to one whole file per partition (the scan's
+    * granularity), every chunk group must appear as exactly
+    * `specs.length` adjacent rows within one file, never interleaved or
+    * split. readBack falls back to the shuffled decode when it fails
+    * (the scan itself refuses such files loudly). Reads just (part_id,
     * chunk_id) — parquet column projection never touches the stream
     * blobs, so the probe costs a fraction of a percent of the data even
     * at 100 TB.
     */
   def colocatedLayoutOk(spark: SparkSession, outDir: String,
                         specs: Array[ColumnSpec]): Boolean =
+    layoutOk(spark, outDir, specs, None)
+
+  /** colocatedLayoutOk over `batches` only (committed batches by default). */
+  private def layoutOk(spark: SparkSession, outDir: String, specs: Array[ColumnSpec],
+                       batches: Option[Set[Int]]): Boolean =
     withPinnedSplits(spark, outDir) {
       val nCols = specs.length
-      val committed = committedBatches(spark, outDir)
-      val meta = readChunkTree(spark, outDir)
-        .filter(col("batch").isInCollection(committed.toSeq.map(Integer.valueOf)))
-        .select("part_id", "chunk_id")
+      val meta = committedChunks(spark, outDir, batches).select("part_id", "chunk_id")
       val badCounts = meta.rdd.mapPartitions { it =>
         val seen = scala.collection.mutable.HashSet[Long]()
         var bad = 0L
@@ -1348,64 +1292,27 @@ object EncodeJob {
       badCounts.sum == 0
     }
 
-  /** Shuffle-free read-back: pins file-split confs for this read so every
-    * Spark partition covers exactly one whole chunk file (the writer
-    * emits one file per encode task, chunk groups contiguous within it),
-    * then decodes with the sequential single-pass grouper — the plan
-    * contains no Exchange, so at 100 TB the stream blobs cross the
-    * network zero times instead of once. One-file-per-partition also
-    * preserves the encode tasks' parallelism: letting Spark pack many
-    * files into few partitions (openCostInBytes=0) measured 3× slower at
-    * local[32] from straggler partitions.
+  /** The same scan as readBack, without the layout probe, returned as an
+    * RDD-backed frame: nothing planned above it can prune columns out of
+    * the scan, so `count()` still decodes every requested column — the
+    * work graft.Bench and DecodeScale time as decode throughput. The scan
+    * is planned here, so its batch snapshot is pinned at call time.
     */
   def readBackColocated(spark: SparkSession, outDir: String,
                         specs: Array[ColumnSpec],
-                        columns: Option[Seq[String]] = None): DataFrame =
-    withPinnedSplits(spark, outDir) {
-      import spark.implicits._
-      val chunks = committedChunks(spark, outDir)
-      // column-subset filtering preserves per-group adjacency (a subset
-      // of consecutive rows stays consecutive), so the sequential
-      // grouper handles projections without any layout change
-      val (effChunks, effSpecs) = columns match {
-        case None       => (chunks, specs)
-        case Some(cols) =>
-          val subset = TableEncoder.subsetSpecs(specs, cols) // case-insensitive rebind
-          (chunks.filter(col("column").isInCollection(subset.map(_.name).toSeq)).as[EncodedChunk],
-            subset)
-      }
-      // expected rows per chunk group, when the manifest lineage proves it
-      // uniform across visible batches: a group truncated at a partition
-      // boundary (stale _filemeta.json / externally re-split files) then
-      // fails loudly instead of silently null-filling two halves
-      val expected: Option[Int] = {
-        val committed = committedBatches(spark, outDir)
-        val byBatch = TableMeta.snapshot(spark, outDir).batchColumns
-        val sizes = committed.toSeq.map(b => byBatch.get(b).map(cols =>
-          effSpecs.count(s => cols.contains(s.name))))
-        sizes.headOption.flatten match {
-          case Some(n) if n > 0 && sizes.forall(_.contains(n)) => Some(n)
-          case _ => None // unknown lineage or evolved batches: stay lenient
-        }
-      }
-      // decodeSequential plans the scan eagerly (it materializes the RDD
-      // lineage under the hood), so the file-split decision is pinned
-      // while the conf window is open; later actions cannot re-split
-      val decoded = TableEncoder.decodeSequential(effChunks, effSpecs, expected)
-      TableEncoder.unshred(decoded, effSpecs)
-    }
+                        columns: Option[Seq[String]] = None): DataFrame = {
+    val df = scan(spark, outDir, specs, columns)
+    org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(
+      spark, df.queryExecution.toRdd, df.schema)
+  }
 
   /** Pin file-split confs for the duration of `body` so every Spark
-    * partition covers exactly one whole chunk file (the writer emits one
-    * file per encode task, chunk groups contiguous within it): largest
-    * data file decides the split bound — maxPartitionBytes ≥ largest file
-    * means no file is ever split; openCost == the bound means no two
-    * files ever share a partition (bin-packing closes the bin as soon as
-    * one file + one opening cost fills it). One-file-per-partition also
-    * preserves the encode tasks' parallelism: letting Spark pack many
-    * files into few partitions (openCostInBytes=0) measured 3× slower at
-    * local[32] from straggler partitions. The body must run its scans
-    * eagerly — confs are restored on exit.
+    * partition covers exactly one whole chunk file (the layout probe's
+    * unit): largest data file decides the split bound — maxPartitionBytes
+    * ≥ largest file means no file is ever split; openCost == the bound
+    * means no two files ever share a partition (bin-packing closes the
+    * bin as soon as one file + one opening cost fills it). The body must
+    * run its scans eagerly — confs are restored on exit.
     */
   private def withPinnedSplits[T](spark: SparkSession, outDir: String)(body: => T): T = {
     val conf = spark.conf

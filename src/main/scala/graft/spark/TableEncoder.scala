@@ -786,15 +786,66 @@ object TableEncoder {
   /** Dataset[EncodedChunk] (or its DataFrame read back from parquet) →
     * the original table. Chunks of the same (part_id, chunk_id) are
     * co-located with a hash repartition + in-partition sort (stays in
-    * Tungsten shuffle format — no object serialization of the blobs)
-    * and decoded by the same adjacency grouper as the zero-shuffle path.
+    * Tungsten shuffle format — no object serialization of the blobs);
+    * adjacent rows of one key then form one chunk group, decoded
+    * column-at-a-time into primitive arrays and emitted as UnsafeRows via
+    * UnsafeRowWriter — no per-value boxing and no Row→InternalRow encoder
+    * pass (the old Row.fromSeq path was 4.5× slower than encode at 32
+    * cores).
     */
   def decode(chunks: Dataset[EncodedChunk], specs: Array[ColumnSpec],
-             stridePrune: Option[StridePrune] = None): DataFrame =
-    decodeAdjacent(
-      chunks.repartition(col("part_id"), col("chunk_id"))
-        .sortWithinPartitions("part_id", "chunk_id"),
-      specs, stridePrune)
+             stridePrune: Option[StridePrune] = None): DataFrame = {
+    val spark = chunks.sparkSession
+    val specsB = spark.sparkContext.broadcast(specs)
+    val schema = physicalSchema(specs)
+    val rdd = chunks.repartition(col("part_id"), col("chunk_id"))
+      .sortWithinPartitions("part_id", "chunk_id").rdd.mapPartitions { it =>
+      val sp = specsB.value
+      val writer = new org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter(sp.length)
+      new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
+        private var pending: Iterator[org.apache.spark.sql.catalyst.InternalRow] = Iterator.empty
+        private var lookahead: EncodedChunk = null
+        // a group boundary ends at the next (part_id, chunk_id) OR at a
+        // repeated column, NOT at a fixed column count: batches older
+        // than an ALTER ADD COLUMN carry fewer columns (the decode
+        // null-fills them), and raw TableEncoder.encode output can carry
+        // DUPLICATE keys across input partitions (EncodeJob offsets
+        // part_ids; bare encode does not) — a repeated column starts the
+        // next duplicate. A key that reappears with a DIFFERENT column
+        // set is a split group — fail loudly, never emit wrongly
+        // null-filled halves.
+        private val seenCols = new java.util.HashMap[Long, Set[String]]()
+        private def fill(): Unit = {
+          while (!pending.hasNext && (lookahead != null || it.hasNext)) {
+            val group = scala.collection.mutable.Map[String, EncodedChunk]()
+            val first = if (lookahead != null) { val f = lookahead; lookahead = null; f }
+                        else it.next()
+            group(first.column) = first
+            var done = false
+            while (!done && it.hasNext) {
+              val c = it.next()
+              if (c.part_id == first.part_id && c.chunk_id == first.chunk_id &&
+                  !group.contains(c.column)) group(c.column) = c
+              else { lookahead = c; done = true }
+            }
+            val key = (first.part_id.toLong << 32) | (first.chunk_id.toLong & 0xffffffffL)
+            val cols = group.keySet.toSet
+            val prev = seenCols.put(key, cols)
+            require(prev == null || prev == cols,
+              s"split chunk group (${first.part_id},${first.chunk_id}): " +
+                s"saw columns {${cols.mkString(",")}} after {${prev.mkString(",")}}")
+            require(group.size <= sp.length,
+              s"chunk (${first.part_id},${first.chunk_id}) has ${group.size} column rows, " +
+                s"expected at most ${sp.length}")
+            pending = decodeChunkInternalRows(group.toMap, sp, writer, stridePrune.toSeq)
+          }
+        }
+        def hasNext: Boolean = { fill(); pending.hasNext }
+        def next(): org.apache.spark.sql.catalyst.InternalRow = { fill(); pending.next() }
+      }
+    }
+    org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(spark, rdd, schema)
+  }
 
   /** Column-subset decode — the point of a columnar layout: only the
     * requested columns' streams are decompressed and value-decoded; the
@@ -862,119 +913,6 @@ object TableEncoder {
     columns.map(n => specs.find(_.name.equalsIgnoreCase(n)).getOrElse(
       throw new IllegalArgumentException(
         s"unknown column $n; have ${specs.map(_.name).mkString(",")}"))).toArray
-
-  /** Zero-shuffle decode for chunks whose layout preserves the writer's
-    * row order: the encode task emits all of a chunk's column rows
-    * consecutively, so when each read partition covers whole files (see
-    * EncodeJob.readBackColocated, which pins maxPartitionBytes for the
-    * read), a streaming single-pass group-by-adjacency suffices — no
-    * Exchange in the plan. At 100 TB the shuffle in `decode` re-moves
-    * every stream blob over the network once; this path avoids it.
-    * Throws if a group is split across partitions (layout violated) —
-    * fall back to `decode` in that case.
-    */
-  def decodeSequential(chunks: Dataset[EncodedChunk], specs: Array[ColumnSpec],
-                       expectedGroupRows: Option[Int] = None): DataFrame =
-    decodeAdjacent(chunks, specs, expectedGroupRows = expectedGroupRows)
-
-  /** Shared decode core: adjacent rows of the same (part_id, chunk_id)
-    * form one chunk group; each group decodes column-at-a-time into
-    * primitive arrays and is emitted as UnsafeRows via UnsafeRowWriter —
-    * no per-value boxing and no Row→InternalRow encoder pass (the old
-    * Row.fromSeq path was 4.5× slower than encode at 32 cores).
-    */
-  private def decodeAdjacent(chunks: Dataset[EncodedChunk], specs: Array[ColumnSpec],
-                             stridePrune: Option[StridePrune] = None,
-                             // when the caller KNOWS every chunk group
-                             // carries exactly this many column rows
-                             // (uniform batch lineage — EncodeJob checks
-                             // the manifest), a group truncated at a
-                             // partition boundary (stale _filemeta.json,
-                             // externally re-split files) fails loudly
-                             // instead of silently emitting two
-                             // complementary null-filled halves
-                             expectedGroupRows: Option[Int] = None): DataFrame = {
-    val spark = chunks.sparkSession
-    val specsB = spark.sparkContext.broadcast(specs)
-    val schema = physicalSchema(specs)
-    val rdd = chunks.rdd.mapPartitions { it =>
-      val sp = specsB.value
-      val writer = new org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter(sp.length)
-      new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
-        private var pending: Iterator[org.apache.spark.sql.catalyst.InternalRow] = Iterator.empty
-        private var lookahead: EncodedChunk = null
-        // a group boundary ends at the next (part_id, chunk_id) OR at a
-        // repeated column, NOT at a fixed column count: batches older
-        // than an ALTER ADD COLUMN carry fewer columns (the decode
-        // null-fills them), and raw TableEncoder.encode output can carry
-        // DUPLICATE keys across input partitions (EncodeJob offsets
-        // part_ids; bare encode does not) — a repeated column starts the
-        // next duplicate. A key that reappears with a DIFFERENT column
-        // set is a split/interleaved group — fail loudly, never emit
-        // wrongly-null-filled halves.
-        private val seenCols = new java.util.HashMap[Long, Set[String]]()
-        private def fill(): Unit = {
-          while (!pending.hasNext && (lookahead != null || it.hasNext)) {
-            val group = scala.collection.mutable.Map[String, EncodedChunk]()
-            val first = if (lookahead != null) { val f = lookahead; lookahead = null; f }
-                        else it.next()
-            group(first.column) = first
-            var done = false
-            while (!done && it.hasNext) {
-              val c = it.next()
-              if (c.part_id == first.part_id && c.chunk_id == first.chunk_id &&
-                  !group.contains(c.column)) group(c.column) = c
-              else { lookahead = c; done = true }
-            }
-            val key = (first.part_id.toLong << 32) | (first.chunk_id.toLong & 0xffffffffL)
-            val cols = group.keySet.toSet
-            val prev = seenCols.put(key, cols)
-            require(prev == null || prev == cols,
-              s"split/interleaved chunk group (${first.part_id},${first.chunk_id}): " +
-                s"saw columns {${cols.mkString(",")}} after {${prev.mkString(",")}} — " +
-                "read with readBackColocated or use decode()")
-            require(group.size <= sp.length,
-              s"chunk (${first.part_id},${first.chunk_id}) has ${group.size} column rows, " +
-                s"expected at most ${sp.length}")
-            expectedGroupRows.foreach(e => require(group.size == e,
-              s"chunk group (${first.part_id},${first.chunk_id}) has ${group.size} column " +
-                s"rows, expected exactly $e — group split across read partitions? " +
-                "(externally re-split files / stale _filemeta.json); " +
-                "read with the shuffled decode()"))
-            pending = decodeChunkInternalRows(group.toMap, sp, writer, stridePrune.toSeq)
-          }
-        }
-        def hasNext: Boolean = { fill(); pending.hasNext }
-        def next(): org.apache.spark.sql.catalyst.InternalRow = { fill(); pending.next() }
-      }
-    }
-    org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(spark, rdd, schema)
-  }
-
-  /** Decode an RDD of COMPLETE chunk groups (every element carries all of
-    * one (part_id, chunk_id)'s column rows) — the column-zipped read path
-    * (EncodeJob.readBackColumnZipped) assembles groups from per-column
-    * aligned scans with narrow dependencies only, then decodes here with
-    * the same UnsafeRow emitter as the adjacency grouper.
-    */
-  private[spark] def decodeGroups(spark: SparkSession,
-                                  rdd: org.apache.spark.rdd.RDD[Array[EncodedChunk]],
-                                  specs: Array[ColumnSpec]): DataFrame = {
-    val specsB = spark.sparkContext.broadcast(specs)
-    val schema = physicalSchema(specs)
-    val out = rdd.mapPartitions { it =>
-      val sp = specsB.value
-      val writer = new org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter(sp.length)
-      it.flatMap { group =>
-        // fewer rows than specs = columns added by a later ALTER (the
-        // decode null-fills them); more is corruption
-        require(group.length <= sp.length,
-          s"chunk group has ${group.length} column rows, expected at most ${sp.length}")
-        decodeChunkInternalRows(group.iterator.map(c => c.column -> c).toMap, sp, writer, Seq.empty)
-      }
-    }
-    org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(spark, out, schema)
-  }
 
   /** Stats-pruned decode: skip whole chunks whose [min,max] on `column`
     * cannot overlap [lo,hi] — the point of the reference's per-stride
@@ -1165,6 +1103,31 @@ object TableEncoder {
       .as[EncodedChunk]
     decode(pruned, specs, stridePrune)
   }
+
+  /** Logical (Spark) schema the specs were derived from — the inverse of
+    * columnSpecs; every field nullable, like the decode output.
+    */
+  def logicalSchema(specs: Array[ColumnSpec]): StructType =
+    StructType(specs.map { s =>
+      def decimal = { val Array(p, sc) = s.narrow.split(',').map(_.toInt); DecimalType(p, sc) }
+      val dt = s.logical match {
+        case "long" => s.narrow match {
+          case "int" => IntegerType; case "short" => ShortType; case "byte" => ByteType
+          case _     => LongType
+        }
+        case "decimal" | "decimal128" => decimal
+        case "timestamp"              => TimestampType
+        case "timestamp_ntz"          => TimestampNTZType
+        case "date"                   => DateType
+        case "bool"                   => BooleanType
+        case "double"                 => DoubleType
+        case "float"                  => FloatType
+        case "string"                 => StringType
+        case "binary"                 => BinaryType
+        case "fvec"                   => ArrayType(FloatType, containsNull = false)
+      }
+      StructField(s.name, dt, nullable = true)
+    })
 
   /** Physical (shredded) schema for decode output. */
   def physicalSchema(specs: Array[ColumnSpec]): StructType =

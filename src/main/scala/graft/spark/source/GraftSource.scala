@@ -54,8 +54,9 @@ import scala.jdk.CollectionConverters._
   * Both writer layouts are readable: the default row-grouped layout
   * (whole chunk groups per file) and `partitionByColumn` (one column per
   * file; aligned per-column files of one writer task are zipped back
-  * into chunk groups — the DSv2 form of ColumnZipRead, except pruning
-  * happens at FILE granularity before anything is opened).
+  * into chunk groups, and pruning happens at FILE granularity before
+  * anything is opened). This scan is the engine's one directory reader:
+  * EncodeJob.readBack, readBackColocated and compaction all run it.
   */
 final class GraftSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister
@@ -680,6 +681,11 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
              else Array[InputPartition](GraftInputPartition(Array.empty, Seq.empty))
     }
     val specNames = specs.map(_.name).toSet
+    // the requested columns batch `b` wrote, per the manifest lineage:
+    // every chunk group assembled from its files must carry all of them
+    // (None: lineage unknown, the reader stays lenient)
+    def written(b: Int): Option[Seq[String]] =
+      batchColumns.get(b).map(bc => specNames.filter(bc.contains).toSeq)
     // schema-evolution drivers: a batch that wrote NONE of the requested
     // columns still owes one all-null row per written row — its cheapest
     // column drives the row count (the decode null-fills the rest)
@@ -710,10 +716,12 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
           // the decode. A driver-only group (the batch wrote none of the
           // requested columns) zips just the driver file.
           val present = allSpecs.filter(s => byCol.contains(s.name))
-          GraftInputPartition(present.map(s => byCol(s.name)), present.map(_.name).toSeq)
+          GraftInputPartition(present.map(s => byCol(s.name)), present.map(_.name).toSeq,
+            written = written(b))
         }
     } else files.toArray.sortBy(_._3).filter(f => kept(f._3))
-      .map(f => GraftInputPartition(Array(f._3), Seq.empty, driverByBatch.get(f._1)))
+      .map(f => GraftInputPartition(Array(f._3), Seq.empty, driverByBatch.get(f._1),
+        written(f._1)))
   }
 
   private def taskIndexOf(path: String): String = {
@@ -850,7 +858,12 @@ final case class GraftInputPartition(files: Array[String], columns: Seq[String],
                                      // pre-ALTER batches' rows present when
                                      // none of the requested columns exist
                                      // there (all values null-filled)
-                                     driver: Option[String] = None)
+                                     driver: Option[String] = None,
+                                     // requested columns the files' batch
+                                     // wrote (manifest lineage): a chunk
+                                     // group lacking one was split or
+                                     // interleaved, and fails the read
+                                     written: Option[Seq[String]] = None)
     extends InputPartition
 
 /** The chunk metadata a pruning decision reads: a view of an
@@ -1369,6 +1382,7 @@ final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnS
     while (!rows.hasNext) {
       val group = nextGroup()
       if (group == null) return false
+      checkAssembled(group)
       if (preds.forall(p => group.get(p.column).forall(c => p.keepsChunk(ChunkStats.of(c)))))
         rows = TableEncoder.decodeChunkInternalRows(
           group.map { case (k, v) => k -> v }, specs, writer, stridePrunes)
@@ -1379,6 +1393,29 @@ final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnS
   }
   override def get(): InternalRow = current
   override def close(): Unit = readers.foreach(_.close())
+
+  private val seenGroups = new java.util.HashSet[java.lang.Long]()
+
+  /** Refuse a chunk group this partition cannot have assembled exactly:
+    * a (part_id, chunk_id) seen before in the partition, or a group
+    * lacking a requested column its batch wrote. Both mean the writer's
+    * one-group-contiguous-per-file invariant is broken (chunk files
+    * rewritten outside the engine); null-filling the missing columns
+    * would emit the group's rows once per fragment. Columns added by a
+    * later ALTER are absent from the batch's lineage and still null-fill.
+    */
+  private def checkAssembled(group: Map[String, EncodedChunk]): Unit = {
+    val c = group.valuesIterator.next()
+    require(seenGroups.add((c.part_id.toLong << 32) | (c.chunk_id.toLong & 0xffffffffL)),
+      s"chunk group (${c.part_id},${c.chunk_id}) reappears in ${part.files.mkString(",")} — " +
+        "split/interleaved chunk files; read with EncodeJob.readBackShuffled")
+    part.written.foreach { w =>
+      val missing = w.filterNot(group.contains)
+      require(missing.isEmpty,
+        s"chunk group (${c.part_id},${c.chunk_id}) lacks ${missing.mkString(",")} which its " +
+          "batch wrote — split/interleaved chunk files; read with EncodeJob.readBackShuffled")
+    }
+  }
 
   /** Next complete chunk group, or null at end of partition. */
   private def nextGroup(): Map[String, EncodedChunk] =
@@ -1400,7 +1437,7 @@ final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnS
           require(chunks(i).part_id == chunks(0).part_id &&
             chunks(i).chunk_id == chunks(0).chunk_id,
             s"column files misaligned at (${chunks(0).part_id},${chunks(0).chunk_id}) " +
-              s"vs (${chunks(i).part_id},${chunks(i).chunk_id}) — use EncodeJob.readBack")
+              s"vs (${chunks(i).part_id},${chunks(i).chunk_id}) — use EncodeJob.readBackShuffled")
           i += 1
         }
         chunks.map(c => c.column -> c).toMap
@@ -1422,15 +1459,15 @@ final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnS
           if (g == null) done = true
           else {
             val c = ChunkGroupParser.parse(g, None)
-            // repeated column = the next duplicate group begins (defensive;
-            // EncodeJob-written files never duplicate keys within a file)
+            // a new key or a repeated column begins the next group (a
+            // repeated key fails in checkAssembled)
             if (c.part_id == head.part_id && c.chunk_id == head.chunk_id &&
                 !acc.contains(c.column)) acc(c.column) = c
             else { pendingFirst = Some(g); done = true }
           }
         }
-        // columns the chunk lacks are ones added by a later ALTER TABLE
-        // ADD COLUMN — the decode null-fills them (typed nulls)
+        // columns the chunk lacks that its batch never wrote (added by a
+        // later ALTER TABLE ADD COLUMN) — the decode null-fills them
         acc.toMap
       }
     }

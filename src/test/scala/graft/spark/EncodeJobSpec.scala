@@ -1,6 +1,9 @@
 package graft.spark
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
@@ -29,6 +32,50 @@ class EncodeJobSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def sfDir = "/root/testdata/sf0.001"
+
+  /** The graft scan nodes of `df`'s executed plan (AQE stages unwrapped). */
+  private def graftScans(df: DataFrame): Seq[BatchScanExec] = {
+    def find(p: SparkPlan): Seq[BatchScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => find(a.executedPlan)
+      case q: QueryStageExec        => find(q.plan)
+      case b: BatchScanExec if b.scan.isInstanceOf[graft.spark.source.GraftScan] => Seq(b)
+      case other                    => other.children.flatMap(find)
+    }
+    find(df.queryExecution.executedPlan)
+  }
+
+  /** True iff any RDD in the lineage depends on a shuffle. */
+  /** Rewrite the one chunk file under `dir` in place, same name, its rows
+    * reordered by `order` — an external rewrite that keeps the file set.
+    */
+  private def rewriteInPlace(dir: String, order: DataFrame => DataFrame): Unit = {
+    val files = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+    assert(files.length == 1)
+    val staged = s"$tmp/staged-${System.nanoTime()}"
+    order(spark.read.parquet(files.head.getPath).repartition(1)).write.parquet(staged)
+    val rewritten = new java.io.File(staged).listFiles().filter(_.getName.endsWith(".parquet"))
+    assert(rewritten.length == 1)
+    java.nio.file.Files.move(rewritten.head.toPath, files.head.toPath,
+      java.nio.file.StandardCopyOption.REPLACE_EXISTING)
+    new java.io.File(files.head.getParentFile, s".${files.head.getName}.crc").delete()
+    TableMeta.invalidateAll()
+  }
+
+  /** True when `err` or one of its causes carries `text` in its message. */
+  private def causedBy(err: Throwable, text: String): Boolean =
+    Iterator.iterate(err)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains(text))
+
+  private def hasShuffle(rdd: org.apache.spark.rdd.RDD[_]): Boolean = {
+    val seen = scala.collection.mutable.HashSet[Int]()
+    def go(r: org.apache.spark.rdd.RDD[_]): Boolean =
+      r.dependencies.exists { d =>
+        d.isInstanceOf[org.apache.spark.ShuffleDependency[_, _, _]] ||
+          (seen.add(d.rdd.id) && go(d.rdd))
+      }
+    go(rdd)
+  }
 
   test("webtext pages: encode → decode is bit-identical per url") {
     val pages = WebGen.pages(spark, 5000, seed = 42, partitions = 4)
@@ -74,6 +121,18 @@ class EncodeJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val viaColoc = colocated
       .select("url", "text", "lang").orderBy("url").collect().toSeq
     assert(viaColoc == viaShuffle)
+
+    // the frame is the graft scan behind an RDD, so count() cannot prune
+    // columns out of it: it decompresses exactly what a full-row read does
+    assert(colocated.queryExecution.toRdd.toDebugString.contains("DataSourceRDD"))
+    graft.core.BlockCompression.resetCounters()
+    colocated.count()
+    val counted = graft.core.BlockCompression.decompressInputBytes
+    graft.core.BlockCompression.resetCounters()
+    EncodeJob.readBack(spark, out, result.specs).collect()
+    val fullRow = graft.core.BlockCompression.decompressInputBytes
+    assert(counted > 0 && counted == fullRow,
+      s"count() decompressed $counted B, a full-row read $fullRow B")
   }
 
   test("column-subset read-back decodes only the requested columns, zero-shuffle") {
@@ -121,51 +180,43 @@ class EncodeJobSpec extends AnyFunSuite with BeforeAndAfterAll {
         org.apache.spark.sql.graftbridge.Bridge.waitListenerBusEmpty(spark)
         bytesRead.get()
       }
+      // toRdd.count() runs the planned scan as is: a DataFrame count()
+      // would let the scan prune every column but the cheapest one
       val fullBytes = measure {
-        assert(EncodeJob.readBack(spark, out, result.specs).count() == 12000)
+        assert(EncodeJob.readBack(spark, out, result.specs).queryExecution.toRdd.count() == 12000)
       }
       // warc_ts + lang are tiny next to html/text: partition pruning on
       // the column= dirs must make the subset scan a small fraction
       val subsetBytes = measure {
         val sub = EncodeJob.readBack(spark, out, result.specs, Some(Seq("warc_ts", "lang")))
-        assert(sub.count() == 12000)
+        assert(sub.queryExecution.toRdd.count() == 12000)
       }
       assert(subsetBytes > 0 && fullBytes > 0)
       assert(subsetBytes < fullBytes / 3,
         s"subset read scanned $subsetBytes of $fullBytes bytes — column dirs not pruned at the scan")
     } finally spark.sparkContext.removeSparkListener(listener)
 
-    // and the partitioned layout still decodes exactly (shuffled path)
+    // and the partitioned layout still decodes exactly
     val decoded = EncodeJob.readBack(spark, out, result.specs)
     assert(decoded.exceptAll(pages).count() == 0)
 
     // ---- zero-shuffle FULL read on the column-partitioned layout ----
-    // the zipped path must engage, carry no ShuffleDependency anywhere in
-    // its lineage, and produce exactly the shuffled decode's rows
-    def hasShuffle(rdd: org.apache.spark.rdd.RDD[_]): Boolean = {
-      val seen = scala.collection.mutable.HashSet[Int]()
-      def go(r: org.apache.spark.rdd.RDD[_]): Boolean =
-        r.dependencies.exists { d =>
-          d.isInstanceOf[org.apache.spark.ShuffleDependency[_, _, _]] ||
-            (seen.add(d.rdd.id) && go(d.rdd))
-        }
-      go(rdd)
-    }
-    val zipped = EncodeJob.readBackColumnZipped(spark, out, result.specs)
-    assert(zipped.isDefined, "zip probe rejected the writer's own layout")
-    assert(!hasShuffle(zipped.get.queryExecution.toRdd),
-      "column-zipped full read has a shuffle in its lineage")
-    val viaZip = zipped.get.select("url", "text", "lang").orderBy("url").collect().toSeq
+    // readBack must run the graft scan, carry no ShuffleDependency
+    // anywhere in its lineage, and produce exactly the shuffled decode's
+    // rows
+    assert(graftScans(decoded).nonEmpty, "column-partitioned readBack bypassed the graft scan")
+    assert(!hasShuffle(decoded.queryExecution.toRdd),
+      "column-partitioned full read has a shuffle in its lineage")
+    val viaScan = decoded.select("url", "text", "lang").orderBy("url").collect().toSeq
     val viaShuffled = EncodeJob.readBackShuffled(spark, out, result.specs)
       .select("url", "text", "lang").orderBy("url").collect().toSeq
-    assert(viaZip == viaShuffled)
+    assert(viaScan == viaShuffled)
 
-    // multi-column subset keeps the no-shuffle plan too (and readBack
-    // routes through it on this layout)
-    val sub = EncodeJob.readBackColumnZipped(spark, out, result.specs, Some(Seq("url", "lang")))
-    assert(sub.isDefined && sub.get.schema.fieldNames.toSeq == Seq("url", "lang"))
-    assert(!hasShuffle(sub.get.queryExecution.toRdd))
-    assert(sub.get.orderBy("url").collect().toSeq ==
+    // multi-column subset keeps the no-shuffle plan too
+    val sub = EncodeJob.readBack(spark, out, result.specs, Some(Seq("url", "lang")))
+    assert(sub.schema.fieldNames.toSeq == Seq("url", "lang"))
+    assert(!hasShuffle(sub.queryExecution.toRdd))
+    assert(sub.orderBy("url").collect().toSeq ==
       EncodeJob.readBackShuffled(spark, out, result.specs, Some(Seq("url", "lang")))
         .orderBy("url").collect().toSeq)
     assert(pages.exceptAll(decoded).count() == 0)
@@ -177,7 +228,10 @@ class EncodeJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       val out = s"$tmp/$sub"
       val result = EncodeJob.run(pages,
         EncodeJob.Config(out, 4, Some("lang"), partitionByColumn = byCol))
+      assert(graftScans(EncodeJob.readBack(spark, out, result.specs)).nonEmpty,
+        s"readBack bypassed the graft scan (partitionByColumn=$byCol)")
       val one = EncodeJob.readBack(spark, out, result.specs, Some(Seq("url")))
+      assert(graftScans(one).nonEmpty)
       assert(one.schema.fieldNames.toSeq == Seq("url"))
       assert(!one.queryExecution.executedPlan.toString.contains("Exchange"),
         s"single-column read plan contains a shuffle (partitionByColumn=$byCol)")
@@ -186,20 +240,23 @@ class EncodeJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
-  test("readBackEquals: bloom point lookup through the job surface") {
+  test("bloom point lookup through format(graft): the scan prunes") {
     val pages = WebGen.pages(spark, 6000, seed = 91, partitions = 4).toDF()
     val out = s"$tmp/bloomjob"
-    val result = EncodeJob.run(pages,
+    EncodeJob.run(pages,
       EncodeJob.Config(out, 8, Some("lang"), strideRows = 500,
         bloomColumns = Set("url")))
     val target = pages.orderBy("url").limit(1).collect()(0).getString(pages.columns.indexOf("url"))
-    val pruned = EncodeJob.readBackEquals(spark, out, result.specs, "url", target)
-    val hit = pruned.filter(col("url") === target)
-    assert(hit.count() == 1)
+    val hit = spark.read.format("graft").load(out).filter(col("url") === target)
+    assert(hit.collect().length == 1)
     // urls are unsorted within salted partitions → range stats keep all
-    // 8+ chunks; the bloom must reject most of them
-    assert(pruned.count() < 6000 / 2,
-      s"bloom kept ${pruned.count()} of 6000 rows — no pruning through the job surface")
+    // 8+ chunks; the bloom must reject most of them. The scan node's
+    // numOutputRows counts rows emitted BEFORE Spark's residual filter
+    val scans = graftScans(hit)
+    assert(scans.size == 1)
+    val emitted = scans.head.metrics("numOutputRows").value
+    assert(emitted < 6000 / 2,
+      s"bloom kept $emitted of 6000 rows — no pruning through the scan")
   }
 
   test("codec pinning is order-independent: lang-sorted input pins the same codecs as shuffled") {
@@ -245,6 +302,88 @@ class EncodeJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(decoded.count() == 2000)
     assert(decoded.exceptAll(pages).count() == 0)
     assert(pages.exceptAll(decoded).count() == 0)
+
+    // compaction repairs the table: it decodes through the same fallback
+    // and rewrites every row in the writer's own layout
+    val nb = EncodeJob.compact(spark, out, 2)
+    assert(EncodeJob.committedBatches(spark, out) == Set(nb))
+    assert(EncodeJob.colocatedLayoutOk(spark, out, result.specs))
+    val repaired = spark.read.format("graft").load(out)
+    assert(repaired.count() == 2000)
+    assert(repaired.exceptAll(pages).count() == 0)
+    assert(pages.exceptAll(repaired).count() == 0)
+  }
+
+  test("the scan refuses chunk groups split across a rewritten file") {
+    val pages = WebGen.pages(spark, 2000, seed = 17, partitions = 1).toDF()
+      .select("url", "lang", "warc_ts")
+    val out = s"$tmp/interleaved"
+    EncodeJob.run(pages, EncodeJob.Config(out, 1, None, strideRows = 500))
+    // rows ordered by column: every chunk group's rows are now scattered
+    // across the file
+    rewriteInPlace(s"${EncodeJob.chunkDir(out)}/batch=0",
+      _.sortWithinPartitions("column", "part_id", "chunk_id"))
+
+    // taking each one-column fragment for a whole group and null-filling
+    // the other column would match every row twice (4000)
+    val err = intercept[Exception] {
+      spark.read.format("graft").load(out)
+        .filter(col("url").isNull || col("lang").isNull).count()
+    }
+    assert(causedBy(err, "split/interleaved"), err)
+    // readBack's layout probe routes around the scan: exactly the input
+    val decoded = EncodeJob.readBack(spark, out)
+    assert(decoded.count() == 2000)
+    assert(decoded.exceptAll(pages).count() == 0)
+    assert(pages.exceptAll(decoded).count() == 0)
+  }
+
+  test("DML on a batch whose chunk file was rewritten decodes it through the shuffled fallback") {
+    def frame(lo: Long, hi: Long): DataFrame =
+      spark.range(lo, hi, 1, 1).select(col("id"), concat(lit("txt"), col("id")).as("s"))
+    val out = s"$tmp/interleaved-dml"
+    frame(0, 1000).write.format("graft").mode("overwrite")
+      .option("numPartitions", "1").option("strideRows", "250").save(out)
+    frame(1000, 2000).write.format("graft").mode("append")
+      .option("numPartitions", "1").option("strideRows", "250").save(out)
+    rewriteInPlace(s"${EncodeJob.chunkDir(out)}/batch=0",
+      _.sortWithinPartitions("column", "part_id", "chunk_id"))
+
+    // the delete rewrites batch 0 only, a strict subset of the visible
+    // batches; the scan would refuse its file, the shuffled decode reads it
+    val nb = EncodeJob.deleteWhere(spark, out, col("id") === 500L, targetPartitions = 1)
+    assert(EncodeJob.compactions(spark, out).last.replaces == Seq(0))
+    assert(EncodeJob.committedBatches(spark, out) == Set(1, nb))
+    val expected = frame(0, 2000).filter(col("id") =!= 500L)
+    val left = spark.read.format("graft").load(out)
+    assert(left.count() == 1999)
+    assert(left.exceptAll(expected).count() == 0)
+    assert(expected.exceptAll(left).count() == 0)
+  }
+
+  test("column files rewritten out of writer order fail loudly in readBack and compaction") {
+    val pages = WebGen.pages(spark, 2000, seed = 19, partitions = 1).toDF()
+      .select("url", "lang", "warc_ts")
+    val out = s"$tmp/misaligned"
+    val result = EncodeJob.run(pages,
+      EncodeJob.Config(out, 1, None, strideRows = 500, partitionByColumn = true))
+    // the url file's chunks in reverse order
+    rewriteInPlace(s"${EncodeJob.chunkDir(out)}/batch=0/column=url",
+      _.sortWithinPartitions(col("chunk_id").desc))
+
+    // no probe on this layout: the scan's zip refuses the files, and
+    // compaction, which reads through it, commits nothing
+    def misaligned(body: => Any): Unit = {
+      val err = intercept[Exception](body)
+      assert(causedBy(err, "column files misaligned"), err)
+    }
+    misaligned(EncodeJob.readBack(spark, out, result.specs).collect())
+    misaligned(EncodeJob.compact(spark, out, 1))
+    assert(EncodeJob.committedBatches(spark, out) == Set(0))
+    val shuffled = EncodeJob.readBackShuffled(spark, out, result.specs)
+    assert(shuffled.count() == 2000)
+    assert(shuffled.exceptAll(pages).count() == 0)
+    assert(pages.exceptAll(shuffled).count() == 0)
   }
 
   test("compression: encoded size beats raw and dictionary kicks in on lang") {

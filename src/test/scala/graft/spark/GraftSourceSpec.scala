@@ -7,7 +7,7 @@ import org.scalatest.BeforeAndAfterAll
 import java.nio.file.Files
 
 /** DataSource V2 surface: `spark.read.format("graft").load(outDir)` must
-  * equal the engine's own readBack on every layout, infer its schema from
+  * equal the input on every layout, infer its schema from
   * disk, prune columns and push filters down to chunk/stride/bloom
   * pruning (always residual-correct: Spark re-applies the exact filter).
   */
@@ -397,8 +397,8 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
             f => base64(graft.plans.FloatVecToBytes(array(f)))))).as("v"))
         .collect().map(_.toString).sorted
     assert(canonV(back) sameElements canonV(df))
-    // readBack (non-DSv2 surface) agrees
-    val rb = EncodeJob.readBack(spark, out)
+    // the shuffled RDD decode (the scan's independent twin) agrees
+    val rb = EncodeJob.readBackShuffled(spark, out, EncodeJob.specsFromDisk(spark, out).get)
     assert(canonV(rb) sameElements canonV(df))
     // column pruning still serves the sibling columns without the payload
     assert(back.select("id", "tag").count() == 5)
