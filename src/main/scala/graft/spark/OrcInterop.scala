@@ -61,11 +61,12 @@ object OrcInterop {
     }
     val specs = TableEncoder.columnSpecs(df.schema, stringCodecs)
     val shredded = TableEncoder.shred(df, specs)
+    val conf = HadoopFiles.broadcastConf(df.sparkSession)
     shredded.rdd.mapPartitionsWithIndex { (pid, rows) =>
       if (!rows.hasNext) Iterator.empty
       else {
         val path = new Path(dir, f"part-$pid%05d.orc")
-        val info = writePartition(path, specs, rows, stripeRows)
+        val info = writePartition(path, specs, rows, stripeRows, conf.value.value)
         Iterator.single(info)
       }
     }.collect()
@@ -78,14 +79,14 @@ object OrcInterop {
                    dictColumns: Option[Set[String]] = None): OrcFileInfo = {
     val tmp = path + ".dir"
     val infos = writeOrcFiles(df.coalesce(1), tmp, stripeRows, dictColumns)
-    val conf = new Configuration()
+    val conf = df.sparkSession.sparkContext.hadoopConfiguration
     val dst = new Path(path)
     val fs = dst.getFileSystem(conf)
     fs.delete(dst, false)
     if (infos.isEmpty) { // empty input: a valid zero-stripe container
       writePartition(dst, TableEncoder.columnSpecs(df.schema,
         df.schema.fields.collect { case f if f.dataType == StringType =>
-          f.name -> Codecs.StringDirect }.toMap), Iterator.empty, stripeRows)
+          f.name -> Codecs.StringDirect }.toMap), Iterator.empty, stripeRows, conf)
     } else {
       fs.rename(new Path(infos.head.path), dst)
       fs.delete(new Path(tmp), true)
@@ -257,8 +258,8 @@ object OrcInterop {
 
   /** One partition → one multi-stripe ORC file. */
   private def writePartition(path: Path, specs: Array[ColumnSpec],
-                             rows: Iterator[Row], stripeRows: Int): OrcFileInfo = {
-    val conf = new Configuration()
+                             rows: Iterator[Row], stripeRows: Int,
+                             conf: Configuration): OrcFileInfo = {
     val fs = path.getFileSystem(conf)
     fs.mkdirs(path.getParent)
     val out = fs.create(path, true)
@@ -352,9 +353,8 @@ object OrcInterop {
     * is where graft exploits indexes; this path is format interchange).
     */
   def readOrcFile(spark: SparkSession, path: String): DataFrame = {
-    val conf = new Configuration()
     val root = new Path(path)
-    val fs = root.getFileSystem(conf)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files: Array[String] = {
       val st = fs.getFileStatus(root)
       if (st.isFile) Array(root.toString)
@@ -364,8 +364,9 @@ object OrcInterop {
     require(files.nonEmpty, s"no .orc files under $path")
     val (footer, _) = readTail(fs, new Path(files.head))
     val schema = schemaOf(footer)
+    val conf = HadoopFiles.broadcastConf(spark)
     val rdd = spark.sparkContext.parallelize(files.toIndexedSeq, files.length)
-      .flatMap(f => readFileRows(f))
+      .flatMap(f => readFileRows(f, conf.value.value))
     spark.createDataFrame(rdd, schema)
   }
 
@@ -429,8 +430,7 @@ object OrcInterop {
     }
 
   /** Decode every stripe of one file into external Rows. */
-  private def readFileRows(file: String): Iterator[Row] = {
-    val conf = new Configuration()
+  private def readFileRows(file: String, conf: Configuration): Iterator[Row] = {
     val p = new Path(file)
     val fs = p.getFileSystem(conf)
     val (footer, ps) = readTail(fs, p)

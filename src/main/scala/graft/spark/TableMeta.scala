@@ -168,9 +168,7 @@ object TableMeta {
     */
   private def readSidecarFile(conf: org.apache.hadoop.conf.Configuration, path: Path)
       : Seq[SidecarEntry] = {
-    val reader = org.apache.parquet.hadoop.ParquetReader
-      .builder(new org.apache.parquet.hadoop.example.GroupReadSupport(), path)
-      .withConf(conf).build()
+    val reader = HadoopFiles.groupReader(path, conf).build()
     val out = scala.collection.mutable.ArrayBuffer[SidecarEntry]()
     try {
       var g = reader.read()

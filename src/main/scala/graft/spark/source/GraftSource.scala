@@ -1,18 +1,18 @@
 package graft.spark.source
 
-import graft.spark.{ColumnSpec, EncodeJob, EncodedChunk, TableEncoder}
+import graft.spark.{ColumnSpec, EncodeJob, EncodedChunk, HadoopFiles, TableEncoder}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
-import org.apache.parquet.hadoop.{ParquetFileReader, ParquetReader}
-import org.apache.parquet.hadoop.api.ReadSupport
+import org.apache.parquet.hadoop.ParquetReader
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
 import org.apache.parquet.hadoop.example.GroupReadSupport
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.MessageType
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Expression, GenericInternalRow, MakeDecimal, UnsafeProjection}
@@ -28,6 +28,7 @@ import org.apache.spark.sql.sources.{BaseRelation, CreatableRelationProvider, Eq
 import org.apache.spark.sql.types.{BooleanType, ByteType, DataType, DateType, DecimalType, DoubleType, FloatType, IntegerType, LongType, ShortType, StringType, StructField, StructType, TimestampNTZType, TimestampType}
 import org.apache.spark.unsafe.types.UTF8String
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
+import org.apache.spark.util.SerializableConfiguration
 
 import scala.jdk.CollectionConverters._
 
@@ -57,6 +58,12 @@ import scala.jdk.CollectionConverters._
   * into chunk groups, and pruning happens at FILE granularity before
   * anything is opened). This scan is the engine's one directory reader:
   * EncodeJob.readBack, readBackColocated and compaction all run it.
+  *
+  * Tasks get the session's Hadoop conf from one broadcast per scan
+  * (`HadoopFiles.broadcastConf`, as Spark's own `FileScan` ships it) and
+  * open each file through `HadoopInputFile` with it
+  * (`HadoopFiles.groupReader`): task set-up is opening its files, not
+  * deserializing a conf or parsing Hadoop's default XML resources.
   */
 final class GraftSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister
@@ -780,7 +787,7 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
 
   override def createReaderFactory(): PartitionReaderFactory = {
     val specs = TableEncoder.subsetSpecs(allSpecs, emitColumns)
-    val conf = new SerializableHadoopConf(spark.sparkContext.hadoopConfiguration)
+    val conf = HadoopFiles.broadcastConf(spark)
     aggSlots match {
       case Some(slots) =>
         GraftAggReaderFactory(slots, aggDesignated(visibleBatches), specs, conf)
@@ -1100,33 +1107,22 @@ object PrunePred {
   }
 }
 
-/** Hadoop Configuration is not Serializable; standard write/readFields
-  * envelope.
-  */
-final class SerializableHadoopConf(@transient var value: Configuration) extends Serializable {
-  private def writeObject(out: java.io.ObjectOutputStream): Unit = {
-    out.defaultWriteObject(); value.write(out)
-  }
-  private def readObject(in: java.io.ObjectInputStream): Unit = {
-    in.defaultReadObject(); value = new Configuration(false); value.readFields(in)
-  }
-}
-
 final case class GraftReaderFactory(specs: Array[ColumnSpec], emitEmptyRows: Boolean,
                                     preds: Array[ChunkPrune], limit: Int,
-                                    conf: SerializableHadoopConf)
+                                    conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GraftPartitionReader(partition.asInstanceOf[GraftInputPartition], specs,
-      emitEmptyRows, preds, limit, conf.value)
+      emitEmptyRows, preds, limit, conf.value.value)
 }
 
 final case class GraftAggReaderFactory(slots: Array[AggSlot], designated: String,
-                                       specs: Array[ColumnSpec], conf: SerializableHadoopConf)
+                                       specs: Array[ColumnSpec],
+                                       conf: Broadcast[SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
     new GraftAggPartitionReader(partition.asInstanceOf[GraftInputPartition], slots,
-      designated, specs, conf.value)
+      designated, specs, conf.value.value)
 }
 
 /** Metadata-only partial aggregates: reads each chunk file with a parquet
@@ -1154,22 +1150,21 @@ final class GraftAggPartitionReader(part: GraftInputPartition, slots: Array[AggS
   private val reader: ParquetReader[Group] =
     if (part.files.isEmpty) null
     else {
-      val f = part.files(0)
-      val c = new Configuration(conf)
       // projection from the FILE's own schema (types/repetitions match by
       // construction, and fields absent in older files are simply dropped)
-      val in = HadoopInputFile.fromPath(new Path(f), c)
-      val fr = ParquetFileReader.open(in)
-      val fileSchema = try fr.getFooter.getFileMetaData.getSchema finally fr.close()
-      val kept = fileSchema.getFields.asScala.filter(fd => metaFields(fd.getName))
-      c.set(ReadSupport.PARQUET_READ_SCHEMA, new MessageType(fileSchema.getName, kept.asJava).toString)
-      val b = ParquetReader.builder(new GroupReadSupport(), new Path(f)).withConf(c)
+      val metaOnly = new GroupReadSupport {
+        override def init(context: InitContext): ReadSupport.ReadContext = {
+          val file = context.getFileSchema
+          new ReadSupport.ReadContext(new MessageType(file.getName,
+            file.getFields.asScala.filter(f => metaFields(f.getName)).asJava))
+        }
+      }
+      val b = HadoopFiles.groupReader(new Path(part.files(0)), conf, metaOnly)
       (if (colPart) b
-       else b.withFilter(FilterCompat.get(
-         (specs.map(_.name).toSet + designated).toSeq
-           .map(n => FilterApi.eq(FilterApi.binaryColumn("column"),
-             Binary.fromString(n)): FilterPredicate)
-           .reduce(FilterApi.or)))).build()
+       else b.withFilter(FilterCompat.get(wanted.toSeq
+         .map(n => FilterApi.eq(FilterApi.binaryColumn("column"),
+           Binary.fromString(n)): FilterPredicate)
+         .reduce(FilterApi.or)))).build()
     }
 
   private val proj = UnsafeProjection.create(slots.map(_.outType))
@@ -1309,7 +1304,7 @@ final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnS
   private val columnPartitioned = part.columns.nonEmpty
   private val readers: Array[ParquetReader[Group]] = part.files.zipWithIndex.map {
     case (f, i) =>
-      val b = ParquetReader.builder(new GroupReadSupport(), new Path(f)).withConf(conf)
+      val b = HadoopFiles.groupReader(new Path(f), conf)
       // row-grouped layout: push `column IN (requested)` into parquet so
       // other columns' records never assemble (dictionary/column-index
       // pruning applies); column-partitioned files hold one column only
