@@ -254,7 +254,8 @@ object Bench {
           // measured as the round-2 "decode slower at 32 than 8" inversion
           // (DecodeScale probe: x1 files eff 0.22 and inverted, x3 files
           // monotone). Same 3-waves rule as the encode section's input.
-          EncodeJob.run(pages, EncodeJob.Config(tmpOut, cpus * 3, Some("lang")))
+          EncodeJob.run(pages, EncodeJob.Config(tmpOut, cpus * 3, Some("lang"),
+            compression = graft.core.BlockCompression.Zlib))
         } finally s.stop()
       }
       decodeBenchInterleaved(tmpOut, schema, decodeLevels, rounds = 3)
@@ -369,7 +370,8 @@ object Bench {
         try {
           val pages = WebGen.pages(s, bigRows, seed = 42, partitions = cpus * 3).toDF()
           schema = pages.schema
-          EncodeJob.run(pages, EncodeJob.Config(tmpOut, cpus * 3, Some("lang")))
+          EncodeJob.run(pages, EncodeJob.Config(tmpOut, cpus * 3, Some("lang"),
+            compression = graft.core.BlockCompression.Zlib))
         } finally s.stop()
       }
       decodeBenchInterleaved(tmpOut, schema, bigDecLevels, rounds = 2)

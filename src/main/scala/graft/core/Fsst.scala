@@ -26,23 +26,41 @@ object Fsst {
   final class SymbolTable(val symbols: Array[Array[Byte]]) {
     require(symbols.length <= MaxSymbols, s"${symbols.length} symbols > $MaxSymbols")
 
-    /** Symbols packed little-endian into longs for one-compare matching. */
+    /** Symbols packed little-endian into longs for one-compare matching
+      * (and one 8-byte store per symbol on decode).
+      */
     private[Fsst] val symLong: Array[Long] = symbols.map(packLE)
     private[Fsst] val symLen: Array[Int] = symbols.map(_.length)
 
-    /** The paper's constant-time match structure (FSST §3.2): symbols of
-      * len ≥ 3 live in a hash table keyed on their first 3 bytes, ONE
-      * candidate per slot (collisions keep the higher-gain symbol — the
-      * trainer emits symbols gain-descending, so first insert wins);
-      * 2-byte symbols index a 64 K short-code array; 1-byte symbols a
-      * 256-entry array. A match probe is then one hash + at most three
-      * array reads, instead of a scan over every symbol sharing the
-      * first byte.
+    /** The encoder's match tables, built on the first `compress`/`train`
+      * use: a table deserialized to decode a stream reads only
+      * symLong/symLen and never pays for them.
       */
-    private[Fsst] val longTable: Array[Int] = {
+    private[Fsst] lazy val matcher: Matcher = new Matcher(symLong, symLen)
+
+    def serialize(out: ByteBuf): Unit = {
+      out.writeByte(symbols.length)
+      symbols.foreach { s =>
+        out.writeByte(s.length)
+        out.writeBytes(s)
+      }
+    }
+  }
+
+  /** The paper's constant-time match structure (FSST §3.2): symbols of
+    * len ≥ 3 live in a hash table keyed on their first 3 bytes, ONE
+    * candidate per slot (collisions keep the higher-gain symbol — the
+    * trainer emits symbols gain-descending, so first insert wins);
+    * 2-byte symbols index a 64 K short-code array; 1-byte symbols a
+    * 256-entry array. A match probe is then one hash + at most three
+    * array reads, instead of a scan over every symbol sharing the
+    * first byte.
+    */
+  private[Fsst] final class Matcher(symLong: Array[Long], symLen: Array[Int]) {
+    private val longTable: Array[Int] = {
       val t = Array.fill(HashSlots)(-1)
       var i = 0
-      while (i < symbols.length) {
+      while (i < symLong.length) {
         if (symLen(i) >= 3) {
           val h = hash3(symLong(i) & 0xffffffL)
           if (t(h) < 0) t(h) = i
@@ -60,9 +78,9 @@ object Fsst {
       * (mask 0, pattern 1) so no emptiness branch exists at all.
       * slotCodeLen packs (code << 8 | len) for the match fast path.
       */
-    private[Fsst] val slotMask: Array[Long] = new Array[Long](HashSlots)
-    private[Fsst] val slotPattern: Array[Long] = Array.fill(HashSlots)(1L)
-    private[Fsst] val slotCodeLen: Array[Int] = new Array[Int](HashSlots)
+    val slotMask: Array[Long] = new Array[Long](HashSlots)
+    val slotPattern: Array[Long] = Array.fill(HashSlots)(1L)
+    val slotCodeLen: Array[Int] = new Array[Int](HashSlots)
     locally {
       var h = 0
       while (h < HashSlots) {
@@ -75,10 +93,10 @@ object Fsst {
         h += 1
       }
     }
-    private[Fsst] val byteCodes: Array[Int] = {
+    val byteCodes: Array[Int] = {
       val t = Array.fill(256)(-1)
       var i = 0
-      while (i < symbols.length) {
+      while (i < symLong.length) {
         if (symLen(i) == 1 && t(symLong(i).toInt) < 0) t(symLong(i).toInt) = i
         i += 1
       }
@@ -90,7 +108,7 @@ object Fsst {
       * symbol of b0, else -1 (escape b0). One array read decides the
       * whole sub-3-byte match.
       */
-    private[Fsst] val shortCodes: Array[Int] = {
+    val shortCodes: Array[Int] = {
       val t = new Array[Int](1 << 16)
       var v = 0
       while (v < (1 << 16)) {
@@ -99,7 +117,7 @@ object Fsst {
         v += 1
       }
       var i = 0
-      while (i < symbols.length) {
+      while (i < symLong.length) {
         if (symLen(i) == 2) {
           val slot = symLong(i).toInt
           if (t(slot) < 0 || (t(slot) & 1) == 1) t(slot) = i << 1
@@ -107,14 +125,6 @@ object Fsst {
         i += 1
       }
       t
-    }
-
-    def serialize(out: ByteBuf): Unit = {
-      out.writeByte(symbols.length)
-      symbols.foreach { s =>
-        out.writeByte(s.length)
-        out.writeBytes(s)
-      }
     }
   }
 
@@ -173,10 +183,11 @@ object Fsst {
       // adjacent-pair frequencies
       val symCount = new Array[Long](table.symbols.length + 256)
       val pairCount = new java.util.HashMap[Long, Long]() // (sym1 << 32 | sym2) -> freq
+      val matcher = table.matcher
       var pos = 0
       var prev = -1
       while (pos < corpus.length) {
-        val m = matchAt(table, corpus, pos)
+        val m = matchAt(matcher, corpus, pos)
         val (code, len) = if (m >= 0) (m, table.symbols(m).length) else (table.symbols.length + (corpus(pos) & 0xff), 1)
         symCount(code) += 1
         if (prev >= 0) {
@@ -230,7 +241,7 @@ object Fsst {
     * 1-byte code. The 8-byte window is one VarHandle load away from the
     * array tail, a short byte-pack loop at it.
     */
-  private def matchAt(table: SymbolTable, data: Array[Byte], pos: Int): Int = {
+  private def matchAt(matcher: Matcher, data: Array[Byte], pos: Int): Int = {
     val avail = math.min(MaxSymbolLen, data.length - pos)
     var w = 0L
     if (data.length - pos >= 8) w = LongView.get(data, pos).asInstanceOf[Long]
@@ -240,19 +251,19 @@ object Fsst {
     }
     if (avail >= 3) {
       val h = hash3(w & 0xffffffL)
-      if ((w & table.slotMask(h)) == table.slotPattern(h)) {
-        val cl = table.slotCodeLen(h)
+      if ((w & matcher.slotMask(h)) == matcher.slotPattern(h)) {
+        val cl = matcher.slotCodeLen(h)
         // len ≤ avail guards a symbol with trailing 0x00 bytes matching a
         // zero-padded short window
         if ((cl & 0xff) <= avail) return cl >>> 8
       }
     }
     if (avail >= 2) {
-      val sc = table.shortCodes((w & 0xffffL).toInt)
+      val sc = matcher.shortCodes((w & 0xffffL).toInt)
       if (sc >= 0) return sc >>> 1 // fused: covers both 2-byte and 1-byte
       return -1
     }
-    table.byteCodes((w & 0xffL).toInt)
+    matcher.byteCodes((w & 0xffL).toInt)
   }
 
   def compress(table: SymbolTable, data: Array[Byte], out: ByteBuf): Unit = {
@@ -263,10 +274,11 @@ object Fsst {
     var o = out.length
     var pos = 0
     val fastEnd = data.length - MaxSymbolLen // full 8-byte loads safe through here
-    val slotMask = table.slotMask
-    val slotPattern = table.slotPattern
-    val slotCodeLen = table.slotCodeLen
-    val shortCodes = table.shortCodes
+    val matcher = table.matcher
+    val slotMask = matcher.slotMask
+    val slotPattern = matcher.slotPattern
+    val slotCodeLen = matcher.slotCodeLen
+    val shortCodes = matcher.shortCodes
     while (pos <= fastEnd) {
       val w = LongView.get(data, pos).asInstanceOf[Long]
       val h = hash3(w & 0xffffffL)
@@ -280,7 +292,7 @@ object Fsst {
       }
     }
     while (pos < data.length) { // tail: windows shorter than 8 bytes
-      val m = matchAt(table, data, pos)
+      val m = matchAt(matcher, data, pos)
       if (m >= 0) { dst(o) = m.toByte; o += 1; pos += table.symLen(m) }
       else {
         dst(o) = EscapeCode.toByte; dst(o + 1) = data(pos); o += 2

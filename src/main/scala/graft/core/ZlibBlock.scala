@@ -103,8 +103,12 @@ object ZlibBlock {
     out.writeBytes(src, off, len)
   }
 
-  def decompress(data: Array[Byte]): Array[Byte] = {
-    val out = new ByteBuf(data.length * 2 + 64)
+  def decompress(data: Array[Byte]): Array[Byte] = decompress(data, 0, data.length)
+
+  /** Decompress the framed blocks at `data[off, off + len)`. */
+  def decompress(data: Array[Byte], off: Int, len: Int): Array[Byte] = {
+    val end = off + len
+    val out = new ByteBuf(len * 2 + 64)
     val inflater = localInflater.get()
     val inBuf = directBuf(localIn, DefaultBlockSize + 1024)
     val outBuf = directBuf(localOut, DefaultBlockSize + 1024)
@@ -113,22 +117,22 @@ object ZlibBlock {
       scratch = new Array[Byte](outBuf.capacity())
       localScratch.set(scratch)
     }
-    var pos = 0
-    while (pos < data.length) {
-      if (pos + 3 > data.length) throw new IllegalStateException("truncated block header")
+    var pos = off
+    while (pos < end) {
+      if (pos + 3 > end) throw new IllegalStateException("truncated block header")
       val raw = (data(pos) & 0xff) | ((data(pos + 1) & 0xff) << 8) | ((data(pos + 2) & 0xff) << 16)
       pos += 3
-      val len = raw >>> 1
+      val blockLen = raw >>> 1
       val isOriginal = (raw & 1) == 1
-      if (pos + len > data.length) throw new IllegalStateException("truncated block body")
-      if (isOriginal) out.writeBytes(data, pos, len)
+      if (pos + blockLen > end) throw new IllegalStateException("truncated block body")
+      if (isOriginal) out.writeBytes(data, pos, blockLen)
       else {
         var fed = 0 // feed oversized blocks through the direct buffer in slices
         inflater.reset()
         while (!inflater.finished()) {
           if (inflater.needsInput()) {
-            if (fed >= len) throw new IllegalStateException("inflater stalled (corrupt block?)")
-            val slice = math.min(inBuf.capacity(), len - fed)
+            if (fed >= blockLen) throw new IllegalStateException("inflater stalled (corrupt block?)")
+            val slice = math.min(inBuf.capacity(), blockLen - fed)
             inBuf.clear(); inBuf.put(data, pos + fed, slice); inBuf.flip()
             inflater.setInput(inBuf)
             fed += slice
@@ -142,7 +146,7 @@ object ZlibBlock {
             throw new IllegalStateException("inflater stalled (corrupt block?)")
         }
       }
-      pos += len
+      pos += blockLen
     }
     out.toArray
   }

@@ -1443,8 +1443,7 @@ object TableEncoder {
           // other kinds legitimately decode from empty bytes
           if (k != Streams.Present) m += k -> Array.emptyByteArray
         } else {
-          val seg = java.util.Arrays.copyOfRange(c.streams(k), offs(s), offs(s) + lens(s))
-          m += k -> graft.core.BlockCompression.decompress(kindC, seg)
+          m += k -> graft.core.BlockCompression.decompress(kindC, c.streams(k), offs(s), lens(s))
         }
       }
       decodeColumnPrim(ColumnStreams(c.codec, rowsS, nullsS, m.result()), specs(ci))

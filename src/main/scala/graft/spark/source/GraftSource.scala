@@ -220,7 +220,8 @@ final class GraftWriteBuilder(outDir: String, options: CaseInsensitiveStringMap)
 
 object GraftWriteSupport {
   /** Writer options (all optional): numPartitions, keyColumn, saltColumn,
-    * compression (zlib|zstd|lz4|none), segmented, alignedEncoding,
+    * compression (zstd, the default | zlib, the reference-parity mode |
+    * lz4 | none), segmented, alignedEncoding,
     * strideRows, chunkTargetBytes, commitBatches, sampleRows,
     * bloomColumns (comma-separated), sortColumns (comma-separated —
     * per-partition sort before chunking: clustered chunk ranges for
@@ -726,9 +727,16 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
           GraftInputPartition(present.map(s => byCol(s.name)), present.map(_.name).toSeq,
             written = written(b))
         }
-    } else files.toArray.sortBy(_._3).filter(f => kept(f._3))
-      .map(f => GraftInputPartition(Array(f._3), Seq.empty, driverByBatch.get(f._1),
-        written(f._1)))
+    } else {
+      // a batch that wrote no column outside the request (per the
+      // lineage) and needs no row-count column: every record passes the
+      // reader's `column IN (...)` filter, so its files open unfiltered
+      def unfiltered(b: Int): Boolean =
+        !driverByBatch.contains(b) && batchColumns.get(b).exists(_.subsetOf(specNames))
+      files.toArray.sortBy(_._3).filter(f => kept(f._3))
+        .map(f => GraftInputPartition(Array(f._3), Seq.empty, driverByBatch.get(f._1),
+          written(f._1), columnFilter = !unfiltered(f._1)))
+    }
   }
 
   private def taskIndexOf(path: String): String = {
@@ -870,7 +878,11 @@ final case class GraftInputPartition(files: Array[String], columns: Seq[String],
                                      // wrote (manifest lineage): a chunk
                                      // group lacking one was split or
                                      // interleaved, and fails the read
-                                     written: Option[Seq[String]] = None)
+                                     written: Option[Seq[String]] = None,
+                                     // row-grouped files: push the reader's
+                                     // `column IN (...)` filter into parquet;
+                                     // false when every record is requested
+                                     columnFilter: Boolean = true)
     extends InputPartition
 
 /** The chunk metadata a pruning decision reads: a view of an
@@ -1307,8 +1319,9 @@ final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnS
       val b = HadoopFiles.groupReader(new Path(f), conf)
       // row-grouped layout: push `column IN (requested)` into parquet so
       // other columns' records never assemble (dictionary/column-index
-      // pruning applies); column-partitioned files hold one column only
-      (if (columnPartitioned) b
+      // pruning applies) unless the planner found every record requested;
+      // column-partitioned files hold one column only
+      (if (columnPartitioned || !part.columnFilter) b
        else b.withFilter(FilterCompat.get(columnNameFilter))).build()
   }
   private def columnNameFilter: FilterPredicate =

@@ -39,7 +39,7 @@ object StreamingEncode {
   def start(pages: DataFrame, outDir: String, checkpointDir: String,
             numPartitions: Int, keyColumn: Option[String] = Some("lang"),
             trigger: Trigger = Trigger.AvailableNow(),
-            compression: String = graft.core.BlockCompression.Zlib): StreamingQuery = {
+            compression: String = EncodeJob.DefaultCompression): StreamingQuery = {
     require(pages.isStreaming, "StreamingEncode.start needs a streaming DataFrame")
     pages.writeStream
       .option("checkpointLocation", checkpointDir)
@@ -55,7 +55,7 @@ object StreamingEncode {
     */
   def encodeBatch(batch: DataFrame, batchId: Long, outDir: String,
                   numPartitions: Int, keyColumn: Option[String],
-                  compression: String = graft.core.BlockCompression.Zlib): Unit = {
+                  compression: String = EncodeJob.DefaultCompression): Unit = {
     val spark = batch.sparkSession
     // one snapshot read serves visibility, the compaction guard AND the
     // replay check — driver-side metadata, no Spark jobs per micro-batch

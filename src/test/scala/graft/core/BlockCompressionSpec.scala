@@ -1,5 +1,6 @@
 package graft.core
 
+import org.scalacheck.{Gen, Prop, Test => SCTest}
 import org.scalatest.funsuite.AnyFunSuite
 
 class BlockCompressionSpec extends AnyFunSuite {
@@ -47,6 +48,62 @@ class BlockCompressionSpec extends AnyFunSuite {
     // usually smaller; the bound leaves slack for corpus quirks)
     assert(zstd.length <= zlib.length * 1.15,
       s"zstd ${zstd.length} much worse than zlib ${zlib.length}")
+  }
+
+  /** Payload classes: empty, random (incompressible), highly repetitive,
+    * and > 256 KiB (multi-block zlib framing; random ones take zstd/lz4's
+    * raw flag). Bytes derive from a generated seed, so a failure prints a
+    * small reproducible case instead of a megabyte of bytes.
+    */
+  private def bytes(seed: Long, n: Int, repetitive: Boolean): Array[Byte] = {
+    val r = new scala.util.Random(seed)
+    if (!repetitive) { val b = new Array[Byte](n); r.nextBytes(b); b }
+    else {
+      val unit = new Array[Byte](1 + r.nextInt(16))
+      r.nextBytes(unit)
+      Array.tabulate(n)(i => unit(i % unit.length))
+    }
+  }
+  private val payloads: Gen[Array[Byte]] = for {
+    seed <- Gen.long
+    n <- Gen.frequency(
+      1 -> Gen.const(0),
+      4 -> Gen.choose(1, 4096),
+      2 -> Gen.choose(ZlibBlock.DefaultBlockSize + 1, 3 * ZlibBlock.DefaultBlockSize))
+    repetitive <- Gen.oneOf(true, false)
+  } yield bytes(seed, n, repetitive)
+
+  private def check(prop: Prop): Unit = {
+    val result = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(100), prop)
+    assert(result.passed, result.status.toString)
+  }
+
+  test("property: decompress(kind, compress(kind, b)) == b for every kind") {
+    check(Prop.forAllNoShrink(payloads, Gen.oneOf(kinds)) { (b: Array[Byte], kind: String) =>
+      java.util.Arrays.equals(BlockCompression.decompress(kind, BlockCompression.compress(kind, b)), b)
+    })
+  }
+
+  test("property: the slice entry decodes a blob embedded at any offset of a larger array") {
+    check(Prop.forAllNoShrink(payloads, Gen.oneOf(kinds), Gen.choose(0, 64), Gen.choose(0, 64),
+        Gen.long) { (b: Array[Byte], kind: String, pre: Int, post: Int, seed: Long) =>
+      val blob = BlockCompression.compress(kind, b)
+      val host = bytes(seed, pre + blob.length + post, repetitive = false)
+      System.arraycopy(blob, 0, host, pre, blob.length)
+      java.util.Arrays.equals(BlockCompression.decompress(kind, host, pre, blob.length), b)
+    })
+  }
+
+  test("the slice entry counts the compressed bytes it is fed") {
+    val b = ("graft " * 5000).getBytes("UTF-8")
+    for (kind <- kinds) {
+      val blob = BlockCompression.compress(kind, b)
+      val host = new Array[Byte](blob.length + 10)
+      System.arraycopy(blob, 0, host, 7, blob.length)
+      val before = BlockCompression.decompressInputBytes
+      BlockCompression.decompress(kind, host, 7, blob.length)
+      assert(BlockCompression.decompressInputBytes - before == blob.length, kind)
+    }
   }
 
   test("unknown kind is rejected") {

@@ -109,7 +109,7 @@ class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("compact a subset of batches; layout + codecs inherited") {
     val o = s"$tmp/subset"
     frame(0, 400).write.format("graft").mode("overwrite")
-      .option("numPartitions", "2").option("compression", "zstd").save(o)
+      .option("numPartitions", "2").option("compression", "zlib").save(o)
     frame(400, 800).write.format("graft").mode("append").option("numPartitions", "2").save(o)
     frame(800, 1200).write.format("graft").mode("append").option("numPartitions", "2").save(o)
     val cBatch = EncodeJob.compact(spark, o, targetPartitions = 1, batches = Some(Set(0, 1)))
@@ -119,7 +119,42 @@ class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val kinds = spark.read.parquet(s"$o/chunks")
       .filter(col("batch") === cBatch).select("compression")
       .distinct().collect().map(_.getString(0)).toSet
-    assert(kinds == Set("zstd"), kinds.toString)
+    assert(kinds == Set("zlib"), kinds.toString)
+  }
+
+  test("mixed-codec table: zlib batches appended to under the zstd default stay exact through DELETE and compaction") {
+    val o = s"$tmp/mixed"
+    frame(0, 500).write.format("graft").mode("overwrite")
+      .option("numPartitions", "2").option("compression", "zlib").save(o)
+    frame(500, 1000).write.format("graft").mode("append").option("numPartitions", "2").save(o)
+    def kinds(batch: Int): Set[String] = spark.read.parquet(s"$o/chunks")
+      .filter(col("batch") === batch).select("compression")
+      .distinct().collect().map(_.getString(0)).toSet
+    val Seq(zlibBatch, defaultBatch) = EncodeJob.committedBatches(spark, o).toSeq.sorted
+    assert(kinds(zlibBatch) == Set("zlib"))
+    // a write with no option records the default kind
+    assert(kinds(defaultBatch) == Set("zstd"))
+
+    def graftRead = spark.read.format("graft").load(o)
+    def checkReads(model: DataFrame): Unit = {
+      assert(canon(graftRead) sameElements canon(model))
+      assert(canon(graftRead.select("s")) sameElements canon(model.select("s")))
+      assert(canon(graftRead.filter(col("v") === 3.0)) sameElements
+        canon(model.filter(col("v") === 3.0)))
+    }
+    checkReads(frame(0, 1000))
+
+    // DELETE one row of the zlib batch: its rewrite inherits zlib
+    val delBatch = EncodeJob.deleteWhere(spark, o, col("id") === 123L, targetPartitions = 2)
+    assert(EncodeJob.committedBatches(spark, o) == Set(defaultBatch, delBatch))
+    assert(kinds(delBatch) == Set("zlib"))
+    val model = frame(0, 1000).filter(col("id") =!= 123L)
+    checkReads(model)
+
+    val cBatch = EncodeJob.compact(spark, o, targetPartitions = 1)
+    assert(EncodeJob.committedBatches(spark, o) == Set(cBatch))
+    assert(kinds(cBatch).size == 1)
+    checkReads(model)
   }
 
   test("a crashed compaction (chunks written, record missing) stays invisible") {
