@@ -19,7 +19,10 @@ final case class StringColumnStats(
     distinctCount: Long,
     avgLength: Double,
     byteEntropy: Double, // Shannon entropy of byte distribution, bits/byte
-    fsstSampleRatio: Double // compressed/original on the sample, 1.0 = no gain
+    // compressed/original on the sample, 1.0 = no gain. stringStats
+    // leaves it at 1.0, unevaluated, when the choice cannot depend on it
+    // (dictionary cardinality, or avgLength < FsstMinAvgLength)
+    fsstSampleRatio: Double
 ) {
   def distinctRatio: Double = if (sampleCount == 0) 1.0 else distinctCount.toDouble / sampleCount
 }
@@ -38,19 +41,20 @@ object CodecSelector {
       Codecs.StringFsst
     else Codecs.StringDirect
 
-  /** Compute selection stats from a sample of non-null strings. */
+  /** Compute selection stats from a sample of non-null strings. FSST is
+    * trained on the sample only when chooseStringCodec would pick FSST
+    * for a good enough ratio.
+    */
   def stringStats(sample: Iterable[String]): StringColumnStats = {
     var count = 0L
     var totalLen = 0L
     val distinct = new java.util.HashSet[String]()
     val byteCounts = new Array[Long](256)
-    val corpus = new ByteBuf(8192)
     sample.foreach { s =>
       count += 1
       distinct.add(s)
       val bytes = s.getBytes(StandardCharsets.UTF_8)
       totalLen += bytes.length
-      if (corpus.length < (1 << 16)) corpus.writeBytes(bytes)
       var i = 0
       while (i < bytes.length) { byteCounts(bytes(i) & 0xff) += 1; i += 1 }
     }
@@ -66,17 +70,18 @@ object CodecSelector {
         i += 1
       }
     }
-    val fsstRatio =
-      if (corpus.length < 64) 1.0
+    val stats = StringColumnStats(count, distinct.size().toLong,
+      if (count == 0) 0.0 else totalLen.toDouble / count, entropy, fsstSampleRatio = 1.0)
+    if (chooseStringCodec(stats.copy(fsstSampleRatio = 0.0)) != Codecs.StringFsst) stats
+    else {
+      val corpus = Fsst.sampleOf(sample.iterator.map(_.getBytes(StandardCharsets.UTF_8)))
+      if (corpus.length < 64) stats
       else {
-        val corpusArr = corpus.toArray
-        val table = Fsst.train(corpusArr)
-        val compressed = new ByteBuf(corpusArr.length)
-        Fsst.compress(table, corpusArr, compressed)
-        compressed.length.toDouble / corpusArr.length
+        val compressed = new ByteBuf(corpus.length)
+        Fsst.compress(Fsst.train(corpus), corpus, compressed)
+        stats.copy(fsstSampleRatio = compressed.length.toDouble / corpus.length)
       }
-    StringColumnStats(count, distinct.size().toLong,
-      if (count == 0) 0.0 else totalLen.toDouble / count, entropy, fsstRatio)
+    }
   }
 
   /** Encode a string column with an explicit pre-pinned decision.

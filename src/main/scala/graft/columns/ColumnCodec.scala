@@ -296,14 +296,7 @@ object ColumnCodec {
     val nullCount = countNulls(present)
     val table =
       if (pretrained != null) pretrained
-      else {
-        val corpus = new ByteBuf(1 << 14)
-        var i = 0
-        while (i < rawBytes.length && corpus.length < (1 << 16)) {
-          corpus.writeBytes(rawBytes(i)); i += 1
-        }
-        Fsst.train(corpus.toArray)
-      }
+      else Fsst.trainValues(rawBytes.iterator)
     val data = new ByteBuf(4096)
     val lengths = new Array[Long](rawBytes.length) // compressed byte length per value
     var i = 0
@@ -355,21 +348,8 @@ object ColumnCodec {
           .map(_.getBytes(StandardCharsets.UTF_8))
         lookup.map(id => dict(id.toInt)) // aliased entries: callers treat values as read-only
       case Codecs.StringFsst =>
-        val table = Fsst.SymbolTable.deserialize(new BytesIn(cs.streams(Streams.SymbolTable)))
-        val lengths = RleV2Reader.read(new BytesIn(cs.streams(Streams.Length)), signed = false, n)
-        val data = cs.streams(Streams.Data)
-        val out = new Array[Array[Byte]](n)
-        var off = 0
-        var i = 0
-        while (i < n) {
-          val len = lengths(i).toInt
-          val buf = new ByteBuf(len * 3 + 8)
-          Fsst.decompress(table, data, off, off + len, buf)
-          out(i) = buf.toArray
-          off += len
-          i += 1
-        }
-        out
+        val s = fsstSlices(cs, n)
+        Array.tabulate(n)(i => java.util.Arrays.copyOfRange(s.buf, s.starts(i), s.starts(i) + s.lens(i)))
       case other => throw new IllegalArgumentException(s"not a string codec: $other")
     }
     (values, present)
@@ -417,28 +397,43 @@ object ColumnCodec {
           i += 1
         }
         ByteSlices(dictBuf, starts, lens)
-      case Codecs.StringFsst =>
-        // decompress every value into ONE growing buffer, record offsets
-        val table = Fsst.SymbolTable.deserialize(new BytesIn(cs.streams(Streams.SymbolTable)))
-        val lengths = RleV2Reader.read(new BytesIn(cs.streams(Streams.Length)), signed = false, n)
-        val data = cs.streams(Streams.Data)
-        val big = new ByteBuf(data.length * 3 + 64)
-        val starts = new Array[Int](n)
-        val lens = new Array[Int](n)
-        var off = 0
-        var i = 0
-        while (i < n) {
-          val len = lengths(i).toInt
-          starts(i) = big.length
-          Fsst.decompress(table, data, off, off + len, big)
-          lens(i) = big.length - starts(i)
-          off += len
-          i += 1
-        }
-        ByteSlices(big.unsafeArray, starts, lens)
+      case Codecs.StringFsst => fsstSlices(cs, n)
       case other => throw new IllegalArgumentException(s"not a string codec: $other")
     }
     (slices, present)
+  }
+
+  /** Decompress every FSST value into ONE buffer. It starts at 3× the
+    * coded size; once a value's worst case (MaxSymbolLen per code, plus
+    * the 8 bytes of slack decompressInto needs) might not fit, a pass over
+    * the remaining codes sizes it exactly, so it is resized at most once
+    * and that pass covers only the tail of most streams.
+    */
+  private def fsstSlices(cs: ColumnStreams, n: Int): ByteSlices = {
+    val table = Fsst.SymbolTable.deserialize(new BytesIn(cs.streams(Streams.SymbolTable)))
+    val lengths = RleV2Reader.read(new BytesIn(cs.streams(Streams.Length)), signed = false, n)
+    val data = cs.streams(Streams.Data)
+    var big = new Array[Byte](data.length * 3 + 64)
+    var sized = false
+    val starts = new Array[Int](n)
+    val lens = new Array[Int](n)
+    var o = 0
+    var off = 0
+    var i = 0
+    while (i < n) {
+      val len = lengths(i).toInt
+      if (!sized && o + len.toLong * Fsst.MaxSymbolLen + 8 > big.length) {
+        val need = o + Fsst.decodedLength(table, data, off, data.length) + 8
+        if (need > big.length) big = java.util.Arrays.copyOf(big, need)
+        sized = true
+      }
+      starts(i) = o
+      o = Fsst.decompressInto(table, data, off, off + len, big, o)
+      lens(i) = o - starts(i)
+      off += len
+      i += 1
+    }
+    ByteSlices(big, starts, lens)
   }
 
   private def slicesOf(data: Array[Byte], lengths: Array[Long], n: Int): ByteSlices = {
@@ -479,21 +474,8 @@ object ColumnCodec {
         val dict = StringDict.deserialize(cs.streams(Streams.DictionaryData), lengths)
         lookup.map(id => dict(id.toInt))
       case Codecs.StringFsst =>
-        val table = Fsst.SymbolTable.deserialize(new BytesIn(cs.streams(Streams.SymbolTable)))
-        val lengths = RleV2Reader.read(new BytesIn(cs.streams(Streams.Length)), signed = false, n)
-        val data = cs.streams(Streams.Data)
-        val out = new Array[String](n)
-        var off = 0
-        var i = 0
-        while (i < n) {
-          val len = lengths(i).toInt
-          val buf = new ByteBuf(len * 3 + 8)
-          Fsst.decompress(table, data, off, off + len, buf)
-          out(i) = new String(buf.unsafeArray, 0, buf.length, StandardCharsets.UTF_8)
-          off += len
-          i += 1
-        }
-        out
+        val s = fsstSlices(cs, n)
+        Array.tabulate(n)(i => new String(s.buf, s.starts(i), s.lens(i), StandardCharsets.UTF_8))
       case other => throw new IllegalArgumentException(s"not a string codec: $other")
     }
     (values, present)

@@ -13,6 +13,29 @@ package graft.core
   * repeatedly extend symbols by merging adjacent matches that maximize
   * gain = frequency × length, over a bounded number of generations.
   *
+  * Training structures (`train`): each generation parses the corpus
+  * (its first TrainCap bytes) into codes — the table's symbols, then one
+  * code per distinct corpus byte for escaped literals — and counts them
+  * in a dense Int array; adjacent pairs count in a dense Int array
+  * indexed prev << shift | code (2^shift ≥ symbols + distinct bytes)
+  * whose non-zero cells are listed as they appear, so only those cells
+  * are read and re-zeroed. The parse probes hash slots filled as the
+  * Matcher fills them, a 64 K 2-byte array and a 256-entry byte array,
+  * all allocated once per training and reset entry by entry between
+  * generations.
+  * Candidates (symbols, literals and concatenated pairs of ≤ 8 bytes)
+  * are keyed by their bytes packed big-endian into a Long plus their
+  * length, in a primitive open-addressing table (a duplicate keeps the
+  * larger gain), and a 255-slot heap keeps the best by (gain desc,
+  * bytes unsigned-lexicographic, proper prefix first). Nothing is boxed,
+  * no string is built, and nothing but the kept 255 is ordered.
+  *
+  * Invariant: that order equals a full sort of the candidates by
+  * `(-gain, String of the bytes as chars 0..255)`, the order of the
+  * String-keyed reference trainer (FsstReference in the tests), so every
+  * trained table — and so every stored FSST stream — is byte-identical
+  * to the reference's; FsstSpec checks it.
+  *
   * Wire format:
   *   [numSymbols: u8] then numSymbols × [len: u8][bytes...]
   *   payload: codes 0..numSymbols-1 index the table; 0xFF escapes the
@@ -32,8 +55,7 @@ object Fsst {
     private[Fsst] val symLong: Array[Long] = symbols.map(packLE)
     private[Fsst] val symLen: Array[Int] = symbols.map(_.length)
 
-    /** The encoder's match tables, built on the first `compress`/`train`
-      * use: a table deserialized to decode a stream reads only
+    /** The encoder's match tables, built on the first `compress` use: a table deserialized to decode a stream reads only
       * symLong/symLen and never pays for them.
       */
     private[Fsst] lazy val matcher: Matcher = new Matcher(symLong, symLen)
@@ -48,28 +70,13 @@ object Fsst {
   }
 
   /** The paper's constant-time match structure (FSST §3.2): symbols of
-    * len ≥ 3 live in a hash table keyed on their first 3 bytes, ONE
-    * candidate per slot (collisions keep the higher-gain symbol — the
-    * trainer emits symbols gain-descending, so first insert wins);
-    * 2-byte symbols index a 64 K short-code array; 1-byte symbols a
-    * 256-entry array. A match probe is then one hash + at most three
+    * len ≥ 3 live in a hash table keyed on their first 3 bytes (see
+    * enterSlots); 2-byte symbols index a 64 K short-code array; 1-byte
+    * symbols a 256-entry array. A match probe is then one hash + at most three
     * array reads, instead of a scan over every symbol sharing the
     * first byte.
     */
   private[Fsst] final class Matcher(symLong: Array[Long], symLen: Array[Int]) {
-    private val longTable: Array[Int] = {
-      val t = Array.fill(HashSlots)(-1)
-      var i = 0
-      while (i < symLong.length) {
-        if (symLen(i) >= 3) {
-          val h = hash3(symLong(i) & 0xffffffL)
-          if (t(h) < 0) t(h) = i
-        }
-        i += 1
-      }
-      t
-    }
-
     /** Slot-indexed probe data: the hot loop previously chased
       * longTable(h) → symLen(idx) → symLong(idx) → lenMask(len), four
       * DEPENDENT loads per position; these parallel arrays make a probe
@@ -79,29 +86,11 @@ object Fsst {
       * slotCodeLen packs (code << 8 | len) for the match fast path.
       */
     val slotMask: Array[Long] = new Array[Long](HashSlots)
-    val slotPattern: Array[Long] = Array.fill(HashSlots)(1L)
+    val slotPattern: Array[Long] = emptyPatterns()
     val slotCodeLen: Array[Int] = new Array[Int](HashSlots)
-    locally {
-      var h = 0
-      while (h < HashSlots) {
-        val i = longTable(h)
-        if (i >= 0) {
-          slotMask(h) = lenMask(symLen(i))
-          slotPattern(h) = symLong(i)
-          slotCodeLen(h) = (i << 8) | symLen(i)
-        }
-        h += 1
-      }
-    }
-    val byteCodes: Array[Int] = {
-      val t = Array.fill(256)(-1)
-      var i = 0
-      while (i < symLong.length) {
-        if (symLen(i) == 1 && t(symLong(i).toInt) < 0) t(symLong(i).toInt) = i
-        i += 1
-      }
-      t
-    }
+    enterSlots(symLong, symLen, slotMask, slotPattern, slotCodeLen)
+    val byteCodes: Array[Int] = new Array[Int](256)
+    enterByteCodes(symLong, symLen, byteCodes)
 
     /** Fused 2-byte/1-byte resolution (paper §3.2): slot [b0|b1<<8] holds
       * `code<<1` for a 2-byte symbol, else `code<<1|1` for the 1-byte
@@ -110,12 +99,17 @@ object Fsst {
       */
     val shortCodes: Array[Int] = {
       val t = new Array[Int](1 << 16)
-      var v = 0
-      while (v < (1 << 16)) {
-        val b = byteCodes(v & 0xff)
-        t(v) = if (b >= 0) (b << 1) | 1 else -1
-        v += 1
+      // the fallback depends on b0 = v & 0xff alone: fill the first 256
+      // slots, replicate them by doubling copies (far cheaper than
+      // deciding 64 K slots one by one), then overlay the 2-byte symbols
+      var b = 0
+      while (b < 256) {
+        val c = byteCodes(b)
+        t(b) = if (c >= 0) (c << 1) | 1 else -1
+        b += 1
       }
+      var filled = 256
+      while (filled < t.length) { System.arraycopy(t, 0, t, filled, filled); filled *= 2 }
       var i = 0
       while (i < symLong.length) {
         if (symLen(i) == 2) {
@@ -125,6 +119,42 @@ object Fsst {
         i += 1
       }
       t
+    }
+  }
+
+  private def emptyPatterns(): Array[Long] = {
+    val t = new Array[Long](HashSlots)
+    java.util.Arrays.fill(t, 1L)
+    t
+  }
+
+  /** Symbols of len ≥ 3 live in a hash table keyed on their first 3
+    * bytes, ONE candidate per slot: collisions keep the first (the trainer
+    * emits symbols gain-descending, so the higher-gain one).
+    */
+  private def enterSlots(symLong: Array[Long], symLen: Array[Int], mask: Array[Long],
+                         pattern: Array[Long], codeLen: Array[Int]): Unit = {
+    var i = 0
+    while (i < symLong.length) {
+      if (symLen(i) >= 3) {
+        val h = hash3(symLong(i) & 0xffffffL)
+        if (mask(h) == 0) {
+          mask(h) = lenMask(symLen(i))
+          pattern(h) = symLong(i)
+          codeLen(h) = (i << 8) | symLen(i)
+        }
+      }
+      i += 1
+    }
+  }
+
+  /** byteCodes(b) = the code of the 1-byte symbol b, else -1. */
+  private def enterByteCodes(symLong: Array[Long], symLen: Array[Int], byteCodes: Array[Int]): Unit = {
+    java.util.Arrays.fill(byteCodes, -1)
+    var i = 0
+    while (i < symLong.length) {
+      if (symLen(i) == 1 && byteCodes(symLong(i).toInt) < 0) byteCodes(symLong(i).toInt) = i
+      i += 1
     }
   }
 
@@ -161,94 +191,295 @@ object Fsst {
     }
   }
 
-  /** Train a symbol table on a sample corpus. Deterministic for a given
-    * input. `generations` trades training time for compression.
+  /** Training reads at most the first TrainCap bytes of a sample. */
+  final val TrainCap = 1 << 16
+
+  /** A column's training sample: whole values, appended while it is under
+    * TrainCap bytes, so the last one may cross the cap (`train` cuts it).
+    */
+  def sampleOf(values: Iterator[Array[Byte]]): Array[Byte] = gather(values, Int.MaxValue)
+
+  /** `train(sampleOf(values))`, without copying the bytes past the cap. */
+  def trainValues(values: Iterator[Array[Byte]]): SymbolTable = train(gather(values, TrainCap))
+
+  /** The values sampleOf appends, concatenated and cut at `limit` bytes;
+    * sized once, each value copied once.
+    */
+  private def gather(values: Iterator[Array[Byte]], limit: Int): Array[Byte] = {
+    val parts = new java.util.ArrayList[Array[Byte]]()
+    var n = 0L
+    while (n < TrainCap && values.hasNext) {
+      val v = values.next()
+      parts.add(v)
+      n += v.length
+    }
+    val out = new Array[Byte](math.min(n, limit.toLong).toInt)
+    var o = 0
+    var i = 0
+    while (o < out.length) {
+      val v = parts.get(i)
+      val k = math.min(v.length, out.length - o)
+      System.arraycopy(v, 0, out, o, k)
+      o += k
+      i += 1
+    }
+    out
+  }
+
+  /** Train a symbol table on a sample corpus (its first TrainCap bytes).
+    * Deterministic for a given input. `generations` trades training time
+    * for compression.
     */
   def train(sample: Array[Byte], generations: Int = 5): SymbolTable = {
-    if (sample.isEmpty) return new SymbolTable(Array.empty)
-    // cap training input for bounded cost
-    val corpus = if (sample.length > (1 << 16)) java.util.Arrays.copyOf(sample, 1 << 16) else sample
+    val end = math.min(sample.length, TrainCap)
+    if (end == 0) return new SymbolTable(Array.empty)
 
-    // generation 0: frequent single bytes
+    // generation 0: frequent single bytes. The corpus's distinct bytes are
+    // ranked once: an escaped literal b parses to code nsym + escRank(b),
+    // so a generation's code space is nsym + distinct wide
+    val byteCount = new Array[Int](256)
+    var i = 0
+    while (i < end) { byteCount(sample(i) & 0xff) += 1; i += 1 }
+    val escRank = new Array[Int](256)
+    val escByte = new Array[Int](256)
+    var distinct = 0
     var table = {
-      val counts = new Array[Long](256)
-      corpus.foreach(b => counts(b & 0xff) += 1)
-      val top = (0 until 256).filter(counts(_) > 0).sortBy(b => -counts(b)).take(MaxSymbols)
-      new SymbolTable(top.map(b => Array(b.toByte)).toArray)
+      val singles = new Candidates(256)
+      var b = 0
+      while (b < 256) {
+        if (byteCount(b) > 0) {
+          escRank(b) = distinct
+          escByte(distinct) = b
+          distinct += 1
+          singles.add(b.toLong << 56, 1, byteCount(b))
+        }
+        b += 1
+      }
+      singles.top(MaxSymbols)
     }
 
+    // the generation's match structure, allocated once and emptied after
+    // each parse by resetting just the entries set: the Matcher's probe,
+    // with its fused 2-byte/1-byte array split into pairCodes and
+    // byteCodes so that no 64 K table is rebuilt per generation
+    val slotMask = new Array[Long](HashSlots)
+    val slotPattern = emptyPatterns()
+    val slotCodeLen = new Array[Int](HashSlots)
+    val byteCodes = new Array[Int](256)
+    val pairCodes = new Array[Byte](1 << 16) // [b0|b1<<8]: 1 + code of the 2-byte symbol, else 0
+    // a local ByteBuffer's getLong inlines to one load; the VarHandle in
+    // LongView, a field of this object, is not constant-folded by the JIT
+    val window = java.nio.ByteBuffer.wrap(sample).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+
+    var pairCount = new Array[Int](0) // [prev << shift | code], zero between generations
+    val touched = new Array[Int](end) // pairCount cells made non-zero, ≤ one per position
     var gen = 0
     while (gen < generations) {
-      // parse the corpus with the current table; count symbol and
-      // adjacent-pair frequencies
-      val symCount = new Array[Long](table.symbols.length + 256)
-      val pairCount = new java.util.HashMap[Long, Long]() // (sym1 << 32 | sym2) -> freq
-      val matcher = table.matcher
-      var pos = 0
-      var prev = -1
-      while (pos < corpus.length) {
-        val m = matchAt(matcher, corpus, pos)
-        val (code, len) = if (m >= 0) (m, table.symbols(m).length) else (table.symbols.length + (corpus(pos) & 0xff), 1)
-        symCount(code) += 1
-        if (prev >= 0) {
-          val key = (prev.toLong << 32) | code.toLong
-          pairCount.merge(key, 1L, (a, b) => a + b)
-        }
-        prev = code
-        pos += len
-      }
-
-      // candidates: existing symbols, escaped literals, and merged pairs
-      def symbolBytes(code: Int): Array[Byte] =
-        if (code < table.symbols.length) table.symbols(code)
-        else Array((code - table.symbols.length).toByte)
-
-      val candidates = new java.util.HashMap[String, (Array[Byte], Long)]()
-      def addCandidate(bytes: Array[Byte], gain: Long): Unit = {
-        if (bytes.length <= MaxSymbolLen && gain > 0) {
-          val key = new String(bytes.map(b => (b & 0xff).toChar))
-          val cur = candidates.get(key)
-          if (cur == null || cur._2 < gain) candidates.put(key, (bytes, gain))
-        }
-      }
+      val symLong = table.symLong
+      val symLen = table.symLen
+      val nsym = symLen.length
+      val dim = nsym + distinct
+      val shift = 32 - Integer.numberOfLeadingZeros(dim - 1)
+      if (pairCount.length < (dim << shift)) pairCount = new Array[Int](dim << shift)
+      val count = new Array[Int](dim)
+      // each code's bytes packed big-endian (first byte highest), and length
+      val codeKey = new Array[Long](dim)
+      val codeLen = new Array[Int](dim)
       var c = 0
-      while (c < symCount.length) {
-        if (symCount(c) > 0) {
-          val bytes = symbolBytes(c)
-          addCandidate(bytes, symCount(c) * bytes.length)
+      while (c < dim) {
+        if (c < nsym) {
+          codeKey(c) = java.lang.Long.reverseBytes(symLong(c))
+          codeLen(c) = symLen(c)
+        } else {
+          codeKey(c) = escByte(c - nsym).toLong << 56
+          codeLen(c) = 1
         }
         c += 1
       }
-      pairCount.forEach { (key, freq) =>
-        val s1 = symbolBytes((key >>> 32).toInt)
-        val s2 = symbolBytes((key & 0xffffffffL).toInt)
-        if (s1.length + s2.length <= MaxSymbolLen)
-          addCandidate(s1 ++ s2, freq * (s1.length + s2.length))
+      enterSlots(symLong, symLen, slotMask, slotPattern, slotCodeLen)
+      enterByteCodes(symLong, symLen, byteCodes)
+      c = 0
+      while (c < nsym) {
+        val v = symLong(c).toInt
+        if (symLen(c) == 2 && pairCodes(v) == 0) pairCodes(v) = (c + 1).toByte
+        c += 1
       }
 
-      val picked = candidates.values().toArray(Array.empty[(Array[Byte], Long)])
-        .sortBy { case (bytes, gain) => (-gain, new String(bytes.map(b => (b & 0xff).toChar))) }
-        .take(MaxSymbols)
-        .map(_._1)
-      table = new SymbolTable(picked)
+      // parse the corpus with the current table (matchAt's rules); count
+      // symbol and adjacent-pair frequencies
+      var nTouched = 0
+      var pos = 0
+      var prev = -1
+      while (pos < end) {
+        val avail = end - pos
+        val w = if (avail >= MaxSymbolLen) window.getLong(pos) else tailWindow(sample, pos, end)
+        var code = -1
+        if (avail >= 3) {
+          val h = hash3(w & 0xffffffL)
+          val cl = slotCodeLen(h)
+          // len ≤ avail guards a symbol with trailing 0x00 bytes matching a
+          // zero-padded short window
+          if ((w & slotMask(h)) == slotPattern(h) && (cl & 0xff) <= avail) code = cl >>> 8
+        }
+        if (code < 0) {
+          val c2 = if (avail >= 2) pairCodes((w & 0xffffL).toInt) & 0xff else 0
+          if (c2 != 0) code = c2 - 1
+          else {
+            val b = (w & 0xffL).toInt
+            code = if (byteCodes(b) >= 0) byteCodes(b) else nsym + escRank(b)
+          }
+        }
+        count(code) += 1
+        if (prev >= 0) {
+          val cell = (prev << shift) | code
+          if (pairCount(cell) == 0) { touched(nTouched) = cell; nTouched += 1 }
+          pairCount(cell) += 1
+        }
+        prev = code
+        pos += codeLen(code)
+      }
+      c = 0
+      while (c < nsym) {
+        if (symLen(c) >= 3) {
+          val h = hash3(symLong(c) & 0xffffffL)
+          slotMask(h) = 0L
+          slotPattern(h) = 1L
+        } else if (symLen(c) == 2) pairCodes(symLong(c).toInt) = 0
+        c += 1
+      }
+
+      // candidates: existing symbols, escaped literals, and merged pairs;
+      // the pass over the touched cells also zeroes them for the next one
+      val cands = new Candidates(dim + nTouched)
+      c = 0
+      while (c < dim) {
+        if (count(c) > 0) cands.add(codeKey(c), codeLen(c), count(c) * codeLen(c))
+        c += 1
+      }
+      val codeMask = (1 << shift) - 1
+      var t = 0
+      while (t < nTouched) {
+        val cell = touched(t)
+        val p = cell >>> shift
+        val q = cell & codeMask
+        val len = codeLen(p) + codeLen(q)
+        if (len <= MaxSymbolLen)
+          cands.add(codeKey(p) | (codeKey(q) >>> (8 * codeLen(p))), len, pairCount(cell) * len)
+        pairCount(cell) = 0
+        t += 1
+      }
+      table = cands.top(MaxSymbols)
       gen += 1
     }
     table
   }
 
-  /** Best symbol matching at `pos`, or -1. Longest-class first: the
-    * (single) len≥3 hash candidate, then the 2-byte short code, then the
-    * 1-byte code. The 8-byte window is one VarHandle load away from the
-    * array tail, a short byte-pack loop at it.
-    */
-  private def matchAt(matcher: Matcher, data: Array[Byte], pos: Int): Int = {
-    val avail = math.min(MaxSymbolLen, data.length - pos)
+  /** data[pos, end) (under 8 bytes) packed little-endian, zero-padded. */
+  private def tailWindow(data: Array[Byte], pos: Int, end: Int): Long = {
     var w = 0L
-    if (data.length - pos >= 8) w = LongView.get(data, pos).asInstanceOf[Long]
-    else {
-      var j = avail - 1
-      while (j >= 0) { w = (w << 8) | (data(pos + j) & 0xffL); j -= 1 }
+    var j = end - 1
+    while (j >= pos) { w = (w << 8) | (data(j) & 0xffL); j -= 1 }
+    w
+  }
+
+  /** A generation's candidate symbols in an open-addressing table, keyed by
+    * (bytes packed big-endian, length); adding a key again keeps the larger
+    * gain. `expected` bounds the number of distinct keys added.
+    */
+  private final class Candidates(expected: Int) {
+    private val bits = 32 - Integer.numberOfLeadingZeros(math.max(expected, 8) * 2 - 1)
+    private val mask = (1 << bits) - 1
+    private val keys = new Array[Long](1 << bits)
+    // gain << 4 | length (gain ≤ TrainCap × MaxSymbolLen); 0 = empty slot
+    private val meta = new Array[Int](1 << bits)
+
+    def add(key: Long, len: Int, gain: Int): Unit = {
+      var h = (((key ^ len) * 0x9E3779B97F4A7C15L) >>> (64 - bits)).toInt
+      while (meta(h) != 0 && (keys(h) != key || (meta(h) & 0xf) != len)) h = (h + 1) & mask
+      if (meta(h) == 0) keys(h) = key
+      if (meta(h) >>> 4 < gain) meta(h) = gain << 4 | len
     }
+
+    /** Slot a ranks before slot b: gain descending, then the bytes
+      * unsigned-lexicographically with a proper prefix first — zero-padded
+      * big-endian keys compare unsigned, and equal keys differ only in
+      * trailing 0x00 bytes, so the shorter goes first.
+      */
+    private def before(a: Int, b: Int): Boolean = {
+      val ga = meta(a) >>> 4
+      val gb = meta(b) >>> 4
+      ga > gb || (ga == gb && {
+        val k = java.lang.Long.compareUnsigned(keys(a), keys(b))
+        k < 0 || (k == 0 && (meta(a) & 0xf) < (meta(b) & 0xf))
+      })
+    }
+
+    /** The first k candidates in rank order, as a table: a bounded heap
+      * whose root is the last-ranked of those kept.
+      */
+    def top(k: Int): SymbolTable = {
+      val heap = new Array[Int](k)
+      var size = 0
+      var rootGain = 0 // once the heap is full: the gain of its root
+      var s = 0
+      while (s <= mask) {
+        if (meta(s) != 0) {
+          if (size < k) {
+            heap(size) = s
+            size += 1
+            var i = size - 1
+            while (i > 0 && before(heap((i - 1) >> 1), heap(i))) {
+              val p = (i - 1) >> 1
+              swap(heap, i, p)
+              i = p
+            }
+            if (size == k) rootGain = meta(heap(0)) >>> 4
+          } else if ((meta(s) >>> 4) >= rootGain && before(s, heap(0))) {
+            heap(0) = s
+            siftDown(heap, size)
+            rootGain = meta(heap(0)) >>> 4
+          }
+        }
+        s += 1
+      }
+      val symbols = new Array[Array[Byte]](size)
+      var i = size - 1
+      while (i >= 0) {
+        val slot = heap(0)
+        symbols(i) = Array.tabulate(meta(slot) & 0xf)(j => (keys(slot) >>> (56 - 8 * j)).toByte)
+        heap(0) = heap(i)
+        siftDown(heap, i)
+        i -= 1
+      }
+      new SymbolTable(symbols)
+    }
+
+    private def siftDown(heap: Array[Int], size: Int): Unit = {
+      var i = 0
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1
+        var last = i
+        if (l < size && before(heap(last), heap(l))) last = l
+        if (l + 1 < size && before(heap(last), heap(l + 1))) last = l + 1
+        if (last == i) done = true
+        else { swap(heap, i, last); i = last }
+      }
+    }
+
+    private def swap(heap: Array[Int], i: Int, j: Int): Unit = {
+      val x = heap(i); heap(i) = heap(j); heap(j) = x
+    }
+  }
+
+  /** Best symbol matching at `pos` in data[.., end), or -1. Longest-class
+    * first: the (single) len≥3 hash candidate, then the 2-byte short code,
+    * then the 1-byte code. The 8-byte window is one VarHandle load away
+    * from `end`, a short byte-pack loop at it.
+    */
+  private def matchAt(matcher: Matcher, data: Array[Byte], pos: Int, end: Int): Int = {
+    val avail = math.min(MaxSymbolLen, end - pos)
+    val w = if (end - pos >= 8) LongView.get(data, pos).asInstanceOf[Long] else tailWindow(data, pos, end)
     if (avail >= 3) {
       val h = hash3(w & 0xffffffL)
       if ((w & matcher.slotMask(h)) == matcher.slotPattern(h)) {
@@ -292,7 +523,7 @@ object Fsst {
       }
     }
     while (pos < data.length) { // tail: windows shorter than 8 bytes
-      val m = matchAt(matcher, data, pos)
+      val m = matchAt(matcher, data, pos, data.length)
       if (m >= 0) { dst(o) = m.toByte; o += 1; pos += table.symLen(m) }
       else {
         dst(o) = EscapeCode.toByte; dst(o + 1) = data(pos); o += 2
@@ -302,14 +533,40 @@ object Fsst {
     out.unsafeSetLength(o)
   }
 
+  /** Decoded size of the codes in data[from, until): a symbol's length per
+    * code, 1 per escaped literal.
+    */
+  def decodedLength(table: SymbolTable, data: Array[Byte], from: Int, until: Int): Int = {
+    val symLen = table.symLen
+    var n = 0
+    var pos = from
+    while (pos < until) {
+      val code = data(pos) & 0xff
+      if (code == EscapeCode) { n += 1; pos += 2 }
+      else { n += symLen(code); pos += 1 }
+    }
+    n
+  }
+
+  /** Append the decoding of data[from, until) to `out`, reserving the
+    * worst case (MaxSymbolLen bytes per code). To decode many values into
+    * one buffer, size it once and use decompressInto.
+    */
   def decompress(table: SymbolTable, data: Array[Byte], from: Int, until: Int, out: ByteBuf): Unit = {
-    // worst case MaxSymbolLen bytes out per code; +8 slack lets every
-    // symbol be written as ONE unconditional 8-byte LE store (the packed
-    // symLong) with the cursor advanced by the true length — no
-    // per-symbol byte loop or bounds checks in the hot path
     out.reserve((until - from) * MaxSymbolLen + 8)
-    val dst = out.unsafeArray
-    var o = out.length
+    out.unsafeSetLength(decompressInto(table, data, from, until, out.unsafeArray, out.length))
+  }
+
+  /** Decode data[from, until) into dst at `at`; returns the end offset.
+    * dst must hold the decoded bytes plus 8 bytes of slack after them
+    * (decodedLength + 8): the slack lets every symbol be written as ONE
+    * unconditional 8-byte LE store (the packed symLong) with the cursor
+    * advanced by the true length — no per-symbol byte loop or bounds
+    * checks in the hot path.
+    */
+  def decompressInto(table: SymbolTable, data: Array[Byte], from: Int, until: Int,
+                     dst: Array[Byte], at: Int): Int = {
+    var o = at
     val symLong = table.symLong
     val symLen = table.symLen
     var pos = from
@@ -328,6 +585,6 @@ object Fsst {
         o += symLen(code)
       }
     }
-    out.unsafeSetLength(o)
+    o
   }
 }

@@ -32,9 +32,10 @@ object CodecKernels {
   def fsstDecompress(env: Array[Byte]): Array[Byte] = {
     val in = new BytesIn(env)
     val table = Fsst.SymbolTable.deserialize(in)
-    val out = new ByteBuf(env.length * 3 + 8)
-    Fsst.decompress(table, env, in.pos, env.length, out)
-    out.toArray
+    val n = Fsst.decodedLength(table, env, in.pos, env.length)
+    val out = new Array[Byte](n + 8)
+    Fsst.decompressInto(table, env, in.pos, env.length, out, 0)
+    java.util.Arrays.copyOf(out, n)
   }
 
   def rleEncode(values: ArrayData): Array[Byte] = {

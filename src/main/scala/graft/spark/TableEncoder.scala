@@ -597,15 +597,8 @@ object TableEncoder {
     }
     override def strideStats: (Option[Seq[Long]], Option[Seq[Long]]) = strides.snapshot(rows)
     override protected def beginSlices(): Unit = {
-      if (codec == Codecs.StringFsst && fsstTable == null) {
-        val corpus = new graft.core.ByteBuf(1 << 14)
-        var i = 0
-        while (i < values.length && corpus.length < (1 << 16)) {
-          corpus.writeBytes(values(i))
-          i += 1
-        }
-        fsstTable = graft.core.Fsst.train(corpus.toArray)
-      }
+      if (codec == Codecs.StringFsst && fsstTable == null)
+        fsstTable = graft.core.Fsst.trainValues(values.iterator)
     }
     protected def encodeSlice(aligned: Boolean, pres: Array[Boolean],
                               v0: Int, v1: Int): ColumnStreams =
