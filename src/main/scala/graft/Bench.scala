@@ -252,7 +252,7 @@ object Bench {
           // 3 output files per decode thread: the colocated read runs one
           // task per file, and cpus files in one wave is straggler-bound —
           // measured as the round-2 "decode slower at 32 than 8" inversion
-          // (DecodeScale probe: x1 files eff 0.22 and inverted, x3 files
+          // (one file per thread: efficiency 0.22 and inverted; three:
           // monotone). Same 3-waves rule as the encode section's input.
           EncodeJob.run(pages, EncodeJob.Config(tmpOut, cpus * 3, Some("lang"),
             compression = graft.core.BlockCompression.Zlib))
@@ -262,8 +262,8 @@ object Bench {
     }
 
     // decode of the zstd fast-mode output at local[cpus]: per-core decode
-    // is inflate-bound on the zlib layout (ProfileDecode: zlib+FSST 283
-    // MB/s vs 1.3 GB/s FSST alone single-thread), so the fast mode's
+    // is inflate-bound on the zlib layout (single-thread zlib+FSST 283
+    // MB/s vs 1.3 GB/s FSST alone), so the fast mode's
     // read side is a first-class metric
     val decodeZstdSec = {
       val tmpOut = java.nio.file.Files.createTempDirectory("graft-bench-zstd").toString

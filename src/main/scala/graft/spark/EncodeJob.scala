@@ -49,7 +49,7 @@ object EncodeJob {
       // task). Size it ~3× the widest expected READ parallelism too: the
       // scan runs one read task per file, and reader-threads ==
       // files means a single straggler-bound wave (measured as a 32-thread
-      // decode running SLOWER than 8 threads; DecodeScale probe).
+      // decode of one file per thread running SLOWER than 8 threads).
       numPartitions: Int,
       keyColumn: Option[String], // skew/salt key, e.g. "lang"
       sampleRows: Int = 20000,
@@ -1307,7 +1307,7 @@ object EncodeJob {
   /** The same scan as readBack, without the layout probe, returned as an
     * RDD-backed frame: nothing planned above it can prune columns out of
     * the scan, so `count()` still decodes every requested column — the
-    * work graft.Bench and DecodeScale time as decode throughput. The scan
+    * work graft.Bench times as decode throughput. The scan
     * is planned here, so its batch snapshot is pinned at call time.
     */
   def readBackColocated(spark: SparkSession, outDir: String,

@@ -3,8 +3,9 @@ package graft.spark
 /** One encoded column chunk — the distributed analogue of a stripe's
   * per-column stream set plus its StripeInformation entry
   * (/root/reference/src/ApacheOrcDotNet/Stripes/StripeWriter.cs:123-191).
-  * One row per (partition, chunk, column); `streams` values are
-  * zlib-block-framed (graft.core.ZlibBlock).
+  * One row per (partition, chunk, column); `streams` values are framed
+  * by the chunk's `compression` kind (graft.core.BlockCompression, zstd
+  * by default for new tables).
   */
 final case class EncodedChunk(
     part_id: Int,

@@ -916,7 +916,7 @@ sealed trait ChunkPrune extends Serializable {
   /** Sub-chunk stride-skip bounds in the stride index's long space, when
     * this predicate can drive one.
     */
-  def strideBounds: Option[(Long, Long)] = None
+  def stridePrune: Option[TableEncoder.StridePrune] = None
 }
 
 /** IsNotNull: an all-null chunk can contribute no matching rows. */
@@ -951,8 +951,13 @@ final case class PrunePred(column: String, logical: String,
                            nanKeeps: Boolean = false)
     extends ChunkPrune {
 
-  override def strideBounds: Option[(Long, Long)] =
-    if (strideUsable) Some((strideLo, strideHi)) else None
+  /** NaN-matchable predicates are marked nanBlockable: they may only
+    * skip strides of chunks proven NaN-free (the stride index excludes
+    * NaN).
+    */
+  override def stridePrune: Option[TableEncoder.StridePrune] =
+    if (!strideUsable) None
+    else Some(TableEncoder.StridePrune(column, strideLo, strideHi, nanBlockable = nanKeeps))
 
   /** Chunk min/max (and stride indexes) EXCLUDE NaN — nan_count records
     * them. Spark orders NaN above every value (nanSafeCompareDoubles), so
@@ -1013,6 +1018,15 @@ object ChunkPrune {
       else None
     case _ => PrunePred.from(f, specs)
   }
+
+  /** The one chunk-group keep rule, shared by the partition reader and
+    * the in-memory `TableEncoder.decode`: a group is kept when every
+    * predicate keeps the group's chunk of its column, or when the group
+    * has no chunk of that column (written before the column existed).
+    */
+  def keepsGroup(preds: scala.collection.Seq[ChunkPrune],
+                 group: Map[String, EncodedChunk]): Boolean =
+    preds.forall(p => group.get(p.column).forall(c => p.keepsChunk(ChunkStats.of(c))))
 }
 
 object PrunePred {
@@ -1070,12 +1084,32 @@ object PrunePred {
           case _ => return None
         }
         Some(longPred(mantissa, None))
+      case "bool" =>
+        val b = v match { case x: Boolean => x; case _ => return None }
+        Some(longPred(if (b) 1L else 0L, None))
+      case "decimal128" =>
+        val d = v match { case x: java.math.BigDecimal => x; case _ => return None }
+        val sc = spec.narrow.split(',')(1).toInt
+        // chunk stats are plain decimal strings, compared in double
+        // space: doubleValue rounds monotonically, so the compare can
+        // only keep extra chunks. Stride bounds live in clamped-mantissa
+        // space, scaled outward (FLOOR/CEILING) and saturated the way
+        // the writer clamps, so they too never drop a matching stride.
+        Some(PrunePred(spec.name, spec.logical, 0, 0, longUsable = false,
+          if (lo) d.doubleValue else Double.NegativeInfinity,
+          if (hi) d.doubleValue else Double.PositiveInfinity, doubleUsable = true,
+          None, None,
+          if (lo) TableEncoder.clampMantissa(
+            d.setScale(sc, java.math.RoundingMode.FLOOR).unscaledValue) else Long.MinValue,
+          if (hi) TableEncoder.clampMantissa(
+            d.setScale(sc, java.math.RoundingMode.CEILING).unscaledValue) else Long.MaxValue,
+          strideUsable = true, 0, 0, bloomUsable = false))
       case "double" | "float" =>
         val value = v match {
           case d: Double => d; case d: Float => d.toDouble; case _ => return None
         }
-        // stride bits mirror decodePrunedDouble: signed-zero lo widened,
-        // float bounds rounded outward to enclosing representables
+        // stride bits: signed-zero lo widened, float bounds rounded
+        // outward to enclosing representables
         val (sLo, sHi) =
           if (spec.logical == "double")
             (if (lo && value == 0.0) -1L
@@ -1365,17 +1399,9 @@ final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnS
 
   /** Stride-skip bounds from EVERY pushed predicate (keep-sets intersect
     * in strideKeepFor — a two-column conjunction skips the union of what
-    * each predicate alone would). NaN-matchable predicates are marked
-    * nanBlockable: strideKeepFor only lets them skip strides of chunks
-    * proven NaN-free (the stride index excludes NaN).
+    * each predicate alone would).
     */
-  private val stridePrunes: Seq[TableEncoder.StridePrune] =
-    preds.toSeq.flatMap {
-      case p: PrunePred =>
-        p.strideBounds.map(b =>
-          TableEncoder.StridePrune(p.column, b._1, b._2, nanBlockable = p.nanKeeps))
-      case p => p.strideBounds.map(b => TableEncoder.StridePrune(p.column, b._1, b._2))
-    }
+  private val stridePrunes: Seq[TableEncoder.StridePrune] = preds.toSeq.flatMap(_.stridePrune)
 
   private var pendingFirst: Option[Group] = None // row-grouped lookahead
   private var rows: Iterator[InternalRow] = Iterator.empty
@@ -1391,9 +1417,8 @@ final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnS
       val group = nextGroup()
       if (group == null) return false
       checkAssembled(group)
-      if (preds.forall(p => group.get(p.column).forall(c => p.keepsChunk(ChunkStats.of(c)))))
-        rows = TableEncoder.decodeChunkInternalRows(
-          group.map { case (k, v) => k -> v }, specs, writer, stridePrunes)
+      if (ChunkPrune.keepsGroup(preds, group))
+        rows = TableEncoder.decodeChunkInternalRows(group, specs, writer, stridePrunes)
     }
     current = toLogical(rows.next())
     emitted += 1

@@ -120,10 +120,28 @@ class PlanPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     1 -> Gen.listOfN(2, Gen.oneOf('a', 'b', 'é')).map(_.mkString))
   private val micros = Gen.frequency(6 -> Gen.choose(-3L, 3L).map(_ * 60000000L),
     1 -> Gen.choose(-1000000000000000L, 1000000000000000L))
+  // decimal(38,4): mantissas around 2^63 (where the stride clamp
+  // saturates), 2^60 + 0..3 (four decimals, one double) and the top of
+  // the precision
+  private val decimals: Gen[java.math.BigDecimal] = {
+    import java.math.BigInteger
+    def at(u: BigInteger) = new java.math.BigDecimal(u, 4)
+    val two63 = BigInteger.ONE.shiftLeft(63)
+    val two60 = BigInteger.ONE.shiftLeft(60)
+    val top = BigInteger.TEN.pow(38).subtract(BigInteger.ONE)
+    Gen.frequency(
+      4 -> Gen.oneOf(-15000L, -1L, 0L, 1L, 15000L).map(l => at(BigInteger.valueOf(l))),
+      2 -> Gen.zip(Gen.oneOf(1L, -1L), Gen.choose(-2L, 2L)).map { case (sign, d) =>
+        at(two63.add(BigInteger.valueOf(d)).multiply(BigInteger.valueOf(sign))) },
+      2 -> Gen.choose(0L, 3L).map(d => at(two60.add(BigInteger.valueOf(d)))),
+      1 -> Gen.choose(-2L, 0L).map(d => at(top.add(BigInteger.valueOf(d)))))
+  }
   private def valueGen(logical: String): Gen[Any] = logical match {
     case "long" => longs
     case "double" => doubles
     case "string" => strings
+    case "bool" => Gen.oneOf(true, false)
+    case "decimal128" => decimals
     case _ => micros
   }
 
@@ -141,7 +159,7 @@ class PlanPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   private def caseGen: Gen[Case] = for {
-    logical <- Gen.oneOf("long", "double", "string", "timestamp")
+    logical <- Gen.oneOf("long", "double", "string", "timestamp", "bool", "decimal128")
     chunk = for {
       n <- Gen.choose(0, 4)
       values <- Gen.listOfN(n, Gen.frequency[Option[Any]](1 -> Gen.const(None),
@@ -166,6 +184,8 @@ class PlanPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
       UTF8String.fromString(x).compareTo(UTF8String.fromString(y))
     case ("timestamp", x: Long, y: java.time.Instant) =>
       java.lang.Long.compare(x, DateTimeUtils.instantToMicros(y))
+    case ("bool", x: Boolean, y: Boolean) => java.lang.Boolean.compare(x, y)
+    case ("decimal128", x: java.math.BigDecimal, y: java.math.BigDecimal) => x.compareTo(y)
     case (_, x: Long, y: Long) => java.lang.Long.compare(x, y)
   }
 
@@ -182,7 +202,8 @@ class PlanPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** The writer's stats for one chunk: min/max over the non-null,
     * non-NaN values (unsigned byte order for strings), rendered with
-    * toString; the Bloom filter over the non-null values.
+    * toString (0/1 for bools, plain digits for decimals); the Bloom
+    * filter over the non-null values of long and string columns.
     */
   private def stats(logical: String, c: Chunk)
       : (Option[String], Option[String], Option[Int], Option[Array[Byte]]) = {
@@ -196,11 +217,18 @@ class PlanPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
         if (x < y) -1 else if (x > y) 1 else 0)
       case "string" => Ordering.fromLessThan[Any]((x, y) => java.util.Arrays.compareUnsigned(
         x.asInstanceOf[String].getBytes("UTF-8"), y.asInstanceOf[String].getBytes("UTF-8")) < 0)
+      case "bool" => Ordering.by[Any, Boolean](_.asInstanceOf[Boolean])
+      case "decimal128" => Ordering.by[Any, java.math.BigDecimal](_.asInstanceOf[java.math.BigDecimal])
       case _ => Ordering.by[Any, Long](_.asInstanceOf[Long])
+    }
+    def render(v: Any): String = v match {
+      case b: Boolean => if (b) "1" else "0"
+      case d: java.math.BigDecimal => d.toPlainString
+      case x => x.toString
     }
     val exact =
       if (ranged.isEmpty) (None, None)
-      else (Some(ranged.min(ord).toString), Some(ranged.max(ord).toString))
+      else (Some(render(ranged.min(ord))), Some(render(ranged.max(ord))))
     val (mn, mx) = c.minMax match {
       case 0 => exact
       case 1 => (None, None)
@@ -211,7 +239,7 @@ class PlanPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
         Some(present.count(_.asInstanceOf[Double].isNaN))
       else None
     val bloom =
-      if (!c.bloom || logical == "double" || present.isEmpty) None
+      if (!c.bloom || Set("double", "bool", "decimal128")(logical) || present.isEmpty) None
       else {
         val b = new graft.core.Bloom.Builder
         present.foreach {
@@ -280,7 +308,8 @@ class PlanPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
       cases += 1
       val dir = s"$tmp/prop/t$cases"
       val files = writeSidecar(dir, k)
-      val preds = ChunkPrune.from(k.filter, Array(ColumnSpec("c", k.logical, ""))).toSeq
+      val narrow = if (k.logical == "decimal128") "38,4" else ""
+      val preds = ChunkPrune.from(k.filter, Array(ColumnSpec("c", k.logical, "", narrow))).toSeq
       val keep = TableMeta.fileKeep(spark, dir, Set(0), preds)
       k.files.zip(files).forall { case (chunks, f) =>
         val kept = keep.getOrElse(TableMeta.normPath(f), true)

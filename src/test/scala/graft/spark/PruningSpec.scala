@@ -1,15 +1,23 @@
 package graft.spark
 
 import graft.columns.Codecs
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.BeforeAndAfterAll
+import java.nio.file.Files
 
-/** Stats-driven chunk pruning + per-column stats correctness. */
+/** Stats-driven chunk pruning + per-column stats correctness, through the
+  * in-memory pruned decode and through the `format("graft")` scan; both
+  * resolve predicates with `ChunkPrune`.
+  */
 class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
+  private val tmp = Files.createTempDirectory("graft-pruning").toString
 
   override def beforeAll(): Unit = {
     spark = SparkSession.builder().master("local[4]")
@@ -21,6 +29,48 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  /** Writes `df` as a graft table of `numPartitions` files (one by
+    * default; rows sorted by `sortColumns` within each), cut into chunks
+    * of at most `chunkRows` rows at the default 10 000-row index stride;
+    * returns the table directory.
+    */
+  private def writeTable(df: DataFrame, name: String, sortColumns: Seq[String],
+                         chunkRows: Int = TableEncoder.DefaultStrideRows,
+                         numPartitions: Int = 1, segmented: Boolean = true,
+                         bloomColumns: Set[String] = Set.empty): String = {
+    val out = s"$tmp/$name"
+    EncodeJob.run(df, EncodeJob.Config(out, numPartitions, keyColumn = None,
+      strideRows = chunkRows, sortColumns = sortColumns, segmented = segmented,
+      bloomColumns = bloomColumns))
+    out
+  }
+
+  /** The filtered rows of a graft read, and the rows its scan node
+    * emitted before Spark's residual filter (the scan's `numOutputRows`).
+    */
+  private def scanned(df: DataFrame): (Array[Row], Long) = {
+    val rows = df.collect()
+    def find(p: SparkPlan): Seq[BatchScanExec] = p match {
+      case a: AdaptiveSparkPlanExec => find(a.executedPlan)
+      case q: QueryStageExec        => find(q.plan)
+      case b: BatchScanExec         => Seq(b)
+      case other                    => other.children.flatMap(find)
+    }
+    val scans = find(df.queryExecution.executedPlan)
+    assert(scans.size == 1, df.queryExecution.executedPlan.toString)
+    (rows, scans.head.metrics("numOutputRows").value)
+  }
+
+  /** Rows of the written chunks of `column` whose [min,max], cast to
+    * `statType`, overlaps [lo, hi]: what chunk-level pruning alone keeps.
+    */
+  private def keptChunkRows(out: String, column: String, statType: String,
+                            lo: org.apache.spark.sql.Column,
+                            hi: org.apache.spark.sql.Column): Long =
+    spark.read.parquet(EncodeJob.chunkDir(out)).filter(col("column") === column &&
+        !(col("max_val").cast(statType) < lo || col("min_val").cast(statType) > hi))
+      .agg(sum(col("row_count"))).first().getLong(0)
 
   test("decodePruned skips non-overlapping chunks and returns exact rows") {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
@@ -79,23 +129,19 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     decoded.unpersist(); chunks.unpersist()
   }
 
-  test("decodePrunedDouble prunes on a double column's min/max") {
+  test("format(graft) prunes on a double column's min/max") {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select(col("l_orderkey"), col("l_extendedprice").cast("double").as("price"))
-    val clustered = li.repartitionByRange(4, col("price")).sortWithinPartitions("price")
-    val specs = TableEncoder.columnSpecs(clustered.schema, Map.empty)
-    val chunks = TableEncoder.encode(TableEncoder.shred(clustered, specs), specs, strideRows = 500)
-      .persist()
+    val out = writeTable(li, "double-chunks", Seq("price"), chunkRows = 500)
 
     val lo = 10000.0; val hi = 20000.0
-    val decoded = TableEncoder.unshred(
-      TableEncoder.decodePrunedDouble(chunks, specs, "price", lo, hi), specs)
-    val exact = decoded.filter(col("price").between(lo, hi))
+    val (rows, emitted) = scanned(
+      spark.read.format("graft").load(out).filter(col("price").between(lo, hi)))
+    val exact = spark.createDataFrame(java.util.Arrays.asList(rows: _*), li.schema)
     val expected = li.filter(col("price").between(lo, hi))
     assert(exact.exceptAll(expected).count() == 0)
     assert(expected.exceptAll(exact).count() == 0)
-    assert(decoded.count() < li.count(), "double-stat pruning removed nothing")
-    chunks.unpersist()
+    assert(emitted < li.count(), "double-stat pruning removed nothing")
   }
 
   test("double stride index skips sub-chunk, incl. negative values (sortable-bits order)") {
@@ -106,85 +152,67 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(TableEncoder.doubleSortableBits(a) <= TableEncoder.doubleSortableBits(b), s"$a vs $b")
     }
 
-    val stableSpark = spark
-    import stableSpark.implicits._
-    val df = (0 until 20000).map(i => (i.toLong, i.toDouble - 10000.0)).toDF("id", "v")
-      .repartitionByRange(2, col("v")).sortWithinPartitions("v")
-    val specs = TableEncoder.columnSpecs(df.schema, Map.empty)
-    // one chunk per partition, fine stride: skipping must act BELOW chunks
-    val chunks = TableEncoder.encode(TableEncoder.shred(df, specs), specs,
-      indexStrideRows = 500).persist()
+    val df = spark.range(40000).select(col("id"), (col("id") - 20000).cast("double").as("v"))
+    // two whole-stream chunks of two strides each, both overlapping the
+    // range: skipping must act BELOW chunks
+    val out = writeTable(df, "double-strides", Seq("v"), chunkRows = 20000, segmented = false)
 
     val lo = -1000.0; val hi = 1000.0
-    val decoded = TableEncoder.unshred(
-      TableEncoder.decodePrunedDouble(chunks, specs, "v", lo, hi), specs).persist()
-    val exact = decoded.filter(col("v").between(lo, hi))
-    assert(exact.count() == 2001)
-    val keptChunkRows = chunks.filter(col("column") === "v" &&
-        !(col("max_val").cast("double") < lo || col("min_val").cast("double") > hi))
-      .agg(sum(col("row_count"))).first().getLong(0)
-    val emitted = decoded.count()
-    assert(emitted < keptChunkRows,
-      s"no sub-chunk skipping on double: emitted $emitted == kept-chunk rows $keptChunkRows")
-    decoded.unpersist(); chunks.unpersist()
+    val (rows, emitted) = scanned(
+      spark.read.format("graft").load(out).filter(col("v").between(lo, hi)))
+    assert(rows.length == 2001)
+    val kept = keptChunkRows(out, "v", "double", lit(lo), lit(hi))
+    assert(emitted < kept,
+      s"no sub-chunk skipping on double: emitted $emitted == kept-chunk rows $kept")
   }
 
-  test("decodePrunedDecimal prunes on a decimal(38,x) column's string stats") {
+  test("format(graft) prunes on a decimal(38,x) column's string stats") {
     val li = spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
       .select(col("l_orderkey"),
         // mantissa far beyond long range so the DECIMAL128 path is exercised
         concat(col("l_orderkey").cast("string"), lit("00000000000000000001.5"))
           .cast("decimal(38,4)").as("big"))
-    val clustered = li.repartitionByRange(4, col("big")).sortWithinPartitions("big")
-    val specs = TableEncoder.columnSpecs(clustered.schema, Map.empty)
+    val specs = TableEncoder.columnSpecs(li.schema, Map.empty)
     assert(specs.find(_.name == "big").get.logical == "decimal128")
-    val chunks = TableEncoder.encode(TableEncoder.shred(clustered, specs), specs, strideRows = 500)
-      .persist()
+    val out = writeTable(li, "decimal-chunks", Seq("big"), chunkRows = 500)
 
     val lo = new java.math.BigDecimal("50000000000000000000001.5")
     val hi = new java.math.BigDecimal("70000000000000000000001.5")
-    val decoded = TableEncoder.unshred(
-      TableEncoder.decodePrunedDecimal(chunks, specs, "big", lo, hi), specs)
-    val exact = decoded.filter(col("big").between(lit(lo), lit(hi)))
+    val (rows, emitted) = scanned(
+      spark.read.format("graft").load(out).filter(col("big").between(lit(lo), lit(hi))))
+    val exact = spark.createDataFrame(java.util.Arrays.asList(rows: _*), li.schema)
     val expected = li.filter(col("big").between(lit(lo), lit(hi)))
     assert(expected.count() > 0, "empty predicate range makes the test vacuous")
     assert(exact.exceptAll(expected).count() == 0)
     assert(expected.exceptAll(exact).count() == 0)
-    assert(decoded.count() < li.count(), "decimal-stat pruning removed nothing")
-    chunks.unpersist()
+    assert(emitted < li.count(), "decimal-stat pruning removed nothing")
   }
 
   test("decimal128 stride index skips sub-chunk via clamped-mantissa bounds") {
-    val stableSpark = spark
-    import stableSpark.implicits._
     // mantissas straddle the long-clamp boundary: most values stay exact
     // in clamp space (small mantissas), the top stride's saturate to
     // Long.MaxValue — pruning must stay sound through both regimes
-    val df = (0 until 20000).map { i =>
-      val s = if (i < 19000) s"$i.25" else s"${i}000000000000000000.25" // tail: > 2^63 mantissa
-      (i.toLong, s)
-    }.toDF("id", "s")
-      .withColumn("big", col("s").cast("decimal(38,4)")).drop("s")
-      .repartitionByRange(2, col("big")).sortWithinPartitions("big")
+    val df = spark.range(40000).select(col("id"),
+      when(col("id") < 38000, concat(col("id").cast("string"), lit(".25")))
+        .otherwise(concat(col("id").cast("string"), lit("000000000000000000.25"))) // > 2^63 mantissa
+        .cast("decimal(38,4)").as("big"))
     val specs = TableEncoder.columnSpecs(df.schema, Map.empty)
     assert(specs.find(_.name == "big").get.logical == "decimal128")
-    val chunks = TableEncoder.encode(TableEncoder.shred(df, specs), specs,
-      indexStrideRows = 500, segmented = true).persist()
+    // one segmented chunk of four strides; the last holds the saturated tail
+    val out = writeTable(df, "decimal-strides", Seq("big"))
+    val src = spark.read.format("graft").load(out)
 
     val lo = new java.math.BigDecimal("1000.25")
     val hi = new java.math.BigDecimal("1200.25")
-    val decoded = TableEncoder.unshred(
-      TableEncoder.decodePrunedDecimal(chunks, specs, "big", lo, hi), specs).persist()
-    val exact = decoded.filter(col("big").between(lit(lo), lit(hi)))
-    assert(exact.count() == 201, s"got ${exact.count()}") // ids 1000..1200
-    val keptChunkRows = chunks.filter(col("column") === "big" &&
-        !(col("max_val").cast("decimal(38,4)") < lit(lo) ||
-          col("min_val").cast("decimal(38,4)") > lit(hi)))
-      .agg(sum(col("row_count"))).first().getLong(0)
-    val emitted = decoded.count()
-    assert(emitted < keptChunkRows,
-      s"no sub-chunk skipping on decimal128: emitted $emitted == kept-chunk rows $keptChunkRows")
-    decoded.unpersist(); chunks.unpersist()
+    val (rows, emitted) = scanned(src.filter(col("big").between(lit(lo), lit(hi))))
+    assert(rows.length == 201, s"got ${rows.length}") // ids 1000..1200
+    val kept = keptChunkRows(out, "big", "decimal(38,4)", lit(lo), lit(hi))
+    assert(emitted < kept,
+      s"no sub-chunk skipping on decimal128: emitted $emitted == kept-chunk rows $kept")
+    // the saturated stride is kept for a bound inside the tail
+    val tailLo = new java.math.BigDecimal("38000000000000000000000.25")
+    val (tail, _) = scanned(src.filter(col("big") >= lit(tailLo)))
+    assert(tail.length == 2000, s"got ${tail.length}") // ids 38000..39999
   }
 
   test("pruning on a column with non-numeric stats keeps chunks (conservative), never drops them") {
@@ -273,50 +301,31 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("string stride index skips sub-chunk via the 8-byte-prefix row index") {
-    val stableSpark = spark
-    import stableSpark.implicits._
-    val df = (0 until 20000).map(i => (i.toLong, f"k$i%06d")).toDF("id", "key")
-      .repartitionByRange(2, col("key")).sortWithinPartitions("key")
-    val specs = TableEncoder.columnSpecs(df.schema, Map.empty)
-    // one chunk per partition, fine stride: skipping must act BELOW chunks
-    val chunks = TableEncoder.encode(TableEncoder.shred(df, specs), specs,
-      indexStrideRows = 500, segmented = true).persist()
+    val df = spark.range(40000).select(col("id"), format_string("k%06d", col("id")).as("key"))
+    // two chunks of two strides each: skipping must act BELOW chunks
+    val out = writeTable(df, "string-strides", Seq("key"), chunkRows = 20000)
 
     val lo = "k001000"; val hi = "k001200"
-    val decoded = TableEncoder.unshred(
-      TableEncoder.decodePrunedString(chunks, specs, "key", lo, hi), specs).persist()
-    val exact = decoded.filter(col("key").between(lo, hi))
-    assert(exact.count() == 201)
-    val keptChunkRows = chunks.filter(col("column") === "key" &&
-        !(col("max_val") < lo || col("min_val") > hi))
-      .agg(sum(col("row_count"))).first().getLong(0)
-    val emitted = decoded.count()
-    assert(emitted < keptChunkRows,
-      s"no sub-chunk skipping on string: emitted $emitted == kept-chunk rows $keptChunkRows")
-    decoded.unpersist(); chunks.unpersist()
+    val (rows, emitted) = scanned(
+      spark.read.format("graft").load(out).filter(col("key").between(lo, hi)))
+    assert(rows.length == 201)
+    val kept = keptChunkRows(out, "key", "string", lit(lo), lit(hi))
+    assert(emitted < kept,
+      s"no sub-chunk skipping on string: emitted $emitted == kept-chunk rows $kept")
   }
 
   test("float stride index skips sub-chunk (sortable-bits order, incl. negatives)") {
-    val stableSpark = spark
-    import stableSpark.implicits._
-    val df = (0 until 20000).map(i => (i.toLong, (i - 10000).toFloat / 2.0f)).toDF("id", "v")
-      .repartitionByRange(2, col("v")).sortWithinPartitions("v")
-    val specs = TableEncoder.columnSpecs(df.schema, Map.empty)
-    val chunks = TableEncoder.encode(TableEncoder.shred(df, specs), specs,
-      indexStrideRows = 500, segmented = true).persist()
+    val df = spark.range(40000).select(col("id"),
+      ((col("id") - 20000).cast("float") / lit(2.0f)).cast("float").as("v"))
+    val out = writeTable(df, "float-strides", Seq("v"), chunkRows = 20000)
 
-    val lo = -250.0; val hi = 250.0
-    val decoded = TableEncoder.unshred(
-      TableEncoder.decodePrunedDouble(chunks, specs, "v", lo, hi), specs).persist()
-    val exact = decoded.filter(col("v").between(lo, hi))
-    assert(exact.count() == 1001)
-    val keptChunkRows = chunks.filter(col("column") === "v" &&
-        !(col("max_val").cast("double") < lo || col("min_val").cast("double") > hi))
-      .agg(sum(col("row_count"))).first().getLong(0)
-    val emitted = decoded.count()
-    assert(emitted < keptChunkRows,
-      s"no sub-chunk skipping on float: emitted $emitted == kept-chunk rows $keptChunkRows")
-    decoded.unpersist(); chunks.unpersist()
+    val lo = -250.0f; val hi = 250.0f
+    val (rows, emitted) = scanned(
+      spark.read.format("graft").load(out).filter(col("v").between(lo, hi)))
+    assert(rows.length == 1001)
+    val kept = keptChunkRows(out, "v", "double", lit(lo.toDouble), lit(hi.toDouble))
+    assert(emitted < kept,
+      s"no sub-chunk skipping on float: emitted $emitted == kept-chunk rows $kept")
   }
 
   test("decodeColumns ignoreMissing nulls absent columns for schema-evolution reads") {
@@ -372,10 +381,14 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"bloom kept ${decoded.count()} rows of 20000 — no chunk-level rejection")
     decoded.unpersist()
 
-    // long-family variant
-    val decodedL = TableEncoder.unshred(
-      TableEncoder.decodePrunedEqualsLong(chunks, specs, "id", 777L), specs)
-    assert(decodedL.filter(col("id") === 777).count() == 1)
+    // long-family variant, through the scan: the same rows written as a
+    // graft table with both Bloom filters
+    val out = writeTable(df, "bloom-long", Nil, chunkRows = 1000, numPartitions = 8,
+      bloomColumns = Set("k", "id"))
+    val (hitL, emittedL) = scanned(spark.read.format("graft").load(out).filter(col("id") === 777L))
+    assert(hitL.map(_.getLong(0)).toSeq == Seq(777L))
+    assert(emittedL <= 3 * 1000,
+      s"long bloom kept $emittedL rows of 20000 — no chunk-level rejection")
 
     // a column WITHOUT a bloom written keeps chunks conservatively on a
     // miss (no silent drops) — absent value still yields zero matches
@@ -394,25 +407,19 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val rng = new scala.util.Random(9)
     val rows = (0 until 20000).map(i => (i.toLong, s"<html>${rng.nextLong()}-$i</html>".getBytes("UTF-8")))
     val df = rows.toDF("id", "blob").repartition(8)
-    val specs = TableEncoder.columnSpecs(df.schema, Map.empty)
-    val chunks = TableEncoder.encode(TableEncoder.shred(df, specs), specs,
-      strideRows = 1000, segmented = true, bloomColumns = Set("blob")).persist()
-    assert(chunks.filter(col("column") === "blob").count() >= 8)
+    val out = writeTable(df, "bloom-binary", Nil, chunkRows = 1000, numPartitions = 8,
+      bloomColumns = Set("blob"))
+    assert(spark.read.parquet(EncodeJob.chunkDir(out)).filter(col("column") === "blob").count() >= 8)
+    val src = spark.read.format("graft").load(out)
 
     val target = rows(4321)._2
-    val decoded = TableEncoder.unshred(
-      TableEncoder.decodePrunedEqualsBinary(chunks, specs, "blob", target), specs).persist()
-    val exact = decoded.filter(col("blob") === lit(target)).collect()
+    val (exact, emitted) = scanned(src.filter(col("blob") === lit(target)))
     assert(exact.map(_.getLong(0)).toSeq == Seq(4321L))
-    assert(decoded.count() <= 3 * 1000,
-      s"binary bloom kept ${decoded.count()} rows of 20000 — no chunk-level rejection")
-    decoded.unpersist()
+    assert(emitted <= 3 * 1000,
+      s"binary bloom kept $emitted rows of 20000 — no chunk-level rejection")
 
     // absent blob: zero matches, no silent drops
-    val miss = TableEncoder.unshred(
-      TableEncoder.decodePrunedEqualsBinary(chunks, specs, "blob", "nope".getBytes("UTF-8")), specs)
-    assert(miss.filter(col("blob") === lit("nope".getBytes("UTF-8"))).count() == 0)
-    chunks.unpersist()
+    assert(src.filter(col("blob") === lit("nope".getBytes("UTF-8"))).count() == 0)
   }
 
   test("degenerate inputs: empty, single-row, and all-null columns round trip") {
@@ -442,10 +449,15 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val nullOut = TableEncoder.unshred(TableEncoder.decode(nullChunks, specs), specs)
     assert(nullOut.count() == 5000)
     assert(nullOut.filter(col("s").isNotNull || col("d").isNotNull).count() == 0)
-    // and range-pruning the all-null column keeps rows (sentinel strides)
-    val prunedNull = TableEncoder.unshred(
-      TableEncoder.decodePrunedDouble(nullChunks, specs, "d", 0.0, 1.0), specs)
-    assert(prunedNull.count() == 5000, "all-null strides must be kept, never dropped")
+    // and range-pruning a column whose strides are all null keeps them
+    // (sentinel strides): only the first of four strides holds values
+    val sparse = spark.range(40000).select(col("id"),
+      when(col("id") < 10000, col("id") / 10000.0).as("d"))
+    val out = writeTable(sparse, "null-strides", Seq("id"))
+    val (inRange, emitted) = scanned(
+      spark.read.format("graft").load(out).filter(col("d").between(0.0, 1.0)))
+    assert(inRange.length == 10000)
+    assert(emitted == 40000, "all-null strides must be kept, never dropped")
   }
 
   test("fuzz: segmented and whole-stream layouts decode identically on random data") {
@@ -484,24 +496,14 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("bool stride index skips all-false strides for a `= true` predicate") {
-    val stableSpark = spark
-    import stableSpark.implicits._
-    // clustered by flag: only the last ~5% of rows are true
-    val df = (0 until 20000).map(i => (i.toLong, i >= 19000)).toDF("id", "flag")
-      .repartitionByRange(2, col("flag"), col("id")).sortWithinPartitions("flag", "id")
-    val specs = TableEncoder.columnSpecs(df.schema, Map.empty)
-    val chunks = TableEncoder.encode(TableEncoder.shred(df, specs), specs,
-      indexStrideRows = 500, segmented = true).persist()
-    val decoded = TableEncoder.unshred(
-      TableEncoder.decodePruned(chunks, specs, "flag", 1L, 1L), specs).persist()
-    assert(decoded.filter(col("flag")).count() == 1000)
-    val keptChunkRows = chunks.filter(col("column") === "flag" &&
-        !(col("max_val").cast("long") < 1L))
-      .agg(sum(col("row_count"))).first().getLong(0)
-    val emitted = decoded.count()
-    assert(emitted < keptChunkRows,
-      s"no sub-chunk skipping on bool: emitted $emitted == kept-chunk rows $keptChunkRows")
-    decoded.unpersist(); chunks.unpersist()
+    // clustered by flag: only the last 5% of rows are true
+    val df = spark.range(40000).select(col("id"), (col("id") >= 38000).as("flag"))
+    val out = writeTable(df, "bool-strides", Seq("flag", "id"))
+    val (rows, emitted) = scanned(spark.read.format("graft").load(out).filter(col("flag")))
+    assert(rows.length == 2000)
+    val kept = keptChunkRows(out, "flag", "long", lit(1L), lit(1L))
+    assert(emitted < kept,
+      s"no sub-chunk skipping on bool: emitted $emitted == kept-chunk rows $kept")
   }
 
   test("byte columns route through ByteRLE and carry sum stats") {
