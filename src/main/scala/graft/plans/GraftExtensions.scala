@@ -3,21 +3,30 @@ package graft.plans
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.execution.SparkStrategy
 
-/** Session extension registering graft's SQL functions — enable with
+/** Session extension registering graft's SQL functions and planner
+  * strategies — enable with
   * `.config("spark.sql.extensions", "graft.plans.GraftExtensions")` or
   * `.withExtensions(new GraftExtensions)`. For a session that already
   * exists (e.g. one handed to SparkEntry.queries by a driver),
-  * `GraftExtensions.register(spark)` injects the same functions
-  * imperatively.
+  * `GraftExtensions.register(spark)` injects the same functions and the
+  * DML strategy imperatively, and `GraftExtensions.registerLocalScan(spark)`
+  * adds the local scan.
+  *
+  * The local scan, `GraftLocalScan`, answers a small graft row scan on
+  * the driver: when the chunks that plan-time pruning keeps decode to at
+  * most 4 MiB (`GraftLocalScan.MaxDecodedBytes`), a point lookup's
+  * `collect` runs no Spark job. Without the extension or
+  * `registerLocalScan`, every graft scan runs as a distributed
+  * `BatchScanExec`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach { case (name, builder) =>
       ext.injectFunction((FunctionIdentifier(name), GraftExtensions.info(name), builder))
     }
-    // SQL UPDATE / MERGE INTO on graft tables (claims nothing else)
-    ext.injectPlannerStrategy(_ => org.apache.spark.sql.graftdml.GraftDmlStrategy)
+    GraftExtensions.strategies.foreach(s => ext.injectPlannerStrategy(_ => s))
   }
 }
 
@@ -63,17 +72,37 @@ object GraftExtensions {
       s"argument $name must be an integer literal, got $other")
   }
 
+  /** The planner strategies; each claims only graft plans. */
+  val strategies: Seq[SparkStrategy] = Seq(
+    // SQL UPDATE / DELETE / MERGE INTO on graft tables
+    org.apache.spark.sql.graftdml.GraftDmlStrategy,
+    // small row scans answered on the driver
+    graft.spark.source.GraftLocalScan)
+
   /** Imperative registration into an existing session (idempotent):
     * SQL functions plus the DML planner strategy (extraStrategies run
     * before built-ins, so UPDATE/MERGE on graft tables plan here instead
-    * of hitting UNSUPPORTED_FEATURE.TABLE_OPERATION).
+    * of hitting UNSUPPORTED_FEATURE.TABLE_OPERATION). The local scan is
+    * not part of it (`registerLocalScan`).
     */
   def register(spark: SparkSession): Unit = {
     functions.foreach { case (name, builder) =>
       org.apache.spark.sql.graftbridge.Bridge.registerFunction(spark, name, info(name), builder)
     }
-    val dml = org.apache.spark.sql.graftdml.GraftDmlStrategy
-    if (!spark.experimental.extraStrategies.contains(dml))
-      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ dml
+    addStrategy(spark, org.apache.spark.sql.graftdml.GraftDmlStrategy)
   }
+
+  /** Adds `GraftLocalScan` to an existing session (idempotent), ahead of
+    * the stock V2 strategy that plans a `BatchScanExec`. Kept out of
+    * `register`, which callers run on a shared session for the SQL
+    * surface: SparkEntry's queries do, one of them reads its scan's sort
+    * claim from the `BatchScanExec` in the plan, and the rest would plan
+    * differently depending on which query registered first.
+    */
+  def registerLocalScan(spark: SparkSession): Unit =
+    addStrategy(spark, graft.spark.source.GraftLocalScan)
+
+  private def addStrategy(spark: SparkSession, s: SparkStrategy): Unit =
+    if (!spark.experimental.extraStrategies.contains(s))
+      spark.experimental.extraStrategies = spark.experimental.extraStrategies :+ s
 }

@@ -7,22 +7,51 @@ import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.api.ReadSupport
 import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.SparkContext
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.SerializableConfiguration
+
+import java.lang.ref.WeakReference
 
 /** How the engine reaches its files: always through the session's Hadoop
   * conf, which a job ships to its tasks once, as a broadcast.
   */
 object HadoopFiles {
 
-  /** A snapshot of the session's Hadoop conf for one job's tasks, as
-    * Spark's own `FileScan` ships it: an executor deserializes it once
-    * (in local mode never), not once per task.
+  /** The conf broadcast of one `SparkContext` and the entries of the
+    * snapshot it ships. The context is held weakly: a stopped one is
+    * not kept alive by its last broadcast.
     */
-  def broadcastConf(spark: SparkSession): Broadcast[SerializableConfiguration] = {
+  private final case class Shipped(sc: WeakReference[SparkContext],
+                                   entries: java.util.Map[String, String],
+                                   conf: Broadcast[SerializableConfiguration])
+
+  private var shipped: Option[Shipped] = None
+
+  private def entries(conf: Configuration): java.util.Map[String, String] = {
+    val m = new java.util.HashMap[String, String]()
+    conf.forEach(e => m.put(e.getKey, e.getValue))
+    m
+  }
+
+  /** A snapshot of the session's Hadoop conf for scan tasks, as Spark's
+    * own `FileScan` ships it: an executor deserializes it once (in local
+    * mode never), not once per task. One broadcast serves every scan of a
+    * `SparkContext` while the entries of `sparkContext.hadoopConfiguration`
+    * equal the snapshot's; a key set since (a FileSystem scheme, say)
+    * makes the next scan ship a new snapshot.
+    */
+  def broadcastConf(spark: SparkSession): Broadcast[SerializableConfiguration] = synchronized {
     val sc = spark.sparkContext
-    sc.broadcast(new SerializableConfiguration(new Configuration(sc.hadoopConfiguration)))
+    shipped.filter(s => (s.sc.get eq sc) && s.entries.equals(entries(sc.hadoopConfiguration)))
+      .getOrElse {
+        val snapshot = new Configuration(sc.hadoopConfiguration)
+        val s = Shipped(new WeakReference(sc), entries(snapshot),
+          sc.broadcast(new SerializableConfiguration(snapshot)))
+        shipped = Some(s)
+        s
+      }.conf
   }
 
   /** A parquet-mr `Group` reader of one file, opened with `conf` through

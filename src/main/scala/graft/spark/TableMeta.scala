@@ -244,6 +244,20 @@ object TableMeta {
     keep.toMap
   }
 
+  /** Rows of the chunks `fileKeep` keeps, per committed batch: at most
+    * what a row scan with `preds` decodes. None when any committed batch
+    * predates the sidecar.
+    */
+  def keptRows(spark: SparkSession, outDir: String, committed: Set[Int],
+               preds: Seq[ChunkPrune]): Option[Map[Int, Long]] = {
+    val idx = index(spark, outDir, committed)
+    if (idx.size < committed.size) None
+    else Some(idx.map { case (b, bi) =>
+      b -> bi.chunks.valuesIterator.filter(chunkKept(_, preds))
+        .map(_.iterator.map(_.stats.row_count.toLong).max).sum
+    })
+  }
+
   /** Batches of `committed` that can hold a row matching every predicate
     * — the DML pruning decision, from the same index and keep logic as
     * `fileKeep`. Batches without a sidecar, or whose sidecar has no rows,

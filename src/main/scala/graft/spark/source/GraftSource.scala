@@ -59,11 +59,13 @@ import scala.jdk.CollectionConverters._
   * anything is opened). This scan is the engine's one directory reader:
   * EncodeJob.readBack, readBackColocated and compaction all run it.
   *
-  * Tasks get the session's Hadoop conf from one broadcast per scan
-  * (`HadoopFiles.broadcastConf`, as Spark's own `FileScan` ships it) and
-  * open each file through `HadoopInputFile` with it
-  * (`HadoopFiles.groupReader`): task set-up is opening its files, not
-  * deserializing a conf or parsing Hadoop's default XML resources.
+  * Tasks get the session's Hadoop conf from a broadcast
+  * (`HadoopFiles.broadcastConf`, as Spark's own `FileScan` ships it; one
+  * per SparkContext while the conf is unchanged) and open each file
+  * through `HadoopInputFile` with it (`HadoopFiles.groupReader`): task
+  * set-up is opening its files, not deserializing a conf or parsing
+  * Hadoop's default XML resources. A small row scan can skip tasks
+  * altogether: `GraftLocalScan` decodes it on the driver.
   */
 final class GraftSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister
@@ -494,8 +496,10 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     else required.fields.map(f => Expressions.column(f.name)) // scan OUTPUT columns (Spark resolves against them)
 
   private var runtimeFilters: Array[Filter] = Array.empty
-  override def filter(predicates: Array[Predicate]): Unit =
+  override def filter(predicates: Array[Predicate]): Unit = synchronized {
     runtimeFilters = org.apache.spark.sql.graftbridge.Bridge.predicatesToV1(predicates)
+    planned = null // the runtime filters prune files: plan again
+  }
 
   /** Manifest-derived stats so Catalyst sizes joins correctly: numRows is
     * exact (committed manifest rows); sizeInBytes is the DECODED bytes of
@@ -504,17 +508,8 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     * only, no chunk reads.
     */
   override def estimateStatistics(): Statistics = {
-    val committed = visibleBatches
-    val snap = graft.spark.TableMeta.snapshot(spark, outDir)
-    val perBatch = snap.perBatch
-    // a compaction batch is visible the instant its record lands, which
-    // can be BEFORE its manifest metrics rows — fall back to the record's
-    // own totals so the table never looks empty to the broadcast planner
-    val recorded = snap.compactions
-      .map(c => c.batch -> (c.rows, c.rawBytes)).toMap
-    val (rows, raw) = committed.foldLeft((0L, 0L)) { case ((r, b), batch) =>
-      val (dr, db) = perBatch.getOrElse(batch, recorded.getOrElse(batch, (0L, 0L)))
-      (r + dr, b + db)
+    val (rows, raw) = batchTotals.valuesIterator.foldLeft((0L, 0L)) {
+      case ((r, b), (dr, db)) => (r + dr, b + db)
     }
     val colFraction =
       if (logicalSchema.fields.isEmpty) 1.0
@@ -524,6 +519,18 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
       override def sizeInBytes() = java.util.OptionalLong.of(size)
       override def numRows() = java.util.OptionalLong.of(rows)
     }
+  }
+
+  /** (rows, raw bytes) of each visible batch, from the manifest. */
+  private def batchTotals: Map[Int, (Long, Long)] = {
+    val snap = graft.spark.TableMeta.snapshot(spark, outDir)
+    // a compaction batch is visible the instant its record lands, which
+    // can be BEFORE its manifest metrics rows — fall back to the record's
+    // own totals so the table never looks empty to the broadcast planner
+    val recorded = snap.compactions
+      .map(c => c.batch -> (c.rows, c.rawBytes)).toMap
+    visibleBatches.iterator.map(b =>
+      b -> snap.perBatch.getOrElse(b, recorded.getOrElse(b, (0L, 0L)))).toMap
   }
 
   // count(*)-style scans still need row cardinality: decode the cheapest
@@ -616,8 +623,44 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
       : Option[Seq[(Int, Option[String], String)]] =
     graft.spark.TableMeta.sidecarChunkFiles(spark, outDir, committed)
 
-  override def planInputPartitions(): Array[InputPartition] =
-    planPartitionsFor(visibleBatches, _ => true)
+  /** The partitions of the current filter set, planned once for every
+    * caller: `BatchScanExec`'s planning or the driver answer's decode
+    * (`GraftLocalScan`).
+    */
+  private var planned: Array[InputPartition] = _
+
+  override def planInputPartitions(): Array[InputPartition] = synchronized {
+    if (planned == null) planned = planPartitionsFor(visibleBatches, _ => true)
+    planned
+  }
+
+  /** The planned partitions of a row scan that decodes at most
+    * `maxBytes`, or None (an aggregate scan, a batch without a sidecar
+    * index, or more bytes). The decoded size is bounded without opening
+    * a file: the rows of the chunks the predicates keep (the sidecar
+    * index, as `fileKeep` prunes) at each batch's raw bytes per row
+    * (manifest), whole rows whichever columns are read. Stored bytes
+    * would not bound it: a constant column shrinks a thousandfold.
+    */
+  private[source] def partitionsWithin(maxBytes: Long): Option[Array[GraftInputPartition]] =
+    if (aggSlots.isDefined) None
+    else graft.spark.TableMeta.keptRows(spark, outDir, visibleBatches, activePreds.toSeq)
+      .filter { kept =>
+        val totals = batchTotals
+        kept.iterator.map { case (b, n) =>
+          val (rows, raw) = totals.getOrElse(b, (0L, 0L))
+          if (n == 0) 0.0 else if (rows <= 0) Double.PositiveInfinity else n.toDouble * raw / rows
+        }.sum <= maxBytes
+      }
+      .map(_ => planInputPartitions().map(_.asInstanceOf[GraftInputPartition]))
+
+  /** A row reader of one planned partition on the driver, opened with
+    * the session's Hadoop conf (tasks get theirs through
+    * `createReaderFactory`).
+    */
+  private[source] def driverReader(part: GraftInputPartition): GraftPartitionReader =
+    new GraftPartitionReader(part, TableEncoder.subsetSpecs(allSpecs, emitColumns),
+      required.fields.isEmpty, activePreds, limit, spark.sparkContext.hadoopConfiguration)
 
   /** Batch planning shared by the one-shot scan (visible = committed with
     * compactions/time-travel applied, batchKeep = all) and the

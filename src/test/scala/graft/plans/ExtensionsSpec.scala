@@ -151,6 +151,16 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(hitL, "long chunk bloom rejected a present value")
   }
 
+  test("the injected extension answers a small graft lookup on the driver") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-ext-local").toString + "/t"
+    spark.range(100).selectExpr("id", "concat('u', id) AS url")
+      .write.format("graft").option("numPartitions", "2").save(dir)
+    val df = spark.read.format("graft").load(dir).where("url = 'u42'")
+    assert(df.collect().map(_.getLong(0)).toSeq == Seq(42L))
+    assert(df.queryExecution.executedPlan
+      .isInstanceOf[org.apache.spark.sql.execution.LocalTableScanExec], df.queryExecution.executedPlan)
+  }
+
   test("imperative registration works on a plain session") {
     val plain = SparkSession.builder().master("local[2]")
       .config("spark.ui.enabled", "false")
@@ -160,5 +170,17 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "SELECT cast(fsst_decompress(fsst_compress(cast('hello graft hello graft' AS binary))) AS string)")
       .first().getString(0)
     assert(ok == "hello graft hello graft")
+  }
+
+  test("imperative registration adds the local scan only when asked") {
+    val s = SparkSession.builder().master("local[2]").getOrCreate().newSession()
+    val local = graft.spark.source.GraftLocalScan
+    GraftExtensions.register(s)
+    assert(s.experimental.extraStrategies == Seq(org.apache.spark.sql.graftdml.GraftDmlStrategy))
+    GraftExtensions.registerLocalScan(s)
+    GraftExtensions.registerLocalScan(s)
+    GraftExtensions.register(s)
+    assert(s.experimental.extraStrategies ==
+      Seq(org.apache.spark.sql.graftdml.GraftDmlStrategy, local))
   }
 }

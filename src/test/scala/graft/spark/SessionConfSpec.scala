@@ -1,9 +1,10 @@
 package graft.spark
 
 import graft.spark.source.{GraftInputPartition, GraftScan}
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, FileStatus, Path, RawLocalFileSystem}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions._
@@ -13,12 +14,18 @@ import java.nio.file.Files
 import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 
-/** A local filesystem under its own scheme that counts opens per file.
+/** A local filesystem under its own scheme that counts opens per file
+  * and records, per file, the `TagKey` value of the conf that opened it.
   * Statuses are plain `FileStatus`es: the local ones resolve permissions
   * through a `file:` URI.
   */
 class CountingFileSystem extends RawLocalFileSystem {
-  override def getUri: java.net.URI = CountingFileSystem.Uri
+  private var tag = ""
+  override def initialize(uri: java.net.URI, conf: Configuration): Unit = {
+    super.initialize(uri, conf)
+    tag = conf.get(CountingFileSystem.TagKey, "")
+  }
+  override def getUri: java.net.URI = java.net.URI.create(s"$getScheme:///")
   override def getScheme: String = CountingFileSystem.Scheme
   private def plain(st: FileStatus) = new FileStatus(st.getLen, st.isDirectory,
     st.getReplication, st.getBlockSize, st.getModificationTime, st.getPath)
@@ -26,14 +33,25 @@ class CountingFileSystem extends RawLocalFileSystem {
   override def listStatus(f: Path): Array[FileStatus] = super.listStatus(f).map(plain)
   override def open(f: Path, bufferSize: Int): FSDataInputStream = {
     CountingFileSystem.opens.merge(f.toUri.getPath, 1, (a, b) => a + b)
+    CountingFileSystem.tags.put(f.toUri.getPath, tag)
     super.open(f, bufferSize)
   }
 }
 
 object CountingFileSystem {
   val Scheme = "graftcount"
-  val Uri: java.net.URI = java.net.URI.create(s"$Scheme:///")
+  val TagKey = "graftcount.tag"
   val opens = new ConcurrentHashMap[String, Integer]()
+  val tags = new ConcurrentHashMap[String, String]()
+}
+
+/** The counting filesystem under a scheme registered after the first scans. */
+class LateCountingFileSystem extends CountingFileSystem {
+  override def getScheme: String = LateCountingFileSystem.Scheme
+}
+
+object LateCountingFileSystem {
+  val Scheme = "graftlate"
 }
 
 /** Every reader reaches its files through the session's Hadoop conf: a
@@ -89,7 +107,8 @@ class SessionConfSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def fs = new Path(out).getFileSystem(spark.sparkContext.hadoopConfiguration)
 
   private def chunkFiles(table: String): Set[String] = {
-    val it = fs.listFiles(new Path(EncodeJob.chunkDir(table)), true)
+    val dir = new Path(EncodeJob.chunkDir(table))
+    val it = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(dir, true)
     Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
       .filter(_.getName.endsWith(".parquet")).map(p => key(p.toString)).toSet
   }
@@ -131,6 +150,43 @@ class SessionConfSpec extends AnyFunSuite with BeforeAndAfterAll {
     val planned = plannedFiles(point)
     assert(planned.nonEmpty && planned.subsetOf(files), planned)
     assert(hit == planned.map(_ -> 1).toMap, s"$hit vs planned $planned")
+  }
+
+  test("a local answer opens each kept chunk file once and no pruned file") {
+    val on = spark.newSession()
+    graft.plans.GraftExtensions.registerLocalScan(on)
+    def point(s: SparkSession) = s.read.format("graft").load(out).filter(col("url") === "u1234")
+    val files = chunkFiles(out)
+    // the files the distributed scan plans are the ones the driver keeps
+    val kept = plannedFiles(point(spark))
+    assert(kept.nonEmpty && kept.size < files.size, kept)
+    val local = point(on)
+    val (ids, opened) = opensUnder(EncodeJob.chunkDir(out))(local.collect().map(_.getLong(0)))
+    assert(ids.toSeq == Seq(1234L))
+    assert(local.queryExecution.executedPlan.isInstanceOf[LocalTableScanExec],
+      local.queryExecution.executedPlan)
+    assert(opened == kept.map(_ -> 1).toMap, s"$opened vs kept $kept")
+  }
+
+  test("a FileSystem scheme and a key set after a scan reach the next scan's tasks") {
+    // this scan ships the session conf as it is now
+    assert(spark.read.format("graft").load(out).count() == 4000L)
+    val hc = spark.sparkContext.hadoopConfiguration
+    val late = LateCountingFileSystem.Scheme
+    hc.set(s"fs.$late.impl", classOf[LateCountingFileSystem].getName)
+    hc.setBoolean(s"fs.$late.impl.disable.cache", true)
+    hc.set(CountingFileSystem.TagKey, "late")
+    try {
+      val table = s"$late://$tmp/late"
+      EncodeJob.run(input, EncodeJob.Config(table, numPartitions = 4, keyColumn = None))
+      CountingFileSystem.tags.clear()
+      val (got, opened) = opensUnder(EncodeJob.chunkDir(table))(
+        spark.read.format("graft").load(table).collect().map(_.toString).sorted)
+      assert(got.sameElements(input.collect().map(_.toString).sorted))
+      assert(opened == chunkFiles(table).map(_ -> 1).toMap, opened)
+      assert(opened.keySet.forall(f => CountingFileSystem.tags.get(f) == "late"),
+        CountingFileSystem.tags)
+    } finally hc.unset(CountingFileSystem.TagKey)
   }
 
   test("aggregate pushdown reads metadata through the session conf, opening each planned file once") {
