@@ -702,7 +702,7 @@ object SparkEntry {
         .mode("append").option("numPartitions", "4").save(out)
       def chunkFiles(batch: Option[Int]): Long = {
         val st = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$out/chunks"))
-        try st.filter(p => p.toString.endsWith(".parquet") &&
+        try st.filter(p => graft.spark.ChunkFile.isChunkFileName(p.toString) &&
           batch.forall(b => p.toString.contains(s"batch=$b"))).count()
         finally st.close()
       }

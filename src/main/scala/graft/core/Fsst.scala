@@ -46,14 +46,22 @@ object Fsst {
   final val MaxSymbols = 255
   final val MaxSymbolLen = 8
 
-  final class SymbolTable(val symbols: Array[Array[Byte]]) {
-    require(symbols.length <= MaxSymbols, s"${symbols.length} symbols > $MaxSymbols")
+  /** A symbol table, held as its symbols packed little-endian into longs
+    * (one compare per match, one 8-byte store per symbol on decode) and
+    * their lengths.
+    */
+  final class SymbolTable private (private[Fsst] val symLong: Array[Long],
+                                   private[Fsst] val symLen: Array[Int]) {
+    require(symLong.length <= MaxSymbols, s"${symLong.length} symbols > $MaxSymbols")
 
-    /** Symbols packed little-endian into longs for one-compare matching
-      * (and one 8-byte store per symbol on decode).
+    def this(symbols: Array[Array[Byte]]) = this(symbols.map(packLE), symbols.map(_.length))
+
+    /** The symbols' bytes, unpacked on first use (a table deserialized
+      * to decode a stream never needs them).
       */
-    private[Fsst] val symLong: Array[Long] = symbols.map(packLE)
-    private[Fsst] val symLen: Array[Int] = symbols.map(_.length)
+    lazy val symbols: Array[Array[Byte]] =
+      Array.tabulate(symLong.length)(i =>
+        Array.tabulate(symLen(i))(j => (symLong(i) >>> (8 * j)).toByte))
 
     /** The encoder's match tables, built on the first `compress` use: a table deserialized to decode a stream reads only
       * symLong/symLen and never pays for them.
@@ -61,10 +69,13 @@ object Fsst {
     private[Fsst] lazy val matcher: Matcher = new Matcher(symLong, symLen)
 
     def serialize(out: ByteBuf): Unit = {
-      out.writeByte(symbols.length)
-      symbols.foreach { s =>
-        out.writeByte(s.length)
-        out.writeBytes(s)
+      out.writeByte(symLong.length)
+      var i = 0
+      while (i < symLong.length) {
+        out.writeByte(symLen(i))
+        var j = 0
+        while (j < symLen(i)) { out.writeByte((symLong(i) >>> (8 * j)).toInt); j += 1 }
+        i += 1
       }
     }
   }
@@ -178,16 +189,25 @@ object Fsst {
     Array.tabulate(9)(len => if (len == 8) -1L else (1L << (len * 8)) - 1)
 
   object SymbolTable {
+    /** Reads a serialized table straight into its packed form. */
     def deserialize(in: BytesIn): SymbolTable = {
       val n = in.checkedByte()
-      val symbols = new Array[Array[Byte]](n)
+      val symLong = new Array[Long](n)
+      val symLen = new Array[Int](n)
       var i = 0
       while (i < n) {
         val len = in.checkedByte()
-        symbols(i) = in.readFully(len)
+        if (len > MaxSymbolLen || in.pos + len > in.end)
+          throw new IllegalStateException(s"FSST symbol of $len bytes at ${in.pos}")
+        var w = 0L
+        var j = len - 1
+        while (j >= 0) { w = (w << 8) | (in.arr(in.pos + j) & 0xffL); j -= 1 }
+        in.pos += len
+        symLong(i) = w
+        symLen(i) = len
         i += 1
       }
-      new SymbolTable(symbols)
+      new SymbolTable(symLong, symLen)
     }
   }
 

@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{ByteType, DoubleType, FloatType, IntegerType,
 /** The distributed encode pipeline:
   *
   *   sample → pin codec decisions → partition with skew salting →
-  *   mapPartitions encode (TableEncoder) → chunk parquet + manifest commit,
+  *   mapPartitions encode (TableEncoder) → chunk files + manifest commit,
   *   optionally in batches so a killed run resumes from the last committed
   *   batch.
   *
@@ -247,8 +247,8 @@ object EncodeJob {
   def filestatsBatchDir(outDir: String, batchId: Int) = s"${filestatsDir(outDir)}/batch=$batchId"
 
   /** File-level pruning sidecar: per (chunk, column) stats PLUS the chunk
-    * FILE that holds it — written from the batch's chunk parquet metadata
-    * columns only (the heavy `streams` stay unread). The DataSource V2
+    * FILE that holds it — written from the batch's chunk-file footers
+    * only (the heavy `streams` stay unread). The DataSource V2
     * scan consults it at plan time so selective filters and join-driven
     * runtime filters skip whole files without ever opening them — the
     * partition-pruning story for a layout whose "partitions" are chunk
@@ -263,8 +263,8 @@ object EncodeJob {
 
   /** One metadata read of the batch just written serves BOTH artifacts
     * that used to cost a scan each: the filestats sidecar (written) and
-    * the per-part manifest summary (returned) — the parquet projection
-    * keeps the heavy `streams` column unread either way, and the tiny
+    * the per-part manifest summary (returned) — a read without `streams`
+    * reads each chunk file's footer alone either way, and the tiny
     * projected frame is persisted across the two consumers.
     */
   private def writeFileStatsAndSummary(spark: SparkSession, outDir: String,
@@ -275,7 +275,8 @@ object EncodeJob {
     // path would resolve against the wrong FS. Scheme-LESS normalization
     // is applied only where entries serve as match keys (fileKeep).
     val normalize = udf((s: String) => new org.apache.hadoop.fs.Path(s).toString)
-    val meta = spark.read.schema(chunkFileSchema).parquet(chunkBatchDir(outDir, batchId))
+    val meta = spark.read.schema(chunkFileSchema).format(ChunkFileFormat.Name)
+      .load(chunkBatchDir(outDir, batchId))
       .select(col("part_id"), col("chunk_id"), col("column"),
         col("min_val"), col("max_val"), col("null_count"), col("row_count"),
         col("nan_count"), col("bloom"), normalize(input_file_name()).as("file"),
@@ -1120,7 +1121,7 @@ object EncodeJob {
   private def writeChunks(chunks: Dataset[EncodedChunk], cfg: Config, batchId: Int): Unit = {
     val w = chunks.write.mode(SaveMode.Overwrite)
     (if (cfg.partitionByColumn) w.partitionBy("column") else w)
-      .parquet(chunkBatchDir(cfg.outDir, batchId))
+      .format(ChunkFileFormat.Name).save(chunkBatchDir(cfg.outDir, batchId))
     // the writer KNOWS the layout — record it so a SAME-JVM rewrite of an
     // outDir with a different layout serves readers the fresh answer. The
     // guarantee is JVM-scoped only: another process rewriting this outDir
@@ -1131,7 +1132,7 @@ object EncodeJob {
     layoutCache.put(cfg.outDir, java.lang.Boolean.valueOf(cfg.partitionByColumn))
   }
 
-  /** Schema back-compat for chunk parquet written by older engine
+  /** Schema back-compat for parquet chunk files written by older engine
     * versions: columns added since (compression, seg_lens,
     * stride_null_counts, ...) are filled with nulls before binding to
     * EncodedChunk, so the case-class defaults' getOrElse fallbacks are
@@ -1145,7 +1146,7 @@ object EncodeJob {
     }
   }
 
-  /** The chunk parquet's schema, stated explicitly on every read: no
+  /** The chunk files' schema, stated explicitly on every read: no
     * schema-inference footer pass, and columns a pre-upgrade writer
     * lacked read as nulls — the same back-compat contract withChunkSchema
     * provided, decided at scan time instead of plan-rewrite time.
@@ -1162,7 +1163,16 @@ object EncodeJob {
 
   /** Read the chunk tree (all batches) with the explicit schema. */
   private[spark] def readChunkTree(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.schema(chunkTreeSchema).parquet(chunkDir(outDir))
+    spark.read.schema(chunkTreeSchema).format(ChunkFileFormat.Name).load(chunkDir(outDir))
+
+  /** The chunk rows under `path` (a table's chunk dir, one batch dir or
+    * one file) as a DataFrame, both container generations alike: the
+    * `EncodedChunk` fields plus the `batch=`/`column=` directories found
+    * under `path`. For inspecting a table's files; the engine's own
+    * readers use the DSv2 scan.
+    */
+  def readChunkFiles(spark: SparkSession, path: String): DataFrame =
+    spark.read.format(ChunkFileFormat.Name).load(path)
 
   /** Chunk rows of `batches` only (committed batches by default). The
     * `batch` partition-column filter prunes whole orphan directories at

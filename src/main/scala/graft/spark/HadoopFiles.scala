@@ -19,21 +19,31 @@ import java.lang.ref.WeakReference
   */
 object HadoopFiles {
 
-  /** The conf broadcast of one `SparkContext` and the entries of the
-    * snapshot it ships. The context is held weakly: a stopped one is
-    * not kept alive by its last broadcast.
+  /** The conf broadcast of one `SparkContext`, the size of the snapshot
+    * it ships and the snapshot's entries. The context is held weakly: a
+    * stopped one is not kept alive by its last broadcast.
     */
-  private final case class Shipped(sc: WeakReference[SparkContext],
+  private final case class Shipped(sc: WeakReference[SparkContext], size: Int,
                                    entries: java.util.Map[String, String],
                                    conf: Broadcast[SerializableConfiguration])
 
   private var shipped: Option[Shipped] = None
 
-  private def entries(conf: Configuration): java.util.Map[String, String] = {
-    val m = new java.util.HashMap[String, String]()
-    conf.forEach(e => m.put(e.getKey, e.getValue))
-    m
-  }
+  /** True iff `conf` holds exactly the snapshot's entries: sizes first,
+    * then one walk of `conf` against the snapshot's map.
+    */
+  private def unchanged(s: Shipped, conf: Configuration): Boolean =
+    conf.size() == s.size && {
+      val it = conf.iterator()
+      var same = true
+      var n = 0
+      while (same && it.hasNext) {
+        val e = it.next()
+        same = e.getValue == s.entries.get(e.getKey)
+        n += 1
+      }
+      same && n == s.entries.size()
+    }
 
   /** A snapshot of the session's Hadoop conf for scan tasks, as Spark's
     * own `FileScan` ships it: an executor deserializes it once (in local
@@ -44,10 +54,12 @@ object HadoopFiles {
     */
   def broadcastConf(spark: SparkSession): Broadcast[SerializableConfiguration] = synchronized {
     val sc = spark.sparkContext
-    shipped.filter(s => (s.sc.get eq sc) && s.entries.equals(entries(sc.hadoopConfiguration)))
+    shipped.filter(s => (s.sc.get eq sc) && unchanged(s, sc.hadoopConfiguration))
       .getOrElse {
         val snapshot = new Configuration(sc.hadoopConfiguration)
-        val s = Shipped(new WeakReference(sc), entries(snapshot),
+        val entries = new java.util.HashMap[String, String]()
+        snapshot.forEach(e => entries.put(e.getKey, e.getValue))
+        val s = Shipped(new WeakReference(sc), snapshot.size(), entries,
           sc.broadcast(new SerializableConfiguration(snapshot)))
         shipped = Some(s)
         s

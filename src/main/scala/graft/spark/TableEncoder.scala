@@ -851,7 +851,7 @@ object TableEncoder {
     * requested columns' streams are decompressed and value-decoded; the
     * rest of each chunk group is filtered out before any blob is touched
     * (the filter is an untyped metadata predicate). Output schema
-    * follows `columns` order. Note the chunk parquet itself still
+    * follows `columns` order. Note a row-grouped chunk file still
     * stores all columns in one file — at
     * 100 TB a reader wanting scan-level IO savings too would partition
     * the chunk table by `column`; this API removes the decode CPU and

@@ -62,10 +62,13 @@ import scala.jdk.CollectionConverters._
   * Tasks get the session's Hadoop conf from a broadcast
   * (`HadoopFiles.broadcastConf`, as Spark's own `FileScan` ships it; one
   * per SparkContext while the conf is unchanged) and open each file
-  * through `HadoopInputFile` with it (`HadoopFiles.groupReader`): task
-  * set-up is opening its files, not deserializing a conf or parsing
-  * Hadoop's default XML resources. A small row scan can skip tasks
-  * altogether: `GraftLocalScan` decodes it on the driver.
+  * with it: a graft container chunk file (`ChunkFile`) with one tail read
+  * for its footer and one read per stream of a kept chunk group, a
+  * parquet-generation chunk file or a sidecar through `HadoopInputFile`
+  * (`HadoopFiles.groupReader`). Task set-up is opening its files, not
+  * deserializing a conf or parsing Hadoop's default XML resources. A
+  * small row scan can skip tasks altogether: `GraftLocalScan` decodes it
+  * on the driver.
   */
 final class GraftSource extends TableProvider
     with org.apache.spark.sql.sources.DataSourceRegister
@@ -333,7 +336,7 @@ final class GraftScanBuilder(outDir: String, logicalSchema: StructType,
   override def pushLimit(n: Int): Boolean = { limit = n; true }
 
   /** Ungrouped MIN/MAX/COUNT answered from chunk statistics alone — the
-    * stream blobs are never read (parquet projection drops them), so a
+    * stream blobs are never read (chunk-file footers or sidecar stats), so a
     * 100 TB `count(*)`/`min`/`max` costs metadata IO only. Partial
     * pushdown: each chunk contributes one partial row; Spark's final
     * aggregate merges them, so multi-batch/multi-file dirs need no
@@ -695,7 +698,7 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
             while (it.hasNext) {
               val f = it.next()
               val p = f.getPath.toString
-              if (f.getPath.getName.endsWith(".parquet")) {
+              if (graft.spark.ChunkFile.isChunkFileName(f.getPath.getName)) {
                 val batch = """batch=(\d+)""".r.findFirstMatchIn(p).map(_.group(1).toInt)
                 val column = """column=([^/]+)/""".r.findFirstMatchIn(p).map(_.group(1))
                 batch.filter(b => committed.contains(b) && batchKeep(b))
@@ -783,7 +786,7 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
   }
 
   private def taskIndexOf(path: String): String = {
-    // part-00007-<uuid>....parquet → 00005 (one file per writer task per
+    // part-00007-<uuid>....graft → 00007 (one file per writer task per
     // column dir; the shared task index is the alignment key)
     val name = new Path(path).getName
     name.split('-').lift(1).getOrElse(name)
@@ -922,9 +925,10 @@ final case class GraftInputPartition(files: Array[String], columns: Seq[String],
                                      // group lacking one was split or
                                      // interleaved, and fails the read
                                      written: Option[Seq[String]] = None,
-                                     // row-grouped files: push the reader's
-                                     // `column IN (...)` filter into parquet;
-                                     // false when every record is requested
+                                     // row-grouped parquet-generation files:
+                                     // push the reader's `column IN (...)`
+                                     // filter into parquet; false when every
+                                     // record is requested
                                      columnFilter: Boolean = true)
     extends InputPartition
 
@@ -1214,15 +1218,17 @@ final case class GraftAggReaderFactory(slots: Array[AggSlot], designated: String
       designated, specs, conf.value.value)
 }
 
-/** Metadata-only partial aggregates: reads each chunk file with a parquet
-  * projection that DROPS the stream blobs (`streams`, `seg_lens`, stride
-  * arrays are never read — IO is a few stat fields per chunk), then emits
-  * one partial row per chunk metadata record. No alignment or grouping:
-  * each column's record fills only its own slots (other slots null, which
-  * Spark's merging MIN/SUM ignore), and row_count flows exactly once per
-  * chunk via the designated column. An empty-file partition emits the
-  * merge identity (counts 0, min/max null) so `count(*)` over an empty
-  * table is 0, not null.
+/** Metadata-only partial aggregates: emits one partial row per chunk
+  * metadata record of the partition's file, the stream blobs never read.
+  * A chunk file of the graft container is read by its footer alone; a
+  * filestats sidecar or a parquet-generation chunk file through a
+  * parquet projection that drops `streams`, `seg_lens` and the stride
+  * arrays. No alignment or grouping: each column's record fills only
+  * its own slots (other slots null, which Spark's merging MIN/SUM
+  * ignore), and row_count flows exactly once per chunk via the
+  * designated column. An empty-file partition emits the merge identity
+  * (counts 0, min/max null) so `count(*)` over an empty table is 0, not
+  * null.
   */
 final class GraftAggPartitionReader(part: GraftInputPartition, slots: Array[AggSlot],
                                     designated: String, specs: Array[ColumnSpec],
@@ -1236,66 +1242,77 @@ final class GraftAggPartitionReader(part: GraftInputPartition, slots: Array[AggS
   private val specByName = specs.map(s => s.name -> s).toMap
   private val metaFields = Set("column", "row_count", "null_count", "min_val", "max_val", "nan_count")
 
-  private val reader: ParquetReader[Group] =
-    if (part.files.isEmpty) null
-    else {
-      // projection from the FILE's own schema (types/repetitions match by
-      // construction, and fields absent in older files are simply dropped)
-      val metaOnly = new GroupReadSupport {
-        override def init(context: InitContext): ReadSupport.ReadContext = {
-          val file = context.getFileSchema
-          new ReadSupport.ReadContext(new MessageType(file.getName,
-            file.getFields.asScala.filter(f => metaFields(f.getName)).asJava))
-        }
-      }
-      val b = HadoopFiles.groupReader(new Path(part.files(0)), conf, metaOnly)
-      (if (colPart) b
-       else b.withFilter(FilterCompat.get(wanted.toSeq
-         .map(n => FilterApi.eq(FilterApi.binaryColumn("column"),
-           Binary.fromString(n)): FilterPredicate)
-         .reduce(FilterApi.or)))).build()
-    }
-
   private val proj = UnsafeProjection.create(slots.map(_.outType))
-  private var current: InternalRow = _
-  private var emittedIdentity = false
+  private var closeFile: () => Unit = () => ()
 
-  override def next(): Boolean = {
-    if (reader == null) {
-      if (emittedIdentity) return false
-      emittedIdentity = true
+  private val partials: Iterator[InternalRow] =
+    if (part.files.isEmpty) {
       val row = new GenericInternalRow(slots.length)
       var i = 0
       while (i < slots.length) {
         if (slots(i).kind == "countstar" || slots(i).kind == "count") row.update(i, 0L)
         i += 1
       }
-      current = proj(row)
-      return true
+      Iterator.single(row)
+    } else {
+      val path = new Path(part.files(0))
+      graft.spark.ChunkFile.open(path, conf, wanted,
+          column = if (colPart) part.columns.head else null) match {
+        case Some(file) =>
+          file.close()
+          file.entries.iterator.map(_.chunk).filter(c => wanted.contains(c.column)).map(c =>
+            partialRow(c.column, c.row_count, c.null_count, c.min_val, c.max_val,
+              Some(c.nan_count.getOrElse(0).toLong)))
+        case None => parquetPartials(path)
+      }
     }
-    var g = reader.read()
-    while (g != null) {
+
+  /** A sidecar's or a parquet-generation chunk file's partial rows. */
+  private def parquetPartials(path: Path): Iterator[InternalRow] = {
+    // projection from the FILE's own schema (types/repetitions match by
+    // construction, and fields absent in older files are simply dropped)
+    val metaOnly = new GroupReadSupport {
+      override def init(context: InitContext): ReadSupport.ReadContext = {
+        val file = context.getFileSchema
+        new ReadSupport.ReadContext(new MessageType(file.getName,
+          file.getFields.asScala.filter(f => metaFields(f.getName)).asJava))
+      }
+    }
+    val b = HadoopFiles.groupReader(path, conf, metaOnly)
+    val reader = (if (colPart) b
+      else b.withFilter(FilterCompat.get(wanted.toSeq
+        .map(n => FilterApi.eq(FilterApi.binaryColumn("column"),
+          Binary.fromString(n)): FilterPredicate)
+        .reduce(FilterApi.or)))).build()
+    closeFile = () => reader.close()
+    Iterator.continually(reader.read()).takeWhile(_ != null).flatMap { g =>
       val colName =
         if (colPart) part.columns.head
         else if (g.getFieldRepetitionCount("column") > 0) g.getString("column", 0) else null
-      if (colName != null && wanted.contains(colName)) {
-        current = proj(partialRow(g, colName))
-        return true
-      }
-      g = reader.read()
+      def has(name: String) = g.getType.containsField(name) && g.getFieldRepetitionCount(name) > 0
+      def stat(name: String): Option[String] = if (has(name)) Some(g.getString(name, 0)) else None
+      if (colName == null || !wanted.contains(colName)) None
+      else Some(partialRow(colName, g.getInteger("row_count", 0).toLong,
+        g.getInteger("null_count", 0).toLong, stat("min_val"), stat("max_val"),
+        // a file written before nan_count existed has no such field
+        if (!g.getType.containsField("nan_count")) None
+        else Some(if (has("nan_count")) g.getInteger("nan_count", 0).toLong else 0L)))
     }
-    false
   }
-  override def get(): InternalRow = current
-  override def close(): Unit = if (reader != null) reader.close()
 
-  private def partialRow(g: Group, colName: String): InternalRow = {
-    val rowCount = g.getInteger("row_count", 0).toLong
-    val nullCount = g.getInteger("null_count", 0).toLong
-    def stat(name: String): Option[String] =
-      if (g.getType.containsField(name) && g.getFieldRepetitionCount(name) > 0)
-        Some(g.getString(name, 0))
-      else None
+  private var current: InternalRow = _
+
+  override def next(): Boolean =
+    partials.hasNext && { current = proj(partials.next()); true }
+  override def get(): InternalRow = current
+  override def close(): Unit = closeFile()
+
+  /** One chunk's partial row; `nanCount` is None when the file predates
+    * the count.
+    */
+  private def partialRow(colName: String, rowCount: Long, nullCount: Long,
+                         minVal: Option[String], maxVal: Option[String],
+                         nanCount: Option[Long]): InternalRow = {
     val row = new GenericInternalRow(slots.length)
     var i = 0
     while (i < slots.length) {
@@ -1314,18 +1331,17 @@ final class GraftAggPartitionReader(part: GraftInputPartition, slots: Array[AggS
             val nanCnt: Long =
               if (!fp) 0L
               else {
-                require(g.getType.containsField("nan_count"),
+                require(nanCount.isDefined,
                   s"chunks lack nan_count for $colName (older engine?) — " +
                     "double/float aggregate pushdown cannot answer exactly on this directory")
-                if (g.getFieldRepetitionCount("nan_count") > 0) g.getInteger("nan_count", 0).toLong
-                else 0L
+                nanCount.get
               }
             def nan: Any = s.outType match {
               case FloatType => Float.NaN
               case _         => Double.NaN
             }
             if (s.kind == "max" && nanCnt > 0) row.update(i, nan)
-            else stat(if (s.kind == "min") "min_val" else "max_val") match {
+            else (if (s.kind == "min") minVal else maxVal) match {
               case Some(v) => row.update(i, statToInternal(v, spec, s.outType))
               case None if nanCnt > 0 =>
                 // every non-null value is NaN: min and max are both NaN
@@ -1377,13 +1393,48 @@ final class GraftAggPartitionReader(part: GraftInputPartition, slots: Array[AggS
     }
 }
 
-/** Decodes one partition's chunk files back to logical rows: parquet-mr
-  * record iteration (with a record filter so other columns' rows are
-  * skipped), adjacency/zip grouping into chunk groups, chunk-level
-  * stat+bloom pruning, then the same UnsafeRow decode core the DataFrame
-  * read paths use, re-typed to the logical schema by a codegen'd
-  * projection (micros→timestamp and UTF-8→string are layout reinterprets;
-  * mantissa→decimal via MakeDecimal; long→int-family casts).
+/** One chunk file's rows in file order, for the partition reader: the
+  * graft container's footer rows, whose blobs are read only for the
+  * chunk groups the pruning keeps, or a parquet-generation file's
+  * records through parquet-mr.
+  */
+private[source] sealed trait ChunkCursor extends java.io.Closeable {
+  /** The next row, or null at the end. */
+  def next(): graft.spark.ChunkFile.Entry
+  /** A row of this cursor's file with its stream blobs. */
+  def load(e: graft.spark.ChunkFile.Entry): EncodedChunk
+}
+
+private[source] final class FooterCursor(file: graft.spark.ChunkFile.Reader) extends ChunkCursor {
+  private var i = 0
+  override def next(): graft.spark.ChunkFile.Entry =
+    if (i == file.entries.length) null else { i += 1; file.entries(i - 1) }
+  override def load(e: graft.spark.ChunkFile.Entry): EncodedChunk = file.load(e)
+  override def close(): Unit = file.close()
+}
+
+/** Parquet-generation chunk files: every record arrives with its blobs. */
+private[source] final class ParquetCursor(reader: ParquetReader[Group], column: Option[String])
+    extends ChunkCursor {
+  override def next(): graft.spark.ChunkFile.Entry = {
+    val g = reader.read()
+    if (g == null) null else graft.spark.ChunkFile.Entry(ChunkGroupParser.parse(g, column), null)
+  }
+  override def load(e: graft.spark.ChunkFile.Entry): EncodedChunk = e.chunk
+  override def close(): Unit = reader.close()
+}
+
+/** Decodes one partition's chunk files back to logical rows: each file's
+  * rows (a graft container file's footer, keeping the requested columns;
+  * a parquet-generation file through parquet-mr with a record filter),
+  * adjacency/zip grouping into chunk groups, chunk-level stat+bloom
+  * pruning on the metadata, the kept groups' blobs read, then the same
+  * UnsafeRow decode core the DataFrame read paths use. Columns whose
+  * decoded layout is not their logical one (dates, narrowed longs,
+  * decimals, float vectors) are re-typed by a codegen'd projection
+  * (mantissa→decimal via MakeDecimal; long→int-family casts); when every
+  * requested column is a reinterpret (micros→timestamp, UTF-8→string),
+  * the decoded row is emitted as it is.
   */
 final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnSpec],
                                  emitEmptyRows: Boolean, preds: Array[ChunkPrune],
@@ -1391,18 +1442,32 @@ final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnS
     extends PartitionReader[InternalRow] {
 
   private val columnPartitioned = part.columns.nonEmpty
-  private val readers: Array[ParquetReader[Group]] = part.files.zipWithIndex.map {
-    case (f, i) =>
-      val b = HadoopFiles.groupReader(new Path(f), conf)
-      // row-grouped layout: push `column IN (requested)` into parquet so
-      // other columns' records never assemble (dictionary/column-index
-      // pruning applies) unless the planner found every record requested;
-      // column-partitioned files hold one column only
-      (if (columnPartitioned || !part.columnFilter) b
-       else b.withFilter(FilterCompat.get(columnNameFilter))).build()
+  private val requested = (specs.map(_.name) ++ part.driver).toSet
+  private val cursors: Array[ChunkCursor] = {
+    val opened = new Array[ChunkCursor](part.files.length)
+    try {
+      part.files.indices.foreach { i =>
+        val path = new Path(part.files(i))
+        val column = if (columnPartitioned) part.columns(i) else null
+        opened(i) = graft.spark.ChunkFile.open(path, conf, requested, column = column) match {
+          case Some(file) => new FooterCursor(file)
+          case None =>
+            val b = HadoopFiles.groupReader(path, conf)
+            // row-grouped layout: push `column IN (requested)` into parquet so
+            // other columns' records never assemble (dictionary/column-index
+            // pruning applies) unless the planner found every record requested;
+            // column-partitioned files hold one column only
+            new ParquetCursor((if (columnPartitioned || !part.columnFilter) b
+              else b.withFilter(FilterCompat.get(columnNameFilter))).build(), Option(column))
+        }
+      }
+      opened
+    } catch {
+      case e: Throwable => opened.foreach(c => if (c != null) c.close()); throw e
+    }
   }
   private def columnNameFilter: FilterPredicate =
-    (specs.map(_.name) ++ part.driver)
+    requested.toSeq
       .map(n => FilterApi.eq(FilterApi.binaryColumn("column"),
         Binary.fromString(n)): FilterPredicate)
       .reduce(FilterApi.or)
@@ -1437,7 +1502,8 @@ final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnS
         case _        => bound(org.apache.spark.sql.types.BinaryType)
       }
     }.toSeq
-    UnsafeProjection.create(if (emitEmptyRows) Seq.empty[Expression] else exprs)
+    if (!emitEmptyRows && specs.forall(GraftPartitionReader.decodedAsLogical)) null
+    else UnsafeProjection.create(if (emitEmptyRows) Seq.empty[Expression] else exprs)
   }
 
   /** Stride-skip bounds from EVERY pushed predicate (keep-sets intersect
@@ -1446,7 +1512,9 @@ final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnS
     */
   private val stridePrunes: Seq[TableEncoder.StridePrune] = preds.toSeq.flatMap(_.stridePrune)
 
-  private var pendingFirst: Option[Group] = None // row-grouped lookahead
+  private type Group = Map[String, (graft.spark.ChunkFile.Entry, ChunkCursor)]
+
+  private var pendingFirst: graft.spark.ChunkFile.Entry = null // row-grouped lookahead
   private var rows: Iterator[InternalRow] = Iterator.empty
   private var current: InternalRow = _
   private var emitted = 0L
@@ -1459,16 +1527,19 @@ final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnS
     while (!rows.hasNext) {
       val group = nextGroup()
       if (group == null) return false
-      checkAssembled(group)
-      if (ChunkPrune.keepsGroup(preds, group))
-        rows = TableEncoder.decodeChunkInternalRows(group, specs, writer, stridePrunes)
+      val meta = group.map { case (col, (e, _)) => col -> e.chunk }
+      checkAssembled(meta)
+      if (ChunkPrune.keepsGroup(preds, meta))
+        rows = TableEncoder.decodeChunkInternalRows(
+          group.map { case (col, (e, cursor)) => col -> cursor.load(e) }, specs, writer,
+          stridePrunes)
     }
-    current = toLogical(rows.next())
+    current = if (toLogical == null) rows.next() else toLogical(rows.next())
     emitted += 1
     true
   }
   override def get(): InternalRow = current
-  override def close(): Unit = readers.foreach(_.close())
+  override def close(): Unit = cursors.foreach(_.close())
 
   private val seenGroups = new java.util.HashSet[java.lang.Long]()
 
@@ -1493,60 +1564,73 @@ final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnS
     }
   }
 
-  /** Next complete chunk group, or null at end of partition. */
-  private def nextGroup(): Map[String, EncodedChunk] =
+  /** Next complete chunk group (metadata; blobs not yet read from a
+    * graft container file), or null at end of partition.
+    */
+  private def nextGroup(): Group =
     if (columnPartitioned) {
       // zip: one record per column file, aligned by writer-task order
-      val first = readers(0).read()
+      val first = cursors(0).next()
       if (first == null) {
-        require(readers.drop(1).forall(_.read() == null),
+        require(cursors.drop(1).forall(_.next() == null),
           "column files misaligned: trailing chunks in a sibling column file")
         null
       } else {
-        val chunks = new Array[EncodedChunk](specs.length)
-        chunks(0) = ChunkGroupParser.parse(first, Some(part.columns.head))
+        val head = first.chunk
+        var group: Group = Map(head.column -> (first -> cursors(0)))
         var i = 1
-        while (i < readers.length) {
-          val g = readers(i).read()
-          require(g != null, s"column file for ${part.columns(i)} ended early")
-          chunks(i) = ChunkGroupParser.parse(g, Some(part.columns(i)))
-          require(chunks(i).part_id == chunks(0).part_id &&
-            chunks(i).chunk_id == chunks(0).chunk_id,
-            s"column files misaligned at (${chunks(0).part_id},${chunks(0).chunk_id}) " +
-              s"vs (${chunks(i).part_id},${chunks(i).chunk_id}) — use EncodeJob.readBackShuffled")
+        while (i < cursors.length) {
+          val e = cursors(i).next()
+          require(e != null, s"column file for ${part.columns(i)} ended early")
+          require(e.chunk.part_id == head.part_id && e.chunk.chunk_id == head.chunk_id,
+            s"column files misaligned at (${head.part_id},${head.chunk_id}) " +
+              s"vs (${e.chunk.part_id},${e.chunk.chunk_id}) — use EncodeJob.readBackShuffled")
+          group += e.chunk.column -> (e -> cursors(i))
           i += 1
         }
-        chunks.map(c => c.column -> c).toMap
+        group
       }
     } else {
       // adjacency: requested columns of one (part_id, chunk_id) are
-      // consecutive (writer invariant; other columns are filtered out by
-      // the parquet record filter)
-      val first = pendingFirst.orElse(Option(readers(0).read())).orNull
-      pendingFirst = None
+      // consecutive (writer invariant; other columns are dropped by the
+      // footer read or the parquet record filter)
+      val cursor = cursors(0)
+      val first = if (pendingFirst != null) pendingFirst else cursor.next()
+      pendingFirst = null
       if (first == null) null
       else {
-        val acc = scala.collection.mutable.Map[String, EncodedChunk]()
-        val head = ChunkGroupParser.parse(first, None)
-        acc(head.column) = head
+        val head = first.chunk
+        var group: Group = Map(head.column -> (first -> cursor))
         var done = false
-        while (acc.size < specs.length && !done) {
-          val g = readers(0).read()
-          if (g == null) done = true
+        while (group.size < specs.length && !done) {
+          val e = cursor.next()
+          if (e == null) done = true
           else {
-            val c = ChunkGroupParser.parse(g, None)
+            val c = e.chunk
             // a new key or a repeated column begins the next group (a
             // repeated key fails in checkAssembled)
             if (c.part_id == head.part_id && c.chunk_id == head.chunk_id &&
-                !acc.contains(c.column)) acc(c.column) = c
-            else { pendingFirst = Some(g); done = true }
+                !group.contains(c.column)) group += c.column -> (e -> cursor)
+            else { pendingFirst = e; done = true }
           }
         }
         // columns the chunk lacks that its batch never wrote (added by a
         // later ALTER TABLE ADD COLUMN) — the decode null-fills them
-        acc.toMap
+        group
       }
     }
+}
+
+object GraftPartitionReader {
+  /** Logical types whose decoded UnsafeRow layout is already the
+    * logical one: micros for timestamps, UTF-8 for strings, and the
+    * plain long, bool, double, float and binary encodings.
+    */
+  private[source] def decodedAsLogical(s: ColumnSpec): Boolean = s.logical match {
+    case "timestamp" | "timestamp_ntz" | "string" | "bool" | "double" | "float" | "binary" => true
+    case "long" => s.narrow.isEmpty
+    case _      => false
+  }
 }
 
 /** parquet-mr Group → EncodedChunk, tolerant of missing fields (older

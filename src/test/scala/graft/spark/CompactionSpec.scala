@@ -39,7 +39,7 @@ class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     val s = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$out/chunks"))
     try {
       import scala.jdk.CollectionConverters._
-      s.iterator().asScala.map(_.toString).filter(_.endsWith(".parquet")).toList
+      s.iterator().asScala.map(_.toString).filter(ChunkFile.isChunkFileName).toList
     } finally s.close()
   }
 
@@ -100,7 +100,7 @@ class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(visible.contains(cBatch) && visible.size == 2, visible.toString)
     assert(canon(spark.read.format("graft").load(o)) sameElements canon(frame(0, 1500)))
     // (part_id, chunk_id, column) unique across the visible set
-    val dup = spark.read.parquet(s"$o/chunks")
+    val dup = EncodeJob.readChunkFiles(spark, s"$o/chunks")
       .filter(col("batch").isInCollection(visible.toSeq.map(Integer.valueOf)))
       .groupBy("part_id", "chunk_id", "column").count().filter(col("count") > 1).count()
     assert(dup == 0, "part_id collision after compaction")
@@ -116,7 +116,7 @@ class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(EncodeJob.committedBatches(spark, o) == Set(2, cBatch))
     assert(canon(spark.read.format("graft").load(o)) sameElements canon(frame(0, 1200)))
     // compression inherited from the dir, not reset to the default
-    val kinds = spark.read.parquet(s"$o/chunks")
+    val kinds = EncodeJob.readChunkFiles(spark, s"$o/chunks")
       .filter(col("batch") === cBatch).select("compression")
       .distinct().collect().map(_.getString(0)).toSet
     assert(kinds == Set("zlib"), kinds.toString)
@@ -127,7 +127,7 @@ class CompactionSpec extends AnyFunSuite with BeforeAndAfterAll {
     frame(0, 500).write.format("graft").mode("overwrite")
       .option("numPartitions", "2").option("compression", "zlib").save(o)
     frame(500, 1000).write.format("graft").mode("append").option("numPartitions", "2").save(o)
-    def kinds(batch: Int): Set[String] = spark.read.parquet(s"$o/chunks")
+    def kinds(batch: Int): Set[String] = EncodeJob.readChunkFiles(spark, s"$o/chunks")
       .filter(col("batch") === batch).select("compression")
       .distinct().collect().map(_.getString(0)).toSet
     val Seq(zlibBatch, defaultBatch) = EncodeJob.committedBatches(spark, o).toSeq.sorted

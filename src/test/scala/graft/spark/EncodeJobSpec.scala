@@ -50,11 +50,12 @@ class EncodeJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     */
   private def rewriteInPlace(dir: String, order: DataFrame => DataFrame): Unit = {
     val files = new java.io.File(dir).listFiles()
-      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
+      .filter(f => f.getName.startsWith("part-") && ChunkFile.isChunkFileName(f.getName))
     assert(files.length == 1)
     val staged = s"$tmp/staged-${System.nanoTime()}"
-    order(spark.read.parquet(files.head.getPath).repartition(1)).write.parquet(staged)
-    val rewritten = new java.io.File(staged).listFiles().filter(_.getName.endsWith(".parquet"))
+    order(EncodeJob.readChunkFiles(spark, files.head.getPath).repartition(1))
+      .write.format(ChunkFileFormat.Name).save(staged)
+    val rewritten = new java.io.File(staged).listFiles().filter(f => ChunkFile.isChunkFileName(f.getName))
     assert(rewritten.length == 1)
     java.nio.file.Files.move(rewritten.head.toPath, files.head.toPath,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
@@ -285,7 +286,7 @@ class EncodeJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     // batch becomes a plain data column (no partitionBy: the partitioned
     // writer re-sorts rows by the partition key, which would restore the
     // very adjacency this test needs to destroy)
-    spark.read.parquet(chunkDir)
+    EncodeJob.readChunkFiles(spark, chunkDir)
       .repartition(1).sortWithinPartitions("column", "part_id", "chunk_id")
       .write.parquet(compacted)
     def rm(f: java.io.File): Unit = {
@@ -390,7 +391,7 @@ class EncodeJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pages = WebGen.pages(spark, 4000, seed = 7, partitions = 2).toDF()
     val out = s"$tmp/compression"
     val result = EncodeJob.run(pages, EncodeJob.Config(out, 4, Some("lang")))
-    val chunks = spark.read.parquet(result.chunkDir)
+    val chunks = EncodeJob.readChunkFiles(spark, result.chunkDir)
     val byColumn = chunks.groupBy("column", "codec")
       .agg(sum("raw_bytes").as("raw"), sum("encoded_bytes").as("enc"))
       .collect()
@@ -454,7 +455,7 @@ class EncodeJobSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     // the replayed batch must have REPLACED the orphan files: every
     // (part_id, chunk_id, column) appears exactly once
-    val dupes = spark.read.parquet(EncodeJob.chunkDir(out))
+    val dupes = EncodeJob.readChunkFiles(spark, EncodeJob.chunkDir(out))
       .groupBy("part_id", "chunk_id", "column").count()
       .filter(col("count") > 1).count()
     assert(dupes == 0, s"$dupes duplicate chunk rows after resume")
@@ -516,7 +517,7 @@ class EncodeJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     for (kind <- Seq(graft.core.BlockCompression.Zstd, graft.core.BlockCompression.Lz4)) {
       val out = s"$tmp/comp-$kind"
       val result = EncodeJob.run(pages, EncodeJob.Config(out, 2, Some("lang"), compression = kind))
-      val chunks = spark.read.parquet(result.chunkDir)
+      val chunks = EncodeJob.readChunkFiles(spark, result.chunkDir)
       assert(chunks.select("compression").distinct().collect().map(_.getString(0)).toSeq == Seq(kind))
       val decoded = EncodeJob.readBack(spark, out, result.specs)
       assert(decoded.exceptAll(pages).count() == 0, s"$kind decode diverged")
@@ -537,10 +538,10 @@ class EncodeJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(li.exceptAll(decoded).count() == 0)
     // aligned restricts RLEv2 bit-widths to the CPU-friendly table — it may
     // pad, never corrupt; size must stay within 10% of the default strategy
-    val bytesA = spark.read.parquet(rA.chunkDir).agg(sum("encoded_bytes")).first().getLong(0)
+    val bytesA = EncodeJob.readChunkFiles(spark, rA.chunkDir).agg(sum("encoded_bytes")).first().getLong(0)
     val outU = s"$tmp/unaligned"
     val rU = EncodeJob.run(li, EncodeJob.Config(outU, 4, None))
-    val bytesU = spark.read.parquet(rU.chunkDir).agg(sum("encoded_bytes")).first().getLong(0)
+    val bytesU = EncodeJob.readChunkFiles(spark, rU.chunkDir).agg(sum("encoded_bytes")).first().getLong(0)
     assert(bytesA <= bytesU * 1.10, s"aligned $bytesA vs unaligned $bytesU")
   }
 

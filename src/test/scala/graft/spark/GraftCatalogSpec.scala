@@ -47,7 +47,7 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
         |FROM range(3000)""".stripMargin)
     assert(spark.sql("SELECT count(*) FROM graft.web.pages").first().getLong(0) == 3000)
     // TBLPROPERTIES reached the encoder
-    val kinds = spark.read.parquet(s"$wh/web/pages/chunks").select("compression")
+    val kinds = EncodeJob.readChunkFiles(spark, s"$wh/web/pages/chunks").select("compression")
       .distinct().collect().map(_.getString(0)).toSet
     assert(kinds == Set("zlib"), kinds.toString)
 
@@ -317,7 +317,7 @@ class GraftCatalogSpec extends AnyFunSuite with BeforeAndAfterAll {
       val st = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$dir/chunks/batch=$batch"))
       try {
         import scala.jdk.CollectionConverters._
-        st.iterator().asScala.filter(_.toString.endsWith(".parquet")).map { f =>
+        st.iterator().asScala.filter(f => ChunkFile.isChunkFileName(f.toString)).map { f =>
           val bytes = java.nio.file.Files.readAllBytes(f)
           f.toString -> java.security.MessageDigest.getInstance("MD5").digest(bytes)
             .map("%02x".format(_)).mkString

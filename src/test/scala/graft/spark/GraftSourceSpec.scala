@@ -603,7 +603,7 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       .option("bloomColumns", "v_string").save(out)
     assert(canon(spark.read.format("graft").load(out)) sameElements canon(alltypes))
     // the compression option reached the chunks
-    val kinds = spark.read.parquet(s"$out/chunks").select("compression")
+    val kinds = EncodeJob.readChunkFiles(spark, s"$out/chunks").select("compression")
       .distinct().collect().map(_.getString(0)).toSet
     assert(kinds == Set("zlib"), kinds.toString)
     // second overwrite replaces, not accumulates
@@ -622,7 +622,7 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val doubled = spark.read.format("graft").load(out)
     assert(doubled.count() == 2 * n)
     assert(EncodeJob.committedBatches(spark, out).size == 2)
-    val perChunkCols = spark.read.parquet(s"$out/chunks")
+    val perChunkCols = EncodeJob.readChunkFiles(spark, s"$out/chunks")
       .groupBy("part_id", "chunk_id", "column").count()
       .filter(col("count") > 1).count()
     assert(perChunkCols == 0, "part_id collision across appended batches")

@@ -68,7 +68,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def keptChunkRows(out: String, column: String, statType: String,
                             lo: org.apache.spark.sql.Column,
                             hi: org.apache.spark.sql.Column): Long =
-    spark.read.parquet(EncodeJob.chunkDir(out)).filter(col("column") === column &&
+    EncodeJob.readChunkFiles(spark, EncodeJob.chunkDir(out)).filter(col("column") === column &&
         !(col("max_val").cast(statType) < lo || col("min_val").cast(statType) > hi))
       .agg(sum(col("row_count"))).first().getLong(0)
 
@@ -409,7 +409,7 @@ class PruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = rows.toDF("id", "blob").repartition(8)
     val out = writeTable(df, "bloom-binary", Nil, chunkRows = 1000, numPartitions = 8,
       bloomColumns = Set("blob"))
-    assert(spark.read.parquet(EncodeJob.chunkDir(out)).filter(col("column") === "blob").count() >= 8)
+    assert(EncodeJob.readChunkFiles(spark, EncodeJob.chunkDir(out)).filter(col("column") === "blob").count() >= 8)
     val src = spark.read.format("graft").load(out)
 
     val target = rows(4321)._2

@@ -110,7 +110,7 @@ class SessionConfSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = new Path(EncodeJob.chunkDir(table))
     val it = dir.getFileSystem(spark.sparkContext.hadoopConfiguration).listFiles(dir, true)
     Iterator.continually(it).takeWhile(_.hasNext).map(_.next().getPath)
-      .filter(_.getName.endsWith(".parquet")).map(p => key(p.toString)).toSet
+      .filter(p => ChunkFile.isChunkFileName(p.getName)).map(p => key(p.toString)).toSet
   }
 
   /** Chunk files of the graft scan's input partitions (AQE unwrapped). */
