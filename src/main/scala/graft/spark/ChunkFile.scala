@@ -2,10 +2,14 @@ package graft.spark
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FSDataInputStream, Path}
+import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
+import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.parquet.schema.MessageType
 
 import java.io.{ByteArrayOutputStream, DataOutputStream, OutputStream}
 import java.nio.ByteBuffer
 import java.nio.charset.StandardCharsets.UTF_8
+import scala.jdk.CollectionConverters._
 
 /** The graft chunk container: how a chunk file holds its `EncodedChunk`
   * rows, after the reference's stripe layout (streams back to back, one
@@ -159,9 +163,9 @@ object ChunkFile {
     * footer is larger than the first read), keeping the rows whose column
     * `keep` accepts (every row of a column-partitioned file, whose rows
     * carry no column name and read as `column`). None, with nothing left
-    * open, for a parquet file: one not named `*.graft` (a filestats
-    * sidecar or a chunk file written before the container) is not
-    * opened at all, and a `*.graft` file is dispatched on its tail magic.
+    * open, for a parquet file: one not named `*.graft` (a chunk file
+    * written before the container) is not opened at all, and a `*.graft`
+    * file is dispatched on its tail magic.
     * A tail that is neither fails loudly and names the file.
     */
   def open(path: Path, conf: Configuration, keep: String => Boolean = _ => true,
@@ -204,6 +208,31 @@ object ChunkFile {
       case e: Throwable => in.close(); throw e
     }
   }
+
+  /** The rows of chunk file `path` without their stream blobs, in file
+    * order, from either generation: a container file's footer, or a
+    * parquet-generation file read through parquet-mr with `streams`
+    * projected away. `column` names the rows of a column-partitioned
+    * file (its `column=` directory). The engine's one reader of a table's
+    * chunk metadata (`TableMeta`'s index).
+    */
+  def chunks(path: Path, conf: Configuration, knownLength: Long = -1L,
+             column: String = null): Array[EncodedChunk] =
+    open(path, conf, knownLength = knownLength, column = column) match {
+      case Some(reader) => reader.close(); reader.entries.map(_.chunk)
+      case None =>
+        val noStreams = new GroupReadSupport {
+          override def init(context: InitContext): ReadSupport.ReadContext = {
+            val file = context.getFileSchema
+            new ReadSupport.ReadContext(new MessageType(file.getName,
+              file.getFields.asScala.filterNot(_.getName == "streams").asJava))
+          }
+        }
+        val reader = HadoopFiles.groupReader(path, conf, noStreams).build()
+        try Iterator.continually(reader.read()).takeWhile(_ != null)
+          .map(g => graft.spark.source.ChunkGroupParser.parse(g, Option(column))).toArray
+        finally reader.close()
+    }
 
   /** Reads `b.length` bytes at `pos`: a seek and a sequential read, not
     * the positional `readFully(pos, ...)`, which on a checksummed local

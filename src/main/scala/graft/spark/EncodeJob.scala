@@ -243,119 +243,30 @@ object EncodeJob {
     * batch ids, which prunes orphan dirs at the scan).
     */
   def chunkBatchDir(outDir: String, batchId: Int) = s"${chunkDir(outDir)}/batch=$batchId"
+  /** Per-batch stats sidecar dirs (`filestats/batch=N`) that engines
+    * before the container footer wrote next to the chunk files; nothing
+    * reads them. Vacuum and INSERT OVERWRITE still delete them.
+    */
   def filestatsDir(outDir: String) = s"$outDir/filestats"
   def filestatsBatchDir(outDir: String, batchId: Int) = s"${filestatsDir(outDir)}/batch=$batchId"
 
-  /** File-level pruning sidecar: per (chunk, column) stats PLUS the chunk
-    * FILE that holds it — written from the batch's chunk-file footers
-    * only (the heavy `streams` stay unread). The DataSource V2
-    * scan consults it at plan time so selective filters and join-driven
-    * runtime filters skip whole files without ever opening them — the
-    * partition-pruning story for a layout whose "partitions" are chunk
-    * files. Written before the manifest commit so a committed batch always
-    * has its sidecar; absent sidecars (older dirs) just mean no file-level
-    * pruning, chunk-level pruning still applies after open.
+  /** The manifest rows of batch `batchId` just written, from its chunk
+    * files' footers read on the driver (no Spark job): per part_id the
+    * chunk rows, the rows (summed over the `nCols` columns), raw and
+    * encoded bytes. The read loads the batch into `TableMeta`'s index,
+    * so the table's next plan finds it there.
     */
-  private def writeFileStats(spark: SparkSession, outDir: String, batchId: Int): Unit = {
-    writeFileStatsAndSummary(spark, outDir, batchId)
-    ()
-  }
-
-  /** One metadata read of the batch just written serves BOTH artifacts
-    * that used to cost a scan each: the filestats sidecar (written) and
-    * the per-part manifest summary (returned) — a read without `streams`
-    * reads each chunk file's footer alone either way, and the tiny
-    * projected frame is persisted across the two consumers.
-    */
-  private def writeFileStatsAndSummary(spark: SparkSession, outDir: String,
-                                       batchId: Int): Array[org.apache.spark.sql.Row] = {
-    // canonicalize through Path but KEEP scheme and authority: the
-    // sidecar's `file` entries are the paths metadata-planned scans OPEN,
-    // so on a non-default filesystem (s3a://, hdfs://) a scheme-stripped
-    // path would resolve against the wrong FS. Scheme-LESS normalization
-    // is applied only where entries serve as match keys (fileKeep).
-    val normalize = udf((s: String) => new org.apache.hadoop.fs.Path(s).toString)
-    val meta = spark.read.schema(chunkFileSchema).format(ChunkFileFormat.Name)
-      .load(chunkBatchDir(outDir, batchId))
-      .select(col("part_id"), col("chunk_id"), col("column"),
-        col("min_val"), col("max_val"), col("null_count"), col("row_count"),
-        col("nan_count"), col("bloom"), normalize(input_file_name()).as("file"),
-        col("raw_bytes"), col("encoded_bytes"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      meta.drop("raw_bytes", "encoded_bytes")
-        .write.mode(SaveMode.Overwrite).parquet(filestatsBatchDir(outDir, batchId))
-      writeFileMeta(spark, outDir, batchId)
-      meta.groupBy(col("part_id"))
-        .agg(count(lit(1)).as("chunks"), sum(col("row_count")).as("rows"),
-          sum(col("raw_bytes")).as("raw"), sum(col("encoded_bytes")).as("enc"))
-        .collect()
-    } finally { meta.unpersist(false); () }
-  }
-
-  /** Per-batch file metadata (`_filemeta.json` inside the batch's sidecar
-    * dir — the underscore keeps parquet readers away): currently the max
-    * chunk-file size, recorded at WRITE time (one bounded listing of the
-    * batch just written, while its entries are hot) so later readers can
-    * pin file-split confs without ever walking the chunk tree. At 100 TB
-    * scan planning must be O(metadata), not O(files) driver RPC.
-    */
-  private def writeFileMeta(spark: SparkSession, outDir: String, batchId: Int): Unit = {
-    val dir = new org.apache.hadoop.fs.Path(chunkBatchDir(outDir, batchId))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    var largest = 0L
-    if (fs.exists(dir)) {
-      val it = fs.listFiles(dir, /* recursive into column= dirs */ true)
-      while (it.hasNext) {
-        val s = it.next()
-        if (s.isFile && !s.getPath.getName.startsWith("_"))
-          largest = math.max(largest, s.getLen)
-      }
+  private def manifestRows(spark: SparkSession, outDir: String, batchId: Int, nCols: Int,
+                           t0: Long, codecLineage: String): Array[ManifestEntry] = {
+    val rows = TableMeta.batchIndex(spark, outDir, Set(batchId))(batchId).rows.toArray
+    val wallMs = (System.nanoTime() - t0) / 1000000L
+    rows.groupBy(_.part_id).toArray.sortBy(_._1).map { case (p, cs) =>
+      ManifestEntry(p, batchId, cs.length,
+        cs.iterator.map(_.row_count.toLong).sum / math.max(1, nCols),
+        cs.iterator.map(_.raw_bytes).sum, cs.iterator.map(_.encoded_bytes).sum, wallMs,
+        codecLineage)
     }
-    val p = new org.apache.hadoop.fs.Path(filestatsBatchDir(outDir, batchId), "_filemeta.json")
-    val os = fs.create(p, /* overwrite */ true)
-    try os.write(s"""{"max_file_bytes":$largest}""".getBytes("UTF-8")) finally os.close()
   }
-
-  /** Max chunk-file size across all batches that recorded a
-    * `_filemeta.json` — None when any batch dir predates the metadata
-    * (caller falls back to the legacy walk). Over-approximating is safe:
-    * the split bound only needs to be ≥ every VISIBLE file, and replaced-
-    * but-unvacuumed batches can only raise it.
-    */
-  private def maxFileBytesFromMeta(spark: SparkSession, outDir: String): Option[Long] = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    val chunkRoot = new org.apache.hadoop.fs.Path(chunkDir(outDir))
-    val fs = chunkRoot.getFileSystem(conf)
-    if (!fs.exists(chunkRoot)) return Some(1L)
-    val entries = fs.listStatus(chunkRoot)
-    // anything that isn't a batch= dir (flat legacy/externally-rewritten
-    // layouts, stray files) means the metadata doesn't cover the dir —
-    // returning a too-SMALL bound here would make Spark split every file
-    // into bound-sized slivers (a 1-byte bound = millions of tasks)
-    if (!entries.forall(e => e.isDirectory && e.getPath.getName.startsWith("batch=")))
-      return None
-    val batches = entries.iterator.map(_.getPath.getName.stripPrefix("batch=").toInt).toSeq
-    if (batches.isEmpty) return None
-    var largest = 1L
-    batches.foreach { b =>
-      val p = new org.apache.hadoop.fs.Path(filestatsBatchDir(outDir, b), "_filemeta.json")
-      if (!fs.exists(p)) return None
-      val in = fs.open(p)
-      val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
-      raw""""max_file_bytes"\s*:\s*(\d+)""".r.findFirstMatchIn(text) match {
-        case Some(m) => largest = math.max(largest, m.group(1).toLong)
-        case None    => return None
-      }
-    }
-    Some(largest)
-  }
-
-  /** Count of legacy chunk-TREE walks (recursive driver-side listings of
-    * the chunk dir at PLAN time) — instrumentation for the tests that
-    * prove metadata-planned scans never list the data tree.
-    */
-  val chunkTreeWalks = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Batch ids whose manifest rows are committed, with compaction records
     * applied — the only batches a BATCH reader may decode. A compaction
@@ -679,12 +590,12 @@ object EncodeJob {
     * pruning pass. The condition is resolved by NAME against the table
     * schema, split into conjuncts, translated to V1 filters, and run
     * through the same ChunkPrune keep logic the scan's file pruning
-    * uses, evaluated on the driver against TableMeta's sidecar index (no
-    * Spark job once the batches' sidecars are cached). Every
-    * step is conservative: untranslatable conjuncts contribute no
-    * pruning, batches without sidecar coverage (or missing a predicate
-    * column — schema evolution) count as affected, and an unresolvable
-    * condition returns every visible batch.
+    * uses, evaluated on the driver against TableMeta's index of the
+    * chunk-file footers (no Spark job). Every step is conservative:
+    * untranslatable conjuncts contribute no pruning, batches without
+    * chunk rows (or missing a predicate column — schema evolution) count
+    * as affected, and an unresolvable condition returns every visible
+    * batch.
     */
   private[graft] def affectedBatches(spark: SparkSession, outDir: String,
                                      condition: Column): Set[Int] = {
@@ -726,24 +637,18 @@ object EncodeJob {
 
     val schema = schemaFromDisk(spark, outDir).getOrElse(
       throw new IllegalArgumentException(s"no ${schemaPath(outDir)} — cannot compact"))
-    // inherit the dir's own layout + codec decisions unless overridden
-    // (withChunkSchema null-fills columns older writers didn't have)
-    val chunkMeta = withChunkSchema(
-      readChunkTree(spark, outDir)
-        .filter(col("batch").isInCollection(toCompact.toSeq.map(Integer.valueOf))))
-    // one metadata aggregate instead of three separate collect jobs. The
+    // inherit the dir's own layout + codec decisions unless overridden,
+    // from the rewritten batches' chunk rows in the TableMeta index. The
     // kind is the OLDEST rewritten batch's, so a rewrite spanning batches
     // of different kinds (a zlib table appended to under the zstd
-    // default) picks the same one on every run
-    val inh = chunkMeta.agg(
-      min(when(col("compression").isNotNull, struct(col("batch"), col("compression"))))
-        .getField("compression").as("comp"),
-      max(col("seg_lens").isNotNull).as("seg"),
-      collect_set(when(col("bloom").isNotNull, col("column"))).as("blooms")).collect()(0)
-    val inheritedCompression = compression.getOrElse(
-      if (inh.isNullAt(0)) "zlib" else inh.getString(0))
-    val segmented = !inh.isNullAt(1) && inh.getBoolean(1)
-    val bloomCols = inh.getSeq[String](2).toSet
+    // default) picks the same one on every run; a row without a recorded
+    // kind predates it (zlib)
+    val chunkMeta = TableMeta.batchIndex(spark, outDir, toCompact).toSeq
+      .flatMap { case (b, bi) => bi.rows.map(b -> _) }
+    val inheritedCompression = compression.getOrElse(chunkMeta
+      .flatMap { case (b, c) => c.compression.map(b -> _) }.minOption.fold("zlib")(_._2))
+    val segmented = chunkMeta.exists(_._2.seg_lens.isDefined)
+    val bloomCols = chunkMeta.collect { case (_, c) if c.bloom.isDefined => c.column }.toSet
     val effectiveSort =
       if (zorderColumns.nonEmpty) Nil
       else if (sortColumns.nonEmpty) sortColumns
@@ -757,7 +662,7 @@ object EncodeJob {
       // decode of the input for a sampling pass
       zorderBoundsHint =
         if (zorderColumns.isEmpty) None
-        else zorderBoundsFromStats(chunkMeta, schema, zorderColumns))
+        else zorderBoundsFromStats(chunkMeta.map(_._2), schema, zorderColumns))
 
     val (newBatch, partOffset) = nextBatchAndPart(spark, outDir)
     val df = transform(decodeBatches(spark, outDir, toCompact, schema))
@@ -784,7 +689,8 @@ object EncodeJob {
     newBatch
   }
 
-  /** Physically delete (a) replaced batches' chunk + filestats dirs and
+  /** Physically delete (a) replaced batches' chunk dirs (and the
+    * filestats dirs older engines wrote next to them) and
     * (b) ORPHAN batch dirs — ids never committed by a manifest row or a
     * compaction record, i.e. the leftovers of crashed writes/compactions
     * (a crashed full-table rewrite is a 100% copy of the data; it must be
@@ -885,27 +791,34 @@ object EncodeJob {
   private[graft] val zorderSamplingScans = new java.util.concurrent.atomic.AtomicLong(0)
 
   /** Z-order rescale bounds from the CHUNK STATS of the batches being
-    * rewritten — a tiny metadata aggregate instead of re-decoding the
-    * input for a sampling pass. None (→ sampling fallback) when a z
-    * column's type has no numeric stat space or its stats are absent
-    * (all-null column, pre-stats dir). Bounds only shape clustering
-    * quality, never correctness, so the fallback is always safe.
+    * rewritten (their rows in the TableMeta index) instead of re-decoding
+    * the input for a sampling pass: per column the least `min_val` and
+    * the greatest `max_val`, each `try_cast` to the column's numeric stat
+    * space (stats that do not cast are skipped). None (→ sampling
+    * fallback) when a z column's type has no numeric stat space or its
+    * stats are absent (all-null column, pre-stats dir). Bounds only shape
+    * clustering quality, never correctness, so the fallback is always
+    * safe.
     */
-  private def zorderBoundsFromStats(chunkMeta: DataFrame, schema: StructType,
+  private def zorderBoundsFromStats(chunkMeta: Seq[EncodedChunk], schema: StructType,
                                     zcols: Seq[String]): Option[Seq[(Long, Long)]] = {
-    import org.apache.spark.sql.functions.{max, min}
+    import org.apache.spark.sql.catalyst.expressions.{Cast, EvalMode, Literal}
     val out = zcols.map { c =>
       val f = schema.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(return None)
       val castT = f.dataType match {
-        case LongType | IntegerType | ShortType | ByteType => "bigint"
-        case DoubleType | FloatType                        => "double"
+        case LongType | IntegerType | ShortType | ByteType => LongType
+        case DoubleType | FloatType                        => DoubleType
         case _                                             => return None
       }
-      val r = chunkMeta
-        .filter(col("column") === f.name && col("min_val").isNotNull && col("max_val").isNotNull)
-        .agg(min(col("min_val").try_cast(castT)), max(col("max_val").try_cast(castT)))
-        .collect()(0)
-      if (r.isNullAt(0) || r.isNullAt(1)) return None
+      def cast(stat: String): Option[Any] =
+        Option(Cast(Literal(stat), castT, None, EvalMode.TRY).eval())
+      val stats = chunkMeta.filter(m => m.column == f.name && m.min_val.isDefined && m.max_val.isDefined)
+      val ord: Ordering[Any] =
+        if (castT == LongType) Ordering.Long.on[Any](_.asInstanceOf[Long])
+        else Ordering.Double.TotalOrdering.on[Any](_.asInstanceOf[Double])
+      val lo = stats.flatMap(m => cast(m.min_val.get)).minOption(ord)
+      val hi = stats.flatMap(m => cast(m.max_val.get)).maxOption(ord)
+      if (lo.isEmpty || hi.isEmpty) return None
       def bits(v: Any): Long = {
         val typed: Any = (f.dataType, v) match {
           case (IntegerType, l: Long) => l.toInt
@@ -916,7 +829,7 @@ object EncodeJob {
         }
         graft.plans.ZOrderKey.bitsOfExternal(typed, f.dataType)
       }
-      (bits(r.get(0)), bits(r.get(1)))
+      (bits(lo.get), bits(hi.get))
     }
     Some(out)
   }
@@ -998,7 +911,7 @@ object EncodeJob {
     Result(specs, chunkDir(cfg.outDir), manifestDir(cfg.outDir), 1, 0)
   }
 
-  /** Encode one DataFrame into batch `batchId`'s chunk + sidecar dirs and
+  /** Encode one DataFrame into batch `batchId`'s chunk dir and
     * return its manifest rows WITHOUT committing them — the caller owns
     * the commit point (runBatch: manifest append; compact: the compaction
     * record). Until then the batch dir is an invisible orphan that a
@@ -1034,14 +947,7 @@ object EncodeJob {
     // Overwrite into the batch-scoped dir: a replay of a half-written
     // batch replaces the orphan files instead of appending duplicates
     writeChunks(chunks, cfg, batchId)
-    val summary = writeFileStatsAndSummary(spark, cfg.outDir, batchId)
-    val wallMs = (System.nanoTime() - t0) / 1000000L
-
-    (summary.map { r =>
-      ManifestEntry(r.getInt(0), batchId, r.getLong(1).toInt,
-        r.getLong(2) / math.max(1, specs.length),
-        r.getLong(3), r.getLong(4), wallMs, codecLineage)
-    }, specs)
+    (manifestRows(spark, cfg.outDir, batchId, specs.length, t0, codecLineage), specs)
   }
 
   /** Full run with resume: batches whose manifest rows are committed are
@@ -1086,16 +992,9 @@ object EncodeJob {
           segmented = cfg.segmented, bloomColumns = cfg.bloomColumns)
         // Overwrite into the batch dir — replays of an uncommitted batch
         // replace its orphan files; the manifest append below is the
-        // commit point. One metadata read serves sidecar AND summary.
+        // commit point
         writeChunks(chunks, cfg, b)
-        val summary = writeFileStatsAndSummary(spark, cfg.outDir, b)
-        val wallMs = (System.nanoTime() - t0) / 1000000L
-
-        val entries = summary.map { r =>
-          ManifestEntry(r.getInt(0), b, r.getLong(1).toInt,
-            r.getLong(2) / math.max(1, specs.length), // rows were summed over columns
-            r.getLong(3), r.getLong(4), wallMs, codecLineage)
-        }
+        val entries = manifestRows(spark, cfg.outDir, b, specs.length, t0, codecLineage)
         // commit point: the batch is durable only once these rows land —
         // a driver-side JSON commit file (atomic rename), no Spark job
         writeManifestEntries(spark, cfg.outDir, entries.toIndexedSeq)
@@ -1132,24 +1031,10 @@ object EncodeJob {
     layoutCache.put(cfg.outDir, java.lang.Boolean.valueOf(cfg.partitionByColumn))
   }
 
-  /** Schema back-compat for parquet chunk files written by older engine
-    * versions: columns added since (compression, seg_lens,
-    * stride_null_counts, ...) are filled with nulls before binding to
-    * EncodedChunk, so the case-class defaults' getOrElse fallbacks are
-    * actually reachable instead of the read failing on a missing column.
-    */
-  private[spark] def withChunkSchema(df: DataFrame): DataFrame = {
-    val target = org.apache.spark.sql.Encoders.product[EncodedChunk].schema
-    target.fields.foldLeft(df) { (d, f) =>
-      if (d.columns.contains(f.name)) d
-      else d.withColumn(f.name, lit(null).cast(f.dataType))
-    }
-  }
-
   /** The chunk files' schema, stated explicitly on every read: no
     * schema-inference footer pass, and columns a pre-upgrade writer
-    * lacked read as nulls — the same back-compat contract withChunkSchema
-    * provided, decided at scan time instead of plan-rewrite time.
+    * lacked read as nulls, so the case-class defaults' getOrElse
+    * fallbacks are reachable instead of the read failing.
     */
   private[spark] val chunkFileSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.Encoders.product[EncodedChunk].schema
@@ -1160,10 +1045,6 @@ object EncodeJob {
   private[spark] val chunkTreeSchema: org.apache.spark.sql.types.StructType =
     org.apache.spark.sql.types.StructType(chunkFileSchema.fields :+
       org.apache.spark.sql.types.StructField("batch", org.apache.spark.sql.types.IntegerType))
-
-  /** Read the chunk tree (all batches) with the explicit schema. */
-  private[spark] def readChunkTree(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.schema(chunkTreeSchema).format(ChunkFileFormat.Name).load(chunkDir(outDir))
 
   /** The chunk rows under `path` (a table's chunk dir, one batch dir or
     * one file) as a DataFrame, both container generations alike: the
@@ -1182,8 +1063,8 @@ object EncodeJob {
   private def committedChunks(spark: SparkSession, outDir: String,
                               batches: Option[Set[Int]] = None): Dataset[EncodedChunk] = {
     val visible = batches.getOrElse(committedBatches(spark, outDir))
-    withChunkSchema(readChunkTree(spark, outDir)
-      .filter(col("batch").isInCollection(visible.toSeq.map(Integer.valueOf))))
+    spark.read.schema(chunkTreeSchema).format(ChunkFileFormat.Name).load(chunkDir(outDir))
+      .filter(col("batch").isInCollection(visible.toSeq.map(Integer.valueOf)))
       .as[EncodedChunk](org.apache.spark.sql.Encoders.product[EncodedChunk])
   }
 
@@ -1252,7 +1133,8 @@ object EncodeJob {
   private def decodeBatches(spark: SparkSession, outDir: String, batches: Set[Int],
                             schema: org.apache.spark.sql.types.StructType): DataFrame = {
     val specs = specsFromManifest(spark, outDir, schema)
-    if (isColumnPartitioned(spark, outDir) || layoutOk(spark, outDir, specs, Some(batches)))
+    if (isColumnPartitioned(spark, outDir) ||
+        TableMeta.writerLayout(spark, outDir, batches, specs.length))
       spark.read.schema(schema).format("graft")
         .option("visibleBatches", batches.toSeq.sorted.mkString(",")).load(outDir)
     else TableEncoder.unshred(
@@ -1273,46 +1155,16 @@ object EncodeJob {
         TableEncoder.decodeColumns(committedChunks(spark, outDir), specs, cols), subset)
   }
 
-  /** Metadata-only probe for the row-grouped layout the scan relies on:
-    * with file splits pinned to one whole file per partition (the scan's
-    * granularity), every chunk group must appear as exactly
-    * `specs.length` adjacent rows within one file, never interleaved or
-    * split. readBack falls back to the shuffled decode when it fails
-    * (the scan itself refuses such files loudly). Reads just (part_id,
-    * chunk_id) — parquet column projection never touches the stream
-    * blobs, so the probe costs a fraction of a percent of the data even
-    * at 100 TB.
+  /** The row-grouped layout the scan relies on, over the committed
+    * batches: in each chunk file every chunk group is exactly
+    * `specs.length` adjacent rows, never interleaved or split
+    * (`TableMeta.writerLayout`, on the driver from the chunk-file
+    * footers). readBack falls back to the shuffled decode when it fails
+    * (the scan itself refuses such files loudly).
     */
   def colocatedLayoutOk(spark: SparkSession, outDir: String,
                         specs: Array[ColumnSpec]): Boolean =
-    layoutOk(spark, outDir, specs, None)
-
-  /** colocatedLayoutOk over `batches` only (committed batches by default). */
-  private def layoutOk(spark: SparkSession, outDir: String, specs: Array[ColumnSpec],
-                       batches: Option[Set[Int]]): Boolean =
-    withPinnedSplits(spark, outDir) {
-      val nCols = specs.length
-      val meta = committedChunks(spark, outDir, batches).select("part_id", "chunk_id")
-      val badCounts = meta.rdd.mapPartitions { it =>
-        val seen = scala.collection.mutable.HashSet[Long]()
-        var bad = 0L
-        var curKey = Long.MinValue
-        var run = 0
-        while (it.hasNext) {
-          val r = it.next()
-          val key = (r.getInt(0).toLong << 32) | (r.getInt(1).toLong & 0xffffffffL)
-          if (key == curKey) run += 1
-          else {
-            if (run != 0 && run != nCols) bad += 1
-            if (!seen.add(key)) bad += 1 // group re-appeared → interleaved
-            curKey = key; run = 1
-          }
-        }
-        if (run != 0 && run != nCols) bad += 1
-        Iterator.single(bad)
-      }.collect()
-      badCounts.sum == 0
-    }
+    TableMeta.writerLayout(spark, outDir, committedBatches(spark, outDir), specs.length)
 
   /** The same scan as readBack, without the layout probe, returned as an
     * RDD-backed frame: nothing planned above it can prune columns out of
@@ -1326,45 +1178,5 @@ object EncodeJob {
     val df = scan(spark, outDir, specs, columns)
     org.apache.spark.sql.graftbridge.Bridge.internalCreateDataFrame(
       spark, df.queryExecution.toRdd, df.schema)
-  }
-
-  /** Pin file-split confs for the duration of `body` so every Spark
-    * partition covers exactly one whole chunk file (the layout probe's
-    * unit): largest data file decides the split bound — maxPartitionBytes
-    * ≥ largest file means no file is ever split; openCost == the bound
-    * means no two files ever share a partition (bin-packing closes the
-    * bin as soon as one file + one opening cost fills it). The body must
-    * run its scans eagerly — confs are restored on exit.
-    */
-  private def withPinnedSplits[T](spark: SparkSession, outDir: String)(body: => T): T = {
-    val conf = spark.conf
-    val prevMax = conf.getOption("spark.sql.files.maxPartitionBytes")
-    val prevOpen = conf.getOption("spark.sql.files.openCostInBytes")
-    try {
-      // the bound comes from per-batch _filemeta.json (recorded at write
-      // time) — O(batches) tiny reads; the recursive chunk-tree walk is
-      // only the legacy-dir fallback (pre-metadata batches)
-      val largest = maxFileBytesFromMeta(spark, outDir).getOrElse {
-        chunkTreeWalks.incrementAndGet()
-        val dir = new org.apache.hadoop.fs.Path(chunkDir(outDir))
-        val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        var max = 1L
-        val it = fs.listFiles(dir, /* recursive into batch= dirs */ true)
-        while (it.hasNext) {
-          val s = it.next()
-          if (s.isFile && !s.getPath.getName.startsWith("_"))
-            max = math.max(max, s.getLen)
-        }
-        max
-      }
-      conf.set("spark.sql.files.maxPartitionBytes", largest.toString)
-      conf.set("spark.sql.files.openCostInBytes", largest.toString)
-      body
-    } finally {
-      prevMax.fold(conf.unset("spark.sql.files.maxPartitionBytes"))(v =>
-        conf.set("spark.sql.files.maxPartitionBytes", v))
-      prevOpen.fold(conf.unset("spark.sql.files.openCostInBytes"))(v =>
-        conf.set("spark.sql.files.openCostInBytes", v))
-    }
   }
 }

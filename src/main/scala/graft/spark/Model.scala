@@ -30,10 +30,9 @@ final case class EncodedChunk(
     stride_maxs: Option[Seq[Long]] = None,
     // Stream-blob compression kind (BlockCompression); None = zlib, the
     // wire default before the kind was recorded. Older chunk parquet may
-    // lack this (and the seg_* fields) entirely — EncodeJob reads chunks
-    // through `withChunkSchema`, which adds missing columns as nulls
-    // before binding to this case class, so the getOrElse(Zlib) defaults
-    // are the real back-compat path.
+    // lack this (and the seg_* fields) entirely — readers state the full
+    // chunk schema, so missing columns read as nulls and the
+    // getOrElse(Zlib) defaults are the real back-compat path.
     compression: Option[String] = None,
     // Per-stream stride segmentation (the reference's RowIndex stream
     // positions, ColumnWriterStatistics.cs:10-33 + OrcCompressedBuffer

@@ -1,7 +1,8 @@
 package graft.spark
 
 import graft.spark.source.{ChunkPrune, ChunkStats}
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
 /** Driver-side table metadata, cached per JVM and validated against the
@@ -17,13 +18,16 @@ import org.apache.spark.sql.SparkSession
   *    and every compaction adds a record file, so any writer — same JVM
   *    or not — invalidates the entry. A miss parses the JSON commit files
   *    on the driver; no Spark job.
-  *  - the SIDECAR INDEX: the filestats sidecar rows of each committed
-  *    batch (per chunk and column: min/max, null/row/NaN counts, Bloom
-  *    filter, chunk file), read on the driver once per committed batch and
-  *    revalidated per batch dir listing. Plan-time pruning — scan file
-  *    keep, DML batch keep, the scan's chunk-file list — is evaluated
-  *    against it on the driver, so planning a query over a warm table
-  *    launches no Spark job.
+  *  - the INDEX: each committed batch's chunk files and their footer
+  *    rows (every `EncodedChunk` field but the stream blobs: min/max,
+  *    null/row/NaN counts, Bloom filter, compression, `seg_lens`), read
+  *    on the driver once per batch and revalidated per batch dir listing.
+  *    It is the table's one source of per-chunk metadata: plan-time
+  *    pruning (scan file keep, DML batch keep), the scan's chunk-file
+  *    list, aggregate pushdown's partial rows, the manifest summary of a
+  *    write, a rewrite's inherited settings and the layout check are
+  *    evaluated against it on the driver, so none of them launches a
+  *    Spark job.
   */
 object TableMeta {
 
@@ -96,147 +100,120 @@ object TableMeta {
     Snapshot(batchIds, maxPart, codecs, batchColumns, perBatch, comps)
   }
 
-  /** One filestats sidecar row: a chunk's stats for one column and the
-    * chunk file that holds it (`fileKey` is its scheme-less form, the
-    * match key of the file-keep map).
+  /** One chunk file of a batch: its path, the scheme-less form that keys
+    * the file-keep map, and its rows' metadata in file order
+    * (`EncodedChunk`s without stream blobs; in a column-partitioned file
+    * `column` is its `column=` directory).
     */
-  private[graft] final case class SidecarEntry(part_id: Int, chunk_id: Int, column: String,
-                                               stats: ChunkStats, file: String, fileKey: String)
-
-  /** One committed batch's sidecar, parsed once: its parquet files, its
-    * rows per chunk (part_id, chunk_id) and its distinct chunk files.
-    */
-  private[graft] final class BatchIndex(val sidecarFiles: Seq[String],
-                                        entries: Seq[SidecarEntry]) {
-    val chunks: Map[(Int, Int), Seq[SidecarEntry]] =
-      entries.groupBy(e => (e.part_id, e.chunk_id))
-    val files: Seq[String] = entries.map(_.file).distinct.sorted
+  private[graft] final class IndexedFile(val path: String, val column: Option[String],
+                                         val chunks: Array[EncodedChunk]) {
+    val key: String = normPath(path)
   }
 
-  /** Per-table sidecar index: batch id -> (listing signature, index).
-    * The signature is the batch dir's sidecar listing (name:len:mtime),
-    * re-listed and compared on EVERY access, so an overwrite that reuses
-    * a batch id, a vacuum, or any other external change reloads that
-    * batch; a committed batch's sidecar is otherwise immutable, so it is
-    * read once.
+  /** One chunk row's pruning view: its column, its stats (whose Bloom
+    * filter is deserialised at most once per load) and its file's key.
+    */
+  private final case class StatRow(column: String, stats: ChunkStats, fileKey: String)
+
+  /** One batch's chunk files, their footers read once, and its chunk
+    * rows grouped per chunk (part_id, chunk_id) across columns and
+    * column files.
+    */
+  private[graft] final class BatchIndex(val files: Seq[IndexedFile]) {
+    private[TableMeta] val chunkRows: Iterable[Seq[StatRow]] =
+      files.flatMap(f => f.chunks.iterator.map(c =>
+        (c.part_id, c.chunk_id) -> StatRow(c.column, ChunkStats.of(c), f.key)))
+        .groupMap(_._1)(_._2).values
+    def rows: Iterator[EncodedChunk] = files.iterator.flatMap(_.chunks)
+  }
+
+  private val emptyBatch = new BatchIndex(Seq.empty)
+
+  /** Per-table index: batch id -> (listing signature, index). The
+    * signature is the batch dir's listing (name:len:mtime of each chunk
+    * file, `column=` dirs included), re-listed and compared on EVERY
+    * access, so an overwrite that reuses a batch id, a vacuum, or any
+    * other external change reloads that batch; a committed batch's files
+    * are otherwise immutable, so their footers are read once.
     */
   private val indexCache = new Lru[String, Map[Int, (String, BatchIndex)]](1024)
 
-  /** Test instrumentation: sidecar batch LOADS (index misses). */
+  /** Test instrumentation: batch index LOADS (footer reads of a batch). */
   private[graft] val indexLoads = new java.util.concurrent.atomic.AtomicLong(0)
 
-  /** The sidecar index of those `committed` batches that carry a sidecar
-    * (batches written before it are absent from the result). Driver-side:
-    * one listing of the sidecar root plus one per committed batch dir,
-    * and a parquet-mr read of a batch's sidecar files only when that
-    * batch's listing changed — never a Spark job.
+  /** The index of each of `batches` (empty for a batch without a
+    * `chunks/batch=N` dir). Driver-side: one listing of the chunk root
+    * plus the listings of each batch dir, and a footer read of each chunk
+    * file only when its batch's listing changed — never a Spark job. The
+    * write path calls it on the batch it just wrote (its manifest rows
+    * come from it), so a table's readers find the new batch loaded.
     */
-  private def index(spark: SparkSession, outDir: String, committed: Set[Int])
-      : Map[Int, BatchIndex] = {
+  def batchIndex(spark: SparkSession, outDir: String, batches: Set[Int]): Map[Int, BatchIndex] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val dir = new Path(EncodeJob.filestatsDir(outDir))
-    val fs = dir.getFileSystem(conf)
-    if (committed.isEmpty || !fs.exists(dir)) return Map.empty
-    // O(batches) presence probe, not a tree walk
-    val present = fs.listStatus(dir).iterator.map(_.getPath.getName).collect {
+    val root = new Path(EncodeJob.chunkDir(outDir))
+    val fs = root.getFileSystem(conf)
+    if (batches.isEmpty || !fs.exists(root)) return batches.iterator.map(_ -> emptyBatch).toMap
+    val present = fs.listStatus(root).iterator.map(_.getPath.getName).collect {
       case n if n.startsWith("batch=") => n.stripPrefix("batch=").toInt
     }.toSet
     val prev = indexCache.get(outDir).getOrElse(Map.empty)
-    // one bounded listing per COMMITTED batch dir (replaced/orphan
+    // one bounded listing per requested batch dir (replaced/orphan
     // batches stay unvisited)
-    val cur = (committed intersect present).iterator.map { b =>
-      val files = fs.listStatus(new Path(EncodeJob.filestatsBatchDir(outDir, b)))
-        .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-        .sortBy(_.getPath.getName)
-      val sig = files.map(st =>
-        s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}").mkString(",")
-      b -> (prev.get(b) match {
-        case Some(hit) if hit._1 == sig => hit
-        case _ =>
-          indexLoads.incrementAndGet()
-          (sig, new BatchIndex(files.map(_.getPath.toString).toSeq,
-            files.toSeq.flatMap(f => readSidecarFile(conf, f.getPath))))
-      })
-    }.toMap
+    val cur = (batches intersect present).iterator
+      .map(b => b -> loadBatch(fs, conf, outDir, b, prev.get(b))).toMap
     indexCache.put(outDir, prev.filter { case (b, _) => present(b) } ++ cur)
-    cur.map { case (b, (_, bi)) => b -> bi }
+    batches.iterator.map(b => b -> cur.get(b).fold(emptyBatch)(_._2)).toMap
   }
 
-  /** A sidecar parquet file's rows, read on the driver with parquet-mr.
-    * `nan_count` may be absent (batches written before it): that reads
-    * as None, the conservative keep.
-    */
-  private def readSidecarFile(conf: org.apache.hadoop.conf.Configuration, path: Path)
-      : Seq[SidecarEntry] = {
-    val reader = HadoopFiles.groupReader(path, conf).build()
-    val out = scala.collection.mutable.ArrayBuffer[SidecarEntry]()
-    try {
-      var g = reader.read()
-      while (g != null) {
-        def has(n: String) = g.getType.containsField(n) && g.getFieldRepetitionCount(n) > 0
-        def str(n: String) = if (has(n)) Some(g.getString(n, 0)) else None
-        val file = g.getString("file", 0)
-        out += SidecarEntry(g.getInteger("part_id", 0), g.getInteger("chunk_id", 0),
-          g.getString("column", 0),
-          new ChunkStats(str("min_val"), str("max_val"),
-            g.getInteger("null_count", 0), g.getInteger("row_count", 0),
-            if (has("nan_count")) Some(g.getInteger("nan_count", 0)) else None,
-            if (has("bloom")) Some(g.getBinary("bloom", 0).getBytes) else None),
-          file, normPath(file))
-        g = reader.read()
-      }
-    } finally reader.close()
-    out.toSeq
+  private def loadBatch(fs: FileSystem, conf: Configuration, outDir: String, b: Int,
+                        hit: Option[(String, BatchIndex)]): (String, BatchIndex) = {
+    def listed(dir: Path) = fs.listStatus(dir).filterNot { st =>
+      val n = st.getPath.getName
+      n.startsWith("_") || n.startsWith(".")
+    }
+    val files = listed(new Path(EncodeJob.chunkBatchDir(outDir, b))).flatMap { st =>
+      val name = st.getPath.getName
+      if (st.isDirectory && name.startsWith("column="))
+        listed(st.getPath).filter(_.isFile).map(f => f -> Option(name.stripPrefix("column=")))
+      else if (st.isFile) Array(st -> Option.empty[String])
+      else Array.empty[(FileStatus, Option[String])]
+    }.filter(f => ChunkFile.isChunkFileName(f._1.getPath.getName)).sortBy(_._1.getPath.toString)
+    val sig = files.map { case (st, c) =>
+      s"${c.getOrElse("")}/${st.getPath.getName}:${st.getLen}:${st.getModificationTime}"
+    }.mkString(",")
+    hit match {
+      case Some(h) if h._1 == sig => h
+      case _ =>
+        indexLoads.incrementAndGet()
+        (sig, new BatchIndex(files.toSeq.map { case (st, c) =>
+          new IndexedFile(st.getPath.toString, c,
+            ChunkFile.chunks(st.getPath, conf, st.getLen, c.orNull))
+        }))
+    }
   }
 
-  /** Scheme-less path: sidecars written before the full-URI fix stored
-    * stripped paths, newer ones keep the scheme — normalizing both the
-    * map keys and the probe makes them compare equal.
+  /** Scheme-less path: the key the scan's file-keep lookup matches on,
+    * whether a path carries its scheme or not.
     */
   private[graft] def normPath(p: String): String = new Path(p).toUri.getPath
 
-  /** Chunk-file list for `committed` from the sidecar index — None when
-    * any committed batch predates the sidecar (callers fall back to the
-    * legacy chunk-tree walk).
-    */
-  def sidecarChunkFiles(spark: SparkSession, outDir: String, committed: Set[Int])
-      : Option[Seq[(Int, Option[String], String)]] = {
-    val idx = index(spark, outDir, committed)
-    if (idx.size < committed.size) None
-    else Some(idx.toSeq.sortBy(_._1).flatMap { case (b, bi) =>
-      bi.files.map(f => (b, """column=([^/]+)/""".r.findFirstMatchIn(f).map(_.group(1)), f))
-    })
-  }
-
-  /** The committed batches' sidecar parquet files — empty when any
-    * committed batch predates the sidecar (a mix would under-count).
-    */
-  def sidecarFiles(spark: SparkSession, outDir: String, committed: Set[Int]): Seq[String] = {
-    val idx = index(spark, outDir, committed)
-    if (idx.size < committed.size) Seq.empty
-    else idx.valuesIterator.flatMap(_.sidecarFiles).toSeq.sorted
-  }
-
-  /** A chunk is kept iff every predicate keeps its sidecar row for the
+  /** A chunk is kept iff every predicate keeps its row for the
     * predicate's column; a chunk with no row for that column (written
     * before the column existed) keeps.
     */
-  private def chunkKept(rows: Seq[SidecarEntry], preds: Seq[ChunkPrune]): Boolean =
+  private def chunkKept(rows: Seq[StatRow], preds: Seq[ChunkPrune]): Boolean =
     preds.forall(p => rows.forall(r => r.column != p.column || p.keepsChunk(r.stats)))
 
-  /** PLAN-time file keep, evaluated on the driver against the sidecar
-    * index with the row-side `ChunkPrune.keepsChunk`: scheme-less chunk
-    * file -> kept iff any of its chunks is kept. Chunk keep is decided per
-    * (batch, part_id, chunk_id) across columns, so on the
-    * column-partitioned layout the sibling column files of a pruned chunk
-    * are pruned too. Files of batches without a sidecar are absent (the
-    * caller keeps them).
+  /** PLAN-time file keep, evaluated on the driver against the index with
+    * the row-side `ChunkPrune.keepsChunk`: scheme-less chunk file -> kept
+    * iff any of its chunks is kept. Chunk keep is decided per (batch,
+    * part_id, chunk_id) across columns, so on the column-partitioned
+    * layout the sibling column files of a pruned chunk are pruned too.
     */
-  def fileKeep(spark: SparkSession, outDir: String, committed: Set[Int],
-               preds: Seq[ChunkPrune]): Map[String, Boolean] = {
+  def fileKeep(index: Map[Int, BatchIndex], preds: Seq[ChunkPrune]): Map[String, Boolean] = {
     val keep = scala.collection.mutable.Map[String, Boolean]()
-    index(spark, outDir, committed).valuesIterator.foreach { bi =>
-      bi.chunks.valuesIterator.foreach { rows =>
+    index.valuesIterator.foreach { bi =>
+      bi.chunkRows.foreach { rows =>
         val k = chunkKept(rows, preds)
         rows.foreach(r => keep(r.fileKey) = k || keep.getOrElse(r.fileKey, false))
       }
@@ -244,32 +221,55 @@ object TableMeta {
     keep.toMap
   }
 
-  /** Rows of the chunks `fileKeep` keeps, per committed batch: at most
-    * what a row scan with `preds` decodes. None when any committed batch
-    * predates the sidecar.
+  /** Rows of the chunks `fileKeep` keeps, per batch: at most what a row
+    * scan with `preds` decodes.
     */
-  def keptRows(spark: SparkSession, outDir: String, committed: Set[Int],
-               preds: Seq[ChunkPrune]): Option[Map[Int, Long]] = {
-    val idx = index(spark, outDir, committed)
-    if (idx.size < committed.size) None
-    else Some(idx.map { case (b, bi) =>
-      b -> bi.chunks.valuesIterator.filter(chunkKept(_, preds))
+  def keptRows(index: Map[Int, BatchIndex], preds: Seq[ChunkPrune]): Map[Int, Long] =
+    index.map { case (b, bi) =>
+      b -> bi.chunkRows.iterator.filter(chunkKept(_, preds))
         .map(_.iterator.map(_.stats.row_count.toLong).max).sum
-    })
-  }
+    }
 
   /** Batches of `committed` that can hold a row matching every predicate
     * — the DML pruning decision, from the same index and keep logic as
-    * `fileKeep`. Batches without a sidecar, or whose sidecar has no rows,
-    * count as matching.
+    * `fileKeep`. A batch without chunk rows counts as matching.
     */
   def batchesPossiblyMatching(spark: SparkSession, outDir: String, committed: Set[Int],
                               preds: Seq[ChunkPrune]): Set[Int] = {
     if (preds.isEmpty) return committed
-    val idx = index(spark, outDir, committed)
-    committed.filter(b => idx.get(b).forall(bi =>
-      bi.chunks.isEmpty || bi.chunks.valuesIterator.exists(chunkKept(_, preds))))
+    val idx = batchIndex(spark, outDir, committed)
+    committed.filter(b => idx(b).chunkRows.isEmpty || idx(b).chunkRows.exists(chunkKept(_, preds)))
   }
+
+  /** True when every batch of `batches` is in the writer's row-grouped
+    * layout, the one the scan reads: it has chunk files, and in each file
+    * every chunk group is `nCols` adjacent rows that never reappear
+    * (`runsOk`). A batch whose dir lists no chunk file was rewritten into
+    * another layout. Decides between the scan and the shuffled decode.
+    */
+  def writerLayout(spark: SparkSession, outDir: String, batches: Set[Int], nCols: Int): Boolean =
+    batchIndex(spark, outDir, batches).valuesIterator.forall(bi =>
+      bi.files.nonEmpty && runsOk(bi.files.map(_.chunks), nCols))
+
+  /** Per file, in file order: each (part_id, chunk_id) is one run of
+    * exactly `nCols` rows, and no key appears in two runs (split or
+    * interleaved groups). An empty file passes.
+    */
+  private[graft] def runsOk(files: Seq[Array[EncodedChunk]], nCols: Int): Boolean =
+    files.forall { chunks =>
+      val seen = scala.collection.mutable.HashSet[Long]()
+      var curKey = Long.MinValue
+      var run = 0
+      chunks.forall { c =>
+        val key = (c.part_id.toLong << 32) | (c.chunk_id.toLong & 0xffffffffL)
+        if (key == curKey) { run += 1; true }
+        else {
+          val ok = (run == 0 || run == nCols) && seen.add(key)
+          curKey = key; run = 1
+          ok
+        }
+      } && (run == 0 || run == nCols)
+    }
 
   /** Drop every cached entry (tests; external tampering recovery). */
   def invalidateAll(): Unit = { cache.clear(); indexCache.clear() }

@@ -8,10 +8,7 @@ import org.apache.parquet.example.data.Group
 import org.apache.parquet.filter2.compat.FilterCompat
 import org.apache.parquet.filter2.predicate.{FilterApi, FilterPredicate}
 import org.apache.parquet.hadoop.ParquetReader
-import org.apache.parquet.hadoop.api.{InitContext, ReadSupport}
-import org.apache.parquet.hadoop.example.GroupReadSupport
 import org.apache.parquet.io.api.Binary
-import org.apache.parquet.schema.MessageType
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{DataFrame, SQLContext, SaveMode, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -64,7 +61,7 @@ import scala.jdk.CollectionConverters._
   * per SparkContext while the conf is unchanged) and open each file
   * with it: a graft container chunk file (`ChunkFile`) with one tail read
   * for its footer and one read per stream of a kept chunk group, a
-  * parquet-generation chunk file or a sidecar through `HadoopInputFile`
+  * parquet-generation chunk file through `HadoopInputFile`
   * (`HadoopFiles.groupReader`). Task set-up is opening its files, not
   * deserializing a conf or parsing Hadoop's default XML resources. A
   * small row scan can skip tasks altogether: `GraftLocalScan` decodes it
@@ -336,11 +333,11 @@ final class GraftScanBuilder(outDir: String, logicalSchema: StructType,
   override def pushLimit(n: Int): Boolean = { limit = n; true }
 
   /** Ungrouped MIN/MAX/COUNT answered from chunk statistics alone — the
-    * stream blobs are never read (chunk-file footers or sidecar stats), so a
-    * 100 TB `count(*)`/`min`/`max` costs metadata IO only. Partial
-    * pushdown: each chunk contributes one partial row; Spark's final
-    * aggregate merges them, so multi-batch/multi-file dirs need no
-    * driver-side merge logic here.
+    * stream blobs are never read (the chunk-file footers of TableMeta's
+    * index, on the driver), so a 100 TB `count(*)`/`min`/`max` costs
+    * metadata IO only. Partial pushdown: each chunk contributes one
+    * partial row; Spark's final aggregate merges them, so
+    * multi-batch/multi-file dirs need no driver-side merge logic here.
     *
     * Refused (→ Spark runs the normal scan) whenever exactness isn't
     * guaranteed by the written stats: GROUP BY (chunks span groups),
@@ -350,8 +347,8 @@ final class GraftScanBuilder(outDir: String, logicalSchema: StructType,
     * exclude NaN from the range but record `nan_count`, which is exactly
     * what Spark's NaN-above-+Inf ordering needs (MAX = NaN iff any NaN;
     * MIN = NaN only when every non-null value is NaN). Directories
-    * written before nan_count existed fail loudly in the partial reader
-    * rather than answering wrong. Spark itself never offers aggregates
+    * written before nan_count existed fail loudly at planning rather
+    * than answering wrong. Spark itself never offers aggregates
     * here when filters stayed residual, so no interaction with filter
     * pushdown (every graft filter is residual by design).
     */
@@ -525,14 +522,17 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
   }
 
   /** (rows, raw bytes) of each visible batch, from the manifest. */
-  private def batchTotals: Map[Int, (Long, Long)] = {
-    val snap = graft.spark.TableMeta.snapshot(spark, outDir)
+  private def batchTotals: Map[Int, (Long, Long)] =
+    totalsOf(graft.spark.TableMeta.snapshot(spark, outDir), visibleBatches)
+
+  private def totalsOf(snap: graft.spark.TableMeta.Snapshot,
+                       batches: Set[Int]): Map[Int, (Long, Long)] = {
     // a compaction batch is visible the instant its record lands, which
     // can be BEFORE its manifest metrics rows — fall back to the record's
     // own totals so the table never looks empty to the broadcast planner
     val recorded = snap.compactions
       .map(c => c.batch -> (c.rows, c.rawBytes)).toMap
-    visibleBatches.iterator.map(b =>
+    batches.iterator.map(b =>
       b -> snap.perBatch.getOrElse(b, recorded.getOrElse(b, (0L, 0L)))).toMap
   }
 
@@ -599,32 +599,27 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     (pushed ++ runtimeFilters).flatMap(ChunkPrune.from(_, specs))
   }
 
-  /** PLAN-time file pruning from the filestats sidecar: a file none of
+  /** PLAN-time file pruning from the chunk-file footers: a file none of
     * whose chunks passes the predicates is never opened — no footer read,
     * no page IO. Evaluated on the driver by TableMeta against its cached
-    * sidecar index, with the same `keepsChunk` the partition reader
-    * applies to opened chunks; chunk keep is decided per chunk ACROSS
-    * columns, so on the column-partitioned layout a predicate on one
-    * column prunes the sibling column files of the same chunks too. Files
-    * without sidecar coverage (older dirs) default to kept.
+    * index, with the same `keepsChunk` the partition reader applies to
+    * opened chunks; chunk keep is decided per chunk ACROSS columns, so on
+    * the column-partitioned layout a predicate on one column prunes the
+    * sibling column files of the same chunks too.
     */
-  private def fileKeep(preds: Array[ChunkPrune], committed: Set[Int]): Map[String, Boolean] =
+  private def fileKeep(preds: Array[ChunkPrune],
+                       index: Map[Int, graft.spark.TableMeta.BatchIndex]): Map[String, Boolean] =
     if (preds.isEmpty) Map.empty
-    else graft.spark.TableMeta.fileKeep(spark, outDir, committed, preds.toSeq)
+    else graft.spark.TableMeta.fileKeep(index, preds.toSeq)
 
-  /** Chunk-file list for `committed` from the filestats SIDECAR — the
-    * table's own metadata, indexed on the driver by TableMeta — so scan
-    * planning never lists the chunk tree: at 100 TB / millions of files on
-    * an object store, an O(files) recursive driver listing per query plan
-    * is the Hive-era bottleneck table formats exist to remove. None when
-    * any committed batch predates the sidecar (caller falls back to the
-    * legacy walk). Cf. the reference's FileTail idea — never list, read
-    * the metadata (FileTail.cs:22-54) — lifted from file level to table
-    * level.
+  /** TableMeta's index of `batches`: each one's chunk files and footers. */
+  private[source] def indexOf(batches: Set[Int]): Map[Int, graft.spark.TableMeta.BatchIndex] =
+    graft.spark.TableMeta.batchIndex(spark, outDir, batches)
+
+  /** The visible batches' index, read once per scan: pinned with
+    * `visibleBatches`, whose committed files do not change.
     */
-  private def sidecarChunkFiles(committed: Set[Int])
-      : Option[Seq[(Int, Option[String], String)]] =
-    graft.spark.TableMeta.sidecarChunkFiles(spark, outDir, committed)
+  private lazy val visibleIndex = indexOf(visibleBatches)
 
   /** The partitions of the current filter set, planned once for every
     * caller: `BatchScanExec`'s planning or the driver answer's decode
@@ -633,29 +628,30 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
   private var planned: Array[InputPartition] = _
 
   override def planInputPartitions(): Array[InputPartition] = synchronized {
-    if (planned == null) planned = planPartitionsFor(visibleBatches, _ => true)
+    if (planned == null) planned = planPartitionsFor(visibleIndex)
     planned
   }
 
   /** The planned partitions of a row scan that decodes at most
-    * `maxBytes`, or None (an aggregate scan, a batch without a sidecar
-    * index, or more bytes). The decoded size is bounded without opening
-    * a file: the rows of the chunks the predicates keep (the sidecar
-    * index, as `fileKeep` prunes) at each batch's raw bytes per row
-    * (manifest), whole rows whichever columns are read. Stored bytes
-    * would not bound it: a constant column shrinks a thousandfold.
+    * `maxBytes`, or None (an aggregate scan, or more bytes). The decoded
+    * size is bounded without opening a file: the rows of the chunks the
+    * predicates keep (TableMeta's index, as `fileKeep` prunes) at each
+    * batch's raw bytes per row (manifest), whole rows whichever columns
+    * are read. Stored bytes would not bound it: a constant column
+    * shrinks a thousandfold.
     */
   private[source] def partitionsWithin(maxBytes: Long): Option[Array[GraftInputPartition]] =
     if (aggSlots.isDefined) None
-    else graft.spark.TableMeta.keptRows(spark, outDir, visibleBatches, activePreds.toSeq)
-      .filter { kept =>
-        val totals = batchTotals
-        kept.iterator.map { case (b, n) =>
+    else {
+      val totals = batchTotals
+      val bytes = graft.spark.TableMeta.keptRows(visibleIndex, activePreds.toSeq)
+        .iterator.map { case (b, n) =>
           val (rows, raw) = totals.getOrElse(b, (0L, 0L))
           if (n == 0) 0.0 else if (rows <= 0) Double.PositiveInfinity else n.toDouble * raw / rows
-        }.sum <= maxBytes
-      }
-      .map(_ => planInputPartitions().map(_.asInstanceOf[GraftInputPartition]))
+        }.sum
+      if (bytes > maxBytes) None
+      else Some(planInputPartitions().map(_.asInstanceOf[GraftInputPartition]))
+    }
 
   /** A row reader of one planned partition on the driver, opened with
     * the session's Hadoop conf (tasks get theirs through
@@ -665,13 +661,13 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     new GraftPartitionReader(part, TableEncoder.subsetSpecs(allSpecs, emitColumns),
       required.fields.isEmpty, activePreds, limit, spark.sparkContext.hadoopConfiguration)
 
-  /** Batch planning shared by the one-shot scan (visible = committed with
-    * compactions/time-travel applied, batchKeep = all) and the
-    * micro-batch stream (visible = original append batches, batchKeep =
-    * one batch-id range).
+  /** Batch planning shared by the one-shot scan (the index of the
+    * visible batches: committed with compactions/time-travel applied) and
+    * the micro-batch stream (the index of one batch-id range of the
+    * original append batches).
     */
-  private[source] def planPartitionsFor(committed: Set[Int],
-                                        batchKeep: Int => Boolean): Array[InputPartition] = {
+  private[source] def planPartitionsFor(
+      batchIndex: Map[Int, graft.spark.TableMeta.BatchIndex]): Array[InputPartition] = {
     val specs = TableEncoder.subsetSpecs(allSpecs, emitColumns)
     val dir = new Path(EncodeJob.chunkDir(outDir))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -680,60 +676,43 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     // through to its identity partial (count 0). A dir with COMMITTED
     // batches but no chunk dir is corruption — fail loudly, never
     // silently serve an empty table
-    require(fs.exists(dir) || committed.isEmpty,
-      s"$outDir has committed batches ${committed.toSeq.sorted.mkString(",")} " +
+    require(fs.exists(dir) || batchIndex.isEmpty,
+      s"$outDir has committed batches ${batchIndex.keys.toSeq.sorted.mkString(",")} " +
         "but no chunk dir — externally deleted?")
-    // plan from the table's own metadata (filestats sidecar) whenever
-    // every committed batch carries one; the recursive chunk-tree walk is
-    // only the legacy-dir fallback — O(files) driver listing per plan is
-    // the bottleneck manifests exist to remove
-    val files: Seq[(Int, Option[String], String)] =
-      sidecarChunkFiles(committed) match {
-        case Some(list) => list.filter(f => batchKeep(f._1))
-        case None =>
-          EncodeJob.chunkTreeWalks.incrementAndGet()
-          val buf = scala.collection.mutable.ArrayBuffer[(Int, Option[String], String)]()
-          if (fs.exists(dir)) {
-            val it = fs.listFiles(dir, /* recursive */ true)
-            while (it.hasNext) {
-              val f = it.next()
-              val p = f.getPath.toString
-              if (graft.spark.ChunkFile.isChunkFileName(f.getPath.getName)) {
-                val batch = """batch=(\d+)""".r.findFirstMatchIn(p).map(_.group(1).toInt)
-                val column = """column=([^/]+)/""".r.findFirstMatchIn(p).map(_.group(1))
-                batch.filter(b => committed.contains(b) && batchKeep(b))
-                  .foreach(b => buf += ((b, column, p)))
-              }
-            }
-          }
-          buf.toSeq
-      }
-    val keep = if (aggSlots.isDefined) Map.empty[String, Boolean]
-               else fileKeep(activePreds, committed)
-    def kept(path: String): Boolean = keep.getOrElse(graft.spark.TableMeta.normPath(path), true)
-    if (aggSlots.isDefined) {
-      // aggregate mode: chunk groups need no column alignment (each
-      // column's metadata row contributes its own partial independently),
-      // so one partition per FILE maximizes parallelism; zero files →
-      // one identity partition so the final merge still sees count=0.
-      // Prefer the filestats SIDECAR files when every committed batch has
-      // one: same stat fields, orders of magnitude smaller, and the chunk
-      // files themselves are never opened at all.
-      val sidecar = graft.spark.TableMeta.sidecarFiles(spark, outDir, committed)
-      if (sidecar.nonEmpty)
-        return sidecar.map(f =>
-          GraftInputPartition(Array(f), Seq.empty): InputPartition).toArray
-      // the designated COUNT(*) column's rows must be readable even when
-      // it isn't an emit column (post-ALTER dirs)
-      val wanted = specs.map(_.name).toSet + aggDesignated(committed)
-      val parts: Array[InputPartition] =
-        if (files.exists(_._2.isDefined))
-          files.filter(f => f._2.exists(wanted.contains)).sortBy(_._3)
-            .map(f => GraftInputPartition(Array(f._3), Seq(f._2.get))).toArray
-        else files.sortBy(_._3).map(f => GraftInputPartition(Array(f._3), Seq.empty)).toArray
-      return if (parts.nonEmpty) parts
-             else Array[InputPartition](GraftInputPartition(Array.empty, Seq.empty))
+    // plan from the table's own metadata, TableMeta's index of each
+    // batch's chunk files and their footers; never a walk of the chunk tree
+    val index = batchIndex.toSeq.sortBy(_._1)
+    // the same corruption per batch: rows its commit records, no chunk
+    // row to read them from. A batch a compaction replaced is exempt:
+    // vacuum deletes its files, and time travel to it then reads nothing
+    val snap = graft.spark.TableMeta.snapshot(spark, outDir)
+    val recorded = totalsOf(snap, batchIndex.keySet)
+    val replaced = snap.compactions.flatMap(_.replaces).toSet
+    val lost = index.collect {
+      case (b, bi) if recorded(b)._1 > 0 && bi.rows.isEmpty && !replaced(b) => b
     }
+    require(lost.isEmpty, s"$outDir: committed batches ${lost.mkString(",")} record rows but " +
+      s"${lost.map(EncodeJob.chunkBatchDir(outDir, _)).mkString(", ")} list no chunk file — " +
+      "externally deleted?")
+    if (aggSlots.isDefined) {
+      // aggregate mode: every partial row is computed here from the
+      // index, one partition per batch, so no task opens a file. The
+      // designated COUNT(*) column's rows count even when it isn't an
+      // emit column (post-ALTER dirs); no batch → one identity partition
+      // so the final merge still sees count=0
+      val partials = new AggPartials(aggSlots.get, aggDesignated(batchIndex.keySet), specs)
+      val wanted = specs.map(_.name).toSet + partials.designated
+      val parts = index.map { case (_, bi) =>
+        GraftAggPartition(bi.rows.filter(c => wanted(c.column)).map(partials.row).toArray)
+      }
+      return (if (parts.nonEmpty) parts else Seq(GraftAggPartition(Array(partials.identity))))
+        .toArray
+    }
+    val files: Seq[(Int, Option[String], String)] = index.flatMap { case (b, bi) =>
+      bi.files.filter(_.chunks.nonEmpty).map(f => (b, f.column, f.path))
+    }
+    val keep = fileKeep(activePreds, batchIndex)
+    def kept(path: String): Boolean = keep.getOrElse(graft.spark.TableMeta.normPath(path), true)
     val specNames = specs.map(_.name).toSet
     // the requested columns batch `b` wrote, per the manifest lineage:
     // every chunk group assembled from its files must carry all of them
@@ -755,7 +734,7 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
       files.filter(f => f._2.exists(c =>
           wanted.contains(c) || driverByBatch.get(f._1).contains(c)))
         .groupBy(f => (f._1, taskIndexOf(f._3)))
-        // whole-GROUP pruning: sidecar chunk-keep is decided across
+        // whole-GROUP pruning: the index's chunk keep is decided across
         // columns, so a pruned predicate-column file means every sibling
         // column file of those chunks is dead too — dropping the group
         // keeps the zip invariant intact
@@ -839,15 +818,11 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     }
   }
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    val specs = TableEncoder.subsetSpecs(allSpecs, emitColumns)
-    val conf = HadoopFiles.broadcastConf(spark)
-    aggSlots match {
-      case Some(slots) =>
-        GraftAggReaderFactory(slots, aggDesignated(visibleBatches), specs, conf)
-      case None =>
-        GraftReaderFactory(specs, required.fields.isEmpty, activePreds, limit, conf)
-    }
+  override def createReaderFactory(): PartitionReaderFactory = aggSlots match {
+    case Some(slots) => GraftAggReaderFactory(slots)
+    case None =>
+      GraftReaderFactory(TableEncoder.subsetSpecs(allSpecs, emitColumns), required.fields.isEmpty,
+        activePreds, limit, HadoopFiles.broadcastConf(spark))
   }
 
   /** `spark.readStream.format("graft").load(outDir)` — committed encode
@@ -906,7 +881,7 @@ final class GraftMicroBatchStream(scan: GraftScan)
       s"stream needs batches ${vacuumed.toSeq.sorted.mkString(",")} which were " +
         "compacted away and vacuumed — batch-read the compacted table or start a " +
         "FRESH stream (new checkpoint), which serves the compacted snapshot instead")
-    scan.planPartitionsFor(visible, b => b > s && b <= e)
+    scan.planPartitionsFor(scan.indexOf(visible.filter(b => b > s && b <= e)))
   }
   override def createReaderFactory(): PartitionReaderFactory = scan.createReaderFactory()
   override def commit(offset: Offset): Unit = () // batches are immutable once committed
@@ -933,10 +908,10 @@ final case class GraftInputPartition(files: Array[String], columns: Seq[String],
     extends InputPartition
 
 /** The chunk metadata a pruning decision reads: a view of an
-  * EncodedChunk (row side, after the file is open) or of a filestats
-  * sidecar row (plan side, before anything is opened). The Bloom filter
-  * is deserialised on first use and at most once per view, so the
-  * driver's sidecar index pays it once per committed batch.
+  * EncodedChunk, opened by the partition reader or held by the driver's
+  * index (TableMeta). The Bloom filter is deserialised on first use and
+  * at most once per view, so the driver's index pays it once per batch
+  * load.
   */
 final class ChunkStats(val min_val: Option[String], val max_val: Option[String],
                        val null_count: Int, val row_count: Int, val nan_count: Option[Int],
@@ -955,7 +930,7 @@ object ChunkStats {
   * comes from Spark re-applying the exact residual filter above the scan.
   * `keepsChunk` is the ONE keep implementation: the partition reader
   * applies it to each opened chunk, and the driver applies it at plan
-  * time to the sidecar index (TableMeta) for file and batch pruning.
+  * time to the chunk-file index (TableMeta) for file and batch pruning.
   */
 sealed trait ChunkPrune extends Serializable {
   def column: String
@@ -1010,8 +985,8 @@ final case class PrunePred(column: String, logical: String,
     * them. Spark orders NaN above every value (nanSafeCompareDoubles), so
     * a predicate whose match set can contain NaN (`x > v`, `x >= v`,
     * `x = NaN`) must keep any chunk that may hold NaN rows, no matter
-    * what the NaN-free range says. Absent nan_count (pre-sidecar chunks)
-    * keeps — conservative.
+    * what the NaN-free range says. Absent nan_count (chunks written
+    * before it existed) keeps — conservative.
     */
   private def nanMayMatch(c: ChunkStats): Boolean =
     nanKeeps && c.nan_count.forall(_ > 0)
@@ -1209,103 +1184,52 @@ final case class GraftReaderFactory(specs: Array[ColumnSpec], emitEmptyRows: Boo
       emitEmptyRows, preds, limit, conf.value.value)
 }
 
-final case class GraftAggReaderFactory(slots: Array[AggSlot], designated: String,
-                                       specs: Array[ColumnSpec],
-                                       conf: Broadcast[SerializableConfiguration])
-    extends PartitionReaderFactory {
+final case class GraftAggReaderFactory(slots: Array[AggSlot]) extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
-    new GraftAggPartitionReader(partition.asInstanceOf[GraftInputPartition], slots,
-      designated, specs, conf.value.value)
+    new GraftAggPartitionReader(partition.asInstanceOf[GraftAggPartition], slots)
 }
 
-/** Metadata-only partial aggregates: emits one partial row per chunk
-  * metadata record of the partition's file, the stream blobs never read.
-  * A chunk file of the graft container is read by its footer alone; a
-  * filestats sidecar or a parquet-generation chunk file through a
-  * parquet projection that drops `streams`, `seg_lens` and the stride
-  * arrays. No alignment or grouping: each column's record fills only
-  * its own slots (other slots null, which Spark's merging MIN/SUM
-  * ignore), and row_count flows exactly once per chunk via the
-  * designated column. An empty-file partition emits the merge identity
-  * (counts 0, min/max null) so `count(*)` over an empty table is 0, not
-  * null.
-  */
-final class GraftAggPartitionReader(part: GraftInputPartition, slots: Array[AggSlot],
-                                    designated: String, specs: Array[ColumnSpec],
-                                    conf: Configuration)
-    extends PartitionReader[InternalRow] {
+/** One batch's partial aggregate rows, computed on the driver. */
+final case class GraftAggPartition(rows: Array[InternalRow]) extends InputPartition
 
-  private val colPart = part.columns.nonEmpty
+/** Emits a partition's partial aggregate rows: the planner computed them
+  * from the chunk metadata, so the task opens no file.
+  */
+final class GraftAggPartitionReader(part: GraftAggPartition, slots: Array[AggSlot])
+    extends PartitionReader[InternalRow] {
+  private val proj = UnsafeProjection.create(slots.map(_.outType))
+  private var i = -1
+  override def next(): Boolean = { i += 1; i < part.rows.length }
+  override def get(): InternalRow = proj(part.rows(i))
+  override def close(): Unit = ()
+}
+
+/** Metadata-only partial aggregates: one partial row per chunk metadata
+  * record (an `EncodedChunk` of TableMeta's index, its stream blobs never
+  * read). No alignment or grouping: each column's record fills only its
+  * own slots (other slots null, which Spark's merging MIN/SUM ignore),
+  * and row_count flows exactly once per chunk via the designated column.
+  * `identity` is the merge identity (counts 0, min/max null), so
+  * `count(*)` over an empty table is 0, not null.
+  */
+private[source] final class AggPartials(slots: Array[AggSlot], val designated: String,
+                                        specs: Array[ColumnSpec]) {
   // designated may fall outside the emit specs on post-ALTER dirs (it
   // must exist in EVERY batch; emit columns need not)
-  private val wanted = specs.map(_.name).toSet + designated
   private val specByName = specs.map(s => s.name -> s).toMap
-  private val metaFields = Set("column", "row_count", "null_count", "min_val", "max_val", "nan_count")
 
-  private val proj = UnsafeProjection.create(slots.map(_.outType))
-  private var closeFile: () => Unit = () => ()
-
-  private val partials: Iterator[InternalRow] =
-    if (part.files.isEmpty) {
-      val row = new GenericInternalRow(slots.length)
-      var i = 0
-      while (i < slots.length) {
-        if (slots(i).kind == "countstar" || slots(i).kind == "count") row.update(i, 0L)
-        i += 1
-      }
-      Iterator.single(row)
-    } else {
-      val path = new Path(part.files(0))
-      graft.spark.ChunkFile.open(path, conf, wanted,
-          column = if (colPart) part.columns.head else null) match {
-        case Some(file) =>
-          file.close()
-          file.entries.iterator.map(_.chunk).filter(c => wanted.contains(c.column)).map(c =>
-            partialRow(c.column, c.row_count, c.null_count, c.min_val, c.max_val,
-              Some(c.nan_count.getOrElse(0).toLong)))
-        case None => parquetPartials(path)
-      }
+  def identity: InternalRow = {
+    val row = new GenericInternalRow(slots.length)
+    var i = 0
+    while (i < slots.length) {
+      if (slots(i).kind == "countstar" || slots(i).kind == "count") row.update(i, 0L)
+      i += 1
     }
-
-  /** A sidecar's or a parquet-generation chunk file's partial rows. */
-  private def parquetPartials(path: Path): Iterator[InternalRow] = {
-    // projection from the FILE's own schema (types/repetitions match by
-    // construction, and fields absent in older files are simply dropped)
-    val metaOnly = new GroupReadSupport {
-      override def init(context: InitContext): ReadSupport.ReadContext = {
-        val file = context.getFileSchema
-        new ReadSupport.ReadContext(new MessageType(file.getName,
-          file.getFields.asScala.filter(f => metaFields(f.getName)).asJava))
-      }
-    }
-    val b = HadoopFiles.groupReader(path, conf, metaOnly)
-    val reader = (if (colPart) b
-      else b.withFilter(FilterCompat.get(wanted.toSeq
-        .map(n => FilterApi.eq(FilterApi.binaryColumn("column"),
-          Binary.fromString(n)): FilterPredicate)
-        .reduce(FilterApi.or)))).build()
-    closeFile = () => reader.close()
-    Iterator.continually(reader.read()).takeWhile(_ != null).flatMap { g =>
-      val colName =
-        if (colPart) part.columns.head
-        else if (g.getFieldRepetitionCount("column") > 0) g.getString("column", 0) else null
-      def has(name: String) = g.getType.containsField(name) && g.getFieldRepetitionCount(name) > 0
-      def stat(name: String): Option[String] = if (has(name)) Some(g.getString(name, 0)) else None
-      if (colName == null || !wanted.contains(colName)) None
-      else Some(partialRow(colName, g.getInteger("row_count", 0).toLong,
-        g.getInteger("null_count", 0).toLong, stat("min_val"), stat("max_val"),
-        // a file written before nan_count existed has no such field
-        if (!g.getType.containsField("nan_count")) None
-        else Some(if (has("nan_count")) g.getInteger("nan_count", 0).toLong else 0L)))
-    }
+    row
   }
 
-  private var current: InternalRow = _
-
-  override def next(): Boolean =
-    partials.hasNext && { current = proj(partials.next()); true }
-  override def get(): InternalRow = current
-  override def close(): Unit = closeFile()
+  def row(c: EncodedChunk): InternalRow =
+    partialRow(c.column, c.row_count, c.null_count, c.min_val, c.max_val, c.nan_count.map(_.toLong))
 
   /** One chunk's partial row; `nanCount` is None when the file predates
     * the count.
@@ -1709,7 +1633,8 @@ object ChunkGroupParser {
       compression = optString("compression"),
       seg_lens = segLens,
       stride_null_counts = intList("stride_null_counts"),
-      bloom = if (has("bloom")) Some(g.getBinary("bloom", 0).getBytes) else None)
+      bloom = if (has("bloom")) Some(g.getBinary("bloom", 0).getBytes) else None,
+      nan_count = if (has("nan_count")) Some(g.getInteger("nan_count", 0)) else None)
   }
 }
 

@@ -202,9 +202,10 @@ class ChunkFileSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Rewrites batch `b`'s chunk files as the parquet writer before the
     * container wrote them: one parquet file per chunk file, same name and
-    * row order, `column` only in row-grouped files. The sidecar is
-    * re-pointed at the parquet files, or dropped (a table older than
-    * sidecars) when `keepSidecar` is false.
+    * row order, `column` only in row-grouped files. With `keepSidecar`,
+    * the batch also gets the filestats sidecar and `_filemeta.json` those
+    * engines wrote next to it (pointing at the parquet files); without,
+    * it is a table older than sidecars. Nothing reads either.
     */
   private def toLegacy(out: String, b: Int, keepSidecar: Boolean): Unit = {
     val files = walk(new File(EncodeJob.chunkBatchDir(out, b)))
@@ -220,16 +221,13 @@ class ChunkFileSpec extends AnyFunSuite with BeforeAndAfterAll {
       f.delete()
       new File(f.getParentFile, s".${f.getName}.crc").delete()
     }
-    val side = new File(EncodeJob.filestatsBatchDir(out, b))
-    if (!keepSidecar) { walk(side).foreach(_.delete()); side.delete() }
-    else {
-      val staged = s"$tmp/sidecar-${System.nanoTime()}"
-      spark.read.parquet(side.getPath)
-        .withColumn("file", regexp_replace(col("file"), "\\.graft$", ".parquet"))
-        .coalesce(1).write.parquet(staged)
-      walk(side).filterNot(_.getName == "_filemeta.json").foreach(_.delete())
-      new File(staged).listFiles().filter(_.getName.endsWith(".parquet"))
-        .foreach(f => move(f, new File(side, f.getName)))
+    if (keepSidecar) {
+      val side = EncodeJob.filestatsBatchDir(out, b)
+      EncodeJob.readChunkFiles(spark, EncodeJob.chunkBatchDir(out, b))
+        .select(col("part_id"), col("chunk_id"), col("column"), col("min_val"), col("max_val"),
+          col("null_count"), col("row_count"), col("nan_count"), col("bloom"),
+          input_file_name().as("file"))
+        .coalesce(1).write.parquet(side)
       val largest = walk(new File(EncodeJob.chunkBatchDir(out, b)))
         .filter(_.getName.endsWith(".parquet")).map(_.length).max
       Files.write(new File(side, "_filemeta.json").toPath,
@@ -247,6 +245,13 @@ class ChunkFileSpec extends AnyFunSuite with BeforeAndAfterAll {
       new String(b, "US-ASCII")
     } finally raf.close()
   }
+
+  /** Local paths of the chunk files a graft scan of `df` plans. */
+  private def plannedFiles(df: DataFrame): Set[String] =
+    df.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b.inputPartitions
+    }.flatten.flatMap(_.asInstanceOf[graft.spark.source.GraftInputPartition].files)
+      .map(f => new Path(f).toUri.getPath).toSet
 
   private def visibleChunkFiles(out: String): Seq[File] =
     EncodeJob.committedBatches(spark, out).toSeq.flatMap(b =>
@@ -280,6 +285,18 @@ class ChunkFileSpec extends AnyFunSuite with BeforeAndAfterAll {
       checkReads(frame(0, 2000))
       assert(canon(spark.read.format("graft").option("asOfBatch", "0").load(o)) sameElements
         canon(frame(0, 1000)))
+
+      // the parquet batch is indexed through its own files' metadata: a
+      // Bloom point lookup plans fewer of its files than it holds
+      val legacy = walk(new File(EncodeJob.chunkBatchDir(o, 0)))
+        .filter(_.getName.endsWith(".parquet")).map(_.getAbsolutePath).toSet
+      val planned = plannedFiles(spark.read.format("graft").load(o).filter(col("s") === "txt123"))
+        .filter(legacy)
+      assert(planned.nonEmpty && planned.size < legacy.size, s"$planned of $legacy")
+      // deleting the filestats dir an older engine left changes no read
+      org.apache.commons.io.FileUtils.deleteDirectory(new File(EncodeJob.filestatsDir(o)))
+      graft.spark.TableMeta.invalidateAll()
+      checkReads(frame(0, 2000))
 
       EncodeJob.deleteWhere(spark, o, col("id") === 123L || col("id") === 1500L, targetPartitions = 2)
       val model = frame(0, 2000).filter(col("id") =!= 123L && col("id") =!= 1500L)

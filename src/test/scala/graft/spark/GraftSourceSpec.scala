@@ -221,14 +221,11 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     val gotCol = aggs(spark.read.format("graft").load(colOut)).collect().head
     assert(graft.core.BlockCompression.decompressInputBytes == 0)
     assert(gotCol.toString == want.toString, s"$gotCol vs $want")
-    // the scan reads the filestats SIDECAR, not the chunk files: one
-    // input partition per sidecar parquet file
-    val sidecarFiles = {
-      val s = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$rowOut/filestats"))
-      try s.filter(p => p.toString.endsWith(".parquet")).count() finally s.close()
-    }
+    // the planner computes the partial rows from the driver's index of
+    // the chunk-file footers: one input partition per committed batch,
+    // and no task opens a file
     val aggParts = scanPartitions(aggs(src))
-    assert(sidecarFiles > 0 && aggParts == sidecarFiles, s"$aggParts vs $sidecarFiles")
+    assert(aggParts == EncodeJob.committedBatches(spark, rowOut).size, s"$aggParts partitions")
   }
 
   /** Input-partition count of the (single) graft BatchScan in a plan,
@@ -427,30 +424,35 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("format(graft): scans plan from sidecar metadata — the chunk tree is never listed") {
-    // multi-batch dir (append twice), both layouts of query: plan
-    // partitions, push a filter, run a metadata aggregate and a count —
-    // none may fall back to the recursive driver-side chunk-tree walk
-    // (EncodeJob.chunkTreeWalks counts legacy fallbacks); at 100 TB the
-    // walk is O(files) driver RPC per plan, the sidecar is O(metadata)
+    // multi-batch dir (append twice): plan partitions, push a filter, run
+    // a metadata aggregate and a count. Planning reads the committed
+    // batches' own dirs through TableMeta's index and never walks the
+    // chunk tree: an uncommitted batch dir holding a file that is not a
+    // chunk file would fail any reader that opened it
     val out = s"$tmp/noscanwalk"
     val df = spark.range(5000).select(col("id"), concat(lit("v"), col("id")).as("s"))
     df.write.format("graft").mode("overwrite").option("numPartitions", "2").save(out)
     df.withColumn("id", col("id") + 5000).write.format("graft").mode("append")
       .option("numPartitions", "2").save(out)
-    val before = EncodeJob.chunkTreeWalks.get()
+    val orphan = new java.io.File(EncodeJob.chunkBatchDir(out, 7), s"part-00000${ChunkFile.Extension}")
+    orphan.getParentFile.mkdirs()
+    java.nio.file.Files.write(orphan.toPath, "not a chunk file".getBytes("UTF-8"))
+    val loads = TableMeta.indexLoads.get()
     val src = spark.read.format("graft").load(out)
     assert(src.count() == 10000)
     assert(src.filter(col("id") === 9999L).collect().map(_.getLong(0)).toSeq == Seq(9999L))
     assert(src.agg(max("id")).first().getLong(0) == 9999L)
     assert(src.agg(sum("id")).first().getLong(0) == (0L until 10000L).sum)
-    assert(EncodeJob.chunkTreeWalks.get() == before,
-      "scan planning fell back to the recursive chunk-tree walk on a sidecar-complete dir")
-    // legacy dir (sidecar removed): the walk fallback still serves reads
+    // the writes loaded both batches' footers: the plans read none
+    assert(TableMeta.indexLoads.get() == loads, "scan planning re-read chunk-file footers")
+    // a dir an older engine left (the filestats sidecar) is not read
     val fs = new org.apache.hadoop.fs.Path(out)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(EncodeJob.filestatsDir(out)), true)
+    fs.mkdirs(new org.apache.hadoop.fs.Path(EncodeJob.filestatsBatchDir(out, 0)))
+    java.nio.file.Files.write(java.nio.file.Paths.get(EncodeJob.filestatsBatchDir(out, 0),
+      "part-00000.parquet"), "not parquet".getBytes("UTF-8"))
     assert(spark.read.format("graft").load(out).count() == 10000)
-    assert(EncodeJob.chunkTreeWalks.get() > before, "legacy fallback should have walked")
+    assert(spark.read.format("graft").load(out).agg(max("id")).first().getLong(0) == 9999L)
   }
 
   test("format(graft): limit pushdown decodes only the chunks it needs") {
@@ -554,7 +556,7 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
       concat(lit("txt"), col("id")).as("payload"))
     val out = s"$tmp/fileprune"
     EncodeJob.run(ids, EncodeJob.Config(out, numPartitions = 8, keyColumn = Some("band")))
-    assert(new java.io.File(s"$out/filestats").exists(), "sidecar not written")
+    assert(!new java.io.File(s"$out/filestats").exists(), "a filestats sidecar was written")
     val src = spark.read.format("graft").load(out)
     val full = numParts(src.select("id"))
     val pruned = numParts(src.filter(col("id") === 4321L).select("id"))

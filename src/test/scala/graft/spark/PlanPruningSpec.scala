@@ -2,9 +2,6 @@ package graft.spark
 
 import graft.spark.source.ChunkPrune
 import org.apache.hadoop.fs.Path
-import org.apache.parquet.example.data.simple.SimpleGroupFactory
-import org.apache.parquet.hadoop.example.ExampleParquetWriter
-import org.apache.parquet.schema.MessageTypeParser
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.util.{DateTimeUtils, SQLOrderingUtil}
@@ -18,7 +15,8 @@ import java.nio.file.Files
 
 /** Plan-time pruning on the driver: planning a query over a warm table
   * launches no Spark job, and the driver's file keep (TableMeta.fileKeep
-  * over the sidecar index) never drops a file that holds a matching row.
+  * over the index of chunk-file footers) never drops a file that holds a
+  * matching row.
   */
 class PlanPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
 
@@ -37,38 +35,42 @@ class PlanPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
-  /** Job groups of every started job, in submission order. */
-  private final class JobGroups extends SparkListener {
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+  /** Every started job, in submission order: its job group and the
+    * names of the RDDs its stages run.
+    */
+  private final class Jobs extends SparkListener {
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[(String, Seq[String])]()
     override def onJobStart(e: SparkListenerJobStart): Unit =
       seen.add(Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-        .getOrElse(""))
+        .getOrElse("") -> e.stageInfos.flatMap(_.rddInfos.map(_.name)).distinct)
   }
 
-  /** Spark jobs launched by `body`, counted between two marker jobs: the
-    * listener bus delivers job starts in order, so once the end marker is
-    * seen every job `body` launched has been seen too.
+  /** The Spark jobs launched by `body` (the RDD names of each), taken
+    * between two marker jobs: the listener bus delivers job starts in
+    * order, so once the end marker is seen every job `body` launched has
+    * been seen too.
     */
-  private def jobsDuring(body: => Unit): Int = {
-    val groups = new JobGroups
-    spark.sparkContext.addSparkListener(groups)
+  private def jobsIn(body: => Unit): Seq[Seq[String]] = {
+    val jobs = new Jobs
+    spark.sparkContext.addSparkListener(jobs)
     val sc = spark.sparkContext
     def marker(id: String): Unit = {
       sc.setJobGroup(id, id)
       try sc.parallelize(Seq(1), 1).count() finally sc.clearJobGroup()
     }
+    def groups = { import scala.jdk.CollectionConverters._; jobs.seen.asScala.toSeq }
     try {
       marker("plan-begin")
       body
       marker("plan-end")
       val deadline = System.nanoTime() + 30L * 1000000000L
-      while (!groups.seen.contains("plan-end") && System.nanoTime() < deadline) Thread.sleep(10)
-      import scala.jdk.CollectionConverters._
-      val all = groups.seen.asScala.toSeq
-      assert(all.contains("plan-end"), "listener never saw the end marker")
-      all.dropWhile(_ != "plan-begin").drop(1).takeWhile(_ != "plan-end").size
-    } finally sc.removeSparkListener(groups)
+      while (!groups.exists(_._1 == "plan-end") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(groups.exists(_._1 == "plan-end"), "listener never saw the end marker")
+      groups.dropWhile(_._1 != "plan-begin").drop(1).takeWhile(_._1 != "plan-end").map(_._2)
+    } finally sc.removeSparkListener(jobs)
   }
+
+  private def jobsDuring(body: => Unit): Int = jobsIn(body).size
 
   test("planning a point lookup launches no Spark job on a warm table") {
     val o = s"$tmp/lookup"
@@ -80,13 +82,13 @@ class PlanPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.read.format("graft").load(o).filter(col("url") === s"https://example.org/p/$id")
     def plan(id: Long): Unit = { lookup(id).queryExecution.executedPlan; () }
 
-    plan(1) // first plan of the table: snapshot and sidecar index load
+    plan(1) // first plan of the table: its snapshot load
     val loads = TableMeta.indexLoads.get()
     assert(jobsDuring(plan(7)) == 0, "warm lookup planning launched Spark jobs")
     assert(jobsDuring(plan(8)) == 0, "a new predicate on a warm table launched Spark jobs")
-    assert(TableMeta.indexLoads.get() == loads, "a warm table reloaded its sidecar index")
+    assert(TableMeta.indexLoads.get() == loads, "a warm table reloaded its chunk-file index")
 
-    // a newly committed batch: its sidecar is read once, on the driver
+    // a newly committed batch: its footers are read once, on the driver
     pages(2000, 2500).write.format("graft").mode("append")
       .option("numPartitions", "4").option("bloomColumns", "url").save(o)
     assert(jobsDuring(plan(2100)) <= 1, "planning after one new batch ran more than one job")
@@ -99,10 +101,36 @@ class PlanPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(lookup(99999).count() == 0)
   }
 
+  test("an append, a deleteWhere and a compact in the writer's layout run no file-scan job") {
+    // the metadata each needs (manifest rows, affected batches, inherited
+    // settings, the layout check) comes from the chunk-file footers on
+    // the driver; the jobs left are the graft scan and the encode write
+    val o = s"$tmp/jobs"
+    def pages(lo: Long, hi: Long) = spark.range(lo, hi).select(
+      concat(lit("https://example.org/p/"), col("id")).as("url"), col("id").as("n"))
+    def append(lo: Long, hi: Long): Unit = pages(lo, hi).write.format("graft").mode("append")
+      .option("numPartitions", "4").option("bloomColumns", "url").save(o)
+    append(0, 2000)
+    val ops: Seq[(String, () => Unit)] = Seq(
+      "append" -> (() => append(2000, 3000)),
+      "deleteWhere" -> (() => { EncodeJob.deleteWhere(spark, o, col("n") === 2500L, 4); () }),
+      "compact" -> (() => { EncodeJob.compact(spark, o, 4); () }))
+    ops.foreach { case (name, op) =>
+      val jobs = jobsIn(op())
+      info(s"$name: ${jobs.size} jobs, RDDs ${jobs.map(_.mkString("+")).mkString(", ")}")
+      assert(jobs.nonEmpty, s"$name ran no job")
+      assert(!jobs.exists(_.contains("FileScanRDD")), s"$name ran a file-scan job: $jobs")
+      if (name != "append")
+        assert(jobs.exists(_.contains("DataSourceRDD")), s"$name did not run the graft scan: $jobs")
+    }
+    val left = spark.read.format("graft").load(o)
+    assert(left.count() == 2999L && left.filter(col("n") === 2500L).count() == 0L)
+  }
+
   // ---- file keep vs. a brute-force filter of the rows ----
 
   /** One chunk's rows of column `c` (None = null); `hasRow` false models
-    * a chunk written before the column existed (no sidecar row at all).
+    * a chunk written before the column existed (no row at all).
     */
   private final case class Chunk(values: Seq[Option[Any]], minMax: Int, nanCount: Boolean,
                                  bloom: Boolean, hasRow: Boolean)
@@ -252,53 +280,29 @@ class PlanPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     (mn, mx, nans, bloom)
   }
 
-  /** Writes the case's sidecar as batch 0 of a fresh table dir (parquet-mr
-    * on the driver, the sidecar's on-disk schema, optionally without the
-    * `nan_count` column like batches written before it existed), plus
-    * rows of an unconstrained column `o` in the same files.
+  /** Writes the case's chunk files as batch 0 of a fresh table dir: one
+    * container file per case file, footers only (`ChunkFile.Writer` on
+    * the driver, no stream blobs), optionally without `nan_count` like
+    * chunks written before it existed, plus rows of an unconstrained
+    * column `o` in the same files.
     */
-  private def writeSidecar(dir: String, k: Case): Seq[String] = {
-    val schema = MessageTypeParser.parseMessageType(
-      s"""message spark_schema {
-         |  optional int32 part_id; optional int32 chunk_id;
-         |  optional binary column (STRING);
-         |  optional binary min_val (STRING); optional binary max_val (STRING);
-         |  optional int32 null_count; optional int32 row_count;
-         |  ${if (k.nanCountColumn) "optional int32 nan_count;" else ""}
-         |  optional binary bloom; optional binary file (STRING);
-         |}""".stripMargin)
+  private def writeChunkFiles(dir: String, k: Case): Seq[String] = {
     val conf = spark.sparkContext.hadoopConfiguration
-    val writer = ExampleParquetWriter
-      .builder(new Path(EncodeJob.filestatsBatchDir(dir, 0), "part-00000.parquet"))
-      .withType(schema).withConf(conf).build()
-    val factory = new SimpleGroupFactory(schema)
-    val files = k.files.indices.map(i => s"file:${EncodeJob.chunkBatchDir(dir, 0)}/part-$i.parquet")
-    try {
-      k.files.zipWithIndex.foreach { case (chunks, fi) =>
-        chunks.zipWithIndex.foreach { case (c, ci) =>
-          def row(column: String): org.apache.parquet.example.data.Group = {
-            val g = factory.newGroup()
-            g.add("part_id", fi); g.add("chunk_id", ci); g.add("column", column)
-            g.add("row_count", c.values.size); g.add("file", files(fi))
-            g
-          }
-          val (mn, mx, nans, bloom) = stats(k.logical, c)
-          if (c.hasRow) {
-            val g = row("c")
-            mn.foreach(g.add("min_val", _)); mx.foreach(g.add("max_val", _))
-            g.add("null_count", c.values.count(_.isEmpty))
-            if (k.nanCountColumn) nans.foreach(g.add("nan_count", _))
-            bloom.foreach(b => g.add("bloom",
-              org.apache.parquet.io.api.Binary.fromConstantByteArray(b)))
-            writer.write(g)
-          }
-          val other = row("o")
-          other.add("null_count", 0)
-          writer.write(other)
-        }
-      }
-    } finally writer.close()
-    files
+    k.files.zipWithIndex.map { case (chunks, fi) =>
+      val path = new Path(EncodeJob.chunkBatchDir(dir, 0), s"part-$fi${ChunkFile.Extension}")
+      val writer = new ChunkFile.Writer(path.getFileSystem(conf).create(path, false))
+      try chunks.zipWithIndex.foreach { case (c, ci) =>
+        def row(column: String) = EncodedChunk(fi, ci, 0L, column, "", c.values.size, 0,
+          Map.empty, 0L, 0L, None, None, None)
+        val (mn, mx, nans, bloom) = stats(k.logical, c)
+        if (c.hasRow)
+          writer.add(row("c").copy(min_val = mn, max_val = mx,
+            null_count = c.values.count(_.isEmpty),
+            nan_count = if (k.nanCountColumn) nans else None, bloom = bloom))
+        writer.add(row("o"))
+      } finally writer.close()
+      s"file:$path"
+    }
   }
 
   test("property: driver file keep never drops a file holding a matching row") {
@@ -307,10 +311,10 @@ class PlanPruningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val prop = Prop.forAll(caseGen) { k =>
       cases += 1
       val dir = s"$tmp/prop/t$cases"
-      val files = writeSidecar(dir, k)
+      val files = writeChunkFiles(dir, k)
       val narrow = if (k.logical == "decimal128") "38,4" else ""
       val preds = ChunkPrune.from(k.filter, Array(ColumnSpec("c", k.logical, "", narrow))).toSeq
-      val keep = TableMeta.fileKeep(spark, dir, Set(0), preds)
+      val keep = TableMeta.fileKeep(TableMeta.batchIndex(spark, dir, Set(0)), preds)
       k.files.zip(files).forall { case (chunks, f) =>
         val kept = keep.getOrElse(TableMeta.normPath(f), true)
         if (!kept) dropped += 1

@@ -58,7 +58,7 @@ object LateCountingFileSystem {
   * filesystem registered only on `sparkContext.hadoopConfiguration` (and
   * kept out of Hadoop's FileSystem cache, so a reader that builds its own
   * default conf cannot find it) serves the row scan, the aggregate
-  * scan, the `TableMeta` sidecar load and the ORC interop path. The
+  * scan, the `TableMeta` index load and the ORC interop path. The
   * counts check that a chunk file is opened once per read.
   */
 class SessionConfSpec extends AnyFunSuite with BeforeAndAfterAll {
@@ -194,22 +194,20 @@ class SessionConfSpec extends AnyFunSuite with BeforeAndAfterAll {
     def aggOf(table: String) = spark.read.format("graft").load(table)
       .agg(min("id").as("lo"), max("url").as("hi"), count(lit(1)).as("n"))
 
-    // the sidecar files answer it; no chunk file is opened
+    // the driver's index of the chunk-file footers answers it (the write
+    // loaded it): no file is opened, by the planner or by a task
     val agg = aggOf(out)
     graft.core.BlockCompression.resetCounters()
     val (got, opened) = opensUnder(tmp)(agg.collect().head.toString)
     assert(graft.core.BlockCompression.decompressInputBytes == 0,
       "aggregate pushdown did not engage: stream blobs were decompressed")
     assert(got == want)
-    val planned = plannedFiles(agg)
-    assert(planned.nonEmpty && planned.forall(under(EncodeJob.filestatsDir(out))), planned)
-    assert(opened.filter { case (f, _) => planned(f) || under(EncodeJob.chunkDir(out))(f) } ==
-      planned.map(_ -> 1).toMap, opened)
+    assert(opened.isEmpty, opened)
 
-    // a table without sidecar files: the chunk files answer it
+    // a table whose index is not loaded: the driver reads each chunk
+    // file's footer once through the session conf, and no task opens one
     val bare = s"$Scheme://$tmp/bare"
     EncodeJob.run(input, EncodeJob.Config(bare, numPartitions = 4, keyColumn = None))
-    fs.delete(new Path(EncodeJob.filestatsDir(bare)), true)
     TableMeta.invalidateAll()
     val (gotBare, openedBare) = opensUnder(EncodeJob.chunkDir(bare))(
       aggOf(bare).collect().head.toString)
@@ -218,14 +216,16 @@ class SessionConfSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("TableMeta loads the sidecar index through the session conf") {
+    // the index of the chunk-file footers, the table's only per-chunk
+    // metadata
     val batches = EncodeJob.committedBatches(spark, out)
     TableMeta.invalidateAll()
     val loads0 = TableMeta.indexLoads.get()
-    val (listed, opened) = opensUnder(EncodeJob.filestatsDir(out))(
-      TableMeta.sidecarChunkFiles(spark, out, batches))
+    val (listed, opened) = opensUnder(EncodeJob.chunkDir(out))(
+      TableMeta.batchIndex(spark, out, batches))
     assert(TableMeta.indexLoads.get() > loads0)
-    assert(listed.map(_.map(f => key(f._3)).toSet).contains(chunkFiles(out)))
-    assert(opened.nonEmpty && opened.values.forall(_ == 1), opened)
+    assert(listed.values.flatMap(_.files.map(f => key(f.path))).toSet == chunkFiles(out))
+    assert(opened == chunkFiles(out).map(_ -> 1).toMap, opened)
   }
 
   test("ORC interop writes and reads through the session conf") {

@@ -62,24 +62,53 @@ class TableMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sidecar chunk-file cache revalidates against the sidecar listing") {
+    // the index of a batch's chunk files (the footers, since the table
+    // keeps no sidecar) revalidates against the batch dir's listing
     val o = s"$tmp/t2"
     val df = spark.range(0, 300).select(col("id"), (col("id") % 3).as("k"))
     df.write.format("graft").mode("overwrite").option("numPartitions", "2").save(o)
-    val first = TableMeta.sidecarChunkFiles(spark, o, Set(0))
-    assert(first.exists(_.nonEmpty))
-    // same listing → same (cached) answer
-    assert(TableMeta.sidecarChunkFiles(spark, o, Set(0)) == first)
+    def files() = TableMeta.batchIndex(spark, o, Set(0))(0).files.map(_.path)
+    val first = files()
+    assert(first.nonEmpty)
+    assert(!new java.io.File(s"$o/filestats").exists(), "a new table wrote a filestats sidecar")
+    assert(!new java.io.File(s"$o/chunks/batch=0/_filemeta.json").exists())
+    // same listing → same (cached) answer, no footer re-read
+    val loads0 = TableMeta.indexLoads.get()
+    assert(files() == first)
+    assert(TableMeta.indexLoads.get() == loads0, "an unchanged batch reloaded its footers")
     // overwrite reuses batch id 0 but writes NEW file names — the cache
     // must re-list and serve the fresh files, never the deleted ones
     df.write.format("graft").mode("overwrite").option("numPartitions", "2").save(o)
-    val second = TableMeta.sidecarChunkFiles(spark, o, Set(0))
-    assert(second.exists(_.nonEmpty))
-    assert(second != first, "stale sidecar file list served after overwrite")
-    // deleting the sidecar entirely → None (callers fall back to the walk)
-    val fs = new org.apache.hadoop.fs.Path(o)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.delete(new org.apache.hadoop.fs.Path(EncodeJob.filestatsDir(o)), true)
-    assert(TableMeta.sidecarChunkFiles(spark, o, Set(0)).isEmpty)
+    val second = files()
+    assert(second.nonEmpty)
+    assert(second != first, "stale chunk-file list served after overwrite")
+    assert(TableMeta.batchIndex(spark, o, Set(0))(0).rows.map(_.row_count.toLong).sum == 2 * 300L)
+  }
+
+  test("a committed batch without chunk files fails the scan and names the batch") {
+    def table(name: String): String = {
+      val o = s"$tmp/$name"
+      spark.range(0, 200).select(col("id")).write.format("graft").mode("overwrite")
+        .option("numPartitions", "2").save(o)
+      spark.range(200, 400).select(col("id")).write.format("graft").mode("append")
+        .option("numPartitions", "2").save(o)
+      assert(spark.read.format("graft").load(o).count() == 400L)
+      o
+    }
+    def failsNaming(o: String): Unit = {
+      val err = intercept[IllegalArgumentException](spark.read.format("graft").load(o).collect())
+      assert(err.getMessage.contains("committed batches 1 record rows") &&
+        err.getMessage.contains("batch=1"), err.getMessage)
+    }
+    // chunk files deleted, the batch dir kept
+    val kept = table("lost-files")
+    new java.io.File(EncodeJob.chunkBatchDir(kept, 1)).listFiles()
+      .filter(f => ChunkFile.isChunkFileName(f.getName)).foreach(_.delete())
+    failsNaming(kept)
+    // the batch dir deleted too
+    val gone = table("lost-dir")
+    org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(EncodeJob.chunkBatchDir(gone, 1)))
+    failsNaming(gone)
   }
 
   test("snapshot cache evicts the least recently used table, not every table") {
