@@ -1,6 +1,6 @@
 package graft.columns
 
-import graft.core.{ByteBuf, Fsst}
+import graft.core.{Bloom, ByteBuf, Fsst}
 import java.nio.charset.StandardCharsets
 
 /** Per-column codec auto-selection from sampled statistics — the
@@ -48,12 +48,12 @@ object CodecSelector {
   def stringStats(sample: Iterable[String]): StringColumnStats = {
     var count = 0L
     var totalLen = 0L
-    val distinct = new java.util.HashSet[String]()
+    val distinct = new DistinctBytes
     val byteCounts = new Array[Long](256)
     sample.foreach { s =>
       count += 1
-      distinct.add(s)
       val bytes = s.getBytes(StandardCharsets.UTF_8)
+      distinct.add(bytes)
       totalLen += bytes.length
       var i = 0
       while (i < bytes.length) { byteCounts(bytes(i) & 0xff) += 1; i += 1 }
@@ -70,7 +70,7 @@ object CodecSelector {
         i += 1
       }
     }
-    val stats = StringColumnStats(count, distinct.size().toLong,
+    val stats = StringColumnStats(count, distinct.size.toLong,
       if (count == 0) 0.0 else totalLen.toDouble / count, entropy, fsstSampleRatio = 1.0)
     if (chooseStringCodec(stats.copy(fsstSampleRatio = 0.0)) != Codecs.StringFsst) stats
     else {
@@ -80,6 +80,53 @@ object CodecSelector {
         val compressed = new ByteBuf(corpus.length)
         Fsst.compress(Fsst.train(corpus), corpus, compressed)
         stats.copy(fsstSampleRatio = compressed.length.toDouble / corpus.length)
+      }
+    }
+  }
+
+  /** An exact set of byte strings for counting distinct values: open
+    * addressing over each value's 64-bit hash, values compared byte-wise
+    * only on a hash match. Distinct UTF-8 encodings are distinct strings
+    * for every string a Spark row holds (valid UTF-16), so it counts what
+    * a `HashSet[String]` counts, without hashing `String`s whose equal
+    * `hashCode`s turn its buckets into trees.
+    */
+  private[columns] final class DistinctBytes {
+    private var hashes = new Array[Long](64)
+    private var values = new Array[Array[Byte]](64)
+    private var n = 0
+
+    def size: Int = n
+
+    def add(b: Array[Byte]): Unit = {
+      val h = Bloom.xxh64(b, 0, b.length, 0L)
+      var i = slot(h, hashes.length)
+      while (values(i) != null) {
+        if (hashes(i) == h && java.util.Arrays.equals(values(i), b)) return
+        i = (i + 1) & (hashes.length - 1)
+      }
+      hashes(i) = h
+      values(i) = b
+      n += 1
+      if (n * 2 > hashes.length) grow()
+    }
+
+    private def slot(h: Long, cap: Int): Int = (h ^ (h >>> 32)).toInt & (cap - 1)
+
+    private def grow(): Unit = {
+      val oldH = hashes
+      val oldV = values
+      hashes = new Array[Long](oldH.length * 2)
+      values = new Array[Array[Byte]](oldH.length * 2)
+      var j = 0
+      while (j < oldH.length) {
+        if (oldV(j) != null) {
+          var i = slot(oldH(j), hashes.length)
+          while (values(i) != null) i = (i + 1) & (hashes.length - 1)
+          hashes(i) = oldH(j)
+          values(i) = oldV(j)
+        }
+        j += 1
       }
     }
   }

@@ -371,7 +371,12 @@ object ColumnCodec {
     (slicesOf(cs.streams(Streams.Data), lengths, n), present)
   }
 
-  def decodeStrSlices(cs: ColumnStreams): (ByteSlices, Array[Boolean]) = {
+  /** `keepRows` (one flag per row, null for all): an FSST column
+    * decompresses only the values of kept rows, the LENGTH stream giving
+    * each value's offset; the other values read as empty slices. Direct
+    * and dictionary slices cost nothing per value and are all decoded.
+    */
+  def decodeStrSlices(cs: ColumnStreams, keepRows: Array[Boolean] = null): (ByteSlices, Array[Boolean]) = {
     val present = readPresent(cs)
     val n = cs.rowCount - cs.nullCount
     val slices = cs.codec match {
@@ -397,10 +402,60 @@ object ColumnCodec {
           i += 1
         }
         ByteSlices(dictBuf, starts, lens)
+      case Codecs.StringFsst if keepRows != null => fsstSlicesAt(cs, n, present, keepRows)
       case Codecs.StringFsst => fsstSlices(cs, n)
       case other => throw new IllegalArgumentException(s"not a string codec: $other")
     }
     (slices, present)
+  }
+
+  /** FSST values of the kept rows only, decompressed into one buffer
+    * sized like `fsstSlices`' from the kept values' codes.
+    */
+  private def fsstSlicesAt(cs: ColumnStreams, n: Int, present: Array[Boolean],
+                           keepRows: Array[Boolean]): ByteSlices = {
+    val table = Fsst.SymbolTable.deserialize(new BytesIn(cs.streams(Streams.SymbolTable)))
+    val lengths = RleV2Reader.read(new BytesIn(cs.streams(Streams.Length)), signed = false, n)
+    val data = cs.streams(Streams.Data)
+    val offs = new Array[Int](n + 1)
+    val wanted = new Array[Boolean](n)
+    var coded = 0L
+    var v = 0
+    var r = 0
+    while (r < present.length) {
+      if (present(r)) {
+        offs(v + 1) = offs(v) + lengths(v).toInt
+        if (keepRows(r)) { wanted(v) = true; coded += lengths(v) }
+        v += 1
+      }
+      r += 1
+    }
+    var big = new Array[Byte]((coded * 3 + 64).toInt)
+    var sized = false
+    val starts = new Array[Int](n)
+    val lens = new Array[Int](n)
+    var o = 0
+    v = 0
+    while (v < n) {
+      if (wanted(v)) {
+        val len = offs(v + 1) - offs(v)
+        if (!sized && o + len.toLong * Fsst.MaxSymbolLen + 8 > big.length) {
+          var need = o + 8
+          var w = v
+          while (w < n) {
+            if (wanted(w)) need += Fsst.decodedLength(table, data, offs(w), offs(w + 1))
+            w += 1
+          }
+          if (need > big.length) big = java.util.Arrays.copyOf(big, need)
+          sized = true
+        }
+        starts(v) = o
+        o = Fsst.decompressInto(table, data, offs(v), offs(v + 1), big, o)
+        lens(v) = o - starts(v)
+      }
+      v += 1
+    }
+    ByteSlices(big, starts, lens)
   }
 
   /** Decompress every FSST value into ONE buffer. It starts at 3× the

@@ -148,6 +148,7 @@ object EncodeJob {
     val out = fs.create(path, /* overwrite = */ true)
     try out.write(effective.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    TableMeta.invalidate(outDir)
   }
 
   def layoutPath(outDir: String) = s"$outDir/layout.json"
@@ -158,9 +159,13 @@ object EncodeJob {
     * the claim to empty rather than lie). The DSv2 scan turns a live
     * claim into a SupportsReportOrdering answer.
     */
-  def sortColumnsFromDisk(spark: SparkSession, outDir: String): Seq[String] = {
+  def sortColumnsFromDisk(spark: SparkSession, outDir: String): Seq[String] =
+    sortColumnsFromDisk(spark.sparkContext.hadoopConfiguration, outDir)
+
+  private[spark] def sortColumnsFromDisk(conf: org.apache.hadoop.conf.Configuration,
+                                         outDir: String): Seq[String] = {
     val path = new org.apache.hadoop.fs.Path(layoutPath(outDir))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = path.getFileSystem(conf)
     if (!fs.exists(path)) return Nil
     val in = fs.open(path)
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
@@ -178,6 +183,7 @@ object EncodeJob {
       s"""{"sortColumns":[${sortColumns.map(c => s""""$c"""").mkString(",")}]}"""
         .getBytes(java.nio.charset.StandardCharsets.UTF_8))
     finally out.close()
+    TableMeta.invalidate(outDir)
   }
 
   /** Maintain the sort claim for a write of `sortColumns` into a dir
@@ -205,9 +211,13 @@ object EncodeJob {
   /** The persisted logical schema, when this outDir was written by a
     * round-4+ engine. None for older dirs (callers supply the schema).
     */
-  def schemaFromDisk(spark: SparkSession, outDir: String): Option[org.apache.spark.sql.types.StructType] = {
+  def schemaFromDisk(spark: SparkSession, outDir: String): Option[org.apache.spark.sql.types.StructType] =
+    schemaFromDisk(spark.sparkContext.hadoopConfiguration, outDir)
+
+  private[spark] def schemaFromDisk(conf: org.apache.hadoop.conf.Configuration,
+                                    outDir: String): Option[org.apache.spark.sql.types.StructType] = {
     val path = new org.apache.hadoop.fs.Path(schemaPath(outDir))
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val fs = path.getFileSystem(conf)
     if (!fs.exists(path)) None
     else {
       val in = fs.open(path)
@@ -276,7 +286,7 @@ object EncodeJob {
     * one. Empty when no manifest exists yet.
     */
   def committedBatches(spark: SparkSession, outDir: String): Set[Int] =
-    applyCompactions(manifestBatches(spark, outDir), compactions(spark, outDir))
+    TableMeta.snapshot(spark, outDir).committed
 
   /** Time travel: the batch set as of the moment `asOf` committed. Batch
     * ids commit in increasing order on every write path, so "manifest ids
@@ -285,9 +295,7 @@ object EncodeJob {
     * removes replaced batches.
     */
   def committedBatchesAsOf(spark: SparkSession, outDir: String, asOf: Int): Set[Int] =
-    applyCompactions(
-      manifestBatches(spark, outDir).filter(_ <= asOf),
-      compactions(spark, outDir).filter(_.batch <= asOf))
+    TableMeta.snapshot(spark, outDir).committedAsOf(asOf)
 
   /** Batch ids a STREAMING reader consumes: the original append batches,
     * never compaction batches — a compacted batch holds only rows some
@@ -296,15 +304,7 @@ object EncodeJob {
     * survive until vacuum).
     */
   def streamBatches(spark: SparkSession, outDir: String): Set[Int] =
-    manifestBatches(spark, outDir) -- compactions(spark, outDir).map(_.batch)
-
-  private def manifestBatches(spark: SparkSession, outDir: String): Set[Int] =
-    TableMeta.snapshot(spark, outDir).batchIds
-
-  private def applyCompactions(base: Set[Int], records: Seq[Compaction]): Set[Int] =
-    records.foldLeft(base)((acc, c) => acc -- c.replaces + c.batch) --
-      // a compaction replaced by a LATER compaction must not resurface
-      records.flatMap(_.replaces)
+    TableMeta.snapshot(spark, outDir).streamable
 
   /** One committed compaction: chunks of `replaces` rewritten as batch
     * `batch`. `maxPart` is the highest part_id the compacted batch holds,
@@ -703,8 +703,9 @@ object EncodeJob {
     * orphan).
     */
   def vacuum(spark: SparkSession, outDir: String): Seq[Int] = {
-    val records = compactions(spark, outDir)
-    val owned = manifestBatches(spark, outDir) ++ records.map(_.batch)
+    val snap = TableMeta.snapshot(spark, outDir)
+    val records = snap.compactions
+    val owned = snap.batchIds ++ records.map(_.batch)
     val conf = spark.sparkContext.hadoopConfiguration
     val chunkRoot = new org.apache.hadoop.fs.Path(chunkDir(outDir))
     val fs = chunkRoot.getFileSystem(conf)
@@ -886,7 +887,7 @@ object EncodeJob {
   private def lineage(specs: Array[ColumnSpec]): String =
     specs.map(s => s"${s.name}=${if (s.logical == "string") s.stringCodec else s.logical.toUpperCase}").mkString(",")
 
-  private def parseLineage(s: String): Map[String, String] =
+  private[spark] def parseLineage(s: String): Map[String, String] =
     s.split(',').iterator.map { kv =>
       val Array(k, v) = kv.split('=')
       k -> v
@@ -1012,9 +1013,7 @@ object EncodeJob {
                         schema: org.apache.spark.sql.types.StructType): Array[ColumnSpec] = {
     // snapshot-cached; the NEWEST batch's lineage (post-ALTER batches
     // carry strictly more columns). Empty for a schema-only table.
-    val codecs = TableMeta.snapshot(spark, outDir).codecs
-      .map(parseLineage).getOrElse(Map.empty)
-    TableEncoder.columnSpecs(schema, codecs)
+    TableEncoder.columnSpecs(schema, TableMeta.snapshot(spark, outDir).lineage)
   }
 
   private def writeChunks(chunks: Dataset[EncodedChunk], cfg: Config, batchId: Int): Unit = {

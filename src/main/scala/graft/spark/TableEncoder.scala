@@ -990,7 +990,11 @@ object TableEncoder {
                                  precision: Int, scale: Int,
                                  present: Array[Boolean]) extends Decoded
 
-  private def decodeColumnPrim(cs: ColumnStreams, spec: ColumnSpec): Decoded = spec.logical match {
+  /** `keepRows` (null for all): the rows a predicate-first decode emits,
+    * whose FSST values alone are decompressed.
+    */
+  private def decodeColumnPrim(cs: ColumnStreams, spec: ColumnSpec,
+                               keepRows: Array[Boolean] = null): Decoded = spec.logical match {
     case "long" if cs.codec == Codecs.ByteRleC =>
       val (v, p) = ColumnCodec.decodeByte(cs)
       val longs = new Array[Long](v.length)
@@ -1016,7 +1020,38 @@ object TableEncoder {
     case "double"    => val (v, p) = ColumnCodec.decodeDouble(cs); DoublesD(v, p)
     case "float"     => val (v, p) = ColumnCodec.decodeFloat(cs); FloatsD(v, p)
     case "binary" | "fvec" => val (v, p) = ColumnCodec.decodeBinarySlices(cs); SlicesD(v, p)
-    case "string"    => val (v, p) = ColumnCodec.decodeStrSlices(cs); SlicesD(v, p)
+    case "string"    => val (v, p) = ColumnCodec.decodeStrSlices(cs, keepRows); SlicesD(v, p)
+  }
+
+  /** Clears `keep(r)` for each row `r` of decoded column `d` that `p`'s
+    * row-level test rejects: a null by `admitsNull`, a long-space value
+    * (bools as 0/1) by `admitsLong`, a string by `admitsUtf8`. Other
+    * columns are never row-tested (`ChunkPrune.rowTests`).
+    */
+  private def admit(d: Decoded, p: ChunkPrune, keep: Array[Boolean]): Unit = {
+    val present = d.present
+    val n = present.length
+    val nulls = p.admitsNull
+    def each(test: Int => Boolean): Unit = {
+      var v = 0
+      var r = 0
+      while (r < n) {
+        if (present(r)) {
+          if (keep(r) && !test(v)) keep(r) = false
+          v += 1
+        } else if (!nulls) keep(r) = false
+        r += 1
+      }
+    }
+    d match {
+      case l: LongsD  => val vs = l.values; each(v => p.admitsLong(vs(v)))
+      case b: BoolsD  => val vs = b.values; each(v => p.admitsLong(if (vs(v)) 1L else 0L))
+      case s: SlicesD =>
+        val sl = s.slices
+        each(v => p.admitsUtf8(sl.buf, sl.starts(v), sl.lens(v)))
+      case other => throw new IllegalArgumentException(
+        s"no row-level test reads a ${other.getClass.getSimpleName} column")
+    }
   }
 
   /** Shared row emission: write row `r` of the decoded columns into the
@@ -1158,11 +1193,23 @@ object TableEncoder {
     * buffering operators copy). Segmented chunks route to the per-stride
     * decoder, which skips pruned strides' decompression and value decode
     * entirely.
+    *
+    * Predicate-first decode: with `rowPreds` (`ChunkPrune.rowTests`), the
+    * predicates' columns are decoded first and a row is emitted only when
+    * every predicate's row-level test admits it; the other columns are
+    * decoded only when a row of the chunk (or of the stride, when
+    * segmented) survives, FSST values at the surviving rows alone. `byCol`
+    * may then hold stream-less metadata chunks, and `load` fetches a
+    * chunk's streams on first use, so a chunk without a survivor never
+    * reads its other columns' streams. Without `rowPreds` every column is
+    * decoded as it is.
     */
   private[spark] def decodeChunkInternalRows(
       byCol: Map[String, EncodedChunk], specs: Array[ColumnSpec],
       writer: org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter,
-      stridePrunes: Seq[StridePrune] = Seq.empty)
+      stridePrunes: Seq[StridePrune] = Seq.empty,
+      rowPreds: Seq[ChunkPrune] = Seq.empty,
+      load: EncodedChunk => EncodedChunk = identity)
       : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
     val nCols = specs.length
     // schema evolution: columns the group lacks (batches older than an
@@ -1175,25 +1222,31 @@ object TableEncoder {
         byCol ++ specs.iterator.filterNot(s => byCol.contains(s.name))
           .map(s => s.name -> allNullChunk(template, s))
       }
-    if (specs.forall { s =>
-      val c = byColFull(s.name)
-      c.seg_lens.isDefined && c.stride_null_counts.isDefined && c.stride_rows > 0
-    }) return decodeSegmentedInternalRows(byColFull, specs, writer, stridePrunes)
+    val meta = specs.map(s => byColFull(s.name))
+    val loaded = new Array[EncodedChunk](nCols)
+    def chunk(i: Int): EncodedChunk = {
+      if (loaded(i) == null)
+        loaded(i) = if (byCol.contains(specs(i).name)) load(meta(i)) else meta(i)
+      loaded(i)
+    }
+    // (column index, its row tests), predicate columns only
+    val predCols: Array[(Int, Array[ChunkPrune])] = specs.indices.iterator.flatMap { i =>
+      val ps = rowPreds.filter(_.column == specs(i).name).toArray
+      if (ps.isEmpty) None else Some(i -> ps)
+    }.toArray
+    val rowCount = meta(0).row_count
+    meta.foreach(c => require(c.row_count == rowCount, s"chunk row_count mismatch on ${c.column}"))
+    if (meta.forall(c => c.seg_lens.isDefined && c.stride_null_counts.isDefined && c.stride_rows > 0))
+      return decodeSegmentedInternalRows(meta, chunk, specs, writer,
+        strideKeepFor(byColFull, stridePrunes), predCols)
 
-    val cols = new Array[Decoded](nCols)
-    var rowCount = -1
-    var i = 0
-    while (i < nCols) {
-      val chunk = byColFull(specs(i).name)
-      if (rowCount < 0) rowCount = chunk.row_count
-      require(chunk.row_count == rowCount, s"chunk row_count mismatch on ${specs(i).name}")
-      val kind = chunk.compression.getOrElse(graft.core.BlockCompression.Zlib)
-      val streams = chunk.streams.map { case (k, v) =>
+    def decodeCol(i: Int, keepRows: Array[Boolean]): Decoded = {
+      val c = chunk(i)
+      val kind = c.compression.getOrElse(graft.core.BlockCompression.Zlib)
+      val streams = c.streams.map { case (k, v) =>
         k -> graft.core.BlockCompression.decompress(kind, v)
       }
-      cols(i) = decodeColumnPrim(
-        ColumnStreams(chunk.codec, chunk.row_count, chunk.null_count, streams), specs(i))
-      i += 1
+      decodeColumnPrim(ColumnStreams(c.codec, c.row_count, c.null_count, streams), specs(i), keepRows)
     }
     // sub-chunk skipping: strides of the pruning column whose [min,max]
     // cannot overlap [lo,hi] are skipped at materialization (rows never
@@ -1201,21 +1254,33 @@ object TableEncoder {
     // purpose, which its own reader never exploits. (Whole-stream chunks
     // still pay the decode; segmented chunks skip that too.)
     val sk = strideKeepFor(byColFull, stridePrunes)
-    val strideKeep = if (sk == null) null else sk._1
-    val strideN = if (sk == null) 0 else sk._2
+    var keep: Array[Boolean] =
+      if (sk == null) null else Array.tabulate(rowCount)(r => sk._1(r / sk._2))
+    val cols = new Array[Decoded](nCols)
+    if (predCols.nonEmpty) {
+      if (keep == null) keep = Array.fill(rowCount)(true)
+      predCols.foreach { case (i, ps) =>
+        cols(i) = decodeCol(i, null)
+        ps.foreach(admit(cols(i), _, keep))
+      }
+      if (!keep.contains(true)) return Iterator.empty
+    }
+    val keepRows = if (predCols.nonEmpty) keep else null
+    var i = 0
+    while (i < nCols) { if (cols(i) == null) cols(i) = decodeCol(i, keepRows); i += 1 }
     val cursors = new Array[Int](nCols) // next value index per column (non-null stream)
-    val total = rowCount
+    val rowKeep = keep
     new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
       private var r = 0
-      // advance past rows of pruned strides, keeping value cursors exact
-      private def align(): Unit = if (strideKeep != null) {
-        while (r < total && !strideKeep(r / strideN)) {
+      // advance past dropped rows, keeping value cursors exact
+      private def align(): Unit = if (rowKeep != null) {
+        while (r < rowCount && !rowKeep(r)) {
           var c = 0
           while (c < nCols) { if (cols(c).present(r)) cursors(c) += 1; c += 1 }
           r += 1
         }
       }
-      def hasNext: Boolean = { align(); r < total }
+      def hasNext: Boolean = { align(); r < rowCount }
       def next(): org.apache.spark.sql.catalyst.InternalRow = {
         align()
         writeRow(writer, cols, cursors, r)
@@ -1228,25 +1293,23 @@ object TableEncoder {
   /** Per-stride decode of a segmented chunk group: only KEPT strides'
     * stream segments are ever decompressed and value-decoded — for a
     * selective predicate the skipped strides cost nothing but their
-    * (already-loaded) blob bytes. The reference's stream position
-    * annotations (ColumnWriterStatistics.cs:10-33,
-    * OrcCompressedBuffer.cs:66-72) realized as independently-compressed
-    * stride segments.
+    * (already-loaded) blob bytes. With predicate columns, a kept stride
+    * decodes them first and the other columns only when one of its rows
+    * survives. The reference's stream position annotations
+    * (ColumnWriterStatistics.cs:10-33, OrcCompressedBuffer.cs:66-72)
+    * realized as independently-compressed stride segments.
     */
   private def decodeSegmentedInternalRows(
-      byCol: Map[String, EncodedChunk], specs: Array[ColumnSpec],
+      meta: Array[EncodedChunk], chunk: Int => EncodedChunk, specs: Array[ColumnSpec],
       writer: org.apache.spark.sql.catalyst.expressions.codegen.UnsafeRowWriter,
-      stridePrunes: Seq[StridePrune])
+      sk: (Array[Boolean], Int), predCols: Array[(Int, Array[ChunkPrune])])
       : Iterator[org.apache.spark.sql.catalyst.InternalRow] = {
     val nCols = specs.length
-    val chunksArr = specs.map(s => byCol(s.name))
-    val rowCount = chunksArr(0).row_count
-    chunksArr.foreach(c =>
-      require(c.row_count == rowCount, s"chunk row_count mismatch on ${c.column}"))
-    val strideN = chunksArr(0).stride_rows
-    val nStrides = chunksArr(0).stride_null_counts.get.size
+    val rowCount = meta(0).row_count
+    val strideN = meta(0).stride_rows
+    val nStrides = meta(0).stride_null_counts.get.size
     // per column, per stream kind: segment offsets within the blob
-    val colSegs: Array[Array[(String, Array[Int], Array[Int])]] = chunksArr.map { c =>
+    val colSegs: Array[Array[(String, Array[Int], Array[Int])]] = meta.map { c =>
       c.seg_lens.get.iterator.map { case (k, lensSeq) =>
         val lens = lensSeq.toArray
         val offs = new Array[Int](lens.length)
@@ -1256,13 +1319,10 @@ object TableEncoder {
         (k, offs, lens)
       }.toArray
     }
-    val strideKeep = {
-      val sk = strideKeepFor(byCol, stridePrunes)
-      if (sk == null) null else sk._1
-    }
+    val strideKeep = if (sk == null) null else sk._1
 
-    def decodeStrideCol(ci: Int, s: Int): Decoded = {
-      val c = chunksArr(ci)
+    def decodeStrideCol(ci: Int, s: Int, keepRows: Array[Boolean]): Decoded = {
+      val c = chunk(ci)
       val kindC = c.compression.getOrElse(graft.core.BlockCompression.Zlib)
       val rowsS = math.min(strideN, rowCount - s * strideN)
       val nullsS = c.stride_null_counts.get(s)
@@ -1277,23 +1337,51 @@ object TableEncoder {
           m += k -> graft.core.BlockCompression.decompress(kindC, c.streams(k), offs(s), lens(s))
         }
       }
-      decodeColumnPrim(ColumnStreams(c.codec, rowsS, nullsS, m.result()), specs(ci))
+      decodeColumnPrim(ColumnStreams(c.codec, rowsS, nullsS, m.result()), specs(ci), keepRows)
     }
 
     new Iterator[org.apache.spark.sql.catalyst.InternalRow] {
       private var s = 0
       private var r = 0
       private var rowsS = 0
+      private var keep: Array[Boolean] = null
       private val cols = new Array[Decoded](nCols)
       private val cursors = new Array[Int](nCols)
-      private def advance(): Unit = {
-        while (r >= rowsS && s < nStrides) {
-          if (strideKeep == null || strideKeep(s)) {
-            var c = 0
-            while (c < nCols) { cols(c) = decodeStrideCol(c, s); cursors(c) = 0; c += 1 }
-            rowsS = math.min(strideN, rowCount - s * strideN)
-            r = 0
+      /** Decodes stride `s` into `cols`; false when no row survives. */
+      private def decodeStride(): Boolean = {
+        val n = math.min(strideN, rowCount - s * strideN)
+        java.util.Arrays.fill(cols.asInstanceOf[Array[AnyRef]], null)
+        keep = null
+        if (predCols.nonEmpty) {
+          val k = Array.fill(n)(true)
+          predCols.foreach { case (i, ps) =>
+            cols(i) = decodeStrideCol(i, s, null)
+            ps.foreach(admit(cols(i), _, k))
           }
+          if (!k.contains(true)) return false
+          keep = k
+        }
+        var c = 0
+        while (c < nCols) {
+          if (cols(c) == null) cols(c) = decodeStrideCol(c, s, keep)
+          cursors(c) = 0
+          c += 1
+        }
+        rowsS = n
+        r = 0
+        true
+      }
+      private def advance(): Unit = {
+        while (true) {
+          if (keep != null) {
+            while (r < rowsS && !keep(r)) {
+              var c = 0
+              while (c < nCols) { if (cols(c).present(r)) cursors(c) += 1; c += 1 }
+              r += 1
+            }
+          }
+          if (r < rowsS || s >= nStrides) return
+          if (strideKeep == null || strideKeep(s)) decodeStride()
           s += 1
         }
       }

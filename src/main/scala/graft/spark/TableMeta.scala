@@ -4,6 +4,7 @@ import graft.spark.source.{ChunkPrune, ChunkStats}
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 
 /** Driver-side table metadata, cached per JVM and validated against the
   * filesystem on EVERY access (guide §6: table formats win at scale by
@@ -13,11 +14,13 @@ import org.apache.spark.sql.SparkSession
   * 1024 tables:
   *
   *  - the SNAPSHOT (visibility, per-batch stats, codec lineage, column
-  *    sets). Its validity is a signature of the manifest + compactions
-  *    dirs (one `listStatus` each): every commit appends a manifest file
-  *    and every compaction adds a record file, so any writer — same JVM
-  *    or not — invalidates the entry. A miss parses the JSON commit files
-  *    on the driver; no Spark job.
+  *    sets, the persisted schema and the sort claim). Its validity is a
+  *    signature of the table root's listing (`schema.json`, `layout.json`)
+  *    and of the manifest + compactions dirs: every commit appends a
+  *    manifest file, every compaction adds a record file, and a catalog
+  *    ALTER rewrites `schema.json`, so any writer — same JVM or not —
+  *    invalidates the entry. A miss parses the JSON files on the driver;
+  *    no Spark job.
   *  - the INDEX: each committed batch's chunk files and their footer
   *    rows (every `EncodedChunk` field but the stream blobs: min/max,
   *    null/row/NaN counts, Bloom filter, compression, `seg_lens`), read
@@ -45,26 +48,76 @@ object TableMeta {
       /** batch id -> (rows, rawBytes) for size statistics. */
       perBatch: Map[Int, (Long, Long)],
       /** Committed compaction records, oldest first. */
-      compactions: Seq[EncodeJob.Compaction])
+      compactions: Seq[EncodeJob.Compaction],
+      /** `codecs` parsed: the string columns' pinned codecs. */
+      lineage: Map[String, String])(
+      readSchema: () => Option[StructType], readSortClaim: () => Seq[String]) {
+
+    /** The persisted logical schema (`schema.json`); None for a table
+      * written before it was persisted. Read on first use, once per
+      * snapshot: a reader that never asks (a stream's next range) never
+      * opens the file, which a writer may be rewriting.
+      */
+    lazy val schema: Option[StructType] = readSchema()
+
+    /** The sort claim (`layout.json`), empty when there is none; read on
+      * first use, once per snapshot.
+      */
+    lazy val sortClaim: Seq[String] = readSortClaim()
+
+    /** Batch ids with committed manifest rows, compaction records
+      * applied (`EncodeJob.committedBatches`).
+      */
+    def committed: Set[Int] = Snapshot.applyCompactions(batchIds, compactions)
+
+    /** The committed set as of batch `asOf` (`EncodeJob.committedBatchesAsOf`). */
+    def committedAsOf(asOf: Int): Set[Int] =
+      Snapshot.applyCompactions(batchIds.filter(_ <= asOf), compactions.filter(_.batch <= asOf))
+
+    /** The original append batches (`EncodeJob.streamBatches`). */
+    def streamable: Set[Int] = batchIds -- compactions.map(_.batch)
+  }
+
+  private object Snapshot {
+    def applyCompactions(base: Set[Int], records: Seq[EncodeJob.Compaction]): Set[Int] =
+      records.foldLeft(base)((acc, c) => acc -- c.replaces + c.batch) --
+        // a compaction replaced by a LATER compaction must not resurface
+        records.flatMap(_.replaces)
+  }
 
   private val cache = new Lru[String, (String, Snapshot)](1024)
 
+  /** What a snapshot is valid for: one listing of the table root (the
+    * length and modification time of `schema.json` and `layout.json`,
+    * which a catalog ALTER or a sort-claim change rewrites without a
+    * commit), and a listing of the manifest and compactions dirs when the
+    * root holds them (every commit adds a manifest file and every
+    * compaction a record file).
+    */
   private def signature(spark: SparkSession, outDir: String): String = {
-    val conf = spark.sparkContext.hadoopConfiguration
-    def sig(dir: String): String = {
-      val p = new Path(dir)
-      val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) "-"
-      else fs.listStatus(p).iterator
-        .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
-        .toArray.sorted.mkString(",")
+    val root = new Path(outDir)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val top = try fs.listStatus(root) catch { case _: java.io.FileNotFoundException => Array.empty[FileStatus] }
+    def named(p: String): Option[FileStatus] = {
+      val name = new Path(p).getName
+      top.find(_.getPath.getName == name)
     }
-    sig(EncodeJob.manifestDir(outDir)) + "|" + sig(EncodeJob.compactionsDir(outDir))
+    def file(p: String): String = named(p).fold("-")(st => s"${st.getLen}:${st.getModificationTime}")
+    def dir(p: String): String = named(p).filter(_.isDirectory).fold("-")(st =>
+      fs.listStatus(st.getPath).iterator
+        .map(s => s"${s.getPath.getName}:${s.getLen}:${s.getModificationTime}")
+        .toArray.sorted.mkString(","))
+    Seq(dir(EncodeJob.manifestDir(outDir)), dir(EncodeJob.compactionsDir(outDir)),
+      file(EncodeJob.schemaPath(outDir)), file(EncodeJob.layoutPath(outDir))).mkString("|")
   }
 
   /** Test instrumentation: snapshot LOADS (cache misses). */
   private[graft] val snapshotLoads = new java.util.concurrent.atomic.AtomicLong(0)
 
+  /** The table's metadata as of now: validated against the filesystem
+    * (`signature`) on every call, reloaded when it changed. A scan takes
+    * one and reads everything from it.
+    */
   def snapshot(spark: SparkSession, outDir: String): Snapshot = {
     val sig = signature(spark, outDir)
     cache.get(outDir) match {
@@ -76,6 +129,12 @@ object TableMeta {
         snap
     }
   }
+
+  /** Drops `outDir`'s snapshot: its writers call this after rewriting
+    * `schema.json` or `layout.json`, so a rewrite within the file time's
+    * resolution is seen too.
+    */
+  def invalidate(outDir: String): Unit = cache.remove(outDir)
 
   private def load(spark: SparkSession, outDir: String): Snapshot = {
     val comps = EncodeJob.readCompactionRecords(spark, outDir)
@@ -97,7 +156,10 @@ object TableMeta {
     }.filter(_._2.nonEmpty).toMap
     val codecs = agg.toSeq.sortBy(-_._1).iterator
       .flatMap(_._2._4.headOption).find(_ => true)
-    Snapshot(batchIds, maxPart, codecs, batchColumns, perBatch, comps)
+    val conf = spark.sparkContext.hadoopConfiguration
+    Snapshot(batchIds, maxPart, codecs, batchColumns, perBatch, comps,
+      codecs.map(EncodeJob.parseLineage).getOrElse(Map.empty))(
+      () => EncodeJob.schemaFromDisk(conf, outDir), () => EncodeJob.sortColumnsFromDisk(conf, outDir))
   }
 
   /** One chunk file of a batch: its path, the scheme-less form that keys
@@ -283,6 +345,7 @@ object TableMeta {
     }
     def get(k: K): Option[V] = synchronized(Option(m.get(k)))
     def put(k: K, v: V): Unit = synchronized { m.put(k, v); () }
+    def remove(k: K): Unit = synchronized { m.remove(k); () }
     def clear(): Unit = synchronized(m.clear())
   }
 }

@@ -73,7 +73,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   override def loadTable(ident: Identifier): Table = {
     val dir = dirOf(ident)
-    val schema = EncodeJob.schemaFromDisk(spark, dir).getOrElse(
+    val schema = graft.spark.TableMeta.snapshot(spark, dir).schema.getOrElse(
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident))
     val props = readProps(dir)
     new GraftTable(dir, schema, new CaseInsensitiveStringMap(props), tableProps = props)
@@ -86,7 +86,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     */
   override def loadTable(ident: Identifier, version: String): Table = {
     val dir = dirOf(ident)
-    val schema = EncodeJob.schemaFromDisk(spark, dir).getOrElse(
+    val schema = graft.spark.TableMeta.snapshot(spark, dir).schema.getOrElse(
       throw new org.apache.spark.sql.catalyst.analysis.NoSuchTableException(ident))
     require(version.matches("\\d+"),
       s"graft versions are committed batch ids (got '$version')")
@@ -170,7 +170,9 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   override def dropTable(ident: Identifier): Boolean = {
     val dir = new Path(dirOf(ident))
-    tableExists(ident) && fs(dir).delete(dir, /* recursive */ true)
+    val dropped = tableExists(ident) && fs(dir).delete(dir, /* recursive */ true)
+    graft.spark.TableMeta.invalidate(dirOf(ident))
+    dropped
   }
 
   override def renameTable(old: Identifier, to: Identifier): Unit = {
@@ -181,6 +183,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
     val f = fs(new Path(dirOf(old)))
     require(f.rename(new Path(dirOf(old)), new Path(dirOf(to))),
       s"rename ${old} -> ${to} failed")
+    Seq(old, to).foreach(i => graft.spark.TableMeta.invalidate(dirOf(i)))
   }
 
   // ---------- table properties sidecar ----------

@@ -1,7 +1,7 @@
 package graft.spark.source
 
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, Attribute, Expression, InterpretedOrdering, Predicate, SubqueryExpression, UnsafeProjection, Unevaluable}
+import org.apache.spark.sql.catalyst.expressions.{And, Attribute, BindReferences, Expression, InterpretedOrdering, Predicate, SubqueryExpression, UnsafeProjection, Unevaluable}
 import org.apache.spark.sql.catalyst.planning.PhysicalOperation
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{LocalTableScanExec, SparkPlan, SparkStrategy}
@@ -57,7 +57,11 @@ object GraftLocalScan extends SparkStrategy {
         DataSourceV2ScanRelation(_, scan: GraftScan, output, _, ordering))
         if (projects ++ filters).forall(evaluable) =>
       scan.partitionsWithin(MaxDecodedBytes).map { parts =>
-        val keep = filters.reduceOption(And).map(Predicate.create(_, output))
+        // interpreted, not generated: the reader hands over only rows its
+        // predicate-first decode admitted, so a point lookup evaluates the
+        // filters on a row or two and code generation would cost more
+        val keep = filters.reduceOption(And)
+          .map(f => Predicate.createInterpreted(BindReferences.bindReference(f, output)))
         keep.foreach(_.initialize(0))
         val rows = ArrayBuffer[InternalRow]()
         parts.foreach { p =>

@@ -41,9 +41,10 @@ import scala.jdk.CollectionConverters._
   *    stream blobs: unrequested columns are never decompressed, and on
   *    the column-partitioned layout their FILES are never opened;
   *  - filter pushdown (`SupportsPushDownFilters`) drives chunk-level
-  *    min/max + Bloom pruning and sub-chunk stride skipping — pruning
-  *    yields supersets, so every filter is also reported back to Spark
-  *    as residual and re-applied exactly above the scan;
+  *    min/max + Bloom pruning, sub-chunk stride skipping and a
+  *    predicate-first decode of the kept rows — pruning yields
+  *    supersets, so every filter is also reported back to Spark as
+  *    residual and re-applied exactly above the scan;
   *  - one InputPartition per chunk file (the writer's one-file-per-task
   *    invariant), so the scan is the zero-shuffle colocated read: blobs
   *    cross the network zero times, and `numPartitions = 3× reader
@@ -80,7 +81,7 @@ final class GraftSource extends TableProvider
   }
 
   override def inferSchema(options: CaseInsensitiveStringMap): StructType =
-    EncodeJob.schemaFromDisk(SparkSession.active, pathOf(options)).getOrElse(
+    graft.spark.TableMeta.snapshot(SparkSession.active, pathOf(options)).schema.getOrElse(
       throw new IllegalArgumentException(
         s"no ${EncodeJob.schemaPath(pathOf(options))} — written by an older engine; " +
           "pass the logical schema via spark.read.schema(...)"))
@@ -455,34 +456,32 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     */
   override def outputOrdering(): Array[SortOrder] = {
     if (aggSlots.isDefined || asOfBatch.isDefined) return Array.empty
-    visibleBatches // pin the snapshot BEFORE vouching for its order
     // the longest claim PREFIX inside the read schema still holds (rows
     // sorted by (a, b) are sorted by (a)); a gap column breaks the chain
-    sortClaim.takeWhile(c => required.fields.exists(_.name.equalsIgnoreCase(c)))
+    meta.sortClaim.takeWhile(c => required.fields.exists(_.name.equalsIgnoreCase(c)))
       .map(c => Expressions.sort(Expressions.column(c), SortDirection.ASCENDING))
       .toArray
   }
 
+  /** The table's metadata this scan serves — visibility, per-batch
+    * totals, codec lineage, written column sets and the sort claim — from
+    * ONE `TableMeta` snapshot, validated once, pinned on first use
+    * (logical planning) and reused at execution: the same reason
+    * Iceberg/Delta pin a snapshot per scan. outputOrdering is captured at
+    * plan time, so the batch set it vouches for must not drift to include
+    * a concurrent unsorted append before planInputPartitions runs.
+    */
+  private lazy val meta: graft.spark.TableMeta.Snapshot =
+    graft.spark.TableMeta.snapshot(spark, outDir)
+
   /** Batch set this scan serves: compaction records applied, optionally
-    * rewound to the `asOfBatch` time-travel point. A lazy SNAPSHOT, pinned
-    * on first use (logical planning) and reused at execution — the same
-    * reason Iceberg/Delta pin a snapshot per scan: outputOrdering is
-    * captured at plan time, so the batch set it vouches for must not
-    * drift to include a concurrent unsorted append before
-    * planInputPartitions runs. Also saves re-listing manifest +
-    * compactions on every planning callback.
+    * rewound to the `asOfBatch` time-travel point.
     */
   private lazy val visibleBatches: Set[Int] = {
-    val base = asOfBatch match {
-      case Some(n) => EncodeJob.committedBatchesAsOf(spark, outDir, n)
-      case None    => EncodeJob.committedBatches(spark, outDir)
-    }
+    val base = asOfBatch.fold(meta.committed)(meta.committedAsOf)
     // the override (selective MERGE) can only NARROW the committed set
     batchOverride.fold(base)(_ intersect base)
   }
-
-  /** Sort claim pinned with the same snapshot semantics. */
-  private lazy val sortClaim: Seq[String] = EncodeJob.sortColumnsFromDisk(spark, outDir)
 
   /** Join-driven runtime pruning (DPP's DataSource V2 form): Spark
     * collects the build side's keys at runtime and hands them back as IN
@@ -522,8 +521,7 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
   }
 
   /** (rows, raw bytes) of each visible batch, from the manifest. */
-  private def batchTotals: Map[Int, (Long, Long)] =
-    totalsOf(graft.spark.TableMeta.snapshot(spark, outDir), visibleBatches)
+  private def batchTotals: Map[Int, (Long, Long)] = totalsOf(meta, visibleBatches)
 
   private def totalsOf(snap: graft.spark.TableMeta.Snapshot,
                        batches: Set[Int]): Map[Int, (Long, Long)] = {
@@ -559,7 +557,7 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
 
   private def spark = SparkSession.active
   private lazy val allSpecs: Array[ColumnSpec] =
-    EncodeJob.specsFromManifest(spark, outDir, logicalSchema)
+    TableEncoder.columnSpecs(logicalSchema, meta.lineage)
 
   /** Streaming offset ceiling: original APPEND batches only. Compaction
     * batches are excluded (their rows were already delivered by the
@@ -572,6 +570,10 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     // (batch ids commit in increasing order on every path — monotone)
     (EncodeJob.streamBatches(spark, outDir) ++
       EncodeJob.committedBatches(spark, outDir)).foldLeft(-1)(math.max)
+
+  /** The table's metadata now, for a stream's next range. */
+  private[source] def liveMeta: graft.spark.TableMeta.Snapshot =
+    graft.spark.TableMeta.snapshot(spark, outDir)
 
   private[source] def streamVisible: Set[Int] =
     EncodeJob.streamBatches(spark, outDir)
@@ -628,7 +630,7 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
   private var planned: Array[InputPartition] = _
 
   override def planInputPartitions(): Array[InputPartition] = synchronized {
-    if (planned == null) planned = planPartitionsFor(visibleIndex)
+    if (planned == null) planned = planPartitionsFor(visibleIndex, meta)
     planned
   }
 
@@ -662,12 +664,14 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
       required.fields.isEmpty, activePreds, limit, spark.sparkContext.hadoopConfiguration)
 
   /** Batch planning shared by the one-shot scan (the index of the
-    * visible batches: committed with compactions/time-travel applied) and
-    * the micro-batch stream (the index of one batch-id range of the
-    * original append batches).
+    * visible batches: committed with compactions/time-travel applied,
+    * and the scan's pinned snapshot) and the micro-batch stream (the
+    * index of one batch-id range of the original append batches, and the
+    * snapshot that range was read from).
     */
   private[source] def planPartitionsFor(
-      batchIndex: Map[Int, graft.spark.TableMeta.BatchIndex]): Array[InputPartition] = {
+      batchIndex: Map[Int, graft.spark.TableMeta.BatchIndex],
+      snap: graft.spark.TableMeta.Snapshot): Array[InputPartition] = {
     val specs = TableEncoder.subsetSpecs(allSpecs, emitColumns)
     val dir = new Path(EncodeJob.chunkDir(outDir))
     val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -685,7 +689,6 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     // the same corruption per batch: rows its commit records, no chunk
     // row to read them from. A batch a compaction replaced is exempt:
     // vacuum deletes its files, and time travel to it then reads nothing
-    val snap = graft.spark.TableMeta.snapshot(spark, outDir)
     val recorded = totalsOf(snap, batchIndex.keySet)
     val replaced = snap.compactions.flatMap(_.replaces).toSet
     val lost = index.collect {
@@ -700,7 +703,7 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
       // designated COUNT(*) column's rows count even when it isn't an
       // emit column (post-ALTER dirs); no batch → one identity partition
       // so the final merge still sees count=0
-      val partials = new AggPartials(aggSlots.get, aggDesignated(batchIndex.keySet), specs)
+      val partials = new AggPartials(aggSlots.get, aggDesignated(snap, batchIndex.keySet), specs)
       val wanted = specs.map(_.name).toSet + partials.designated
       val parts = index.map { case (_, bi) =>
         GraftAggPartition(bi.rows.filter(c => wanted(c.column)).map(partials.row).toArray)
@@ -717,6 +720,7 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     // the requested columns batch `b` wrote, per the manifest lineage:
     // every chunk group assembled from its files must carry all of them
     // (None: lineage unknown, the reader stays lenient)
+    val batchColumns = snap.batchColumns
     def written(b: Int): Option[Seq[String]] =
       batchColumns.get(b).map(bc => specNames.filter(bc.contains).toSeq)
     // schema-evolution drivers: a batch that wrote NONE of the requested
@@ -724,8 +728,8 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     // column drives the row count (the decode null-fills the rest)
     val driverByBatch: Map[Int, String] =
       files.iterator.map(_._1).toSet.iterator
-        .filter(b => batchLacksAll(b, specNames))
-        .flatMap(b => driverColumnFor(b).map(b -> _)).toMap
+        .filter(b => batchLacksAll(batchColumns, b, specNames))
+        .flatMap(b => driverColumnFor(batchColumns, b).map(b -> _)).toMap
     if (files.exists(_._2.isDefined)) {
       // column-partitioned layout: group the per-column files of one
       // writer task (same part-NNNNN file index within a batch) and open
@@ -775,25 +779,21 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     "timestamp_ntz" -> 2, "decimal" -> 2, "float" -> 3, "double" -> 4,
     "decimal128" -> 5, "string" -> 6, "binary" -> 7)
 
-  /** Per-batch written column sets, from the manifest's codec lineage
-    * ("col=CODEC,..." per batch) — batches written before an ALTER TABLE
-    * ADD COLUMN carry fewer columns than the current schema. One tiny
-    * driver-side manifest read per scan instance (the same cost class as
-    * the visibility read); empty map when no manifest exists.
-    */
-  private lazy val batchColumns: Map[Int, Set[String]] =
-    graft.spark.TableMeta.snapshot(spark, outDir).batchColumns
-
   /** True iff batch `b` provably wrote none of `cols` (schema-evolution
     * read hitting a pre-ALTER batch) — unknown lineage keeps false.
+    * `batchColumns` is a snapshot's per-batch written column sets, from
+    * the manifest's codec lineage ("col=CODEC,..." per batch): batches
+    * written before an ALTER TABLE ADD COLUMN carry fewer columns than
+    * the current schema.
     */
-  private def batchLacksAll(b: Int, cols: Set[String]): Boolean =
+  private def batchLacksAll(batchColumns: Map[Int, Set[String]], b: Int,
+                            cols: Set[String]): Boolean =
     batchColumns.get(b).exists(bc => cols.forall(c => !bc.contains(c)))
 
   /** Cheapest column of batch `b` to drive row counts when none of the
     * requested columns exist there (the decode null-fills the rest).
     */
-  private def driverColumnFor(b: Int): Option[String] =
+  private def driverColumnFor(batchColumns: Map[Int, Set[String]], b: Int): Option[String] =
     batchColumns.get(b).filter(_.nonEmpty).map { bc =>
       allSpecs.filter(s => bc.contains(s.name))
         .minByOption(s => typeCost.getOrElse(s.logical, 9)).map(_.name)
@@ -807,8 +807,8 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     * never empty on a consistent dir; prefer an emit column (its rows
     * are read anyway), else the cheapest intersecting column.
     */
-  private def aggDesignated(committed: Set[Int]): String = {
-    val inter = committed.toSeq.flatMap(batchColumns.get)
+  private def aggDesignated(snap: graft.spark.TableMeta.Snapshot, committed: Set[Int]): String = {
+    val inter = committed.toSeq.flatMap(snap.batchColumns.get)
       .reduceOption(_ intersect _)
       .getOrElse(allSpecs.map(_.name).toSet)
     emitColumns.find(inter.contains).getOrElse {
@@ -881,7 +881,7 @@ final class GraftMicroBatchStream(scan: GraftScan)
       s"stream needs batches ${vacuumed.toSeq.sorted.mkString(",")} which were " +
         "compacted away and vacuumed — batch-read the compacted table or start a " +
         "FRESH stream (new checkpoint), which serves the compacted snapshot instead")
-    scan.planPartitionsFor(scan.indexOf(visible.filter(b => b > s && b <= e)))
+    scan.planPartitionsFor(scan.indexOf(visible.filter(b => b > s && b <= e)), scan.liveMeta)
   }
   override def createReaderFactory(): PartitionReaderFactory = scan.createReaderFactory()
   override def commit(offset: Offset): Unit = () // batches are immutable once committed
@@ -939,23 +939,64 @@ sealed trait ChunkPrune extends Serializable {
     * this predicate can drive one.
     */
   def stridePrune: Option[TableEncoder.StridePrune] = None
+
+  // The row-level test, with the chunk test's bounds, on the columns
+  // `ChunkPrune.rowTests` names: a selective scan decodes this column
+  // first and the others only for the rows every such test admits. Like
+  // the chunk test it only ever keeps extra rows (Spark re-applies every
+  // filter above the scan).
+
+  /** Whether a null value can match (a comparison or `IN` on null is
+    * never true).
+    */
+  def admitsNull: Boolean = true
+  /** A non-null value in the stride index's long space: long and narrower
+    * integers, date days, timestamp micros, decimal mantissa, bool 0/1.
+    */
+  def admitsLong(v: Long): Boolean = true
+  /** A non-null string value's UTF-8 bytes `b[off, off + len)`. */
+  def admitsUtf8(b: Array[Byte], off: Int, len: Int): Boolean = true
 }
 
 /** IsNotNull: an all-null chunk can contribute no matching rows. */
 final case class NotNullPrune(column: String) extends ChunkPrune {
   override def keepsChunk(c: ChunkStats): Boolean = c.null_count < c.row_count
+  override def admitsNull: Boolean = false
 }
 
 /** IsNull: a null-free chunk can contribute no matching rows. */
 final case class NullOnlyPrune(column: String) extends ChunkPrune {
   override def keepsChunk(c: ChunkStats): Boolean = c.null_count > 0
+  override def admitsLong(v: Long): Boolean = false
+  override def admitsUtf8(b: Array[Byte], off: Int, len: Int): Boolean = false
 }
 
 /** In(col, values): keep the chunk if ANY value might be present —
-  * per-value min/max range + bloom probes, OR-combined.
+  * per-value min/max range + bloom probes, OR-combined. A row is
+  * admitted when it equals an alternative (each an `EqualTo`), looked up
+  * by binary search: a runtime filter's `IN` can carry thousands of keys.
   */
 final case class AnyOfPrune(column: String, alts: Array[PrunePred]) extends ChunkPrune {
   override def keepsChunk(c: ChunkStats): Boolean = alts.exists(_.keepsChunk(c))
+  override def admitsNull: Boolean = false
+
+  @transient private lazy val longKeys: Array[Long] = alts.map(_.loLong).sorted
+  @transient private lazy val utf8Keys: Array[Array[Byte]] =
+    alts.map(_.loUtf8).sortWith((x, y) => PrunePred.compareUtf8(x, 0, x.length, y) < 0)
+
+  override def admitsLong(v: Long): Boolean = java.util.Arrays.binarySearch(longKeys, v) >= 0
+
+  override def admitsUtf8(b: Array[Byte], off: Int, len: Int): Boolean = {
+    var lo = 0
+    var hi = utf8Keys.length - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val c = PrunePred.compareUtf8(b, off, len, utf8Keys(mid))
+      if (c == 0) return true
+      if (c < 0) hi = mid - 1 else lo = mid + 1
+    }
+    false
+  }
 }
 
 /** One pushed comparison, pre-resolved on the driver into the spaces the
@@ -972,6 +1013,20 @@ final case class PrunePred(column: String, logical: String,
                            bloomH1: Long, bloomH2: Long, bloomUsable: Boolean,
                            nanKeeps: Boolean = false)
     extends ChunkPrune {
+
+  /** Row-level tests: the long bounds, or for strings the UTF-8 bounds
+    * (null when unbounded).
+    */
+  override def admitsNull: Boolean = false
+  override def admitsLong(v: Long): Boolean = v >= loLong && v <= hiLong
+  override def admitsUtf8(b: Array[Byte], off: Int, len: Int): Boolean =
+    (loUtf8 == null || PrunePred.compareUtf8(b, off, len, loUtf8) >= 0) &&
+      (hiUtf8 == null || PrunePred.compareUtf8(b, off, len, hiUtf8) <= 0)
+
+  @transient private[source] lazy val loUtf8: Array[Byte] = utf8(loStr)
+  @transient private lazy val hiUtf8: Array[Byte] = utf8(hiStr)
+  private def utf8(s: Option[String]): Array[Byte] =
+    s.map(_.getBytes(java.nio.charset.StandardCharsets.UTF_8)).orNull
 
   /** NaN-matchable predicates are marked nanBlockable: they may only
     * skip strides of chunks proven NaN-free (the stride index excludes
@@ -1041,6 +1096,18 @@ object ChunkPrune {
     case _ => PrunePred.from(f, specs)
   }
 
+  /** The predicates a row-level test applies to: those on a column whose
+    * values the tests read (long and narrower integers, date, timestamp,
+    * decimal and bool in long space, string in UTF-8 order). Predicates
+    * on doubles, floats, decimal128 and binary keep every row, nulls
+    * included.
+    */
+  def rowTests(preds: Seq[ChunkPrune], specs: Array[ColumnSpec]): Seq[ChunkPrune] =
+    preds.filter(p => specs.exists(s => s.name == p.column && (s.logical match {
+      case "long" | "date" | "timestamp" | "timestamp_ntz" | "decimal" | "bool" | "string" => true
+      case _ => false
+    })))
+
   /** The one chunk-group keep rule, shared by the partition reader and
     * the in-memory `TableEncoder.decode`: a group is kept when every
     * predicate keeps the group's chunk of its column, or when the group
@@ -1052,6 +1119,20 @@ object ChunkPrune {
 }
 
 object PrunePred {
+  /** `b[off, off + len)` against `key` in unsigned byte order, the order
+    * of `UTF8String.compareTo`: negative, zero or positive.
+    */
+  def compareUtf8(b: Array[Byte], off: Int, len: Int, key: Array[Byte]): Int = {
+    val n = math.min(len, key.length)
+    var i = 0
+    while (i < n) {
+      val d = (b(off + i) & 0xff) - (key(i) & 0xff)
+      if (d != 0) return d
+      i += 1
+    }
+    len - key.length
+  }
+
   /** Resolve a single comparison against the written spec; None when the
     * column's stat space can't act on the value type (still correct —
     * the filter stays residual).
@@ -1352,8 +1433,10 @@ private[source] final class ParquetCursor(reader: ParquetReader[Group], column: 
   * rows (a graft container file's footer, keeping the requested columns;
   * a parquet-generation file through parquet-mr with a record filter),
   * adjacency/zip grouping into chunk groups, chunk-level stat+bloom
-  * pruning on the metadata, the kept groups' blobs read, then the same
-  * UnsafeRow decode core the DataFrame read paths use. Columns whose
+  * pruning on the metadata, then the same UnsafeRow decode core the
+  * DataFrame read paths use. With a row-testable predicate the decode is
+  * predicate-first: a kept group reads its predicates' blobs, and the
+  * other columns' blobs only when one of its rows passes them. Columns whose
   * decoded layout is not their logical one (dates, narrowed longs,
   * decimals, float vectors) are re-typed by a codegen'd projection
   * (mantissa→decimal via MakeDecimal; long→int-family casts); when every
@@ -1436,6 +1519,12 @@ final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnS
     */
   private val stridePrunes: Seq[TableEncoder.StridePrune] = preds.toSeq.flatMap(_.stridePrune)
 
+  /** The predicates a kept group is decoded by first: the other columns
+    * are loaded and decoded only for rows all of them admit. None keeps
+    * the whole-group decode.
+    */
+  private val rowPreds: Seq[ChunkPrune] = ChunkPrune.rowTests(preds.toSeq, specs)
+
   private type Group = Map[String, (graft.spark.ChunkFile.Entry, ChunkCursor)]
 
   private var pendingFirst: graft.spark.ChunkFile.Entry = null // row-grouped lookahead
@@ -1453,10 +1542,11 @@ final class GraftPartitionReader(part: GraftInputPartition, specs: Array[ColumnS
       if (group == null) return false
       val meta = group.map { case (col, (e, _)) => col -> e.chunk }
       checkAssembled(meta)
+      // blobs are read on first use: the predicates' first, the other
+      // columns' only for a group or stride with a surviving row
       if (ChunkPrune.keepsGroup(preds, meta))
-        rows = TableEncoder.decodeChunkInternalRows(
-          group.map { case (col, (e, cursor)) => col -> cursor.load(e) }, specs, writer,
-          stridePrunes)
+        rows = TableEncoder.decodeChunkInternalRows(meta, specs, writer, stridePrunes, rowPreds,
+          c => { val (e, cursor) = group(c.column); cursor.load(e) })
     }
     current = if (toLogical == null) rows.next() else toLogical(rows.next())
     emitted += 1

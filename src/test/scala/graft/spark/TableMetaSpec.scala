@@ -23,6 +23,9 @@ class TableMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config(s"spark.hadoop.fs.${ListingFileSystem.Scheme}.impl", classOf[ListingFileSystem].getName)
+      .config("spark.sql.catalog.graft", "graft.spark.source.GraftCatalog")
+      .config("spark.sql.catalog.graft.warehouse", s"${ListingFileSystem.Scheme}://$tmp/warehouse")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
   }
@@ -138,5 +141,71 @@ class TableMetaSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.range(0, 10).select(col("id")).write.format("graft").mode("append").save(o)
     }
     assert(append.getMessage.contains("pre-JSON manifest"), append.getMessage)
+  }
+
+  // ---- one metadata snapshot per scan, on a counting filesystem --------
+
+  /** `tmp/name` addressed through `ListingFileSystem`. */
+  private def counted(name: String): String = s"${ListingFileSystem.Scheme}://$tmp/$name"
+
+  private def ordering(df: org.apache.spark.sql.DataFrame): Seq[String] =
+    df.queryExecution.optimizedPlan.collect {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.ordering.toSeq.flatten.map(_.child.references.head.name)
+    }.flatten
+
+  test("a warm point lookup lists manifest/ at most twice and reads no schema.json or layout.json") {
+    val o = counted("lookup")
+    spark.range(0, 400).select(col("id"), concat(lit("u"), col("id")).as("url"),
+      (col("id") * 7 % 13).as("k"))
+      .write.format("graft").option("numPartitions", "4").option("bloomColumns", "url")
+      .option("sortColumns", "id").save(o)
+    val local = spark.newSession()
+    graft.plans.GraftExtensions.registerLocalScan(local)
+    Seq(spark, local).foreach { s =>
+      def lookup(u: String) = s.read.format("graft").load(o).where(col("url") === u).collect()
+      assert(lookup("u7").map(_.getLong(0)).toSeq == Seq(7L)) // warms the metadata
+      ListingFileSystem.reset()
+      assert(lookup("u42").map(_.getLong(0)).toSeq == Seq(42L))
+      assert(ListingFileSystem.calls("list", "manifest") <= 2, ListingFileSystem.dump)
+      assert(ListingFileSystem.calls("open", "schema.json") == 0, ListingFileSystem.dump)
+      assert(ListingFileSystem.calls("open", "layout.json") == 0, ListingFileSystem.dump)
+    }
+  }
+
+  test("a second read in the same JVM sees an ALTER ADD COLUMN and an append under another sort") {
+    spark.sql("CREATE NAMESPACE IF NOT EXISTS graft.meta")
+    spark.sql("CREATE TABLE graft.meta.t (id BIGINT, s STRING) USING graft " +
+      "TBLPROPERTIES ('numPartitions'='2')")
+    spark.sql("INSERT INTO graft.meta.t SELECT id, concat('s', id) FROM range(100)")
+    assert(spark.table("graft.meta.t").columns.toSeq == Seq("id", "s"))
+    spark.sql("ALTER TABLE graft.meta.t ADD COLUMN score DOUBLE")
+    val evolved = spark.table("graft.meta.t")
+    assert(evolved.columns.toSeq == Seq("id", "s", "score"))
+    assert(evolved.where(col("score").isNull).count() == 100L)
+
+    val o = counted("sorted")
+    val df = spark.range(0, 300).select(col("id"), concat(lit("s"), col("id")).as("s"))
+    df.write.format("graft").option("numPartitions", "2").option("sortColumns", "id").save(o)
+    assert(ordering(spark.read.format("graft").load(o)) == Seq("id"))
+    df.write.format("graft").mode("append").option("numPartitions", "2")
+      .option("sortColumns", "s").save(o)
+    val after = spark.read.format("graft").load(o)
+    assert(ordering(after).isEmpty, "the sort claim outlived an append under another sort")
+    assert(after.count() == 600L)
+  }
+
+  test("a schema.json rewritten by another writer is seen through the snapshot's signature") {
+    val o = s"$tmp/external-schema"
+    spark.range(0, 50).select(col("id")).write.format("graft").option("numPartitions", "1").save(o)
+    assert(spark.read.format("graft").load(o).columns.toSeq == Seq("id"))
+    // what a catalog ALTER in another process leaves: schema.json rewritten, no commit
+    val wider = new org.apache.spark.sql.types.StructType().add("id", "long").add("extra", "string")
+    val schemaFile = new java.io.File(EncodeJob.schemaPath(o))
+    Files.write(schemaFile.toPath, wider.json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    new java.io.File(schemaFile.getParent, s".${schemaFile.getName}.crc").delete()
+    val read = spark.read.format("graft").load(o)
+    assert(read.columns.toSeq == Seq("id", "extra"))
+    assert(read.where(col("extra").isNull).count() == 50L)
   }
 }
