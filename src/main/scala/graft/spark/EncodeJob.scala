@@ -288,24 +288,6 @@ object EncodeJob {
   def committedBatches(spark: SparkSession, outDir: String): Set[Int] =
     TableMeta.snapshot(spark, outDir).committed
 
-  /** Time travel: the batch set as of the moment `asOf` committed. Batch
-    * ids commit in increasing order on every write path, so "manifest ids
-    * ≤ asOf, compaction records with batch ≤ asOf applied" reconstructs
-    * exactly what a reader saw then — valid until `vacuum` physically
-    * removes replaced batches.
-    */
-  def committedBatchesAsOf(spark: SparkSession, outDir: String, asOf: Int): Set[Int] =
-    TableMeta.snapshot(spark, outDir).committedAsOf(asOf)
-
-  /** Batch ids a STREAMING reader consumes: the original append batches,
-    * never compaction batches — a compacted batch holds only rows some
-    * earlier micro-batch already delivered, so surfacing it would
-    * double-read every row. Replaced batches stay streamable (their files
-    * survive until vacuum).
-    */
-  def streamBatches(spark: SparkSession, outDir: String): Set[Int] =
-    TableMeta.snapshot(spark, outDir).streamable
-
   /** One committed compaction: chunks of `replaces` rewritten as batch
     * `batch`. `maxPart` is the highest part_id the compacted batch holds,
     * recorded so batch-id/part-id allocation can clear it even in the

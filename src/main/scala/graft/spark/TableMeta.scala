@@ -70,11 +70,21 @@ object TableMeta {
       */
     def committed: Set[Int] = Snapshot.applyCompactions(batchIds, compactions)
 
-    /** The committed set as of batch `asOf` (`EncodeJob.committedBatchesAsOf`). */
+    /** Time travel: the batch set as of the moment `asOf` committed. Batch
+      * ids commit in increasing order on every write path, so "manifest ids
+      * ≤ asOf, compaction records with batch ≤ asOf applied" reconstructs
+      * exactly what a reader saw then — valid until `vacuum` physically
+      * removes replaced batches.
+      */
     def committedAsOf(asOf: Int): Set[Int] =
       Snapshot.applyCompactions(batchIds.filter(_ <= asOf), compactions.filter(_.batch <= asOf))
 
-    /** The original append batches (`EncodeJob.streamBatches`). */
+    /** Batch ids a STREAMING reader consumes: the original append batches,
+      * never compaction batches — a compacted batch holds only rows some
+      * earlier micro-batch already delivered, so surfacing it would
+      * double-read every row. Replaced batches stay streamable (their files
+      * survive until vacuum).
+      */
     def streamable: Set[Int] = batchIds -- compactions.map(_.batch)
   }
 

@@ -564,22 +564,17 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     * batches they replaced), and replaced batches stay streamable until
     * vacuum — so a running stream sees compaction as a non-event.
     */
-  private[source] def maxStreamBatch: Int =
+  private[source] def maxStreamBatch: Int = {
     // include compaction batch ids: a FRESH stream's first range serves
     // the compacted snapshot, so the offset must cover those ids too
     // (batch ids commit in increasing order on every path — monotone)
-    (EncodeJob.streamBatches(spark, outDir) ++
-      EncodeJob.committedBatches(spark, outDir)).foldLeft(-1)(math.max)
+    val m = liveMeta
+    (m.streamable ++ m.committed).foldLeft(-1)(math.max)
+  }
 
   /** The table's metadata now, for a stream's next range. */
   private[source] def liveMeta: graft.spark.TableMeta.Snapshot =
     graft.spark.TableMeta.snapshot(spark, outDir)
-
-  private[source] def streamVisible: Set[Int] =
-    EncodeJob.streamBatches(spark, outDir)
-
-  private[source] def snapshotVisible(asOf: Int): Set[Int] =
-    EncodeJob.committedBatchesAsOf(spark, outDir, asOf)
 
   override def readSchema(): StructType = aggSlots match {
     case Some(slots) => StructType(slots.zipWithIndex.map { case (s, i) =>
@@ -871,7 +866,8 @@ final class GraftMicroBatchStream(scan: GraftScan)
     // original append batches were compacted away and vacuumed; later
     // ranges (s >= 0) serve only original append batches, never
     // compaction batches (whose rows some earlier range already carried)
-    val visible = if (s < 0) scan.snapshotVisible(e) else scan.streamVisible
+    val meta = scan.liveMeta
+    val visible = if (s < 0) meta.committedAsOf(e) else meta.streamable
     // a stream lagging behind a compact+vacuum must FAIL, not silently
     // deliver zero rows: the batches it still owes were physically
     // deleted (batch readers are unaffected — they serve the compaction)
@@ -881,7 +877,7 @@ final class GraftMicroBatchStream(scan: GraftScan)
       s"stream needs batches ${vacuumed.toSeq.sorted.mkString(",")} which were " +
         "compacted away and vacuumed — batch-read the compacted table or start a " +
         "FRESH stream (new checkpoint), which serves the compacted snapshot instead")
-    scan.planPartitionsFor(scan.indexOf(visible.filter(b => b > s && b <= e)), scan.liveMeta)
+    scan.planPartitionsFor(scan.indexOf(visible.filter(b => b > s && b <= e)), meta)
   }
   override def createReaderFactory(): PartitionReaderFactory = scan.createReaderFactory()
   override def commit(offset: Offset): Unit = () // batches are immutable once committed
