@@ -99,13 +99,7 @@ object EncodeJob {
       // chunk-level Bloom filters on these columns (graft.core.Bloom):
       // equality pruning for point lookups on unsorted high-cardinality
       // columns (url/text) where min/max ranges keep every chunk
-      bloomColumns: Set[String] = Set.empty,
-      // Hive-partition the chunk table by `column` so a column-subset read
-      // prunes unrequested columns' files at the SCAN (IO ∝ requested
-      // columns). Trade-off: one file per task PER COLUMN, which full
-      // reads zip back into chunk groups — pick per table by read pattern
-      // (wide tables read by narrow projections want this on).
-      partitionByColumn: Boolean = false)
+      bloomColumns: Set[String] = Set.empty)
 
   /** Below this many sampled rows the frequency estimate is noise —
     * rescan the (narrow) key column exactly instead.
@@ -637,7 +631,7 @@ object EncodeJob {
       else sortColumnsFromDisk(spark, outDir)
     val cfg = Config(outDir, numPartitions = targetPartitions, keyColumn = keyColumn,
       compression = inheritedCompression, segmented = segmented,
-      bloomColumns = bloomCols, partitionByColumn = isColumnPartitioned(spark, outDir),
+      bloomColumns = bloomCols,
       sortColumns = effectiveSort, zorderColumns = zorderColumns,
       // rewrite-with-zorder: rescale bounds come from the chunk
       // manifest's min/max stats (metadata-only) instead of a second
@@ -998,19 +992,9 @@ object EncodeJob {
     TableEncoder.columnSpecs(schema, TableMeta.snapshot(spark, outDir).lineage)
   }
 
-  private def writeChunks(chunks: Dataset[EncodedChunk], cfg: Config, batchId: Int): Unit = {
-    val w = chunks.write.mode(SaveMode.Overwrite)
-    (if (cfg.partitionByColumn) w.partitionBy("column") else w)
+  private def writeChunks(chunks: Dataset[EncodedChunk], cfg: Config, batchId: Int): Unit =
+    chunks.write.mode(SaveMode.Overwrite)
       .format(ChunkFileFormat.Name).save(chunkBatchDir(cfg.outDir, batchId))
-    // the writer KNOWS the layout — record it so a SAME-JVM rewrite of an
-    // outDir with a different layout serves readers the fresh answer. The
-    // guarantee is JVM-scoped only: another process rewriting this outDir
-    // with a different layout leaves this cache stale, which costs
-    // readBack a probe-driven fallback to the (always-correct) shuffled
-    // path or a loud scan failure, never wrong data — cross-process
-    // rewrites want a new session.
-    layoutCache.put(cfg.outDir, java.lang.Boolean.valueOf(cfg.partitionByColumn))
-  }
 
   /** The chunk files' schema, stated explicitly on every read: no
     * schema-inference footer pass, and columns a pre-upgrade writer
@@ -1052,17 +1036,16 @@ object EncodeJob {
   /** Read encoded chunks back into the original table shape through the
     * DataSource V2 scan (`format("graft")`: one partition per chunk file,
     * no Exchange, column pruning down to the stream blobs) whenever the
-    * on-disk layout is the writer's own — column-partitioned, or passing
-    * the metadata-only `colocatedLayoutOk` probe. Chunk files rewritten
-    * outside the engine (e.g. an external compaction) fall back to the
-    * shuffled decode. Pass `columns` to decode a subset: names rebind
-    * case-insensitively, unknown names throw, and the other columns'
-    * blobs are never decompressed (on the column-partitioned layout their
-    * files are never opened).
+    * on-disk layout passes the metadata-only `colocatedLayoutOk` probe.
+    * Chunk files rewritten outside the engine (e.g. an external
+    * compaction) fall back to the shuffled decode. Pass `columns` to
+    * decode a subset: names rebind case-insensitively, unknown names
+    * throw, and the other columns' blobs are never read (nor, in a
+    * legacy column-partitioned batch, their files opened).
     */
   def readBack(spark: SparkSession, outDir: String, specs: Array[ColumnSpec],
                columns: Option[Seq[String]] = None): DataFrame =
-    if (isColumnPartitioned(spark, outDir) || colocatedLayoutOk(spark, outDir, specs))
+    if (colocatedLayoutOk(spark, outDir, specs))
       scan(spark, outDir, specs, columns)
     else readBackShuffled(spark, outDir, specs, columns)
 
@@ -1076,34 +1059,6 @@ object EncodeJob {
       .select(selected.map(s => col(s.name)).toIndexedSeq: _*)
   }
 
-  /** True when the chunk table was written with partitionByColumn
-    * (column=<name> dirs under the batch dirs) — a filesystem listing,
-    * no data or parquet-footer reads. The answer is cached process-wide
-    * (on an object store the two-level LIST per readBack would otherwise
-    * cost hundreds of calls across batches) and updated by SAME-JVM
-    * writes; if another process overwrites the dir with the opposite
-    * layout, a stale entry costs this JVM at worst the shuffled fallback
-    * or a loud scan failure, never wrong data. A
-    * JVM that needs to observe a cross-process layout rewrite should use
-    * a new outDir (the recommended pattern) or a new session/JVM.
-    */
-  private val layoutCache = new java.util.concurrent.ConcurrentHashMap[String, java.lang.Boolean]()
-
-  def isColumnPartitioned(spark: SparkSession, outDir: String): Boolean = {
-    val cached = layoutCache.get(outDir)
-    if (cached != null) return cached.booleanValue()
-    val dir = new org.apache.hadoop.fs.Path(chunkDir(outDir))
-    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(dir)) return false // not cached: the dir may appear later
-    val result = fs.listStatus(dir).exists { batch =>
-      batch.isDirectory && batch.getPath.getName.startsWith("batch=") &&
-        fs.listStatus(batch.getPath).exists(c =>
-          c.isDirectory && c.getPath.getName.startsWith("column="))
-    }
-    layoutCache.put(outDir, java.lang.Boolean.valueOf(result))
-    result
-  }
-
   /** Decode a visible batch subset (the read side of compaction, DML and
     * the selective MERGE) with readBack's routing: through the scan,
     * narrowed by its internal `visibleBatches` option, when those
@@ -1114,8 +1069,7 @@ object EncodeJob {
   private def decodeBatches(spark: SparkSession, outDir: String, batches: Set[Int],
                             schema: org.apache.spark.sql.types.StructType): DataFrame = {
     val specs = specsFromManifest(spark, outDir, schema)
-    if (isColumnPartitioned(spark, outDir) ||
-        TableMeta.writerLayout(spark, outDir, batches, specs.length))
+    if (TableMeta.writerLayout(spark, outDir, batches, specs.length))
       spark.read.schema(schema).format("graft")
         .option("visibleBatches", batches.toSeq.sorted.mkString(",")).load(outDir)
     else TableEncoder.unshred(
@@ -1123,8 +1077,12 @@ object EncodeJob {
   }
 
   /** Shuffle-based decode: one exchange moves each chunk group to a
-    * single task. Always correct regardless of file layout; readBack's
-    * fallback when `colocatedLayoutOk` is false.
+    * single task. Correct whatever the order of rows in the files;
+    * readBack's fallback when `colocatedLayoutOk` is false. It reads the
+    * chunk root through Spark's partition discovery, which refuses a
+    * table whose batches mix legacy `column=` dirs and flat batch dirs
+    * (`CONFLICTING_PARTITION_COLUMN_NAMES`): such a table reaches this
+    * path only after an external rewrite of its files.
     */
   def readBackShuffled(spark: SparkSession, outDir: String, specs: Array[ColumnSpec],
                        columns: Option[Seq[String]] = None): DataFrame = columns match {
@@ -1136,9 +1094,9 @@ object EncodeJob {
         TableEncoder.decodeColumns(committedChunks(spark, outDir), specs, cols), subset)
   }
 
-  /** The row-grouped layout the scan relies on, over the committed
-    * batches: in each chunk file every chunk group is exactly
-    * `specs.length` adjacent rows, never interleaved or split
+  /** The layout the scan relies on, over the committed batches: in each
+    * chunk file every chunk group is exactly `specs.length` adjacent rows
+    * (one row in a legacy column file), never interleaved or split
     * (`TableMeta.writerLayout`, on the driver from the chunk-file
     * footers). readBack falls back to the shuffled decode when it fails
     * (the scan itself refuses such files loudly).

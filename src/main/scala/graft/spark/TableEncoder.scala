@@ -851,11 +851,10 @@ object TableEncoder {
     * requested columns' streams are decompressed and value-decoded; the
     * rest of each chunk group is filtered out before any blob is touched
     * (the filter is an untyped metadata predicate). Output schema
-    * follows `columns` order. Note a row-grouped chunk file still
-    * stores all columns in one file — at
-    * 100 TB a reader wanting scan-level IO savings too would partition
-    * the chunk table by `column`; this API removes the decode CPU and
-    * (on the shuffle path) the network bytes for unrequested columns.
+    * follows `columns` order. This API removes the decode CPU and (on
+    * the shuffle path) the network bytes for unrequested columns; the
+    * IO saving is the DSv2 scan's, which reads a chunk file's footer and
+    * then only the requested columns' stream ranges.
     */
   def decodeColumns(chunks: Dataset[EncodedChunk], specs: Array[ColumnSpec],
                     columns: Seq[String], ignoreMissing: Boolean = false,

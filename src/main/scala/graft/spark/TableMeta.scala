@@ -174,8 +174,9 @@ object TableMeta {
 
   /** One chunk file of a batch: its path, the scheme-less form that keys
     * the file-keep map, and its rows' metadata in file order
-    * (`EncodedChunk`s without stream blobs; in a column-partitioned file
-    * `column` is its `column=` directory).
+    * (`EncodedChunk`s without stream blobs). `column` is defined for a
+    * legacy column-partitioned file only: its `column=` directory, which
+    * names its rows' column.
     */
   private[graft] final class IndexedFile(val path: String, val column: Option[String],
                                          val chunks: Array[EncodedChunk]) {
@@ -313,15 +314,18 @@ object TableMeta {
     committed.filter(b => idx(b).chunkRows.isEmpty || idx(b).chunkRows.exists(chunkKept(_, preds)))
   }
 
-  /** True when every batch of `batches` is in the writer's row-grouped
-    * layout, the one the scan reads: it has chunk files, and in each file
-    * every chunk group is `nCols` adjacent rows that never reappear
-    * (`runsOk`). A batch whose dir lists no chunk file was rewritten into
-    * another layout. Decides between the scan and the shuffled decode.
+  /** True when every batch of `batches` is in a layout the scan reads: it
+    * has chunk files, and in each file every chunk group is `nCols`
+    * adjacent rows that never reappear (`runsOk`). A legacy column file
+    * is a row-grouped file of one column, so its groups are one row each;
+    * the scan's zip checks its alignment with its sibling files. A batch
+    * whose dir lists no chunk file was rewritten into another layout.
+    * Decides between the scan and the shuffled decode.
     */
   def writerLayout(spark: SparkSession, outDir: String, batches: Set[Int], nCols: Int): Boolean =
     batchIndex(spark, outDir, batches).valuesIterator.forall(bi =>
-      bi.files.nonEmpty && runsOk(bi.files.map(_.chunks), nCols))
+      bi.files.nonEmpty && bi.files.forall(f =>
+        runsOk(Seq(f.chunks), if (f.column.isDefined) 1 else nCols)))
 
   /** Per file, in file order: each (part_id, chunk_id) is one run of
     * exactly `nCols` rows, and no key appears in two runs (split or

@@ -101,8 +101,7 @@ final class GraftCatalog extends TableCatalog with SupportsNamespaces {
                            properties: java.util.Map[String, String]): Table = {
     require(partitions.isEmpty,
       "graft tables do not take PARTITIONED BY — use TBLPROPERTIES " +
-        "('keyColumn'/'sortColumns'/'zorderColumns'/'partitionByColumn') " +
-        "for clustering and layout")
+        "('keyColumn'/'sortColumns'/'zorderColumns') for clustering")
     if (tableExists(ident))
       throw new org.apache.spark.sql.catalyst.analysis.TableAlreadyExistsException(ident)
     if (ident.namespace().nonEmpty && !namespaceExists(ident.namespace()))

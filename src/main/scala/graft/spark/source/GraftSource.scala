@@ -38,8 +38,8 @@ import scala.jdk.CollectionConverters._
   *  - schema comes from the persisted `schema.json` + manifest codec
   *    lineage (EncodeJob.specsFromDisk) — no caller-supplied schema;
   *  - column pruning (`SupportsPushDownRequiredColumns`) reaches the
-  *    stream blobs: unrequested columns are never decompressed, and on
-  *    the column-partitioned layout their FILES are never opened;
+  *    stream blobs: unrequested columns' streams are never read, and in
+  *    a legacy column-partitioned batch their FILES are never opened;
   *  - filter pushdown (`SupportsPushDownFilters`) drives chunk-level
   *    min/max + Bloom pruning, sub-chunk stride skipping and a
   *    predicate-first decode of the kept rows — pruning yields
@@ -50,11 +50,13 @@ import scala.jdk.CollectionConverters._
   *    cross the network zero times, and `numPartitions = 3× reader
   *    parallelism` sizing applies as-is at 1000 executors.
   *
-  * Both writer layouts are readable: the default row-grouped layout
-  * (whole chunk groups per file) and `partitionByColumn` (one column per
-  * file; aligned per-column files of one writer task are zipped back
-  * into chunk groups, and pruning happens at FILE granularity before
-  * anything is opened). This scan is the engine's one directory reader:
+  * The engine writes one layout, row-grouped (whole chunk groups per
+  * file, whose footer locates each column's streams). Batches that older
+  * engines wrote column-partitioned (one column per file under
+  * `column=` dirs) stay readable: the aligned per-column files of one
+  * writer task are zipped back into chunk groups. The layout is a fact
+  * of each file in `TableMeta`'s index, so one scan can hold batches of
+  * both. This scan is the engine's one directory reader:
   * EncodeJob.readBack, readBackColocated and compaction all run it.
   *
   * Tasks get the session's Hadoop conf from a broadcast
@@ -229,7 +231,8 @@ object GraftWriteSupport {
     * bloomColumns (comma-separated), sortColumns (comma-separated —
     * per-partition sort before chunking: clustered chunk ranges for
     * pruning, reported back to Catalyst via SupportsReportOrdering),
-    * partitionByColumn.
+    * zorderColumns. Other options are not read, the column-partitioning
+    * option of older engines among them.
     */
   def configFrom(outDir: String, o: CaseInsensitiveStringMap,
                  spark: SparkSession): EncodeJob.Config = {
@@ -255,8 +258,7 @@ object GraftWriteSupport {
       sortColumns = opt("sortColumns").map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
         .getOrElse(Nil),
       zorderColumns = opt("zorderColumns").map(_.split(',').map(_.trim).filter(_.nonEmpty).toSeq)
-        .getOrElse(Nil),
-      partitionByColumn = opt("partitionByColumn").exists(_.toBoolean))
+        .getOrElse(Nil))
   }
 
   def insert(data: DataFrame, outDir: String, options: CaseInsensitiveStringMap,
@@ -283,8 +285,8 @@ object GraftWriteSupport {
     val committed = graft.spark.TableMeta.snapshot(spark, outDir).batchIds
     if (committed.isEmpty) { EncodeJob.run(data, cfg); return }
 
-    // append onto live data: schema and layout must match what readers
-    // already see — fail loud rather than silently corrupt the dir.
+    // append onto live data: the schema must match what readers already
+    // see — fail loud rather than silently corrupt the dir.
     // Nullability is compared permissively (a non-null projection may
     // append into a nullable table; writeSchemaJson keeps the wider
     // nullability on disk)
@@ -295,9 +297,6 @@ object GraftWriteSupport {
               (a.nullable || !b.nullable) }, // nullable data into a non-null table is the one bad direction
         s"append schema mismatch for $outDir:\n  on disk: $onDisk\n  appending: ${data.schema}")
     }
-    require(EncodeJob.isColumnPartitioned(spark, outDir) == cfg.partitionByColumn,
-      s"append layout mismatch for $outDir: dir partitionByColumn=" +
-        s"${EncodeJob.isColumnPartitioned(spark, outDir)}, write option says ${cfg.partitionByColumn}")
 
     // the next batch id must ALSO clear every existing part_id: decode
     // groups chunks by (part_id, chunk_id) across batches, and runBatch
@@ -600,9 +599,9 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
     * whose chunks passes the predicates is never opened — no footer read,
     * no page IO. Evaluated on the driver by TableMeta against its cached
     * index, with the same `keepsChunk` the partition reader applies to
-    * opened chunks; chunk keep is decided per chunk ACROSS columns, so on
-    * the column-partitioned layout a predicate on one column prunes the
-    * sibling column files of the same chunks too.
+    * opened chunks; chunk keep is decided per chunk ACROSS columns, so in
+    * a legacy column-partitioned batch a predicate on one column prunes
+    * the sibling column files of the same chunks too.
     */
   private def fileKeep(preds: Array[ChunkPrune],
                        index: Map[Int, graft.spark.TableMeta.BatchIndex]): Map[String, Boolean] =
@@ -725,12 +724,24 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
       files.iterator.map(_._1).toSet.iterator
         .filter(b => batchLacksAll(batchColumns, b, specNames))
         .flatMap(b => driverColumnFor(batchColumns, b).map(b -> _)).toMap
-    if (files.exists(_._2.isDefined)) {
-      // column-partitioned layout: group the per-column files of one
-      // writer task (same part-NNNNN file index within a batch) and open
-      // ONLY the requested columns' files — scan IO ∝ requested columns
+    // the layout is per file: a legacy column file sits under a `column=`
+    // dir, every other file is row-grouped, and one scan can hold both
+    val (columnFiles, rowFiles) = files.partition(_._2.isDefined)
+    // a batch that wrote no column outside the request (per the lineage)
+    // and needs no row-count column: every record passes the reader's
+    // `column IN (...)` filter, so its files open unfiltered
+    def unfiltered(b: Int): Boolean =
+      !driverByBatch.contains(b) && batchColumns.get(b).exists(_.subsetOf(specNames))
+    val rowParts: Array[InputPartition] = rowFiles.toArray.sortBy(_._3).filter(f => kept(f._3))
+      .map(f => GraftInputPartition(Array(f._3), Seq.empty, driverByBatch.get(f._1),
+        written(f._1), columnFilter = !unfiltered(f._1)))
+    if (columnFiles.isEmpty) rowParts
+    else {
+      // legacy column-partitioned batches: group the per-column files of
+      // one writer task (same part-NNNNN file index within a batch) and
+      // open ONLY the requested columns' files
       val wanted = specNames
-      files.filter(f => f._2.exists(c =>
+      columnFiles.filter(f => f._2.exists(c =>
           wanted.contains(c) || driverByBatch.get(f._1).contains(c)))
         .groupBy(f => (f._1, taskIndexOf(f._3)))
         // whole-GROUP pruning: the index's chunk keep is decided across
@@ -749,17 +760,8 @@ final class GraftScan(outDir: String, logicalSchema: StructType,
           // requested columns) zips just the driver file.
           val present = allSpecs.filter(s => byCol.contains(s.name))
           GraftInputPartition(present.map(s => byCol(s.name)), present.map(_.name).toSeq,
-            written = written(b))
-        }
-    } else {
-      // a batch that wrote no column outside the request (per the
-      // lineage) and needs no row-count column: every record passes the
-      // reader's `column IN (...)` filter, so its files open unfiltered
-      def unfiltered(b: Int): Boolean =
-        !driverByBatch.contains(b) && batchColumns.get(b).exists(_.subsetOf(specNames))
-      files.toArray.sortBy(_._3).filter(f => kept(f._3))
-        .map(f => GraftInputPartition(Array(f._3), Seq.empty, driverByBatch.get(f._1),
-          written(f._1), columnFilter = !unfiltered(f._1)))
+            written = written(b)): InputPartition
+        } ++ rowParts
     }
   }
 

@@ -261,10 +261,11 @@ class ChunkFileSpec extends AnyFunSuite with BeforeAndAfterAll {
     test(s"mixed generations ($layout): a parquet batch and a container batch read exactly; compaction leaves only the container") {
       val o = s"$tmp/mixed-$layout"
       frame(0, 1000).write.format("graft").mode("overwrite").option("numPartitions", "3")
-        .option("bloomColumns", "s").option("partitionByColumn", byColumn.toString).save(o)
+        .option("bloomColumns", "s").save(o)
+      if (byColumn) LegacyLayout.toColumnPartitioned(spark, o, 0)
       toLegacy(o, 0, keepSidecar = !byColumn)
       frame(1000, 2000).write.format("graft").mode("append").option("numPartitions", "2")
-        .option("bloomColumns", "s").option("partitionByColumn", byColumn.toString).save(o)
+        .option("bloomColumns", "s").save(o)
       val magics = EncodeJob.committedBatches(spark, o).toSeq.sorted
         .map(b => walk(new File(EncodeJob.chunkBatchDir(o, b)))
           .filter(f => ChunkFile.isChunkFileName(f.getName)).map(magic).toSet)
@@ -309,5 +310,67 @@ class ChunkFileSpec extends AnyFunSuite with BeforeAndAfterAll {
         f.getName.endsWith(ChunkFile.Extension)), visible.map(_.getName).toString)
       checkReads(model)
     }
+  }
+
+  /** True iff batch `b` of `out` holds legacy `column=` dirs. */
+  private def columnPartitioned(out: String, b: Int): Boolean =
+    new File(EncodeJob.chunkBatchDir(out, b)).listFiles()
+      .exists(f => f.isDirectory && f.getName.startsWith("column="))
+
+  private def causedBy(t: Throwable, text: String): Boolean =
+    Iterator.iterate(t)(_.getCause).takeWhile(_ != null)
+      .exists(e => e.getMessage != null && e.getMessage.contains(text))
+
+  test("mixed layouts: a legacy column-partitioned table takes stream, append, compact and delete batches and reads exactly") {
+    val o = s"$tmp/mixed-layouts"
+    frame(0, 1000).write.format("graft").mode("overwrite").option("numPartitions", "3")
+      .option("bloomColumns", "s").save(o)
+    LegacyLayout.toColumnPartitioned(spark, o, 0)
+    assert(columnPartitioned(o, 0))
+
+    def check(model: DataFrame, step: String): Unit = {
+      val t = spark.read.format("graft").load(o)
+      val rows = t.collect()
+      assert(rows.map(_.toString).sorted sameElements canon(model), s"$step: ${rows.length} rows")
+      assert(t.count() == rows.length, step)
+      for (f <- Seq(col("s") === "txt123", col("s") === "txt1300", col("s") === "txt1700",
+                    col("id") >= 990 && col("id") < 1210))
+        assert(canon(t.filter(f)) sameElements canon(model.filter(f)), s"$step: $f")
+      assert(canon(EncodeJob.readBack(spark, o)) sameElements canon(model), s"$step: readBack")
+    }
+    check(frame(0, 1000), "legacy table")
+
+    // a stream sink's micro-batch lands row-grouped
+    graft.streaming.StreamingEncode.encodeBatch(frame(1000, 1500), 1L, o, 2, None)
+    assert(!columnPartitioned(o, 1))
+    check(frame(0, 1500), "stream batch")
+
+    // an append lands row-grouped: the older engines' layout option is not read
+    frame(1500, 2000).write.format("graft").mode("append").option("numPartitions", "2")
+      .option("bloomColumns", "s").option("partitionByColumn", "true").save(o)
+    assert(EncodeJob.committedBatches(spark, o) == Set(0, 1, 2) && !columnPartitioned(o, 2))
+    check(frame(0, 2000), "append")
+
+    // the shuffled decode reads the chunk root through partition
+    // discovery, which cannot mix column= dirs and flat batch dirs
+    val err = intercept[Exception](
+      EncodeJob.readBackShuffled(spark, o, EncodeJob.specsFromDisk(spark, o).get).collect())
+    assert(causedBy(err, "CONFLICTING_PARTITION_COLUMN_NAMES"), err)
+
+    val c = EncodeJob.compact(spark, o, targetPartitions = 2, batches = Some(Set(1)))
+    assert(EncodeJob.committedBatches(spark, o) == Set(0, 2, c))
+    check(frame(0, 2000), "compact of the stream batch")
+
+    val d = EncodeJob.deleteWhere(spark, o, col("id") === 123L, targetPartitions = 2)
+    assert(EncodeJob.compactions(spark, o).last.replaces == Seq(0), "the delete left the legacy batch")
+    assert(!columnPartitioned(o, d))
+    val model = frame(0, 2000).filter(col("id") =!= 123L)
+    check(model, "delete in the legacy batch")
+
+    // compaction is the migration path: the whole table rewritten row-grouped
+    LegacyLayout.toColumnPartitioned(spark, o, 2)
+    val all = EncodeJob.compact(spark, o, targetPartitions = 2)
+    assert(EncodeJob.committedBatches(spark, o) == Set(all) && !columnPartitioned(o, all))
+    check(model, "full compact")
   }
 }

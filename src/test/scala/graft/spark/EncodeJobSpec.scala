@@ -159,13 +159,7 @@ class EncodeJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the assertion is about data IO, not fixed metadata costs
     val pages = WebGen.pages(spark, 12000, seed = 77, partitions = 4).toDF()
     val out = s"$tmp/bycolumn"
-    val result = EncodeJob.run(pages,
-      EncodeJob.Config(out, 4, Some("lang"), partitionByColumn = true))
-
-    // layout: chunk files live under batch=<id>/column=<name>/ dirs
-    val colDirs = new java.io.File(s"${EncodeJob.chunkDir(out)}/batch=0").listFiles()
-      .filter(_.isDirectory).map(_.getName).toSet
-    assert(colDirs.exists(_.startsWith("column=")), s"not column-partitioned: $colDirs")
+    val result = EncodeJob.run(pages, EncodeJob.Config(out, 4, Some("lang")))
 
     val bytesRead = new java.util.concurrent.atomic.AtomicLong()
     val listener = new org.apache.spark.scheduler.SparkListener {
@@ -183,18 +177,34 @@ class EncodeJobSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       // toRdd.count() runs the planned scan as is: a DataFrame count()
       // would let the scan prune every column but the cheapest one
-      val fullBytes = measure {
+      def fullBytes = measure {
         assert(EncodeJob.readBack(spark, out, result.specs).queryExecution.toRdd.count() == 12000)
       }
-      // warc_ts + lang are tiny next to html/text: partition pruning on
-      // the column= dirs must make the subset scan a small fraction
-      val subsetBytes = measure {
+      // warc_ts + lang are tiny next to html/text: the subset scan must
+      // read a small fraction
+      def subsetBytes = measure {
         val sub = EncodeJob.readBack(spark, out, result.specs, Some(Seq("warc_ts", "lang")))
         assert(sub.queryExecution.toRdd.count() == 12000)
       }
-      assert(subsetBytes > 0 && fullBytes > 0)
-      assert(subsetBytes < fullBytes / 3,
-        s"subset read scanned $subsetBytes of $fullBytes bytes — column dirs not pruned at the scan")
+      // the row-grouped container: the footer's byte ranges let the
+      // reader skip unrequested columns' streams
+      val (rowFull, rowSubset) = (fullBytes, subsetBytes)
+      assert(rowSubset > 0 && rowFull > 0)
+      assert(rowSubset < rowFull / 3,
+        s"subset read scanned $rowSubset of $rowFull bytes — unrequested streams read")
+
+      // the legacy layout: chunk files live under batch=<id>/column=<name>/ dirs
+      LegacyLayout.toColumnPartitioned(spark, out, 0)
+      val colDirs = new java.io.File(s"${EncodeJob.chunkDir(out)}/batch=0").listFiles()
+        .filter(_.isDirectory).map(_.getName).toSet
+      assert(colDirs.exists(_.startsWith("column=")), s"not column-partitioned: $colDirs")
+      // partition pruning on the column= dirs makes the subset scan a
+      // small fraction
+      val (colFull, colSubset) = (fullBytes, subsetBytes)
+      assert(colSubset > 0 && colFull > 0)
+      assert(colSubset < colFull / 3,
+        s"subset read scanned $colSubset of $colFull bytes — column dirs not pruned at the scan")
+      info(s"subset/full bytes: row-grouped $rowSubset/$rowFull, column-partitioned $colSubset/$colFull")
     } finally spark.sparkContext.removeSparkListener(listener)
 
     // and the partitioned layout still decodes exactly
@@ -227,15 +237,15 @@ class EncodeJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pages = WebGen.pages(spark, 3000, seed = 101, partitions = 4).toDF()
     for ((byCol, sub) <- Seq((false, "rowlayout-1col"), (true, "collayout-1col"))) {
       val out = s"$tmp/$sub"
-      val result = EncodeJob.run(pages,
-        EncodeJob.Config(out, 4, Some("lang"), partitionByColumn = byCol))
+      val result = EncodeJob.run(pages, EncodeJob.Config(out, 4, Some("lang")))
+      if (byCol) LegacyLayout.toColumnPartitioned(spark, out, 0)
       assert(graftScans(EncodeJob.readBack(spark, out, result.specs)).nonEmpty,
-        s"readBack bypassed the graft scan (partitionByColumn=$byCol)")
+        s"readBack bypassed the graft scan (column-partitioned=$byCol)")
       val one = EncodeJob.readBack(spark, out, result.specs, Some(Seq("url")))
       assert(graftScans(one).nonEmpty)
       assert(one.schema.fieldNames.toSeq == Seq("url"))
       assert(!one.queryExecution.executedPlan.toString.contains("Exchange"),
-        s"single-column read plan contains a shuffle (partitionByColumn=$byCol)")
+        s"single-column read plan contains a shuffle (column-partitioned=$byCol)")
       val expected = pages.select("url").orderBy("url").collect().toSeq
       assert(one.orderBy("url").collect().toSeq == expected)
     }
@@ -366,8 +376,8 @@ class EncodeJobSpec extends AnyFunSuite with BeforeAndAfterAll {
     val pages = WebGen.pages(spark, 2000, seed = 19, partitions = 1).toDF()
       .select("url", "lang", "warc_ts")
     val out = s"$tmp/misaligned"
-    val result = EncodeJob.run(pages,
-      EncodeJob.Config(out, 1, None, strideRows = 500, partitionByColumn = true))
+    val result = EncodeJob.run(pages, EncodeJob.Config(out, 1, None, strideRows = 500))
+    LegacyLayout.toColumnPartitioned(spark, out, 0)
     // the url file's chunks in reverse order
     rewriteInPlace(s"${EncodeJob.chunkDir(out)}/batch=0/column=url",
       _.sortWithinPartitions(col("chunk_id").desc))

@@ -59,8 +59,8 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
   private lazy val colOut = {
     val out = s"$tmp/collayout"
-    EncodeJob.run(alltypes, EncodeJob.Config(out, numPartitions = 4, keyColumn = None,
-      partitionByColumn = true))
+    EncodeJob.run(alltypes, EncodeJob.Config(out, numPartitions = 4, keyColumn = None))
+    LegacyLayout.toColumnPartitioned(spark, out, 0)
     out
   }
 
@@ -566,8 +566,8 @@ class GraftSourceSpec extends AnyFunSuite with BeforeAndAfterAll {
     // column-partitioned: a predicate on one column drops sibling files
     // of the same chunks without breaking the zip
     val outCol = s"$tmp/fileprune-col"
-    EncodeJob.run(ids, EncodeJob.Config(outCol, numPartitions = 8, keyColumn = Some("band"),
-      partitionByColumn = true))
+    EncodeJob.run(ids, EncodeJob.Config(outCol, numPartitions = 8, keyColumn = Some("band")))
+    LegacyLayout.toColumnPartitioned(spark, outCol, 0)
     val srcCol = spark.read.format("graft").load(outCol)
     val fullCol = numParts(srcCol)
     val prunedCol = numParts(srcCol.filter(col("id") === 4321L))

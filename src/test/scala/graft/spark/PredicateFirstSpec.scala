@@ -90,7 +90,10 @@ class PredicateFirstSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 
   /** A catalog table of both batches: 240 rows, an ALTER ADD COLUMN,
-    * 160 rows that carry the new column; 16-row strides, 3 files.
+    * 160 rows that carry the new column; 16-row strides, 3 files. A
+    * `columnPartitioned` table is an older engine's: its persisted
+    * `partitionByColumn` property is no longer read, and both batches
+    * are re-laid into its column-partitioned layout.
     */
   private def table(name: String, columnPartitioned: Boolean, segmented: Boolean,
                     seed: Long): Table = {
@@ -107,6 +110,10 @@ class PredicateFirstSpec extends AnyFunSuite with BeforeAndAfterAll {
     insert(first, baseSchema)
     spark.sql(s"ALTER TABLE $t ADD COLUMN ${added.name} BIGINT")
     insert(second, fullSchema)
+    if (columnPartitioned) {
+      val dir = s"$tmp/warehouse/pf/$name"
+      EncodeJob.committedBatches(spark, dir).foreach(LegacyLayout.toColumnPartitioned(spark, dir, _))
+    }
     val all = first.map(r => Row.fromSeq(r.toSeq :+ null)) ++ second
     Table(t, spark.createDataFrame(all.asJava, fullSchema).cache())
   }
